@@ -17,6 +17,13 @@ object Bench {
     */
   private val CleanWallsPath = "dev/clean_walls.json"
 
+  /** The harness keeps going past a failed side step (the bench line is
+    * still worth printing) but never silently: a broken pin file must not
+    * read as "everything unpinned".
+    */
+  private def warn(what: String, e: Throwable): Unit =
+    System.err.println(s"BENCH: $what failed: ${e.getClass.getName}: ${e.getMessage}")
+
   private def loadCleanWalls(method: String, sfDir: String): Map[String, (Double, Double)] =
     try {
       val f = new java.io.File(CleanWallsPath)
@@ -53,7 +60,7 @@ object Bench {
           walls.map { case (k, w) => k -> (w, cpus.getOrElse(k, -1.0)) }
         }
       }
-    } catch { case _: Throwable => Map.empty }
+    } catch { case e: Throwable => warn("loading " + CleanWallsPath, e); Map.empty }
 
   /** Whole-process CPU nanoseconds (all Spark executor threads included —
     * local mode is one JVM). Against wall time this distinguishes a plan
@@ -75,19 +82,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Generated-class cache (static conf, default 100 entries): one
-      // NN-Descent build alone emits ~100 codegen units, so at the default
-      // size every iterative operator evicts its own earlier rounds and
-      // re-compiles (and re-JITs) identical source each round — measured
-      // 72 redundant Janino compiles (~1.2 s) on a WARM dx_knn_graph run.
-      // Scale-independent: the cache is keyed by source text and bounds
-      // driver memory, not cores or data size.
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
+    val spark = GraftSession.create(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     BlockCleanup.muteBenignCleanupSpam()
     // Warm the JVM (parquet reader, codegen, shuffle, window, checkpoint
@@ -97,7 +92,7 @@ object Bench {
       spark.read.parquet(s"$sfDir/lineitem.parquet")
         .groupBy("l_returnflag").count().count()
       Registry.byName("mb_components").fn(spark, "/root/testdata/sf0.001").count()
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable => warn("warm-up", e) }
     // Optional args: query names to bench (default all) — dev use only; the
     // driver invokes with no args. Sorted by name so run order (and which
     // query absorbs residual warm-up) is stable across rounds.
@@ -237,12 +232,12 @@ object Bench {
       try {
         java.nio.file.Files.write(java.nio.file.Paths.get(CleanWallsPath),
           pin.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      } catch { case _: Throwable => () }
+      } catch { case e: Throwable => warn("writing " + CleanWallsPath, e) }
     }
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DETAIL.json"),
         detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () } // detail file is best-effort
+    } catch { case e: Throwable => warn("writing BENCH_DETAIL.json", e) }
     def line(dp: Int): String =
       s"""{"metric":"total","value":${round(total, 2)},"unit":"sec","method":"$method","queries":${jmap(_._2, dp)},"total_cpu":${round(totalCpu, 1)},"total_gc":${round(totalGc, 1)},"cores":$cpus,"failed":$failed,"sf":"$sfDir"}"""
     // Degrade per-query precision until the line fits the tail window with

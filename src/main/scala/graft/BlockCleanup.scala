@@ -33,8 +33,8 @@ object BlockCleanup {
       import org.apache.logging.log4j.LogManager
       import org.apache.logging.log4j.core.{Filter, LogEvent, LoggerContext}
       import org.apache.logging.log4j.core.filter.AbstractFilter
-      // Installation point matters (found empirically via
-      // dev/LogFilterProbe): `Configuration.addFilter` registers a
+      // Installation point matters (pinned by BlockCleanupSpec):
+      // `Configuration.addFilter` registers a
       // CONTEXT-WIDE filter that log4j2 only consults on the pre-event
       // `isEnabled` fast paths — overload signatures our LogEvent
       // override never matched, so the r15 Verify log still carried the

@@ -1,17 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the formatted physical plan of registered queries.
   * Usage: sbt "runMain graft.DevExplain q5_multijoin q6_filter_agg"
   */
 object DevExplain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else Registry.all.map(_.name)
     names.foreach { n =>

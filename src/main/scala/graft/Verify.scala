@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,12 +11,7 @@ object Verify {
     // JVMs — the closure/broadcast bugs local[n] structurally cannot
     // catch. The driver always runs the default local[n].
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
+    val builder = GraftSession.builder(master, cpus.toInt)
     // local-cluster executors are separate JVMs launched from SPARK_HOME:
     // they need the graft classes (and the test-run working dir) on their
     // own classpath — sbt's classes dir serves both

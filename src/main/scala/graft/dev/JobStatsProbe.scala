@@ -1,7 +1,6 @@
 package graft.dev
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -58,12 +57,7 @@ object JobStatsProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = args.headOption.map(_.toInt).getOrElse(2)
     val names = args.drop(1).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
+    val spark = graft.GraftSession.create(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     graft.BlockCleanup.muteBenignCleanupSpam()
     val st = new Stats

@@ -1,6 +1,6 @@
 package graft.dev
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only data scaler: replicate an existing sf directory `factor`× with
@@ -42,11 +42,7 @@ object ScaleUp {
     val factor = factorS.toInt
     require(factor >= 2, "factor must be >= 2")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.create(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // events.ts has shipped as TIMESTAMP(NANOS) and TIMESTAMP(MICROS)
     // across driver data generations; nanosAsLong makes the nanos

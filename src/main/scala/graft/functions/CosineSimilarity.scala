@@ -1,14 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native Catalyst expression for cosine similarity over `array<float>`
   * columns, with whole-stage codegen.
@@ -86,100 +83,4 @@ object CosineSimilarity {
   def apply(a: Column, b: Column): Column =
     ColumnBridge.column(
       CosineSimilarity(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  private val info = new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim")
-
-  private val builder: Seq[Expression] => Expression = {
-    case Seq(a, b) => CosineSimilarity(a, b)
-    case other => throw new IllegalArgumentException(
-      s"cosine_sim expects 2 arguments, got ${other.size}")
-  }
-
-  /** Session-local registration so `expr("cosine_sim(a, b)")` / SQL works. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", builder, "built-in")
-}
-
-/** SparkSessionExtensions hook: enable with
-  * `spark.sql.extensions=graft.functions.GraftExtensions` to get graft's
-  * native functions in every session (including pure-SQL users):
-  * `cosine_sim(a, b)`, `minhash_signature(hashes, k)`,
-  * `simhash64(hashes)`, `interleave_bits(a, b)`.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.all.foreach(ext.injectFunction)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
-  }
-}
-
-object GraftExtensions {
-  private def intLiteral(e: Expression, what: String): Int = e.eval() match {
-    case i: Int => i
-    case other => throw new IllegalArgumentException(
-      s"$what must be an integer literal, got $other")
-  }
-
-  private[graft] val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      { exprs: Seq[Expression] => CosineSimilarity(exprs(0), exprs(1)) }),
-    (FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_signature"),
-      { exprs: Seq[Expression] =>
-        MinHashSignature(exprs(0), intLiteral(exprs(1), "minhash_signature k")) }),
-    (FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      { exprs: Seq[Expression] => SimHash64(exprs(0)) }),
-    (FunctionIdentifier("interleave_bits"),
-      new ExpressionInfo(classOf[InterleaveBits].getName, "interleave_bits"),
-      { exprs: Seq[Expression] => InterleaveBits(exprs(0), exprs(1)) }),
-    // named exactly like DuckDB's builtin so comparison-level conditions are
-    // one string valid in both engines
-    (FunctionIdentifier("jaro_winkler_similarity"),
-      new ExpressionInfo(classOf[JaroWinklerSimilarity].getName, "jaro_winkler_similarity"),
-      { exprs: Seq[Expression] => JaroWinklerSimilarity(exprs(0), exprs(1)) }),
-    (FunctionIdentifier("damerau_levenshtein"),
-      new ExpressionInfo(classOf[DamerauLevenshtein].getName, "damerau_levenshtein"),
-      { exprs: Seq[Expression] => DamerauLevenshtein(exprs(0), exprs(1)) }),
-    (FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, "sorted_intersect_count"),
-      { exprs: Seq[Expression] => SortedIntersectCount(exprs(0), exprs(1)) }),
-    (FunctionIdentifier("sorted_intersect_values"),
-      new ExpressionInfo(classOf[SortedIntersectValues].getName, "sorted_intersect_values"),
-      { exprs: Seq[Expression] => SortedIntersectValues(exprs(0), exprs(1)) }),
-    (FunctionIdentifier("cdc_chunks"),
-      new ExpressionInfo(classOf[CdcChunks].getName, "cdc_chunks"),
-      { exprs: Seq[Expression] => CdcChunks(exprs(0),
-        intLiteral(exprs(1), "cdc_chunks minLen"),
-        intLiteral(exprs(2), "cdc_chunks div"),
-        intLiteral(exprs(3), "cdc_chunks maxLen")) }),
-    // DuckDB-compatible NFC normalization, plus the general form-selectable
-    // variant (unicode_normalize(s, 'NFKC') etc.)
-    (FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[UnicodeNormalize].getName, "nfc_normalize"),
-      { exprs: Seq[Expression] => UnicodeNormalize(exprs(0), "NFC") }),
-    (FunctionIdentifier("unicode_normalize"),
-      new ExpressionInfo(classOf[UnicodeNormalize].getName, "unicode_normalize"),
-      { exprs: Seq[Expression] =>
-        val form =
-          if (exprs.length < 2) "NFC"
-          else exprs(1).eval() match {
-            case s: UTF8String => s.toString
-            case other => throw new IllegalArgumentException(
-              s"unicode_normalize form must be a string literal, got $other")
-          }
-        UnicodeNormalize(exprs(0), form) }))
-
-  /** Session-local registration of every graft native function. Idempotent:
-    * re-registering an existing name would WARN ("replaced a previously
-    * registered function") on every call site, polluting bench logs.
-    */
-  def register(spark: SparkSession): Unit =
-    all.foreach { case (id, _, builder) =>
-      if (!spark.sessionState.functionRegistry.functionExists(id))
-        spark.sessionState.functionRegistry
-          .createOrReplaceTempFunction(id.funcName, builder, "built-in")
-    }
 }

@@ -259,10 +259,6 @@ object NnDescent {
     * id right after); AQE still coalesces the single exchange, so
     * partitioning stays scale-adaptive.
     */
-  private[graft] def mergeTopKForProbe(
-      old: DataFrame, freshE: DataFrame, kBuild: Int): DataFrame =
-    mergeTopK(old, freshE, kBuild)
-
   private def mergeTopK(old: DataFrame, freshE: DataFrame, kBuild: Int)
       : DataFrame = {
     val unioned = old.select(col("id"), col("nbr"), col("sim"))

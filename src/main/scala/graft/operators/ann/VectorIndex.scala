@@ -90,8 +90,9 @@ object VectorIndex {
   // more bytes per vector than PQ (dim vs m codes) but near-lossless
   // fidelity — the right trade when neighbors sit at moderate cosine
   // (overlap-structured corpora like chunked text BoW, where m=8 PQ
-  // distortion reorders the shortlist; measured in dev/RagProbe: PQ 0.70
-  // recall at family params vs SQ 0.985 on the same corpus) or when scan
+  // distortion reorders the shortlist: PQ 0.70 recall at family params vs
+  // SQ 0.985 on the same corpus, measured by dev/RagProbe — removed, see
+  // git history at 872a12b) or when scan
   // cost is dominated by the probe, not the payload.
 
   /** Fit + encode + persist an IVF-SQ index to `path` (overwrite). */

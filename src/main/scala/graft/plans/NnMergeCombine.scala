@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -209,21 +209,15 @@ object NnMergeStrategy extends SparkStrategy {
 }
 
 object NnMerge {
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(NnMergeStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ NnMergeStrategy
-
   /** Map-side (id,nbr)-dedup + per-id top-`k` combine of a
     * `(id, nbr, sim, fresh)` frame — see [[NnMergePlan]] for the result-
     * safety argument. Purely a shuffle-byte reducer: the global merge
     * aggregate + TopK downstream produce identical results with or
-    * without it.
+    * without it. Plans only in a session that loads [[graft.GraftExtensions]].
     */
   def combine(df: DataFrame, k: Int): DataFrame = {
     require(k >= 1, "k must be positive")
     val spark = df.sparkSession
-    register(spark)
     val analyzed = df.queryExecution.analyzed
     val cols = Seq("id", "nbr", "sim", "fresh").map { n =>
       analyzed.output.find(_.name == n).getOrElse(throw new IllegalArgumentException(

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
 import org.apache.spark.sql.catalyst.expressions.{
@@ -178,18 +178,11 @@ object TopKStrategy extends SparkStrategy {
 
 object TopK {
 
-  /** Idempotently registers the planner strategy on the session. Also
-    * injectable globally via `graft.functions.GraftExtensions`.
-    */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-
   /** Top `k` rows per `keyCols` group ordered by `orderCol`
     * (descending by default, ties broken ascending by `tieCols`), with a
     * `rank` long column (1-based). Replaces the
     * `row_number().over(...)` + filter idiom without the per-group sort.
+    * Plans only in a session that loads [[graft.GraftExtensions]].
     */
   def perKey(
       df: DataFrame, keyCols: Seq[String], orderCol: String, k: Int,
@@ -197,7 +190,6 @@ object TopK {
       rankName: String = "rank"): DataFrame = {
     require(k >= 1, "k must be positive")
     val spark = df.sparkSession
-    register(spark)
     val analyzed = df.queryExecution.analyzed
     def resolve(n: String): Attribute = analyzed.output
       .find(a => spark.sessionState.conf.resolver(a.name, n))

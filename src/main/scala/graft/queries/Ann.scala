@@ -601,9 +601,10 @@ object Ann {
     // one map-only encode pass (~2 s here). Between the compressed
     // codecs, chunk-BoW neighbors sit at cosine ~0.78-0.82 (overlap
     // structure, not near-duplicates) and m=8 PQ distortion reorders
-    // that shortlist badly — dev/RagProbe measured PQ 0.70-0.86 recall
-    // vs SQ 0.96-0.985 at family params on the same corpus — so the
-    // near-lossless per-dimension codec wins at 4× the code bytes.
+    // that shortlist badly — PQ 0.70-0.86 recall vs SQ 0.96-0.985 at
+    // family params on the same corpus, measured by dev/RagProbe (removed;
+    // see git history at 872a12b) — so the near-lossless per-dimension
+    // codec wins at 4× the code bytes.
     graft.operators.ann.VectorIndex.buildSq(
       emb, "id", "embedding", path, numFiles = 4)
     path
@@ -615,9 +616,9 @@ object Ann {
       .getOrElse(rebuildRagIndex(s, dir))
 
   private def ragServe(emb: DataFrame, path: String): DataFrame =
-    // nprobe 10 (vs the family's 6): measured 0.96/0.985 recall at
-    // sf0.01/sf0.1 in dev/RagProbe — comfortable headroom over the 0.9
-    // clustered floor the gate enforces
+    // nprobe 10 (vs the family's 6): 0.96/0.985 recall at sf0.01/sf0.1,
+    // measured by dev/RagProbe (removed; see git history at 872a12b) —
+    // comfortable headroom over the 0.9 clustered floor the gate enforces
     graft.operators.ann.VectorIndex.searchSq(
       emb.filter(col("id") < 5 * 1024L), path, emb, "id", "embedding",
       k = 5, nprobe = 10)

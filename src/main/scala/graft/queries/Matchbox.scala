@@ -683,7 +683,6 @@ object Matchbox {
     * √maxPairs per side — bounded by protocol, not by the corpus.
     */
   private def linkParamsReport(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExtensions.register(s)
     import s.implicits._
     val parallelism = s.sessionState.conf.numShufflePartitions
     // 8000/side = 64M sampled pairs, a bounded protocol cost at ANY
@@ -912,7 +911,6 @@ object Matchbox {
     * verbatim in each — same contract as the jaro_winkler ladder.
     */
   private def linkLevenshtein(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExtensions.register(s)
     Link.fellegiSunterLevels(
       fuzzyLeft(s, dir), fuzzyRight(s, dir),
       "c_custkey", "c_custkey",
@@ -980,7 +978,6 @@ object Matchbox {
     * ±2 days (close), +20 (mid), +45 (miss).
     */
   private def linkDamerau(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExtensions.register(s)
     val left = fuzzyLeft(s, dir)
       .withColumn("ed",
         datediff(date_add(to_date(lit("1997-01-01")), (col("c_custkey") % 360).cast("int")),
@@ -1092,7 +1089,6 @@ object Matchbox {
       Seq(-0.5, 1.2)))
 
   private def fuzzyScored(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExtensions.register(s)
     Link.fellegiSunterLevels(
       fuzzyLeft(s, dir), fuzzyRight(s, dir),
       "c_custkey", "c_custkey",
@@ -1226,7 +1222,6 @@ object Matchbox {
     * replaces with iterations.
     */
   private def linkMFromLabels(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExtensions.register(s)
     val cand = fuzzyLeft(s, dir).alias("l")
       .join(fuzzyRight(s, dir).alias("r"),
         expr("l.c_custkey = r.c_custkey - 1"))
@@ -1277,7 +1272,6 @@ object Matchbox {
     * comparison is the usual fuzzy ladder.
     */
   private def linkFuzzyNulls(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExtensions.register(s)
     Link.fellegiSunterLevels(
       nulledSeg(fuzzyLeft(s, dir), 0), nulledSeg(fuzzyRight(s, dir), 5),
       "c_custkey", "c_custkey",
@@ -1356,7 +1350,6 @@ object Matchbox {
     */
   private def linkFuzzyNullsGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftExtensions.register(s)
     val levels = Seq(
       Seq("l.sname = r.sname",
         "jaro_winkler_similarity(l.sname, r.sname) >= 0.95",
@@ -1408,7 +1401,6 @@ object Matchbox {
     * mb_link_fuzzy.
     */
   private def linkBlockingRules(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExtensions.register(s)
     Link.fellegiSunterLevelsMulti(
       fuzzyLeft(s, dir), fuzzyRight(s, dir),
       "c_custkey", "c_custkey",
@@ -1485,7 +1477,6 @@ object Matchbox {
     */
   private def linkFuzzyEmGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftExtensions.register(s)
     val levels = Seq(
       Seq("l.sname = r.sname",
         "jaro_winkler_similarity(l.sname, r.sname) >= 0.95",
@@ -1567,7 +1558,6 @@ object Matchbox {
     * scoring, log-free — bit-exact across engines.
     */
   private def linkFuzzyTf(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExtensions.register(s)
     Link.fellegiSunterLevelsTf(
       fuzzyLeft(s, dir), fuzzyRight(s, dir),
       "c_custkey", "c_custkey",
@@ -1643,7 +1633,6 @@ object Matchbox {
     */
   private def linkFuzzyTfEmGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftExtensions.register(s)
     // Candidate join + TF table are deterministic plans — materialise once
     // (the em_gate treatment); each determinism run re-executes the
     // distributed pattern aggregation, the EM fit and the score projection.
@@ -1760,7 +1749,6 @@ object Matchbox {
     */
   private def scenarioGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftExtensions.register(s)
     import graft.testkit.Scenario
     def sources() = {
       val ents = Scenario.entities(s, 60, seed = 42L, Seq("company", "postcode"))

@@ -41,7 +41,6 @@ object Streaming {
     */
   private def fuzzyWindowed(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Link
-    graft.functions.GraftExtensions.register(s)
     val cust = Tables(s, dir, "customer")
     def side(parityEven: Boolean): DataFrame = {
       val base = cust.filter(col("c_custkey") % 2 === (if (parityEven) 0 else 1))
@@ -402,7 +401,6 @@ object Streaming {
     */
   private def fuzzyIncrementalGate(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Link
-    graft.functions.GraftExtensions.register(s)
     val cust = Tables(s, dir, "customer")
     def side(parityEven: Boolean): DataFrame = {
       val base = cust.filter(col("c_custkey") % 2 === (if (parityEven) 0 else 1))

@@ -108,7 +108,6 @@ class CdcChunksSpec extends SparkSpec {
   }
 
   test("SQL registration coerces and runs") {
-    graft.functions.GraftExtensions.register(spark)
     val one = spark.sql(
       "SELECT cdc_chunks('abcdefghijklmnopqrstuvwxyz', 12, 32, 96) AS c")
       .collect()(0).getSeq[Long](0)

@@ -119,7 +119,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("damerau_levenshtein matches DuckDB-verified vectors and a driver reference") {
-    graft.functions.GraftExtensions.register(spark)
     // Every distance below was produced by DuckDB's damerau_levenshtein
     // (the oracle engine) — full Lowrance–Wagner variant over UTF-8
     // bytes: transpositions bridge edits ('CA'→'ABC' = 2, not OSA's 3),
@@ -280,7 +279,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("all native functions register for SQL use") {
-    graft.functions.GraftExtensions.register(spark)
     Tables(spark, sfDir, "documents").limit(10).createOrReplaceTempView("docs_fn_test")
     val r = spark.sql(
       """SELECT minhash_signature(hs, 8) AS sig, simhash64(hs) AS sh,
@@ -303,8 +301,34 @@ class FunctionsSpec extends SparkSpec {
     assert(coerced.getLong(1) == 2L)
   }
 
+  test("functions and planner strategies load through spark.sql.extensions alone") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
+      case q: QueryStageExec => flatten(q.plan)
+      case other => other.children.flatMap(flatten)
+    })
+    def plans(df: org.apache.spark.sql.DataFrame): Seq[SparkPlan] =
+      flatten(df.queryExecution.executedPlan)
+
+    assert(spark.conf.get("spark.sql.extensions") == classOf[GraftExtensions].getName)
+    assert(spark.experimental.extraStrategies.isEmpty)
+    val edges = Seq((1L, 2L, 0.5, true), (1L, 3L, 0.7, false), (2L, 1L, 0.5, true))
+      .toDF("id", "nbr", "sim", "fresh")
+    val topK = graft.plans.TopK.perKey(edges, Seq("id"), "sim", 1)
+    assert(plans(topK).exists(_.isInstanceOf[graft.plans.TopKPerKeyExec]),
+      topK.queryExecution.executedPlan.toString)
+    val merged = graft.plans.NnMerge.combine(edges, 1)
+    assert(plans(merged).exists(_.isInstanceOf[graft.plans.NnMergeExec]),
+      merged.queryExecution.executedPlan.toString)
+    assert(spark.experimental.extraStrategies.isEmpty)
+    GraftExtensions.all.foreach { case (id, _, _) =>
+      assert(spark.catalog.functionExists(id.funcName), id.funcName)
+    }
+  }
+
   test("cosine_sim registers for SQL use") {
-    CosineSimilarity.register(spark)
     val emb = Tables(spark, sfDir, "embeddings").limit(5)
     emb.createOrReplaceTempView("emb_test")
     val n = spark.sql(

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{GraftExtensions, JaroWinklerImpl}
+import graft.functions.JaroWinklerImpl
 import graft.operators.Link
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -34,7 +34,6 @@ class FuzzyLinkSpec extends SparkSpec {
   }
 
   test("jaro_winkler_similarity evaluates in codegen and SQL") {
-    GraftExtensions.register(spark)
     val got = Seq(("martha", "marhta"), ("xy", "xz"))
       .toDF("a", "b")
       .selectExpr("jaro_winkler_similarity(a, b) AS s")
@@ -43,7 +42,6 @@ class FuzzyLinkSpec extends SparkSpec {
   }
 
   test("fellegiSunterLevels: first matching level wins, weights summed, gammas emitted") {
-    GraftExtensions.register(spark)
     val left = Seq((1L, "marhta", "A"), (2L, "zzzzzz", "B")).toDF("id", "name", "seg")
     val right = Seq((10L, "martha", "A"), (20L, "qqqqqq", "B")).toDF("id", "name", "seg")
     val out = Link.fellegiSunterLevels(
@@ -77,7 +75,6 @@ class FuzzyLinkSpec extends SparkSpec {
   }
 
   test("nullLevel: NULL on either side is gamma -1 with zero weight, not a miss") {
-    GraftExtensions.register(spark)
     val left = Seq((1L, "ann", Option("A")), (2L, "bob", None))
       .toDF("id", "name", "seg").withColumn("blk", lit(1))
     val right = Seq((10L, "ann", Option("B")), (20L, "bob", None))
@@ -100,7 +97,6 @@ class FuzzyLinkSpec extends SparkSpec {
   }
 
   test("EM null exclusion: null pairs never move the comparison's m/u (1-iter invariant)") {
-    GraftExtensions.register(spark)
     // 6 pairs: 2 exact-agree, 2 disagree, 2 with a NULL side on seg
     val left = (1L to 6L).map(i => (i, s"n$i",
       if (i <= 4) Option(if (i <= 2) "X" else "A") else None))
@@ -130,7 +126,6 @@ class FuzzyLinkSpec extends SparkSpec {
   }
 
   test("fellegiSunterEmLevels: deterministic, ordinal gammas learn a discriminative exact level") {
-    GraftExtensions.register(spark)
     // planted duplicates agree exactly; noise pairs agree weakly or not at all
     val left = (0L until 40L).map(i => (i, s"name$i", i / 10)).toDF("id", "name", "blk")
     val right = (0L until 40L).map { i =>
@@ -213,7 +208,6 @@ class FuzzyLinkSpec extends SparkSpec {
   }
 
   test("fellegiSunterLevelsTf: exact level is TF-adjusted, fuzzy levels keep fixed ratios") {
-    GraftExtensions.register(spark)
     val corpus = (Seq.fill(8)("COMMON") ++ Seq.fill(2)("RARE"))
       .zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("id", "seg")
     val left = Seq(
@@ -304,7 +298,6 @@ class FuzzyLinkSpec extends SparkSpec {
   }
 
   test("fellegiSunterEmLevelsTf: deterministic, trained levels discriminative, TF applied at the exact level") {
-    GraftExtensions.register(spark)
     // segments with very different corpus frequency; planted exact name
     // duplicates so EM has signal to learn from
     val corpus = (Seq.fill(16)("COMMON") ++ Seq.fill(4)("RARE"))

@@ -86,7 +86,6 @@ class GraphMetricsSpec extends SparkSpec {
       array_intersect(col("a"), col("b")).as("ref"))
     assert(got.where(col("v") =!= col("ref")).count() == 0)
     // SQL registration coerces int-literal arrays (the getLong hazard)
-    graft.functions.GraftExtensions.register(spark)
     val one = spark.sql(
       "SELECT sorted_intersect_values(array(1, 2, 3), array(2, 3, 4)) AS v")
       .head().getSeq[Long](0)

@@ -64,7 +64,6 @@ class StreamingSpec extends SparkSpec {
 
   test("incremental fuzzy match scores streamed records like the batch linker") {
     implicit val ctx = spark.sqlContext
-    graft.functions.GraftExtensions.register(spark)
     import graft.operators.Link
     val reference = Seq(
       (100L, 1L, "martha"), (101L, 1L, "jonathan"), (102L, 2L, "martha"))
@@ -95,7 +94,6 @@ class StreamingSpec extends SparkSpec {
 
   test("windowed incremental fuzzy match emits finalised windows in append mode") {
     implicit val ctx = spark.sqlContext
-    graft.functions.GraftExtensions.register(spark)
     import graft.operators.Link
     val reference = Seq(
       (100L, 1L, "martha"), (101L, 1L, "jonathan"), (102L, 2L, "martha"))

@@ -1,5 +1,8 @@
 package graft
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
+
+import scala.util.control.NonFatal
 
 /** Between-query block-manager cleanup shared by [[Bench]] and [[Verify]]:
   * drop every retained cache/localCheckpoint block so ~130 queries' worth
@@ -26,7 +29,7 @@ object BlockCleanup {
     * text mutes exactly this event and nothing else; real scheduler errors
     * (job failures) still surface both in the log and as exceptions in the
     * caller's own try/catch. Idempotent; best-effort (a log4j2 API drift
-    * must never fail a bench run).
+    * must never fail a bench run, so a failure is printed, not thrown).
     */
   def muteBenignCleanupSpam(): Unit =
     try {
@@ -88,17 +91,26 @@ object BlockCleanup {
         cfg.getLoggers.values().asScala.foreach(_.addFilter(mute))
         ctx.updateLoggers()
       }
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(e) => loud("cleanup log filter install", e) }
 
-  def dropRetainedBlocks(spark: SparkSession): Unit = {
+  def dropRetainedBlocks(spark: SparkSession): Unit =
+    quietUnpersist(spark.sparkContext.getPersistentRDDs.values)
+
+  /** Non-blocking unpersist under the quiet `org.apache.spark.rdd` logger
+    * (see above); also [[Ckpt.iterate]]'s per-round release. A failure is
+    * printed, never thrown.
+    */
+  private[graft] def quietUnpersist(rdds: Iterable[RDD[_]]): Unit = {
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.config.Configurator
     val logger = "org.apache.spark.rdd"
     val prev: Level = LogManager.getLogger(logger).getLevel
     Configurator.setLevel(logger, Level.ERROR)
-    try spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-    catch { case _: Throwable => () }
+    try rdds.foreach(_.unpersist(blocking = false))
+    catch { case NonFatal(e) => loud("block release", e) }
     finally Configurator.setLevel(logger, prev)
   }
+
+  private def loud(what: String, e: Throwable): Unit =
+    System.err.println(s"graft: $what failed: ${e.getClass.getName}: ${e.getMessage}")
 }

@@ -74,85 +74,138 @@ object Tables {
   }
 }
 
-/** Lineage truncation for iterative operators (components, PageRank,
-  * label propagation, k-core peeling): each round's frame must cut its
-  * logical plan or the lineage grows unboundedly over rounds.
+/** Lineage truncation, and the one loop every iterative operator runs
+  * through ([[iterate]]).
+  *
+  * Invariant of [[iterate]]: every frame a round hands on — to the next
+  * step, to the convergence test, to the caller — is truncated AND already
+  * materialized, by one action on the calling thread. A lazy checkpoint
+  * that a multi-stage plan materializes first can be materialized from two
+  * AQE threads at once (a shuffle-stage submission and a broadcast
+  * collect), and that race can deadlock the driver: the DAGScheduler event
+  * loop holds the RDD lock and wants the RDDCheckpointData lock while a
+  * broadcast-exchange thread holds the reverse. Outside [[iterate]], a
+  * lazy [[truncate]] must be materialized (count) before it feeds a join.
   *
   * Two modes, chosen by session conf:
-  *   - default: `localCheckpoint` (lazy) — executor-local blocks, zero
-  *     extra I/O; right for local mode and for clusters where a lost
-  *     executor may simply rerun the job;
+  *   - default: `localCheckpoint` — executor-local blocks, zero extra I/O;
+  *     right for local mode and for clusters where a lost executor may
+  *     simply rerun the job;
   *   - `spark.graft.checkpoint.dir=<path>`: durable `checkpoint()` to
   *     that directory (set on the SparkContext on first use) — on a real
   *     100 TB cluster an hours-long iterative job survives executor loss,
   *     which executor-local blocks do not.
   * Both modes truncate lineage identically, so results are bit-identical
-  * (spec-pinned in ComponentsSpec).
+  * (spec-pinned in GraphMetricsSpec).
   */
 object Ckpt {
+  import org.apache.spark.rdd.RDD
+  import org.apache.spark.sql.catalyst.InternalRow
+
   // setCheckpointDir mints a fresh UUID subdirectory per call — remember
   // the last dir we applied so re-entrant operators don't litter one per
   // round. (Volatile is enough: worst case under a race is one extra
   // subdirectory, never a wrong checkpoint.)
   @volatile private var appliedDir: String = null
 
-  /** Rolling block release for iterative loops. Round N−1's
-    * localCheckpoint blocks are dead the moment round N is materialised,
-    * but nothing drops them until driver GC happens to collect the old
-    * RDD reference — on the sf10 replica (1.69G-edge frames ≈ tens of GB
-    * per round) the leftovers exhausted local disk and killed
-    * k-core/PageRank outright. Protocol per round:
-    * `mark()` → build the round's truncated frame → materialise it
-    * (count/head) → `release()`. release unpersists every persistent RDD
-    * that existed at mark() time except the loop's base inputs (whatever
-    * was persistent when the Rolling was constructed), then nudges the
-    * JVM so ContextCleaner also reaps the dead rounds' shuffle files.
-    * Durable-checkpoint mode writes files instead of blocks — pending
-    * stays empty and release is a no-op; reliable storage is the
-    * cluster's concern.
+  private lazy val log = org.apache.logging.log4j.LogManager.getLogger("graft.Ckpt")
+
+  /** What [[iterate]] returns: the last frame, one signal per frame (index
+    * 0 is `init`, index r round r), and whether `done` ended the loop.
     */
-  final class Rolling(spark: SparkSession) {
-    private val sc = spark.sparkContext
-    private val keep: Set[Int] = sc.getPersistentRDDs.keySet.toSet
-    private var pending: Set[Int] = Set.empty
+  final case class Rounds[S](frame: DataFrame, signals: IndexedSeq[S], converged: Boolean)
 
-    /** Snapshot the currently-persistent non-base RDDs (= prior rounds'). */
-    def mark(): Unit =
-      pending = sc.getPersistentRDDs.keySet.toSet -- keep
-
-    /** Drop the marked blocks; call only after the new round's frame is
-      * materialised (its lineage is truncated — the old blocks are the
-      * only copy of nothing anymore).
-      */
-    def release(): Unit = {
-      if (pending.nonEmpty) {
-        // silence the expected "truncated lineage" WARN, as BlockCleanup
-        import org.apache.logging.log4j.{Level, LogManager}
-        import org.apache.logging.log4j.core.config.Configurator
-        val logger = "org.apache.spark.rdd"
-        val prev = LogManager.getLogger(logger).getLevel
-        Configurator.setLevel(logger, Level.ERROR)
-        val bytes =
-          try {
-            val sizes = sc.getRDDStorageInfo
-              .filter(i => pending.contains(i.id))
-              .map(i => i.memSize + i.diskSize).sum
-            val live = sc.getPersistentRDDs
-            pending.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
-            sizes
-          } catch { case _: Throwable => 0L }
-          finally Configurator.setLevel(logger, prev)
-        pending = Set.empty
-        // Shuffle files of dead rounds clean up only when ContextCleaner
-        // sees their references collected; when this loop is moving GBs
-        // per round, a forced gc bounds disk between Spark's own 30-min
-        // periodicGC. Gated on released size so sf0.01-scale rounds never
-        // pay a full collection.
-        if (bytes > (1L << 30)) System.gc()
-      }
+  /** Run `init`, then `step(prev, round)` for rounds 1..maxRounds until
+    * `done(prevSignal, signal)`. Per frame, in order:
+    *   1. truncate it ([[truncateBulk]] when `bulk`); an `init` that is
+    *      already a materialized checkpoint is used as is;
+    *   2. run `signal` on it: the convergence action is the frame's one
+    *      materialization point, on this thread. It must run its stages
+    *      one after another (a count, a global aggregate) — never a join
+    *      that broadcasts the frame;
+    *   3. if the signal left the checkpoint unmaterialized, run one
+    *      row-count job over it;
+    *   4. drop the previous round's blocks and log one DEBUG line
+    *      `<op> round <r> signal <s>` on the `graft.Ckpt` logger.
+    * Blocks that were persistent before the call (the base inputs) stay.
+    * The release is the sf10 disk fix: nothing else drops round N−1's
+    * blocks until driver GC collects its RDD, and on the 1.69G-edge
+    * replica the leftovers exhausted local disk and killed k-core and
+    * PageRank. Durable mode writes files instead, so there is nothing to
+    * release.
+    */
+  def iterate[S](op: String, init: DataFrame, maxRounds: Int, bulk: Boolean = false)(
+      step: (DataFrame, Int) => DataFrame)(
+      signal: DataFrame => S,
+      done: (S, S) => Boolean = (_: S, _: S) => false): Rounds[S] = {
+    val sc = init.sparkSession.sparkContext
+    def persisted = sc.getPersistentRDDs.keySet.toSet
+    val base = persisted
+    def settle(df: DataFrame, round: Int): (DataFrame, S) = {
+      val reuse = round == 0 && checkpointRdd(df).exists(_.isCheckpointed)
+      val cut = if (reuse) df else truncateImpl(df, bulk)
+      val s = signal(cut)
+      val rdd = checkpointRdd(cut).get
+      if (!rdd.isCheckpointed) rdd.count()
+      if (!rdd.isCheckpointed)
+        throw new IllegalStateException(s"$op round $round: checkpoint was not materialized")
+      log.debug(s"$op round $round signal $s")
+      (cut, s)
     }
+    var (frame, sig) = settle(init, 0)
+    val signals = IndexedSeq.newBuilder[S] += sig
+    var converged = false
+    var round = 0
+    while (!converged && round < maxRounds) {
+      round += 1
+      val dead = persisted -- base
+      val (next, nextSig) = settle(step(frame, round), round)
+      release(sc, dead)
+      converged = done(sig, nextSig)
+      frame = next
+      sig = nextSig
+      signals += sig
+    }
+    Rounds(frame, signals.result(), converged)
   }
 
+  /** Unpersist the RDDs `ids`. Shuffle files of dead rounds are cleaned
+    * only when ContextCleaner sees their references collected, so when a
+    * loop moves GBs per round a forced gc bounds disk between Spark's own
+    * 30-min periodicGC; gated on the released size so small rounds never
+    * pay a full collection.
+    */
+  private def release(sc: org.apache.spark.SparkContext, ids: Set[Int]): Unit =
+    if (ids.nonEmpty) {
+      val bytes = sc.getRDDStorageInfo.filter(i => ids.contains(i.id))
+        .map(i => i.memSize + i.diskSize).sum
+      val live = sc.getPersistentRDDs
+      BlockCleanup.quietUnpersist(ids.toSeq.flatMap(live.get))
+      if (bytes > (1L << 30)) System.gc()
+    }
+
+  /** Row count of a truncated frame as one job over its checkpoint RDD —
+    * the job an eager `localCheckpoint` runs. The usual [[iterate]] signal.
+    */
+  def rows(df: DataFrame): Long = rddOf(df).count()
+
+  /** Rows of a truncated frame whose boolean column `c` is true, as one job. */
+  def rowsWhere(c: String): DataFrame => Long = { df =>
+    val i = df.schema.fieldIndex(c)
+    rddOf(df).filter(_.getBoolean(i)).count()
+  }
+
+  private def checkpointRdd(df: DataFrame): Option[RDD[InternalRow]] =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => Some(r.rdd)
+      case _ => None
+    }
+
+  private def rddOf(df: DataFrame): RDD[InternalRow] =
+    checkpointRdd(df).getOrElse(throw new IllegalArgumentException(
+      s"not a truncated frame: ${df.queryExecution.logical.nodeName}"))
+
+  /** Lazy truncation of a node-sized frame (MEMORY_AND_DISK blocks). */
   def truncate(df: DataFrame): DataFrame = truncateImpl(df, bulk = false)
 
   /** [[truncate]] for DATA-SIZED frames (edge lists, pair lists): blocks

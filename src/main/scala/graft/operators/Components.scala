@@ -11,11 +11,7 @@ import org.apache.spark.sql.functions._
   * as the alternating large-star / small-star algorithm of Kiveris et al.,
   * "Connected Components in MapReduce and Beyond" (SoCC 2014): O(log n)
   * rounds, each round a groupBy-min plus an equi-join, all shuffle-partitioned
-  * by node id. Lineage is truncated every round via [[graft.Ckpt.truncate]]:
-  * executor-local checkpoints by default, or durable `checkpoint()` when
-  * `spark.graft.checkpoint.dir` points at reliable storage — the mode a
-  * real 100 TB cluster runs so an hours-long resolve survives executor
-  * loss (both modes are spec-pinned to identical results).
+  * by node id. The rounds run through [[graft.Ckpt.iterate]].
   *
   * Output: one row per node, `(id, component)` where `component` is the
   * minimum node id in the component — a deterministic representative, unlike
@@ -140,18 +136,14 @@ object Components {
     spark.createDataset(assigned).toDF("id", "component")
   }
 
-  /** Distributed alternating large-star / small-star rounds. */
-  private def distributed(orientedEdges: DataFrame, maxIter: Int): DataFrame = {
-    val edges = orientedEdges.select(col("u").as("src"), col("v").as("dst"))
-    val spark = edges.sparkSession
-
-    val nodes = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id")))
+  /** Distributed alternating large-star / small-star rounds over edges
+    * `(u, v)` already oriented large -> small by the caller; the invariant
+    * is maintained across rounds.
+    */
+  private def distributed(edges: DataFrame, maxIter: Int): DataFrame = {
+    val nodes = edges.select(col("u").as("id"))
+      .union(edges.select(col("v").as("id")))
       .distinct()
-
-    // Already oriented large -> small by the caller; the invariant is
-    // maintained across rounds.
-    var e = edges.select(col("src").as("u"), col("dst").as("v"))
 
     // Edge-set signature for the convergence test: count + XOR of per-edge
     // hashes. XOR is commutative and cannot overflow (unlike a sum under
@@ -188,33 +180,21 @@ object Components {
         .distinct()
     }
 
-    var converged = false
-    var iter = 0
-    var sig = signature(e)
-    val roll = new graft.Ckpt.Rolling(spark)
-    while (!converged && iter < maxIter) {
-      roll.mark()
-      // lazy checkpoint: the signature aggregation is the action that
-      // materialises it — one job per round instead of two
-      val next = graft.Ckpt.truncateBulk(smallStar(largeStar(e)))
-      val nextSig = signature(next)
-      roll.release()
-      converged = nextSig == sig
-      sig = nextSig
-      e = next
-      iter += 1
-    }
+    val rounds = graft.Ckpt.iterate("cc.round", edges, maxIter, bulk = true)(
+      (e, _) => smallStar(largeStar(e)))(
+      signature, (prev: (Long, Long), next: (Long, Long)) => next == prev)
 
     // A maxIter bailout would silently emit split components (the final
     // groupBy-min does not finish the contraction) — fail loudly instead.
     // log2(n) rounds suffice in theory; 30 covers any realistic graph.
-    if (!converged)
+    if (!rounds.converged)
       throw new IllegalStateException(
         s"connected components did not reach a fixpoint in $maxIter rounds; " +
           "raise maxIter (graph is adversarially chained) or pre-contract the input")
 
-    // At the fixpoint e is a forest of stars rooted at each component's min.
-    val assigned = e.groupBy(col("u").as("id")).agg(min("v").as("component"))
+    // At the fixpoint the edges are a forest of stars rooted at each
+    // component's min.
+    val assigned = rounds.frame.groupBy(col("u").as("id")).agg(min("v").as("component"))
     val roots = nodes.join(assigned, Seq("id"), "left_anti")
       .select(col("id"), col("id").as("component"))
     assigned.union(roots)

@@ -264,10 +264,8 @@ object GraphMetrics {
     * Scale bound: `alphaNum · n_nodes · scale` must stay under 2^63 —
     * the default (85, 1e8) is safe past 10^9 nodes. Each iteration is
     * one equi-join + one aggregation on the node key (AQE-splittable);
-    * the edge list and degrees are checkpointed once and reused, and
-    * each round's rank frame is lazily checkpointed so the lineage stays
-    * flat over iterations — the same discipline as
-    * [[graft.operators.Components]].
+    * the edge list and degrees are checkpointed once and reused, and the
+    * rounds run through [[graft.Ckpt.iterate]].
     */
   def pageRank(
       edges: DataFrame, iters: Int, scale: Long = 100000000L,
@@ -309,30 +307,20 @@ object GraphMetrics {
             Seq("n"), "left")
           .select(col("n"), col("d"), coalesce(col("sflag"), lit(0L)).as("sflag"))
     })
-    var pr = tagged.select(col("n"), (lit(scale) * col("sflag")).as("r"))
-    // Eager rounds + rolling release: materialise each rank frame, then
-    // drop the previous round's dead blocks (Ckpt.Rolling — the sf10
-    // disk-exhaustion fix). The count() that materialises is a scan of
-    // the blocks the checkpoint writes anyway.
-    val roll = new graft.Ckpt.Rolling(edges.sparkSession)
     val nodeCount = tagged.count()
     val bcMax = broadcastNodesMax(edges)
-    (1 to iters).foreach { _ =>
-      roll.mark()
+    val pr0 = tagged.select(col("n"), (lit(scale) * col("sflag")).as("r"))
+    graft.Ckpt.iterate("pagerank", pr0, iters) { (pr, _) =>
       val contrib = maybeBroadcast(
         pr.join(tagged, "n")
           .select(col("n").as("s"), expr("r DIV d").as("c")),
         nodeCount, bcMax)
-      pr = graft.Ckpt.truncate(
-        e2.join(contrib, "s")
-          .groupBy(col("t").as("n"))
-          .agg(expr(s"($alphaNum * sum(c)) DIV $alphaDen").as("flow"))
-          .join(tagged.select(col("n"), col("sflag")), "n")
-          .select(col("n"), (col("flow") + lit(base) * col("sflag")).as("r")))
-      pr.count()
-      roll.release()
-    }
-    pr
+      e2.join(contrib, "s")
+        .groupBy(col("t").as("n"))
+        .agg(expr(s"($alphaNum * sum(c)) DIV $alphaDen").as("flow"))
+        .join(tagged.select(col("n"), col("sflag")), "n")
+        .select(col("n"), (col("flow") + lit(base) * col("sflag")).as("r"))
+    }(graft.Ckpt.rows).frame
   }
 
   /** Synchronous label-propagation community detection (Raghavan, Albert
@@ -347,33 +335,26 @@ object GraphMetrics {
     * Per iteration: one equi-join (directed edge list ⋈ labels on the
     * source key) + a (node, label) count aggregation + a per-node argmin
     * of `struct(-count, label)` — all shuffle hash operations on the node
-    * key with partial aggregation; no windows, no driver state. Each
-    * round is lazily checkpointed to keep lineage flat, as in
-    * [[pageRank]].
+    * key with partial aggregation; no windows, no driver state. The
+    * rounds run through [[graft.Ckpt.iterate]].
     */
   def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1)
     val e2 = graft.Ckpt.truncateBulk(
       edges.select(col("a").as("s"), col("b").as("t"))
         .unionAll(edges.select(col("b").as("s"), col("a").as("t"))))
-    var lab = e2.select(col("s").as("n")).distinct()
+    val lab0 = e2.select(col("s").as("n")).distinct()
       .withColumn("lab", col("n"))
-    val roll = new graft.Ckpt.Rolling(edges.sparkSession)
-    val nodeCount = lab.count()
+    val nodeCount = lab0.count()
     val bcMax = broadcastNodesMax(edges)
-    (1 to iters).foreach { _ =>
-      roll.mark()
-      lab = graft.Ckpt.truncate(
-        e2.join(maybeBroadcast(lab.withColumnRenamed("n", "s"), nodeCount, bcMax), "s")
-          .groupBy(col("t").as("n"), col("lab"))
-          .agg(count(lit(1)).as("cnt"))
-          .groupBy("n")
-          .agg(min(struct((-col("cnt")).as("negc"), col("lab").as("lab"))).as("w"))
-          .select(col("n"), col("w.lab").as("lab")))
-      lab.count()
-      roll.release()
-    }
-    lab
+    graft.Ckpt.iterate("labelprop", lab0, iters) { (lab, _) =>
+      e2.join(maybeBroadcast(lab.withColumnRenamed("n", "s"), nodeCount, bcMax), "s")
+        .groupBy(col("t").as("n"), col("lab"))
+        .agg(count(lit(1)).as("cnt"))
+        .groupBy("n")
+        .agg(min(struct((-col("cnt")).as("negc"), col("lab").as("lab"))).as("w"))
+        .select(col("n"), col("w.lab").as("lab"))
+    }(graft.Ckpt.rows).frame
   }
 
   /** Fixed-round k-core peeling (Seidman 1983 "Network structure and
@@ -389,43 +370,12 @@ object GraphMetrics {
     * low-core fringe, dense duplicate groups in high cores.
     *
     * Per round: one degree aggregation + two semi-joins (edges to
-    * surviving endpoints) — all equi-operations on node keys, lazily
-    * checkpointed per round like [[pageRank]].
+    * surviving endpoints) — all equi-operations on node keys.
     *
     * @return surviving edges after `rounds` peels at threshold `k`.
     */
-  def kCoreEdges(edges: DataFrame, k: Long, rounds: Int): DataFrame = {
-    require(k >= 1 && rounds >= 1)
-    var e = graft.Ckpt.truncateBulk(edges)
-    // Fixed-point early exit: if a round removes no edge, every surviving
-    // node already has deg >= k, so all remaining rounds are no-ops — stop
-    // issuing cluster jobs. On dense graphs (where no node ever peels) this
-    // turns O(rounds) full-graph passes into one, which is what blew up
-    // 10×-data wall time before. Cost: one count() per executed round, on a
-    // frame the checkpoint materialises anyway.
-    var prev = e.count()
-    var round = 0
-    var fixed = false
-    val roll = new graft.Ckpt.Rolling(edges.sparkSession)
-    val bcMax = broadcastNodesMax(edges)
-    while (round < rounds && !fixed) {
-      roll.mark()
-      val keep = graft.Ckpt.truncate(
-        degrees(e).filter(col("deg") >= k).select(col("n")))
-      val kb = maybeBroadcast(keep, keep.count(), bcMax)
-      e = e
-        .join(kb.withColumnRenamed("n", "a"), Seq("a"), "left_semi")
-        .join(kb.withColumnRenamed("n", "b"), Seq("b"), "left_semi")
-        .select("a", "b")
-      e = graft.Ckpt.truncateBulk(e)
-      val cnt = e.count()
-      roll.release()
-      fixed = cnt == prev || cnt == 0L
-      prev = cnt
-      round += 1
-    }
-    e
-  }
+  def kCoreEdges(edges: DataFrame, k: Long, rounds: Int): DataFrame =
+    kCorePeel(edges, k, rounds)(graft.Ckpt.rows, (n: Long) => n).frame
 
   /** Per-round peeling summary of [[kCoreEdges]]: `(round, n_nodes, n_edges)`
     * after each of `rounds` peels at threshold `k` — always exactly `rounds`
@@ -435,39 +385,42 @@ object GraphMetrics {
     * unrolled oracle, which computes the no-op rounds explicitly).
     */
   def kCorePeelStats(edges: DataFrame, k: Long, rounds: Int): DataFrame = {
-    require(k >= 1 && rounds >= 1)
     val spark = edges.sparkSession
     import spark.implicits._
-    var e = graft.Ckpt.truncateBulk(edges)
-    var prev = e.count()
-    var lastNodes = 0L
-    var lastEdges = 0L
-    var fixed = false
-    val roll = new graft.Ckpt.Rolling(spark)
-    val bcMax = broadcastNodesMax(edges)
-    val rows = (1 to rounds).map { r =>
-      if (!fixed) {
-        roll.mark()
-        val keep = graft.Ckpt.truncate(
-          degrees(e).filter(col("deg") >= k).select(col("n")))
-        val kb = maybeBroadcast(keep, keep.count(), bcMax)
-        e = e
-          .join(kb.withColumnRenamed("n", "a"), Seq("a"), "left_semi")
-          .join(kb.withColumnRenamed("n", "b"), Seq("b"), "left_semi")
-          .select("a", "b")
-        e = graft.Ckpt.truncateBulk(e)
-        lastEdges = e.count()
-        roll.release()
-        lastNodes =
-          if (lastEdges == 0L) 0L
-          else e.select(col("a").as("n")).unionAll(e.select(col("b").as("n")))
-            .distinct().count()
-        fixed = lastEdges == prev || lastEdges == 0L
-        prev = lastEdges
-      }
-      (r, lastNodes, lastEdges)
+    def sizes(e: DataFrame): (Long, Long) = {
+      val nEdges = graft.Ckpt.rows(e)
+      val nNodes =
+        if (nEdges == 0L) 0L
+        else e.select(col("a").as("n")).unionAll(e.select(col("b").as("n")))
+          .distinct().count()
+      (nNodes, nEdges)
     }
-    rows.toDF("round", "n_nodes", "n_edges").orderBy("round")
+    val signals = kCorePeel(edges, k, rounds)(sizes, (s: (Long, Long)) => s._2).signals
+    (1 to rounds).map { r =>
+      val (nNodes, nEdges) = signals(math.min(r, signals.size - 1))
+      (r, nNodes, nEdges)
+    }.toDF("round", "n_nodes", "n_edges").orderBy("round")
+  }
+
+  /** The peel loop of [[kCoreEdges]] and [[kCorePeelStats]]. Fixed-point
+    * early exit: if a round removes no edge, every surviving node already
+    * has deg >= k, so all remaining rounds are no-ops — stop issuing
+    * cluster jobs. On dense graphs (where no node ever peels) this turns
+    * O(rounds) full-graph passes into one, which is what blew up 10×-data
+    * wall time before.
+    */
+  private def kCorePeel[S](edges: DataFrame, k: Long, rounds: Int)(
+      signal: DataFrame => S, nEdges: S => Long): graft.Ckpt.Rounds[S] = {
+    require(k >= 1 && rounds >= 1)
+    val bcMax = broadcastNodesMax(edges)
+    graft.Ckpt.iterate("kcore.peel", edges, rounds, bulk = true) { (e, _) =>
+      val keep = graft.Ckpt.truncate(
+        degrees(e).filter(col("deg") >= k).select(col("n")))
+      val kb = maybeBroadcast(keep, keep.count(), bcMax)
+      e.join(kb.withColumnRenamed("n", "a"), Seq("a"), "left_semi")
+        .join(kb.withColumnRenamed("n", "b"), Seq("b"), "left_semi")
+        .select("a", "b")
+    }(signal, (prev, next) => nEdges(next) == nEdges(prev) || nEdges(next) == 0L)
   }
 
   /** Reference-quality O(n³) triangle count for specs. */

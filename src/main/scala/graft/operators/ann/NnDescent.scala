@@ -38,9 +38,9 @@ import org.apache.spark.sql.functions._
   *     cosine kernel and emitted in both directions, merged with the
   *     current graph, top-k kept per node via the bounded-heap TopK
   *     operator (no per-group sort);
-  *  3. rounds are O(1) (the paper observes ~4-5 to convergence);
-  *     per-round lineage is truncated (Ckpt) like every iterative
-  *     operator here.
+  *  3. rounds are O(1) (the paper observes ~4-5 to convergence) and
+  *     run through [[graft.Ckpt.iterate]] like every iterative operator
+  *     here.
   *
   * Per-round cost: |V|·cap² candidate wedges through two equi-joins in
   * round 1, decaying with the new-edge fraction in later rounds (the
@@ -89,10 +89,9 @@ object NnDescent {
     val init = initEdges(vecs, n, kBuild)
     // `fresh` marks edges added in the latest merge — only wedges touching
     // a fresh edge are scored next round (the paper's incremental rule)
-    var nn = score(init, vecs).withColumn("fresh", lit(true))
-    nn = graft.plans.TopK.perKey(nn, Seq("id"), "sim", kBuild,
+    val nn = graft.plans.TopK.perKey(
+      score(init, vecs).withColumn("fresh", lit(true)), Seq("id"), "sim", kBuild,
       tieCols = Seq("nbr")).drop("rank")
-    nn = graft.Ckpt.truncate(nn)
     val done = descend(nn, vecs, k, kBuild, iters, cap, delta, termN = n)
     if (kBuild == k) done
     else graft.plans.TopK.perKey(done, Seq("id"), "sim", k,
@@ -151,18 +150,22 @@ object NnDescent {
 
   /** The descent loop (the paper's §2.1 main iteration): takes the current
     * graph `nn0` — (id, nbr, sim, fresh), per-node lists already capped at
-    * kBuild — and runs up to `iters` rounds of capped local joins, merging
-    * proposals and re-truncating per node each round. `termN` is the
-    * δ-termination base (corpus size for a full build; DELTA size for an
-    * incremental update, where fresh counts are small from the start).
-    * Returns the converged kBuild-lists graph (id, nbr, sim).
+    * kBuild, still a lazy plan — and runs up to `iters` rounds of capped
+    * local joins, merging proposals and re-truncating per node each round.
+    * `nn0` is round 0 of [[graft.Ckpt.iterate]], so it is materialized on
+    * this thread before the first round's multi-stage plan reads it (that
+    * method's scaladoc names the deadlock a lazy frame here caused). Each
+    * round's signal is its fresh-edge count; the loop stops when it falls
+    * under δ·k·`termN` (the paper's δ-termination). `termN` is the corpus
+    * size for a full build and the DELTA size for an incremental update,
+    * where fresh counts are small from the start. Returns the converged
+    * kBuild-lists graph (id, nbr, sim).
     */
   private def descend(
       nn0: DataFrame, vecs: DataFrame, k: Int, kBuild: Int, iters: Int,
       cap: Int, delta: Double, termN: Long): DataFrame = {
-    var nn = nn0
-    var converged = false
-    for (r <- 1 to iters if !converged) {
+    val minFresh = (delta * k * termN).toLong.max(1L)
+    graft.Ckpt.iterate("nnd.round", nn0, iters) { (nn, r) =>
       val fwd = nn.select("id", "nbr", "fresh")
       val rev = fwd.select(col("nbr").as("id"), col("id").as("nbr"),
         col("fresh"))
@@ -222,27 +225,9 @@ object NnDescent {
       // age the current graph (its fresh edges were just explored), then
       // merge: a proposal duplicating an existing edge stays old (min),
       // a genuinely new edge enters fresh
-      nn = graft.Ckpt.truncate(mergeTopK(nn, proposals, kBuild))
-      // δ-termination: the count doubles as the round's materialization
-      // point (truncate is lazy), so each round's blocks land exactly once.
-      // The count runs on EVERY round including the last — skipping the
-      // final round's count (tried in r19: the converged flag is dead
-      // there, one job saved per descend) hands the UNMATERIALIZED lazy
-      // checkpoint to the caller, whose first action materializes it from
-      // several AQE threads at once (a shuffle-stage submission and a
-      // broadcast collect), and that concurrent first materialization of
-      // one lazy localCheckpoint can deadlock the driver (observed: the
-      // DAGScheduler event loop holding the RDD lock wanting the
-      // RDDCheckpointData lock, a broadcast-exchange thread holding the
-      // reverse — a hung graft.Verify). One scheduler job is not worth a
-      // driver hang; the count guarantees single-threaded materialization.
-      val freshCnt = nn.filter(col("fresh")).count()
-      if (sys.env.contains("GRAFT_NND_DEBUG"))
-        System.err.println(s"[nnd] round $r fresh=$freshCnt termN=$termN " +
-          s"thresh=${(delta * k * termN).toLong.max(1L)}")
-      if (freshCnt < (delta * k * termN).toLong.max(1L)) converged = true
-    }
-    nn.drop("fresh")
+      mergeTopK(nn, proposals, kBuild)
+    }(graft.Ckpt.rowsWhere("fresh"), (_: Long, fresh: Long) => fresh < minFresh)
+      .frame.drop("fresh")
   }
 
   /** The merge shared by the descent round, the incremental-insert seeding
@@ -328,9 +313,9 @@ object NnDescent {
     // (its old×old wedges were explored at build time); genuinely new
     // edges enter fresh and drive the next rounds' local joins
     // (same combined one-exchange merge as the descent rounds)
-    val capped = graft.Ckpt.truncate(mergeTopK(
-      graph.select(col("id"), col("nbr"), col("sim")), seedEdges, kBuild))
-    val done = descend(capped, vecs, k, kBuild, iters, cap, deltaTerm,
+    val merged = mergeTopK(
+      graph.select(col("id"), col("nbr"), col("sim")), seedEdges, kBuild)
+    val done = descend(merged, vecs, k, kBuild, iters, cap, deltaTerm,
       termN = nDelta)
     graft.plans.TopK.perKey(done, Seq("id"), "sim", k,
       tieCols = Seq("nbr")).drop("rank")
@@ -400,10 +385,9 @@ object NnDescent {
     // one explode, not a self-union (the union re-scored the bridge
     // candidates once per branch)
     val freshE = bothDirections(score(cand, vecs))
-    val capped = graft.Ckpt.truncate(mergeTopK(pruned, freshE, kBuild))
     val nTouched = math.max(1L, cand.select("id").distinct().count())
-    val done = descend(capped, vecs, k, kBuild, iters, cap, deltaTerm,
-      termN = nTouched)
+    val done = descend(mergeTopK(pruned, freshE, kBuild), vecs, k, kBuild,
+      iters, cap, deltaTerm, termN = nTouched)
     val out = graft.plans.TopK.perKey(done, Seq("id"), "sim", k,
       tieCols = Seq("nbr")).drop("rank")
       .localCheckpoint(false)
@@ -480,12 +464,11 @@ object NnDescent {
     val floorNodes = vecs.select(col("id").as("node"))
       .orderBy(xxhash64(col("node"), lit(11L)), col("node"))
       .limit(seeds)
-    var visited = scoreQ(
+    val seeded = scoreQ(
       q.select(col("qid")).crossJoin(broadcast(floorNodes)), q, vecs)
       .unionByName(coarse)
       .groupBy("qid", "node").agg(max("sim").as("sim"))
-    visited = graft.Ckpt.truncate(visited)
-    for (_ <- 1 to hops) {
+    val visited = graft.Ckpt.iterate("search.hop", seeded, hops) { (visited, _) =>
       val frontier = graft.plans.TopK.perKey(visited, Seq("qid"), "sim",
         beam, tieCols = Seq("node")).select("qid", "node")
       // score only pairs not already visited — each (query, node) cosine
@@ -495,9 +478,8 @@ object NnDescent {
         .select(col("qid"), col("nbr").as("node"))
         .distinct()
         .join(visited.select("qid", "node"), Seq("qid", "node"), "left_anti")
-      visited = graft.Ckpt.truncate(
-        visited.unionByName(scoreQ(fresh, q, vecs)))
-    }
+      visited.unionByName(scoreQ(fresh, q, vecs))
+    }(graft.Ckpt.rows).frame
     val top = if (excludeSelf) visited.filter(col("qid") =!= col("node"))
               else visited
     graft.plans.TopK.perKey(top, Seq("qid"), "sim", k, tieCols = Seq("node"))

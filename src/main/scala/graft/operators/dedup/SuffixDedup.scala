@@ -89,32 +89,24 @@ object SuffixDedup {
       s"doc_id ${bounds.getLong(1)} overflows the gpos encoding at shift $shift")
     val withG = toks.withColumn("gpos",
       shiftleft(col("doc_id"), shift) + col("pos"))
-    // Eager rounds + rolling release (the GraphMetrics/Components loop
-    // protocol): each round's rank table is corpus-sized (one row per
-    // token), so round N−1's blocks must be DROPPED once round N is
-    // materialised — six lazily-retained MEMORY copies of a 2.7 G-token
-    // replica OOM'd the century bench before this. truncateBulk puts the
-    // blocks DISK_ONLY so the execution pool keeps the whole region.
-    val roll = new graft.Ckpt.Rolling(docs.sparkSession)
+    // Each round's rank table is corpus-sized (one row per token), so the
+    // rounds run through Ckpt.iterate (it drops round N−1's blocks once
+    // round N exists — six retained copies of a 2.7 G-token replica OOM'd
+    // the century bench) with DISK_ONLY blocks (bulk).
     // depth-1 ranks: token equivalence classes
-    var ranks = graft.Ckpt.truncateBulk(withG
+    val ranks0 = withG
       .join(withG.groupBy("tok").agg(min("gpos").as("r")), "tok")
-      .select(col("doc_id"), col("pos"), col("gpos"), col("r")))
-    ranks.count()
-    var k = 1
+      .select(col("doc_id"), col("pos"), col("gpos"), col("r"))
     val byDoc = Window.partitionBy("doc_id").orderBy("pos")
-    while (k < depth) {
-      roll.mark()
+    // round i doubles the depth from k = 2^(i−1) to 2k
+    graft.Ckpt.iterate("suffix.rank", ranks0,
+        Integer.numberOfTrailingZeros(depth), bulk = true) { (ranks, i) =>
       val paired = ranks.withColumn("r2",
-        coalesce(lead(col("r"), k).over(byDoc), lit(-1L)))
+        coalesce(lead(col("r"), 1 << (i - 1)).over(byDoc), lit(-1L)))
       val classes = paired.groupBy("r", "r2").agg(min("gpos").as("rn"))
-      ranks = graft.Ckpt.truncateBulk(paired.join(classes, Seq("r", "r2"))
-        .select(col("doc_id"), col("pos"), col("gpos"), col("rn").as("r")))
-      ranks.count()
-      roll.release()
-      k *= 2
-    }
-    ranks
+      paired.join(classes, Seq("r", "r2"))
+        .select(col("doc_id"), col("pos"), col("gpos"), col("rn").as("r"))
+    }(graft.Ckpt.rows).frame
   }
 
   /** Smallest power of two B with 2B ≥ minLen (and B ≤ minLen), so the

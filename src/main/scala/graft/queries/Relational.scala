@@ -834,19 +834,17 @@ object Relational {
   private def qHierarchy(s: SparkSession, dir: String): DataFrame = {
     val parentOf =
       "1 + CAST(conv(substring(md5(CAST(c_custkey AS STRING)), 1, 4), 16, 10) AS BIGINT) % (c_custkey - 1)"
-    var state = Tables(s, dir, "customer")
+    val state0 = Tables(s, dir, "customer")
       .select(col("c_custkey").as("node"),
         when(col("c_custkey") <= 10, col("c_custkey"))
           .otherwise(expr(parentOf)).as("anc"),
         when(col("c_custkey") <= 10, 0L).otherwise(1L).as("d"))
-      .localCheckpoint(false)
-    for (_ <- 1 to 7) {
+    val state = graft.Ckpt.iterate("q_hierarchy", state0, 7) { (state, _) =>
       val jump = state.select(col("node").as("j_node"),
         col("anc").as("j_anc"), col("d").as("j_d"))
-      state = state.join(jump, state("anc") === jump("j_node"))
+      state.join(jump, state("anc") === jump("j_node"))
         .select(col("node"), col("j_anc").as("anc"), (col("d") + col("j_d")).as("d"))
-        .localCheckpoint(false)
-    }
+    }(graft.Ckpt.rows).frame
     state.groupBy(col("d").as("depth"))
       .agg(count(lit(1)).as("n_nodes"),
         min("node").as("min_node"), max("node").as("max_node"),

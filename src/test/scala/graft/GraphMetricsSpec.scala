@@ -96,16 +96,34 @@ class GraphMetricsSpec extends SparkSpec {
     // spark.graft.checkpoint.dir switches every iterative operator's
     // per-round lineage cut from executor-local blocks to reliable
     // checkpoint files (the fault-tolerant mode for a real cluster).
-    // Truncation must never change results: pin PageRank, k-core and
-    // components bit-identical across the two modes.
+    // Truncation must never change results: pin every loop that runs
+    // through Ckpt.iterate bit-identical across the two modes.
     val e = GraphMetrics.canonicalEdges(randomEdges(51, 40, 200), "left_id", "right_id")
     val pairs = randomEdges(52, 60, 150)
       .withColumnRenamed("left_id", "src").withColumnRenamed("right_id", "dst")
-    def run() = (
-      GraphMetrics.pageRank(e, iters = 5).orderBy("n").collect().toSeq,
-      GraphMetrics.kCoreEdges(e, k = 3, rounds = 4).orderBy("a", "b").collect().toSeq,
-      graft.operators.Components.connected(pairs, smallGraphThreshold = 0)
-        .orderBy("id").collect().toSeq)
+    val rng = new Random(53)
+    val docs = Seq.tabulate(20)(i =>
+      (i.toLong, Seq.fill(5 + rng.nextInt(15))(s"w${rng.nextInt(6)}").mkString(" ")))
+      .toDF("doc_id", "text")
+    val vecs = Seq.tabulate(60)(i => (i.toLong, Seq.fill(8)(rng.nextDouble() * 2 - 1)))
+      .toDF("vec_id", "embedding")
+    def run() = {
+      val knn = graft.operators.ann.NnDescent.knnGraph(vecs, "vec_id", "embedding",
+        k = 4, iters = 3)
+      (
+        GraphMetrics.pageRank(e, iters = 5).orderBy("n").collect().toSeq,
+        GraphMetrics.kCoreEdges(e, k = 3, rounds = 4).orderBy("a", "b").collect().toSeq,
+        graft.operators.Components.connected(pairs, smallGraphThreshold = 0)
+          .orderBy("id").collect().toSeq,
+        GraphMetrics.labelPropagation(e, iters = 3).orderBy("n").collect().toSeq,
+        GraphMetrics.kCorePeelStats(e, k = 3, rounds = 4).collect().toSeq,
+        graft.operators.dedup.SuffixDedup.suffixRanks(docs, "doc_id", "text", 4)
+          .orderBy("doc_id", "pos").collect().toSeq,
+        knn.orderBy("id", "nbr").collect().toSeq,
+        graft.operators.ann.NnDescent.searchGraph(vecs.filter(col("vec_id") < 10), knn,
+          vecs, "vec_id", "embedding", k = 3, beam = 6, hops = 2)
+          .orderBy("query_id", "rank").collect().toSeq)
+    }
     val local = run()
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     spark.conf.set("spark.graft.checkpoint.dir", dir)

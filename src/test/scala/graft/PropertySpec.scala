@@ -336,6 +336,26 @@ class PropertySpec extends SparkSpec {
   }
 
   test("fixed-round k-core peeling matches a driver-side reference") {
+    // reference: peel every round explicitly, no-op rounds included; the
+    // survivors and (round, n_nodes, n_edges) after each round
+    def check(label: String, edges: Seq[(Long, Long)], k: Long, rounds: Int): Unit = {
+      var es = edges.toSet
+      val wantStats = (1 to rounds).map { r =>
+        val deg = es.toSeq.flatMap { case (a, b) => Seq(a, b) }
+          .groupBy(identity).view.mapValues(_.size.toLong).toMap
+        es = es.filter { case (a, b) => deg(a) >= k && deg(b) >= k }
+        (r, es.toSeq.flatMap { case (a, b) => Seq(a, b) }.distinct.size.toLong,
+          es.size.toLong)
+      }
+      val got = graft.operators.GraphMetrics
+        .kCoreEdges(edges.toDF("a", "b"), k, rounds)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == es, s"$label k=$k rounds=$rounds: $got != $es")
+      val gotStats = graft.operators.GraphMetrics
+        .kCorePeelStats(edges.toDF("a", "b"), k, rounds)
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
+      assert(gotStats == wantStats, s"$label k=$k rounds=$rounds: $gotStats != $wantStats")
+    }
     val rng = new Random(23)
     for (trial <- 1 to 6) {
       val n = 6 + rng.nextInt(40)
@@ -346,19 +366,12 @@ class PropertySpec extends SparkSpec {
         .filter { case (a, b) => a != b }
         .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
         .distinct
-      if (edges.nonEmpty) {
-        var es = edges.toSet
-        for (_ <- 1 to rounds) {
-          val deg = es.toSeq.flatMap { case (a, b) => Seq(a, b) }
-            .groupBy(identity).view.mapValues(_.size.toLong).toMap
-          es = es.filter { case (a, b) => deg(a) >= k && deg(b) >= k }
-        }
-        val got = graft.operators.GraphMetrics
-          .kCoreEdges(edges.toDF("a", "b"), k, rounds)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        assert(got == es, s"trial $trial k=$k rounds=$rounds: $got != $es")
-      }
+      if (edges.nonEmpty) check(s"trial $trial", edges, k, rounds)
     }
+    // a 4-clique with a 3-edge tail loses one tail edge per round; round 4
+    // removes nothing, so the early exit replays its row for rounds 5-6
+    val clique = for (a <- 0L to 3L; b <- a + 1 to 3L) yield (a, b)
+    check("clique+tail", clique ++ Seq((3L, 4L), (4L, 5L), (5L, 6L)), k = 2L, rounds = 6)
   }
 
   test("prefix-filtered jaccard join equals the naive all-pairs join on random sets") {

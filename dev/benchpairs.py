@@ -1,0 +1,170 @@
+#!/usr/bin/env python3
+"""Parent-vs-change benchmark pairs: run them, then judge them in one table.
+
+    # run 10 alternating pairs of one workload (pair i runs the parent first
+    # when i is even, the change first when i is odd); stdout of each run
+    # goes to <out>/<workload>.<seed>.<side>.log, stderr to .err
+    python3 dev/benchpairs.py run --parent ../parent --change . \\
+        --workload er_resolve --seeds 101-110 --out pairs/
+
+    # judge every <workload>.<seed>.<parent|change>.log in a directory
+    python3 dev/benchpairs.py report pairs/
+
+`run` calls `graftbench/run.py` inside each checkout with the run length
+from BENCHMARK.json and tracing off. `report` reads the last stdout line
+of each log, graftbench's `{"correct", "attempted", "failed", "metrics"}`
+JSON, pairs the runs by (workload, seed) and prints, per workload and
+BENCHMARK.json end-to-end metric:
+
+- each side's median and quartiles;
+- the change/parent ratio of the medians;
+- the pairs the change won (ties count for neither) out of the pairs run;
+- the parent's IQR/median;
+- `gain`: won at least 9/10 of the pairs and the medians differ by more
+  than the parent's IQR, in the better direction;
+- `bound`: whether the change's median is within the metric's bound of
+  the parent's (`ok`) or not (`WORSE`).
+
+Exit status: 3 if a metric is outside its bound (whatever else went
+wrong, so a regression is never masked); else 1 if any run failed an op,
+broke a gate, printed no JSON line or lacks a key, or has no partner;
+else 0. BENCHMARK.json is read from the repository root, never written.
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+from collections import defaultdict
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SIDES = ("parent", "change")
+
+
+def seeds_arg(s):
+    """`101-110` or `1,4,9` → list of ints."""
+    if "-" in s:
+        lo, hi = s.split("-")
+        return list(range(int(lo), int(hi) + 1))
+    return [int(x) for x in s.split(",")]
+
+
+def run(a, bench):
+    os.makedirs(a.out, exist_ok=True)
+    for i, seed in enumerate(a.seeds):
+        order = SIDES if i % 2 == 0 else SIDES[::-1]
+        for side in order:
+            tree = a.parent if side == "parent" else a.change
+            log = os.path.join(a.out, f"{a.workload}.{seed}.{side}.log")
+            cmd = [sys.executable, "graftbench/run.py", "--workload", a.workload, "--seed", str(seed),
+                   "--seconds", str(bench["run_seconds"]), "--trace", "0"]
+            with open(log, "w") as out, open(log[:-len(".log")] + ".err", "w") as err:
+                rc = subprocess.run(cmd, cwd=tree, stdout=out, stderr=err,
+                                    stdin=subprocess.DEVNULL).returncode
+            print(f"benchpairs: {a.workload} seed {seed} {side}: exit {rc}", file=sys.stderr)
+
+
+def last_json(path):
+    with open(path) as fh:
+        lines = [l for l in fh.read().splitlines() if l.strip()]
+    if not lines:
+        return None
+    try:
+        return json.loads(lines[-1])
+    except json.JSONDecodeError:
+        return None
+
+
+def quartiles(xs):
+    if len(xs) == 1:
+        return xs[0], xs[0], xs[0]
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def report(a, bench):
+    runs = defaultdict(dict)  # (workload, seed) -> side -> parsed JSON
+    problems = []
+    for name in sorted(os.listdir(a.dir)):
+        parts = name.split(".")
+        if len(parts) != 4 or parts[3] != "log" or parts[2] not in SIDES:
+            continue
+        workload, seed, side = parts[0], int(parts[1]), parts[2]
+        out = last_json(os.path.join(a.dir, name))
+        if out is None:
+            problems.append(f"{name}: no JSON last line")
+            continue
+        missing = [k for k in ("correct", "attempted", "failed", "metrics") if k not in out]
+        if missing:
+            problems.append(f"{name}: JSON last line lacks {', '.join(missing)}")
+            continue
+        if out["failed"] or not out["correct"]:
+            problems.append(f"{name}: failed {out['failed']} of {out['attempted']} ops, correct={out['correct']}")
+        runs[(workload, seed)][side] = out
+    pairs = defaultdict(list)  # workload -> [(seed, parent metrics, change metrics)]
+    for (workload, seed), sides in sorted(runs.items()):
+        if set(sides) != set(SIDES):
+            problems.append(f"{workload} seed {seed}: no {'change' if 'parent' in sides else 'parent'} run")
+            continue
+        pairs[workload].append((seed, sides["parent"]["metrics"], sides["change"]["metrics"]))
+
+    worse = []
+    head = (f"{'metric':<15} {'parent med [q1, q3]':>26} {'change med [q1, q3]':>26} "
+            f"{'ratio':>6} {'wins':>6} {'p IQR/med':>9} {'gain':>5} {'bound':>11}")
+    for workload, ps in sorted(pairs.items()):
+        n = len(ps)
+        print(f"\n{workload}: {n} pairs, seeds {', '.join(str(s) for s, _, _ in ps)}")
+        print(head)
+        for m in bench["end_to_end"]:
+            name, lower, bound = m["name"], m["better"] == "lower", m["bound"]
+            have = [(p[name]["value"], c[name]["value"]) for _, p, c in ps if name in p and name in c]
+            if len(have) != n:
+                problems.append(f"{workload} {name}: missing from {n - len(have)} pairs")
+                continue
+            pv, cv = [p for p, _ in have], [c for _, c in have]
+            pq, cq = quartiles(pv), quartiles(cv)
+            wins = sum(1 for p, c in have if (c < p if lower else c > p))
+            iqr = pq[2] - pq[0]
+            gap = (pq[1] - cq[1]) if lower else (cq[1] - pq[1])
+            gain = wins >= 0.9 * n and gap > iqr
+            ratio = cq[1] / pq[1] if pq[1] else float("nan")
+            within = cq[1] <= pq[1] * (1 + bound) if lower else cq[1] >= pq[1] * (1 - bound)
+            if not within:
+                worse.append(f"{workload} {name}")
+            rel = iqr / abs(pq[1]) if pq[1] else float("nan")
+
+            def fmt(q):
+                v = [f"{x:.0f}" if abs(x) >= 1000 else f"{x:.4g}" for x in q]
+                return f"{v[1]} [{v[0]}, {v[2]}]"
+            print(f"{name:<15} {fmt(pq):>26} {fmt(cq):>26} {ratio:>6.3f} {wins:>3}/{n:<2} {rel:>9.3f} "
+                  f"{'yes' if gain else 'no':>5} {('ok' if within else 'WORSE') + f' ±{bound}':>11}")
+    for p in problems:
+        print(f"benchpairs: {p}", file=sys.stderr)
+    for w in worse:
+        print(f"benchpairs: {w} is outside its bound", file=sys.stderr)
+    return 3 if worse else 1 if problems else 0
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
+    sub = ap.add_subparsers(dest="cmd", required=True)
+    r = sub.add_parser("run")
+    r.add_argument("--parent", required=True)
+    r.add_argument("--change", required=True)
+    r.add_argument("--workload", required=True)
+    r.add_argument("--seeds", required=True, type=seeds_arg)
+    r.add_argument("--out", required=True)
+    p = sub.add_parser("report")
+    p.add_argument("dir")
+    a = ap.parse_args()
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
+        bench = json.load(fh)
+    if a.cmd == "run":
+        run(a, bench)
+        return 0
+    return report(a, bench)
+
+
+if __name__ == "__main__":
+    sys.exit(main())

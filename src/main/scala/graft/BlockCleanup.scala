@@ -111,6 +111,30 @@ object BlockCleanup {
     finally Configurator.setLevel(logger, prev)
   }
 
-  private def loud(what: String, e: Throwable): Unit =
+  /** A fresh local temp dir, deleted recursively at JVM exit. A failed
+    * delete is printed, never thrown.
+    */
+  private[graft] def tempDir(prefix: String): String = {
+    tempDirHook
+    val p = java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDirs.add(p)
+    p
+  }
+
+  private val tempDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private lazy val tempDirHook: Unit = {
+    sys.addShutdownHook {
+      import scala.jdk.CollectionConverters._
+      tempDirs.asScala.foreach { p =>
+        try java.nio.file.Files.walk(java.nio.file.Paths.get(p))
+          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
+        catch { case NonFatal(e) => loud("temp dir cleanup", e) }
+      }
+    }
+    ()
+  }
+
+  private[graft] def loud(what: String, e: Throwable): Unit =
     System.err.println(s"graft: $what failed: ${e.getClass.getName}: ${e.getMessage}")
 }

@@ -304,6 +304,14 @@ object Link {
     private[operators] def allConditions: Seq[String] = levels ++ nullLevel
   }
 
+  /** `values(g)` at gamma g (0..L), `neutral` at the null level (gamma −1):
+    * one array lookup that names `gamma` once. A `when` per level names it
+    * L+1 times, and Catalyst inlines the gamma's whole CASE ladder at each
+    * reference once the score filter is pushed into the join condition.
+    */
+  private def perLevel(gamma: Column, neutral: Double, values: Seq[Column]): Column =
+    element_at(array(lit(neutral) +: values: _*), gamma + 2)
+
   /** Fellegi–Sunter scorer over multi-level fuzzy comparisons with fixed
     * per-level weights — the pre-estimated-parameter splink path extended
     * from binary agree/disagree to ordinal comparison levels (exact /
@@ -312,9 +320,10 @@ object Link {
     * `gamma_<comparison>` output columns.
     *
     * Scale shape: identical to [[fellegiSunter]] — one equi-join on the
-    * blocking condition; every level condition (including
-    * `jaro_winkler_similarity`, a native codegen expression) evaluates
-    * inside the join's whole-stage-codegen post-filter. Nothing quadratic.
+    * blocking condition. Each comparison's level ladder (including
+    * `jaro_winkler_similarity`, a native codegen expression) is evaluated
+    * once in the join condition and once in the output projection, because
+    * the weight references each gamma once. Nothing quadratic.
     */
   def fellegiSunterLevels(
       left: DataFrame, right: DataFrame,
@@ -341,10 +350,9 @@ object Link {
     val gammaCols = comparisons.zipWithIndex.map { case (c, i) =>
       c.gammaOf.as(s"gamma$i")
     }
+    // + 0.0 turns a −0.0 weight into 0.0, the zero the null level adds
     val weight = comparisons.zipWithIndex.map { case (c, i) =>
-      val L = c.levels.size
-      (0 to L).map(g => when(col(s"gamma$i") === g, lit(c.weights(g)))
-        .otherwise(lit(0.0))).reduce(_ + _)
+      perLevel(col(s"gamma$i"), 0.0, c.weights.map(lit)) + 0.0
     }.reduce(_ + _)
     cand
       .select(
@@ -454,9 +462,7 @@ object Link {
 
     val probability = {
       val ratio = comparisons.indices.map { i =>
-        (0 until nLevels(i)).map { g =>
-          when(col(s"g$i") === g, lit(m(i)(g) / u(i)(g))).otherwise(lit(1.0))
-        }.reduce(_ * _)
+        perLevel(col(s"g$i"), 1.0, (0 until nLevels(i)).map(g => lit(m(i)(g) / u(i)(g))))
       }.reduce(_ * _)
       val lr = lit(lambda / (1 - lambda)) * ratio
       lr / (lr + 1)
@@ -613,6 +619,7 @@ object Link {
       LevelComparison(levels, Seq.fill(levels.size + 1)(0.0)).gammaOf.as(s"g$i")
     }
     val total = corpus.count()
+    require(total > 0, "TF corpus is empty")
     val freq = corpus.groupBy(col(corpusCol).as("tf_value"))
       .agg(count(lit(1)).as("tf_cnt"))
     val cand = left.alias("l").join(right.alias("r"), expr(blocking))
@@ -645,17 +652,12 @@ object Link {
     val (lambda, m, u) = emFitLevels(patterns, nLevels, iterations, lambdaInit)
 
     val L = tfLevels
-    val tfRatio = {
-      val exact = lit(m(0)(L)) / (col("tf_cnt").cast("double") / lit(total.toDouble))
-      (0 until L).foldLeft(when(col("g0") === L, exact)) {
-        case (acc, g) => acc.when(col("g0") === g, lit(m(0)(g) / u(0)(g)))
-      }.otherwise(lit(1.0))
-    }
+    val exact = lit(m(0)(L)) / (col("tf_cnt").cast("double") / lit(total.toDouble))
+    val tfRatio =
+      perLevel(col("g0"), 1.0, (0 until L).map(g => lit(m(0)(g) / u(0)(g))) :+ exact)
     val ratio = otherLevels.indices.map { j =>
       val i = j + 1
-      (0 until nLevels(i)).map { g =>
-        when(col(s"g$i") === g, lit(m(i)(g) / u(i)(g))).otherwise(lit(1.0))
-      }.reduce(_ * _)
+      perLevel(col(s"g$i"), 1.0, (0 until nLevels(i)).map(g => lit(m(i)(g) / u(i)(g))))
     }.foldLeft(tfRatio)(_ * _)
     val lr = lit(lambda / (1 - lambda)) * ratio
     val scored = cand
@@ -675,9 +677,10 @@ object Link {
     * ratios indexed by gamma.
     *
     * Scale shape: one blocked equi-join for candidates + one equi-join
-    * against the corpus value-frequency table on the left value. The gamma
-    * CASE (including the native `jaro_winkler_similarity`) evaluates in the
-    * join's codegen'd post-projection.
+    * against the corpus value-frequency table on the left value. Each
+    * gamma's level ladder (including the native `jaro_winkler_similarity`)
+    * is evaluated once in the join condition and once in the output
+    * projection, because the ratio references each gamma once.
     *
     * @param tfComparison  levels for the TF-adjusted comparison, strongest
     *                      (exact equality on the TF column) first
@@ -708,27 +711,22 @@ object Link {
     tfComparison.foreach(validateComparison)
     others.foreach(_._1.foreach(validateComparison))
     val total = corpus.count()
+    require(total > 0, "TF corpus is empty")
     val freq = corpus.groupBy(col(corpusCol).as("tf_value"))
       .agg(count(lit(1)).as("tf_cnt"))
     val L = tfComparison.size
     val tfGamma = LevelComparison(tfComparison, Seq.fill(L + 1)(0.0)).gammaOf
-    val tfRatio = {
-      // tf_cnt is coalesced to 1 below: a left value absent from the corpus
-      // is at most as common as one occurrence, not a silent drop (the
-      // left join would otherwise NULL the ratio and the threshold filter
-      // would discard the pair)
-      val exact = lit(tfM) / (col("tf_cnt").cast("double") / lit(total.toDouble))
-      (0 until L).foldLeft(when(col("gamma_tf") === L, exact)) {
-        case (acc, g) => acc.when(col("gamma_tf") === g, lit(tfLevelRatios(g)))
-      }.otherwise(lit(1.0))
-    }
+    // tf_cnt is coalesced to 1 below: a left value absent from the corpus
+    // is at most as common as one occurrence, not a silent drop (the left
+    // join would otherwise NULL the ratio and the threshold filter would
+    // discard the pair)
+    val exact = lit(tfM) / (col("tf_cnt").cast("double") / lit(total.toDouble))
+    val tfRatio = perLevel(col("gamma_tf"), 1.0, tfLevelRatios.map(lit) :+ exact)
     val otherGammas = others.zipWithIndex.map { case ((levels, _), i) =>
       LevelComparison(levels, Seq.fill(levels.size + 1)(0.0)).gammaOf.as(s"gamma$i")
     }
-    val ratio = others.zipWithIndex.map { case ((levels, ratios), i) =>
-      (0 to levels.size).map { g =>
-        when(col(s"gamma$i") === g, lit(ratios(g))).otherwise(lit(1.0))
-      }.reduce(_ * _)
+    val ratio = others.zipWithIndex.map { case ((_, ratios), i) =>
+      perLevel(col(s"gamma$i"), 1.0, ratios.map(lit))
     }.foldLeft(tfRatio)(_ * _)
     left.alias("l")
       .join(right.alias("r"), expr(blocking))

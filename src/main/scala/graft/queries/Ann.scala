@@ -201,21 +201,6 @@ object Ann {
 
   // ---- persisted serving index (build-once / serve-many) --------------
 
-  private val cleanupPaths =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private lazy val cleanupHook: Unit = {
-    sys.addShutdownHook {
-      import scala.jdk.CollectionConverters._
-      cleanupPaths.asScala.foreach { p =>
-        try java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-        catch { case _: Throwable => () }
-      }
-    }
-    ()
-  }
-
   /** One persisted graph index per sf per JVM (built on first demand,
     * whichever of the index/serve queries runs first — bench's sorted
     * order makes that dx_knn_graph_index, so the serve query's wall is
@@ -231,12 +216,8 @@ object Ann {
     * near-zero wall for the registry's build row).
     */
   private def rebuildGraphIndex(s: SparkSession, dir: String): String = {
-    val path = builtIndexes.getOrElseUpdate(s"$dir#graph", {
-      cleanupHook
-      val tmp = java.nio.file.Files.createTempDirectory("graft_annidx").toString
-      cleanupPaths.add(tmp)
-      s"$tmp/graph"
-    })
+    val path = builtIndexes.getOrElseUpdate(s"$dir#graph",
+      graft.BlockCleanup.tempDir("graft_annidx") + "/graph")
     graft.operators.ann.GraphIndex.build(
       Tables(s, dir, "embeddings"), "vec_id", "embedding", k = 10,
       path = path, iters = 4, numFiles = 8)
@@ -266,12 +247,8 @@ object Ann {
     * always pays construction, the serve queries reuse.
     */
   private def rebuildVecIndex(s: SparkSession, dir: String): String = {
-    val path = builtIndexes.getOrElseUpdate(s"$dir#ivfpq", {
-      cleanupHook
-      val tmp = java.nio.file.Files.createTempDirectory("graft_vecidx").toString
-      cleanupPaths.add(tmp)
-      s"$tmp/ivfpq"
-    })
+    val path = builtIndexes.getOrElseUpdate(s"$dir#ivfpq",
+      graft.BlockCleanup.tempDir("graft_vecidx") + "/ivfpq")
     graft.operators.ann.VectorIndex.build(
       Tables(s, dir, "embeddings"), "vec_id", "embedding", path,
       numFiles = 8)
@@ -446,12 +423,8 @@ object Ann {
     * serve reuses.
     */
   private def rebuildSqIndex(s: SparkSession, dir: String): String = {
-    val path = builtIndexes.getOrElseUpdate(s"$dir#ivfsq", {
-      cleanupHook
-      val tmp = java.nio.file.Files.createTempDirectory("graft_sqidx").toString
-      cleanupPaths.add(tmp)
-      s"$tmp/ivfsq"
-    })
+    val path = builtIndexes.getOrElseUpdate(s"$dir#ivfsq",
+      graft.BlockCleanup.tempDir("graft_sqidx") + "/ivfsq")
     graft.operators.ann.VectorIndex.buildSq(
       Tables(s, dir, "embeddings"), "vec_id", "embedding", path,
       numFiles = 8)
@@ -586,12 +559,8 @@ object Ann {
     */
   private def rebuildRagIndexFrom(
       emb: DataFrame, s: SparkSession, dir: String): String = {
-    val path = builtIndexes.getOrElseUpdate(s"$dir#rag", {
-      cleanupHook
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ragidx").toString
-      cleanupPaths.add(tmp)
-      s"$tmp/rag"
-    })
+    val path = builtIndexes.getOrElseUpdate(s"$dir#rag",
+      graft.BlockCleanup.tempDir("graft_ragidx") + "/rag")
     // IVF-SQ, not the graph index and not IVF-PQ — the codec choice IS
     // part of what this flagship documents. The graph index's NN-Descent
     // build is corpus-quadratic-in-cap work (measured 21-32 s at sf0.1

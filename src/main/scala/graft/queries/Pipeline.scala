@@ -3258,7 +3258,9 @@ object Pipeline {
           val parent = new org.apache.hadoop.fs.Path(p).getParent
           val fs = parent.getFileSystem(new org.apache.hadoop.conf.Configuration())
           fs.delete(parent, true); ()
-        } catch { case _: Throwable => () }
+        } catch {
+          case scala.util.control.NonFatal(e) => graft.BlockCleanup.loud("temp dir cleanup", e)
+        }
       }
     }
     ()

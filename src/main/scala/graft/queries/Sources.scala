@@ -18,31 +18,6 @@ object Sources {
   // ---- temp-dir discipline (r13 ADVICE: every gate minted a fresh
   // Files.createTempDirectory per invocation and never deleted it, so
   // repeated bench/verify runs leaked disk under /tmp) -----------------
-  private val cleanupPaths =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private lazy val cleanupHook: Unit = {
-    sys.addShutdownHook {
-      import scala.jdk.CollectionConverters._
-      cleanupPaths.asScala.foreach { p =>
-        try java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-        catch { case _: Throwable => () } // exit-time cleanup is best-effort
-      }
-    }
-    ()
-  }
-
-  /** A fresh temp dir, deleted recursively at JVM exit — for gates whose
-    * body cannot re-run over an existing dir (Derby CREATE TABLE).
-    */
-  private def scratchDir(prefix: String): String = {
-    cleanupHook
-    val p = java.nio.file.Files.createTempDirectory(s"graft_$prefix").toString
-    cleanupPaths.add(p)
-    p
-  }
-
   private val sessionDirs =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
@@ -52,7 +27,8 @@ object Sources {
     */
   private def sessionDir(gate: String, sfDir: String): String =
     sessionDirs.getOrElseUpdate(
-      s"${gate}_${Integer.toHexString(sfDir.hashCode)}", scratchDir(gate))
+      s"${gate}_${Integer.toHexString(sfDir.hashCode)}",
+      graft.BlockCleanup.tempDir(s"graft_$gate"))
 
   /** Embedded-Derby JDBC round trip: load nation into a warehouse table,
     * read it back as 4 range-bounded parallel queries with a pushed-down
@@ -78,7 +54,7 @@ object Sources {
     * single-JVM round trip.
     */
   private def jdbcGate(s: SparkSession, dir: String): DataFrame = {
-    val dbDir = scratchDir("jdbc")
+    val dbDir = graft.BlockCleanup.tempDir("graft_jdbc") // fresh: Derby CREATE TABLE cannot re-run
     val db = s"$dbDir/graftdb"
     val props = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
     val nation = Tables(s, dir, "nation")

@@ -57,9 +57,10 @@ object Streams {
     * the static reference with multi-level fuzzy comparisons (the streaming
     * twin of `Link.fellegiSunterLevels` — splink's comparison levels over
     * the real-time "match new records" path). The blocking condition keys a
-    * stream-static equi-join (stateless), and the level conditions
-    * (including the native `jaro_winkler_similarity`) evaluate in the
-    * join's post-projection.
+    * stream-static equi-join (stateless), and each comparison's level
+    * ladder (including the native `jaro_winkler_similarity`) is evaluated
+    * as in `Link.fellegiSunterLevels`: once in the join condition, once in
+    * the output projection.
     *
     * The trailing per-record groupBy-max IS a stateful streaming
     * aggregation: its state grows with the number of distinct stream ids

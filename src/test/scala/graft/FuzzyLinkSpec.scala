@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.JaroWinklerImpl
+import graft.functions.{JaroWinklerImpl, JaroWinklerSimilarity}
 import graft.operators.Link
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -336,5 +336,61 @@ class FuzzyLinkSpec extends SparkSpec {
     val commonScores = exactPairs.filter(_._1 == 16L).map(_._4)
     assert(rareScores.nonEmpty && commonScores.nonEmpty)
     assert(rareScores.min > commonScores.max)
+  }
+
+  test("each level ladder is evaluated once in the join condition and once in the projection") {
+    // er_resolve's ladders: 2 + 1 jaro_winkler_similarity calls written
+    val name = Seq("l.name = r.name",
+      "jaro_winkler_similarity(l.name, r.name) >= 0.9",
+      "jaro_winkler_similarity(l.name, r.name) >= 0.8")
+    val city = Seq("l.city = r.city", "jaro_winkler_similarity(l.city, r.city) >= 0.85")
+    val written = 3
+    val left = Seq((1L, "martha", "york", 1), (2L, "dwayne", "leeds", 1))
+      .toDF("id", "name", "city", "blk")
+    val right = Seq((10L, "marhta", "yrok", 1), (20L, "duane", "leeds", 1))
+      .toDF("id", "name", "city", "blk")
+    val corpus = left.select("name")
+    val levels = Seq(Link.LevelComparison(name, Seq(-4.0, 1.0, 3.0, 6.0)),
+      Link.LevelComparison(city, Seq(-3.0, 2.0, 3.0)))
+    val (tfCand, total) = Link.emLevelsTfCandidates(left, right, "id", "id",
+      "l.blk = r.blk", name, "l.name", corpus, "name", Seq(city))
+    // (operator, scored frame over un-checkpointed candidates, JW bound,
+    // bound is exact); the EM tails name the ratio twice in lr / (lr + 1)
+    val cases = Seq(
+      ("fellegiSunterLevels", Link.fellegiSunterLevels(left, right, "id", "id",
+        "l.blk = r.blk", levels, 5.0), 2 * written, true),
+      ("fellegiSunterLevelsMulti", Link.fellegiSunterLevelsMulti(left, right, "id", "id",
+        Seq("l.blk = r.blk", "l.city = r.city"), levels, 5.0), 2 * written, false),
+      ("fellegiSunterLevelsTf", Link.fellegiSunterLevelsTf(left, right, "id", "id",
+        "l.blk = r.blk", name, "l.name", 0.9, Seq(0.1, 2.0, 5.0), corpus, "name",
+        Seq((city, Seq(0.2, 3.0, 8.0))), 1.0), 2 * written, false),
+      ("fellegiSunterEmLevelsOnCandidates", Link.fellegiSunterEmLevelsOnCandidates(
+        Link.emLevelsCandidates(left, right, "id", "id", "l.blk = r.blk", Seq(name, city)),
+        Seq(3, 2), iterations = 2)._1, 3 * written, false),
+      ("fellegiSunterEmLevelsTfOnCandidates", Link.fellegiSunterEmLevelsTfOnCandidates(
+        tfCand, total, 3, Seq(2), iterations = 2)._1, 3 * written, false))
+    cases.foreach { case (op, df, bound, exact) =>
+      val calls = df.queryExecution.optimizedPlan.collect {
+        case node => node.expressions.map(_.collect { case j: JaroWinklerSimilarity => j }.size).sum
+      }.sum
+      if (exact) assert(calls == bound, s"$op: $calls jaro_winkler_similarity calls in the plan")
+      else assert(calls <= bound, s"$op: $calls jaro_winkler_similarity calls, bound $bound")
+      info(s"$op: $calls")
+    }
+  }
+
+  test("TF scorers reject an empty corpus by name") {
+    val df = Seq((1L, "martha", 1)).toDF("id", "name", "blk")
+    val empty = df.select("name").limit(0)
+    val name = Seq("l.name = r.name", "jaro_winkler_similarity(l.name, r.name) >= 0.9")
+    Seq(
+      () => Link.fellegiSunterLevelsTf(df, df, "id", "id", "l.blk = r.blk", name, "l.name",
+        0.9, Seq(0.1, 2.0), empty, "name", Nil, 1.0),
+      () => Link.emLevelsTfCandidates(df, df, "id", "id", "l.blk = r.blk", name, "l.name",
+        empty, "name", Nil)
+    ).foreach { run =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("TF corpus is empty"))
+    }
   }
 }

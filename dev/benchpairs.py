@@ -10,6 +10,11 @@
     # judge every <workload>.<seed>.<parent|change>.log in a directory
     python3 dev/benchpairs.py report pairs/
 
+    # one traced run per side for one seed: every per_layer metric and
+    # every span's self/task seconds, parent -> change
+    python3 dev/benchpairs.py layers --parent ../parent --change . \\
+        --workload corpus_index --seed 1 --out pairs/
+
 `run` calls `graftbench/run.py` inside each checkout with the run length
 from BENCHMARK.json and tracing off. `report` reads the last stdout line
 of each log, graftbench's `{"correct", "attempted", "failed", "metrics"}`
@@ -29,10 +34,19 @@ Exit status: 3 if a metric is outside its bound (whatever else went
 wrong, so a regression is never masked); else 1 if any run failed an op,
 broke a gate, printed no JSON line or lacks a key, or has no partner;
 else 0. BENCHMARK.json is read from the repository root, never written.
+
+`layers` runs `--trace 1` once in the parent, then once in the change,
+logging to <out>/<workload>.<seed>.<side>.trace.log (which `report`
+skips) and copying each run's span file next to it. It prints every
+BENCHMARK.json per_layer metric, then each span name's second-cycle self
+and task seconds, as parent -> change. Exit status 1 if a run exits
+non-zero, fails an op or gate, prints no metrics, or reports
+`trace.count_mismatches` > 0; else 0.
 """
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -50,19 +64,77 @@ def seeds_arg(s):
     return [int(x) for x in s.split(",")]
 
 
+def run_one(a, bench, side, seed, trace, log):
+    """One graftbench run in `side`'s tree; stdout to `log`, stderr next to it. Returns the exit status."""
+    tree = a.parent if side == "parent" else a.change
+    cmd = [sys.executable, "graftbench/run.py", "--workload", a.workload, "--seed", str(seed),
+           "--seconds", str(bench["run_seconds"]), "--trace", str(trace)]
+    with open(log, "w") as out, open(log[:-len(".log")] + ".err", "w") as err:
+        rc = subprocess.run(cmd, cwd=tree, stdout=out, stderr=err, stdin=subprocess.DEVNULL).returncode
+    print(f"benchpairs: {a.workload} seed {seed} {side}: exit {rc}", file=sys.stderr)
+    return rc
+
+
 def run(a, bench):
     os.makedirs(a.out, exist_ok=True)
     for i, seed in enumerate(a.seeds):
         order = SIDES if i % 2 == 0 else SIDES[::-1]
         for side in order:
-            tree = a.parent if side == "parent" else a.change
-            log = os.path.join(a.out, f"{a.workload}.{seed}.{side}.log")
-            cmd = [sys.executable, "graftbench/run.py", "--workload", a.workload, "--seed", str(seed),
-                   "--seconds", str(bench["run_seconds"]), "--trace", "0"]
-            with open(log, "w") as out, open(log[:-len(".log")] + ".err", "w") as err:
-                rc = subprocess.run(cmd, cwd=tree, stdout=out, stderr=err,
-                                    stdin=subprocess.DEVNULL).returncode
-            print(f"benchpairs: {a.workload} seed {seed} {side}: exit {rc}", file=sys.stderr)
+            run_one(a, bench, side, seed, 0, os.path.join(a.out, f"{a.workload}.{seed}.{side}.log"))
+
+
+def layers(a, bench):
+    os.makedirs(a.out, exist_ok=True)
+    metrics, spans, problems = {}, {}, []
+    for side in SIDES:
+        log = os.path.join(a.out, f"{a.workload}.{a.seed}.{side}.trace.log")
+        rc = run_one(a, bench, side, a.seed, 1, log)
+        out = last_json(log)
+        if rc or out is None or "metrics" not in out:
+            problems.append(f"{side}: exit {rc}" + ("" if out and "metrics" in out else ", no metrics line"))
+            continue
+        if out.get("failed") or not out.get("correct"):
+            problems.append(f"{side}: failed {out.get('failed')} of {out.get('attempted')} ops, "
+                            f"correct={out.get('correct')}")
+        metrics[side] = out["metrics"]
+        mismatches = out["metrics"].get("trace.count_mismatches", {}).get("value")
+        if mismatches != 0:
+            problems.append(f"{side}: trace.count_mismatches = {mismatches}")
+        tree = a.parent if side == "parent" else a.change
+        src = os.path.join(tree, ".bench_build", "trace", f"{a.workload}-seed{a.seed}.json")
+        if not os.path.exists(src):
+            problems.append(f"{side}: no span file {src}")
+            continue
+        kept = log[:-len(".log")] + ".json"
+        shutil.copyfile(src, kept)
+        with open(kept) as fh:
+            per = spans[side] = defaultdict(lambda: [0.0, 0.0])
+            for sp in json.load(fh):
+                if sp["cycle"] == 2:
+                    per[sp["name"]][0] += sp["self_s"]
+                    per[sp["name"]][1] += sp["task_s"]
+
+    def row(name, unit, p, c):
+        ratio = f"{c / p:.3f}" if p else "-"
+        print(f"{name:<36} {unit:<6} {p:>14.6g} {c:>14.6g} {ratio:>7}")
+    if len(metrics) == 2:
+        print(f"\n{a.workload} seed {a.seed}, --trace 1")
+        print(f"{'per_layer metric':<36} {'unit':<6} {'parent':>14} {'change':>14} {'ratio':>7}")
+        for m in bench["per_layer"]:
+            name = m["name"]
+            if name not in metrics["parent"] or name not in metrics["change"]:
+                problems.append(f"{name}: missing from a run")
+                continue
+            row(name, m["unit"], metrics["parent"][name]["value"], metrics["change"][name]["value"])
+    if len(spans) == 2:
+        print(f"\n{'cycle-2 span':<36} {'':<6} {'parent':>14} {'change':>14} {'ratio':>7}")
+        for name in sorted(set(spans["parent"]) | set(spans["change"])):
+            p, c = spans["parent"][name], spans["change"][name]
+            row(name, "self s", p[0], c[0])
+            row(name, "task s", p[1], c[1])
+    for p in problems:
+        print(f"benchpairs: {p}", file=sys.stderr)
+    return 1 if problems else 0
 
 
 def last_json(path):
@@ -157,12 +229,20 @@ def main():
     r.add_argument("--out", required=True)
     p = sub.add_parser("report")
     p.add_argument("dir")
+    t = sub.add_parser("layers")
+    t.add_argument("--parent", required=True)
+    t.add_argument("--change", required=True)
+    t.add_argument("--workload", required=True)
+    t.add_argument("--seed", required=True, type=int)
+    t.add_argument("--out", required=True)
     a = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         bench = json.load(fh)
     if a.cmd == "run":
         run(a, bench)
         return 0
+    if a.cmd == "layers":
+        return layers(a, bench)
     return report(a, bench)
 
 

@@ -2971,6 +2971,9 @@ object Pipeline {
     * statistic is per-row HOFs (distinct grams → count → min struct), so
     * the whole battery is map-only; char coverage uses the standard
     * `count × gram length` approximation (overlaps double-counted).
+    * `GopherRules` derives each intermediate (page text, words, grams,
+    * top 2-gram, verdict) once per row, and a filter on `gopher_pass`
+    * reads that one value.
     */
   private def gopherRules(s: SparkSession, dir: String): DataFrame =
     graft.operators.text.GopherRules(Tables.spread(Tables(s, dir, "documents")

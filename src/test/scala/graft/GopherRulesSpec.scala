@@ -1,10 +1,14 @@
 package graft
 
 import graft.operators.text.GopherRules
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{ArrayJoin, StringSplit}
+import org.apache.spark.sql.functions.col
 
 /** Specs for the Gopher quality battery: independent driver-side
-  * reference of every metric, permille truncation, and the top-2-gram
-  * tie-break toward the lexicographically smallest gram.
+  * reference of every metric, permille truncation, the top-2-gram
+  * tie-break toward the lexicographically smallest gram, the pushed-down
+  * pass filter, and pages whose ratios are undefined.
   */
 class GopherRulesSpec extends SparkSpec {
 
@@ -42,6 +46,7 @@ class GopherRulesSpec extends SparkSpec {
 
   private val clean = (1 to 9).map(i =>
     s"the quality of sentence number $i is fine and that would be it.")
+  private val vocab = ('a' to 'z').map(c => s"${c}x$c")
   private val docs: Seq[Seq[String]] = Seq(
     clean,
     clean ++ Seq("- a bullet line.", "- another bullet line."),
@@ -51,12 +56,21 @@ class GopherRulesSpec extends SparkSpec {
     clean ++ Seq.fill(6)("the exact same duplicated line appears here."),
     Seq("tiny page."),
     // tie-break: 'aa bb' and 'bb aa' both appear twice; smallest gram wins
-    Seq("aa bb aa bb aa zz.", "the be to of and that have with words count."))
+    Seq("aa bb aa bb aa zz.", "the be to of and that have with words count."),
+    // 400 words; nine 2-grams tie at 40 occurrences ('and that' wins)
+    (1 to 40).map(i => s"the quality of item $i is fine and that would be it.")
+      .map(_.split(" ").take(10).mkString(" ")),
+    // the top 2-gram 'end. start' spans every line boundary
+    (0 until 12).map(i =>
+      s"start ${vocab(2 * i % 26)} the ${vocab((2 * i + 1) % 26)} of zz$i end."))
+
+  private def docFrame(pages: Seq[Seq[String]]): DataFrame = {
+    import spark.implicits._
+    pages.zipWithIndex.map { case (ls, i) => (i.toLong, ls) }.toDF("doc_id", "lines")
+  }
 
   test("battery matches the independent reference") {
-    import spark.implicits._
-    val df = docs.zipWithIndex.map { case (ls, i) => (i.toLong, ls) }
-      .toDF("doc_id", "lines")
+    val df = docFrame(docs)
     val got = GopherRules(df)
       .selectExpr("doc_id", "n_words", "mwl_centi", "symbol_permille",
         "bullet_permille", "ellipsis_permille", "alpha_permille", "stop_hits",
@@ -79,12 +93,21 @@ class GopherRulesSpec extends SparkSpec {
       assert(r.getLong(11) === e.topChar, s"top_char doc $i")
       assert(r.getBoolean(12) === e.pass, s"pass doc $i")
     }
+    // the pushed-down plan the pass filter runs keeps the same pages
+    val kept = GopherRules(df).filter(col("gopher_pass")).select("doc_id")
+      .collect().map(_.getLong(0)).toSet
+    val want = docs.indices.filter(i => ref(docs(i)).pass).map(_.toLong).toSet
+    assert(kept === want)
   }
 
   test("handcrafted pages exercise both pass outcomes") {
     assert(ref(docs(0)).pass)
+    assert(ref(docs(8)).pass)
     assert(!ref(docs(6)).pass) // word-count floor
     assert(!ref(docs(5)).pass) // duplicate-line ceilings
+    assert(ref(docs(8)).top === "and that") // the tie-break decides
+    // the line-boundary 2-gram alone fails the page
+    assert(ref(docs(9)).top === "end. start" && ref(docs(9)).topChar > 200)
   }
 
   test("a one-word page yields NULL top2gram instead of crashing") {
@@ -93,5 +116,38 @@ class GopherRulesSpec extends SparkSpec {
     val r = GopherRules(df).selectExpr("top2gram", "top2gram_char_permille")
       .collect()(0)
     assert(r.isNullAt(0) && r.isNullAt(1))
+  }
+
+  test("empty pages get NULL for undefined ratios and do not pass") {
+    // lines = [] divides by 0 lines and 0 line characters; lines = [""]
+    // by 0 line characters; both have 0 characters for the 2-gram share
+    val df = docFrame(Seq(Seq(), Seq("")))
+    val got = GopherRules(df).orderBy("doc_id")
+      .selectExpr("bullet_permille", "ellipsis_permille", "dup_line_permille",
+        "dup_line_char_permille", "top2gram_char_permille", "gopher_pass")
+      .collect()
+    def nulls(i: Int) = (0 until 5).filter(got(i).isNullAt)
+    assert(nulls(0) === (0 until 5))
+    assert(nulls(1) === Seq(3, 4))
+    assert(got.map(_.getBoolean(5)).toSeq === Seq(false, false))
+    assert(GopherRules(df).filter(col("gopher_pass")).count() === 0)
+  }
+
+  test("the pass filter evaluates the battery once per page") {
+    // a cached, repartitioned input: over a LocalRelation the optimizer
+    // folds the projections away and nothing is left to count
+    val df = docFrame(docs).repartition(2).cache()
+    def calls(q: DataFrame): (Int, Int) = {
+      val es = q.queryExecution.optimizedPlan.collect { case n => n.expressions }.flatten
+      (es.map(_.collect { case s: StringSplit => s }.size).sum,
+        es.map(_.collect { case j: ArrayJoin => j }.size).sum)
+    }
+    // the benchmark's shape: one battery in the filter, `full` once more
+    // in the projection above it
+    val (split, join) = calls(GopherRules(df).filter(col("gopher_pass")).select("doc_id", "full"))
+    assert(split <= 2 && join <= 2, s"filtered: $split split, $join array_join")
+    assert(calls(GopherRules(df)) === ((1, 1)), "unfiltered")
+    info(s"filtered: $split split, $join array_join")
+    df.unpersist()
   }
 }

@@ -108,17 +108,17 @@ object DagConfig {
         require(m.uniqueFields.nonEmpty, s"${m.name}: dedupe needs uniqueFields")
         Dedupe.naive(deps(m.inputs.head), m.leftId, m.uniqueFields)
       case "link_deterministic" =>
-        val (l, r) = twoInputs(m, deps)
+        val (l, r) = linkInputs(m, deps)
         Link.deterministic(l, r, m.leftId, m.rightId.getOrElse(m.leftId),
           m.comparisons.map(_.cond))
       case "link_weighted" =>
-        val (l, r) = twoInputs(m, deps)
+        val (l, r) = linkInputs(m, deps)
         val weighted = m.comparisons.map(c => (c.cond, c.weight.getOrElse(
           throw new IllegalArgumentException(s"${m.name}: weighted comparison needs weight"))))
         Link.weighted(l, r, m.leftId, m.rightId.getOrElse(m.leftId), weighted,
           m.threshold.getOrElse(0.0))
       case "link_fellegi_sunter" =>
-        val (l, r) = twoInputs(m, deps)
+        val (l, r) = linkInputs(m, deps)
         val comps = m.comparisons.map(c => (c.cond,
           c.agree.getOrElse(throw new IllegalArgumentException(
             s"${m.name}: fellegi-sunter comparison needs agree weight")),
@@ -131,9 +131,10 @@ object DagConfig {
         throw new IllegalArgumentException(s"${m.name}: unknown model kind $other")
     }
 
-  private def twoInputs(
+  private def linkInputs(
       m: ModelSpec, deps: Map[String, DataFrame]): (DataFrame, DataFrame) = {
     require(m.inputs.size == 2, s"${m.name}: linker takes two inputs")
+    require(m.comparisons.nonEmpty, s"${m.name}: linker needs at least one comparison")
     (deps(m.inputs(0)), deps(m.inputs(1)))
   }
 }

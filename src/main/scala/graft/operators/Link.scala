@@ -10,6 +10,16 @@ import org.apache.spark.sql.functions._
   * join conditions, so equality conjuncts become shuffle/broadcast equi-join
   * keys — a comparison like `l.k = r.k AND abs(l.x - r.x) < 10` plans as a
   * hash join on `k` with a post-filter, never a cross product.
+  *
+  * Fellegi–Sunter (1969; the splink model matchbox wraps) is one model
+  * here. Each comparison is a ladder of levels ([[LevelComparison]]) and a
+  * pair's gamma is the first level that holds; a binary agree/disagree
+  * comparison is a one-level ladder. Every scorer builds the same gamma
+  * frame and looks up one value per gamma: match weights add, likelihood
+  * ratios multiply, in declared order. A term-frequency adjustment is a
+  * property of an exact level: its u becomes the corpus frequency of the
+  * agreed value. EM is a source of m/u over the same gamma frame, scored as
+  * the posterior lr / (lr + 1) with lr = λ/(1−λ) × the ratio product.
   */
 object Link {
 
@@ -80,6 +90,7 @@ object Link {
       left: DataFrame, right: DataFrame,
       leftId: String, rightId: String,
       comparisons: Seq[String]): DataFrame = {
+    require(comparisons.nonEmpty, "need at least one comparison")
     comparisons.foreach(validateComparison)
     comparisons
       .map(c => pairs(left, right, leftId, rightId, c))
@@ -189,6 +200,7 @@ object Link {
       leftId: String, rightId: String,
       weightedComparisons: Seq[(String, Double)],
       threshold: Double): DataFrame = {
+    require(weightedComparisons.nonEmpty, "need at least one comparison")
     require(weightedComparisons.size <= 63, "bitmask carries at most 63 comparisons")
     weightedComparisons.foreach(c => validateComparison(c._1))
     import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -238,53 +250,16 @@ object Link {
       .select("left_id", "right_id", "score")
   }
 
-  /** Fellegi–Sunter scorer with fixed per-comparison agreement /
-    * disagreement log-weights (the splink surface with pre-estimated
-    * parameters — reference: models/linkers/splinklinker.py). Candidate
-    * pairs come from `blocking` (an equi-join condition); each comparison
-    * adds its agreement weight when `cond` holds, else its disagreement
-    * weight. Pairs with total match weight >= threshold survive.
-    *
-    * Weights are supplied as literal doubles (e.g. precomputed
-    * log2(m/u)); the score is a sum of literals, so exact cross-engine.
-    */
-  def fellegiSunter(
-      left: DataFrame, right: DataFrame,
-      leftId: String, rightId: String,
-      blocking: String,
-      comparisons: Seq[(String, Double, Double)], // (cond, agreeWeight, disagreeWeight)
-      threshold: Double): DataFrame = {
-    validateComparison(blocking)
-    comparisons.foreach(c => validateComparison(c._1))
-    val weight = comparisons
-      .map { case (cond, a, d) => when(expr(cond), lit(a)).otherwise(lit(d)) }
-      .reduce(_ + _)
-    left.alias("l")
-      .join(right.alias("r"), expr(blocking))
-      .select(
-        col(s"l.$leftId").cast("long").as("left_id"),
-        col(s"r.$rightId").cast("long").as("right_id"),
-        weight.as("match_weight"))
-      .filter(col("match_weight") >= threshold)
-  }
-
-  /** One multi-level comparison: ordered levels, strongest first (the splink
-    * comparison-level surface — reference: models/linkers/splinklinker.py:112,
-    * `cl.jaro_winkler_at_thresholds`). A pair's gamma for this comparison is
-    * `levels.size - idx` for the FIRST level whose condition holds (so the
-    * strongest level carries the highest gamma) and 0 when none does.
-    * `weights(g)` is the match weight carried by gamma level `g`
-    * (`weights(0)` = the all-levels-miss weight); supplied as precomputed
-    * literal doubles so scores are literal sums — bit-exact across engines.
-    */
-  /** Ordered fuzzy comparison levels with per-level weights. `nullLevel`
-    * is splink's null-handling contract (reference splinklinker.py
-    * comparison templates): when it holds (canonically
-    * `l.f IS NULL OR r.f IS NULL`) the comparison is UNOBSERVED —
-    * gamma = -1, weight contribution 0, and the EM path excludes the pair
-    * from that comparison's m/u estimation. Without it a NULL evaluates
-    * every level condition to false = "miss", biasing m/u downward on
-    * sparse fields.
+  /** One comparison: ordered levels, strongest first (splink's comparison
+    * levels — reference splinklinker.py:112, `cl.jaro_winkler_at_thresholds`).
+    * A pair's gamma is `levels.size - idx` for the FIRST level that holds,
+    * 0 when none does. `weights(g)` is the literal gamma `g` contributes
+    * (`weights(0)` = all levels miss): a match weight or a likelihood ratio,
+    * so scores are literal sums or products — bit-exact across engines.
+    * `nullLevel` is splink's null contract: when it holds (canonically
+    * `l.f IS NULL OR r.f IS NULL`) the comparison is UNOBSERVED — gamma −1
+    * contributes nothing and EM leaves the pair out of that comparison's
+    * m/u, where a NULL would otherwise count as a miss and bias m/u down.
     */
   final case class LevelComparison(levels: Seq[String], weights: Seq[Double],
       nullLevel: Option[String] = None) {
@@ -312,178 +287,301 @@ object Link {
   private def perLevel(gamma: Column, neutral: Double, values: Seq[Column]): Column =
     element_at(array(lit(neutral) +: values: _*), gamma + 2)
 
-  /** Fellegi–Sunter scorer over multi-level fuzzy comparisons with fixed
-    * per-level weights — the pre-estimated-parameter splink path extended
-    * from binary agree/disagree to ordinal comparison levels (exact /
-    * strong-fuzzy / weak-fuzzy / miss). Emits the per-comparison gamma
-    * levels alongside the summed match weight, like splink's
-    * `gamma_<comparison>` output columns.
-    *
-    * Scale shape: identical to [[fellegiSunter]] — one equi-join on the
-    * blocking condition. Each comparison's level ladder (including
-    * `jaro_winkler_similarity`, a native codegen expression) is evaluated
-    * once in the join condition and once in the output projection, because
-    * the weight references each gamma once. Nothing quadratic.
+  /** The candidate builder behind every Fellegi–Sunter scorer: validates
+    * every condition and returns the blocked pairs (still aliased `l`, `r`)
+    * and the TF corpus row count (0 without TF). One rule is one equi-join;
+    * several (splink's `blocking_rules_to_generate_predictions`) are the
+    * deduplicated union of each rule's own equi-join, re-attributed once.
+    * `tf` = (`l.` value, corpus, column) left-joins the value's corpus
+    * frequency as `tf_cnt` from one groupBy, never a driver collect.
+    */
+  private def blocked(
+      left: DataFrame, right: DataFrame, leftId: String, rightId: String,
+      blocking: Seq[String], comparisons: Seq[LevelComparison],
+      tf: Option[(String, DataFrame, String)] = None): (DataFrame, Long) = {
+    require(blocking.nonEmpty, "need at least one blocking rule")
+    require(comparisons.nonEmpty, "need at least one comparison")
+    blocking.foreach(validateComparison)
+    comparisons.foreach(_.allConditions.foreach(validateComparison))
+    val cand = blocking match {
+      case Seq(rule) => left.alias("l").join(right.alias("r"), expr(rule))
+      case rules => rules.map(pairs(left, right, leftId, rightId, _)).reduce(_ union _)
+        .distinct()
+        .join(left.alias("l"), col(s"l.$leftId").cast("long") === col("left_id"))
+        .join(right.alias("r"), col(s"r.$rightId").cast("long") === col("right_id"))
+    }
+    tf.fold((cand, 0L)) { case (value, corpus, corpusCol) =>
+      val total = corpus.count()
+      require(total > 0, "TF corpus is empty")
+      val freq = corpus.groupBy(col(corpusCol).as("tf_value")).agg(count(lit(1)).as("tf_cnt"))
+      (cand.join(freq, expr(value) === col("tf_value"), "left"), total)
+    }
+  }
+
+  /** (left_id, right_id, `carry` (source expr → name)[, tf_cnt], gamma per
+    * comparison as `names`) of blocked pairs. A value the TF corpus lacks
+    * floors at tf_cnt = 1, not a NULL ratio the threshold would drop.
+    */
+  private def gammas(
+      cand: DataFrame, leftId: String, rightId: String,
+      comparisons: Seq[LevelComparison], names: Seq[String],
+      tf: Boolean = false, carry: Seq[(String, String)] = Nil): DataFrame =
+    cand.select(
+      (Seq(col(s"l.$leftId").cast("long").as("left_id"),
+           col(s"r.$rightId").cast("long").as("right_id")) ++
+        carry.map { case (src, dst) => col(src).as(dst) } ++
+        (if (tf) Seq(coalesce(col("tf_cnt"), lit(1L)).as("tf_cnt")) else Nil) ++
+        comparisons.zip(names).map { case (c, n) => c.gammaOf.as(n) }): _*)
+
+  private def named(prefix: String, n: Int): Seq[String] = (0 until n).map(i => s"$prefix$i")
+
+  /** The scoring tail: comparison i contributes `values(i)` at gamma column
+    * `names(i)`, the neutral element at the null level; weights add (`sum`),
+    * ratios multiply, in declared order. With `tfTotal` comparison 0's exact
+    * slot holds m and contributes m / (tf_cnt / total); with `lambda` the
+    * product becomes lr / (lr + 1), lr = λ/(1−λ) × product. Keeps
+    * `out` >= threshold.
+    */
+  private def scored(
+      frame: DataFrame, names: Seq[String], values: Seq[Seq[Double]], sum: Boolean,
+      out: String, threshold: Double,
+      tfTotal: Option[Long] = None, lambda: Option[Double] = None): DataFrame = {
+    val slots = values.map(_.map(lit))
+    val adjusted = tfTotal.fold(slots) { total =>
+      (slots.head.init :+ slots.head.last /
+        (col("tf_cnt").cast("double") / lit(total.toDouble))) +: slots.tail
+    }
+    // + 0.0 turns a −0.0 weight into 0.0, the zero the null level adds
+    val terms = names.zip(adjusted).map { case (n, v) =>
+      if (sum) perLevel(col(n), 0.0, v) + 0.0 else perLevel(col(n), 1.0, v)
+    }
+    val combined = if (sum) terms.reduce(_ + _) else terms.reduce(_ * _)
+    val score = lambda.fold(combined) { l =>
+      val lr = lit(l / (1 - l)) * combined
+      lr / (lr + 1)
+    }
+    frame.withColumn(out, score).filter(col(out) >= threshold)
+  }
+
+  /** Fellegi–Sunter with fixed binary (cond, agreeWeight, disagreeWeight)
+    * comparisons (splink with pre-estimated parameters — reference
+    * splinklinker.py): one-level ladders scored by [[fellegiSunterLevels]];
+    * a NULL condition is a disagreement. Returns (left_id, right_id,
+    * match_weight).
+    */
+  def fellegiSunter(
+      left: DataFrame, right: DataFrame, leftId: String, rightId: String, blocking: String,
+      comparisons: Seq[(String, Double, Double)], // (cond, agreeWeight, disagreeWeight)
+      threshold: Double): DataFrame =
+    fellegiSunterLevels(left, right, leftId, rightId, blocking,
+      comparisons.map { case (cond, a, d) => LevelComparison(Seq(cond), Seq(d, a)) },
+      threshold)
+      .select("left_id", "right_id", "match_weight")
+
+  /** Fellegi–Sunter over multi-level comparisons with fixed per-level
+    * weights: the gammas (`gamma<i>`, like splink's `gamma_<comparison>`)
+    * and the summed `match_weight`, kept at or above `threshold`. One
+    * equi-join on `blocking`; each level ladder (with the native
+    * `jaro_winkler_similarity`) runs once in the join condition and once in
+    * the projection, because the weight names each gamma once.
     */
   def fellegiSunterLevels(
       left: DataFrame, right: DataFrame,
       leftId: String, rightId: String,
       blocking: String,
       comparisons: Seq[LevelComparison],
-      threshold: Double): DataFrame = {
-    validateComparison(blocking)
-    comparisons.foreach(_.allConditions.foreach(validateComparison))
-    val cand = left.alias("l").join(right.alias("r"), expr(blocking))
-    scoreLevels(cand, leftId, rightId, comparisons, threshold)
-  }
+      threshold: Double): DataFrame =
+    fellegiSunterLevelsMulti(left, right, leftId, rightId, Seq(blocking),
+      comparisons, threshold)
 
-  /** Gamma + summed-weight columns for a candidate frame that carries `l`
-    * and `r` aliases — the scoring tail shared by [[fellegiSunterLevels]],
-    * [[fellegiSunterLevelsMulti]] and the streaming twin. `carry` threads
-    * extra columns (source expr → output name) through the projection,
-    * e.g. the stream's event-time column for a watermarked aggregation.
+  /** [[fellegiSunterLevels]] with a LIST of blocking rules: the candidates
+    * are the deduplicated union of every rule's equi-join.
+    */
+  def fellegiSunterLevelsMulti(
+      left: DataFrame, right: DataFrame, leftId: String, rightId: String,
+      blockingRules: Seq[String], comparisons: Seq[LevelComparison],
+      threshold: Double): DataFrame =
+    scoreLevels(blocked(left, right, leftId, rightId, blockingRules, comparisons)._1,
+      leftId, rightId, comparisons, threshold)
+
+  /** [[fellegiSunterLevels]] over blocked pairs (aliased `l`, `r`) that the
+    * caller joined, e.g. the streaming twin's stream-static join.
     */
   private[graft] def scoreLevels(
       cand: DataFrame, leftId: String, rightId: String,
       comparisons: Seq[LevelComparison], threshold: Double,
       carry: Seq[(String, String)] = Nil): DataFrame = {
-    val gammaCols = comparisons.zipWithIndex.map { case (c, i) =>
-      c.gammaOf.as(s"gamma$i")
-    }
-    // + 0.0 turns a −0.0 weight into 0.0, the zero the null level adds
-    val weight = comparisons.zipWithIndex.map { case (c, i) =>
-      perLevel(col(s"gamma$i"), 0.0, c.weights.map(lit)) + 0.0
-    }.reduce(_ + _)
-    cand
-      .select(
-        (Seq(col(s"l.$leftId").cast("long").as("left_id"),
-             col(s"r.$rightId").cast("long").as("right_id")) ++
-          carry.map { case (src, dst) => col(src).as(dst) } ++
-          gammaCols): _*)
-      .withColumn("match_weight", weight)
-      .filter(col("match_weight") >= threshold)
+    val names = named("gamma", comparisons.size)
+    scored(gammas(cand, leftId, rightId, comparisons, names, carry = carry), names,
+      comparisons.map(_.weights), sum = true, "match_weight", threshold)
   }
 
-  /** [[fellegiSunterLevels]] with a LIST of blocking rules — splink's
-    * `blocking_rules_to_generate_predictions`: the candidate set is the
-    * deduplicated union of every rule's equi-join, so records missed by
-    * one blocking key (a typo'd postcode) are still reached through
-    * another (same name bucket). Each rule plans as its own equi-join;
-    * the distinct is one shuffle on the pair id; attributes re-join once
-    * for scoring. Nothing quadratic, and each rule's join is independently
-    * AQE-planned (broadcast/skew per rule).
+  /** Fellegi–Sunter as a likelihood-ratio product (log2 differs in last
+    * ulps across libms; ordered IEEE products do not) with splink's
+    * `term_frequency_adjustments` (reference splinklinker.py:56-175) on the
+    * exact level of `tfComparison` (exact equality on `tfLeftValue` first):
+    * agreeing on a COMMON value is weaker evidence than on a rare one, so
+    * that level's ratio is tfM / tf(value), tf = corpus frequency of the
+    * agreed value; `tfLevelRatios` (gamma 0..L-1) and `others` ((levels,
+    * ratio per gamma)) stay fixed, since a fuzzy match doesn't pin down
+    * WHICH value was shared. The TF ratio comes first in the product.
+    * Returns (left_id, right_id, gamma_tf, gamma<i> per other, match_ratio).
     */
-  def fellegiSunterLevelsMulti(
-      left: DataFrame, right: DataFrame,
-      leftId: String, rightId: String,
-      blockingRules: Seq[String],
-      comparisons: Seq[LevelComparison],
+  def fellegiSunterLevelsTf(
+      left: DataFrame, right: DataFrame, leftId: String, rightId: String, blocking: String,
+      tfComparison: Seq[String], tfLeftValue: String,
+      tfM: Double, tfLevelRatios: Seq[Double],
+      corpus: DataFrame, corpusCol: String,
+      others: Seq[(Seq[String], Seq[Double])],
       threshold: Double): DataFrame = {
-    require(blockingRules.nonEmpty, "need at least one blocking rule")
-    blockingRules.foreach(validateComparison)
-    comparisons.foreach(_.allConditions.foreach(validateComparison))
-    val cand = blockingRules
-      .map(rule => pairs(left, right, leftId, rightId, rule))
-      .reduce(_ union _)
-      .distinct()
-    val attributed = cand
-      .join(left.alias("l"),
-        col(s"l.$leftId").cast("long") === col("left_id"))
-      .join(right.alias("r"),
-        col(s"r.$rightId").cast("long") === col("right_id"))
-    scoreLevels(attributed, leftId, rightId, comparisons, threshold)
+    require(tfLevelRatios.size == tfComparison.size,
+      s"need ${tfComparison.size} non-exact ratios (gamma 0..${tfComparison.size - 1})")
+    val comparisons = LevelComparison(tfComparison, tfLevelRatios :+ tfM) +:
+      others.map { case (levels, ratios) => LevelComparison(levels, ratios) }
+    val names = "gamma_tf" +: named("gamma", others.size)
+    val (cand, total) = blocked(left, right, leftId, rightId, Seq(blocking), comparisons,
+      Some((tfLeftValue, corpus, corpusCol)))
+    scored(gammas(cand, leftId, rightId, comparisons, names, tf = true), names,
+      comparisons.map(_.weights), sum = false, "match_ratio", threshold, Some(total))
+      .drop("tf_cnt")
   }
 
-  /** EM-trained Fellegi–Sunter over ordinal gammas: m and u become
-    * per-(comparison, level) probability vectors, estimated on the pattern
-    * contingency table exactly as in [[fellegiSunterEm]] (≤ Π(Lᵢ+1) rows —
-    * still tiny — is all that reaches the driver; the pair set stays
-    * distributed). Returns (scored pairs, per-comparison (m, u) vectors
-    * indexed by gamma level).
+  /** [[fellegiSunterLevelsTf]] with binary comparisons: `tfAgree` (ratio
+    * tfM / tf(value), else `tfDisagreeRatio`) and (cond, agreeRatio,
+    * disagreeRatio) `others`. Returns (left_id, right_id, match_ratio).
     */
-  def fellegiSunterEmLevels(
-      left: DataFrame, right: DataFrame,
-      leftId: String, rightId: String,
-      blocking: String,
-      comparisons: Seq[Seq[String]], // per comparison: ordered level conditions
-      iterations: Int = 20,
-      lambdaInit: Double = 0.1,
-      threshold: Double = 0.5,
-      nullConditions: Seq[Option[String]] = Nil): (DataFrame, Seq[(Seq[Double], Seq[Double])]) = {
-    val cand = emLevelsCandidates(left, right, leftId, rightId, blocking,
-      comparisons, nullConditions)
-    fellegiSunterEmLevelsOnCandidates(cand, comparisons.map(_.size),
-      iterations, lambdaInit, threshold)
+  def fellegiSunterTf(
+      left: DataFrame, right: DataFrame, leftId: String, rightId: String, blocking: String,
+      tfAgree: String, tfLeftValue: String,
+      tfM: Double, tfDisagreeRatio: Double,
+      corpus: DataFrame, corpusCol: String,
+      others: Seq[(String, Double, Double)],
+      threshold: Double): DataFrame =
+    fellegiSunterLevelsTf(left, right, leftId, rightId, blocking,
+      Seq(tfAgree), tfLeftValue, tfM, Seq(tfDisagreeRatio), corpus, corpusCol,
+      others.map { case (cond, a, d) => (Seq(cond), Seq(d, a)) }, threshold)
+      .select("left_id", "right_id", "match_ratio")
+
+  /** Fellegi–Sunter with EM-estimated m/u over binary comparisons:
+    * [[emCandidates]] then [[fellegiSunterEmOnCandidates]]. `uInit` seeds u
+    * (e.g. [[estimateU]]'s random-pair sample, the splink recipe); with
+    * `trainU = false` it stays fixed and EM trains only λ and m — blocked
+    * pairs over-represent agreement, so splink pins the sampled u.
+    */
+  def fellegiSunterEm(
+      left: DataFrame, right: DataFrame, leftId: String, rightId: String, blocking: String,
+      comparisons: Seq[String],
+      iterations: Int = 20, lambdaInit: Double = 0.1, threshold: Double = 0.5,
+      uInit: Option[Seq[Double]] = None,
+      trainU: Boolean = true): (DataFrame, Seq[(Double, Double)]) =
+    fellegiSunterEmOnCandidates(
+      emCandidates(left, right, leftId, rightId, blocking, comparisons),
+      comparisons.size, iterations, lambdaInit, threshold, uInit, trainU)
+
+  /** [[emLevelsCandidates]] with binary (one-level) comparisons. */
+  def emCandidates(
+      left: DataFrame, right: DataFrame, leftId: String, rightId: String, blocking: String,
+      comparisons: Seq[String]): DataFrame =
+    emLevelsCandidates(left, right, leftId, rightId, blocking, comparisons.map(Seq(_)))
+
+  /** Binary EM over an [[emCandidates]] frame: only the ≤ 2^k-row pattern
+    * table reaches the driver. Returns (left_id, right_id, score) and (m, u)
+    * per comparison.
+    */
+  def fellegiSunterEmOnCandidates(
+      cand: DataFrame, nComparisons: Int,
+      iterations: Int = 20, lambdaInit: Double = 0.1, threshold: Double = 0.5,
+      uInit: Option[Seq[Double]] = None,
+      trainU: Boolean = true): (DataFrame, Seq[(Double, Double)]) = {
+    uInit.foreach(u => require(u.size == nComparisons,
+      s"uInit has ${u.size} entries for $nComparisons comparisons"))
+    val patterns = patternCounts(cand, nComparisons)
+    var lambda = lambdaInit
+    val m = Array.fill(nComparisons)(0.9)
+    val u = uInit.map(_.toArray).getOrElse(Array.fill(nComparisons)(0.1))
+    for (_ <- 1 to iterations) {
+      // E-step on patterns; M-step accumulators
+      var wSum = 0.0; var nSum = 0.0
+      val mNum = Array.fill(nComparisons)(0.0)
+      val uNum = Array.fill(nComparisons)(0.0)
+      patterns.foreach { case (g, n) =>
+        val pm = g.zipWithIndex.map { case (gi, i) => if (gi == 1) m(i) else 1 - m(i) }.product
+        val pu = g.zipWithIndex.map { case (gi, i) => if (gi == 1) u(i) else 1 - u(i) }.product
+        val w = lambda * pm / (lambda * pm + (1 - lambda) * pu)
+        wSum += w * n; nSum += n
+        g.zipWithIndex.foreach { case (gi, i) =>
+          if (gi == 1) { mNum(i) += w * n; uNum(i) += (1 - w) * n }
+        }
+      }
+      lambda = math.min(math.max(wSum / nSum, 1e-9), 1 - 1e-9)
+      m.indices.foreach { i =>
+        m(i) = math.min(math.max(mNum(i) / wSum, 1e-6), 1 - 1e-6)
+        if (trainU)
+          u(i) = math.min(math.max(uNum(i) / (nSum - wSum), 1e-6), 1 - 1e-6)
+      }
+    }
+    val ratios = m.indices.map(i => Seq((1 - m(i)) / (1 - u(i)), m(i) / u(i)))
+    (scored(cand, named("g", nComparisons), ratios, sum = false, "score", threshold,
+      lambda = Some(lambda)).select("left_id", "right_id", "score"),
+      m.indices.map(i => (m(i), u(i))))
   }
 
-  /** Candidate frame for [[fellegiSunterEmLevels]]: the blocked equi-join
-    * with ordinal gamma columns g0..g(k-1). Exposed so determinism gates
-    * can localCheckpoint the join once and re-run only training + scoring
-    * (same treatment as [[emCandidates]]).
+  /** The blocked candidates with gammas g0..g(k-1), one per level list
+    * (`nullConditions`: none, or one null level per comparison). Exposed so
+    * gates can localCheckpoint the join once and re-run training + scoring.
     */
   def emLevelsCandidates(
-      left: DataFrame, right: DataFrame,
-      leftId: String, rightId: String,
-      blocking: String,
+      left: DataFrame, right: DataFrame, leftId: String, rightId: String, blocking: String,
       comparisons: Seq[Seq[String]],
       nullConditions: Seq[Option[String]] = Nil): DataFrame = {
-    validateComparison(blocking)
     require(nullConditions.isEmpty || nullConditions.size == comparisons.size,
       "nullConditions must be empty or align with comparisons")
-    comparisons.foreach(_.foreach(validateComparison))
-    nullConditions.flatten.foreach(validateComparison)
-    val nulls =
-      if (nullConditions.isEmpty) Seq.fill(comparisons.size)(None: Option[String])
-      else nullConditions
-    val gammas = comparisons.zipWithIndex.map { case (levels, i) =>
-      LevelComparison(levels, Seq.fill(levels.size + 1)(0.0), nulls(i))
-        .gammaOf.as(s"g$i")
-    }
-    left.alias("l").join(right.alias("r"), expr(blocking))
-      .select(
-        (Seq(col(s"l.$leftId").cast("long").as("left_id"),
-             col(s"r.$rightId").cast("long").as("right_id")) ++ gammas): _*)
+    val ladders = comparisons.zip(nullConditions.padTo(comparisons.size, None))
+      .map { case (levels, nul) => LevelComparison(levels, Seq.fill(levels.size + 1)(0.0), nul) }
+    gammas(blocked(left, right, leftId, rightId, Seq(blocking), ladders)._1,
+      leftId, rightId, ladders, named("g", ladders.size))
   }
 
-  /** Training + scoring tail of [[fellegiSunterEmLevels]] over a prebuilt
-    * [[emLevelsCandidates]] frame; `levelCounts(i)` = number of level
-    * conditions of comparison i (gamma ranges 0..levelCounts(i)).
+  /** [[emLevelsCandidates]] for `tfComparison +: others` plus `tf_cnt`;
+    * returns (candidates, corpus row count).
+    */
+  def emLevelsTfCandidates(
+      left: DataFrame, right: DataFrame, leftId: String, rightId: String, blocking: String,
+      tfComparison: Seq[String], tfLeftValue: String,
+      corpus: DataFrame, corpusCol: String,
+      others: Seq[Seq[String]]): (DataFrame, Long) = {
+    val ladders = (tfComparison +: others).map(l => LevelComparison(l, Seq.fill(l.size + 1)(0.0)))
+    val (cand, total) = blocked(left, right, leftId, rightId, Seq(blocking), ladders,
+      Some((tfLeftValue, corpus, corpusCol)))
+    (gammas(cand, leftId, rightId, ladders, named("g", ladders.size), tf = true), total)
+  }
+
+  /** EM over ordinal gammas (`levelCounts(i)` = levels of comparison i):
+    * per-(comparison, level) m/u fitted on the ≤ Π(Lᵢ+1)-row pattern table.
+    * With `tfTotal` (an [[emLevelsTfCandidates]] frame's corpus count),
+    * comparison 0's exact level swaps its trained u for tf(value) at
+    * scoring (reference splinklinker.py:56-175). Returns (the candidate
+    * columns plus `score`, per-comparison (m, u) indexed by gamma).
     */
   def fellegiSunterEmLevelsOnCandidates(
       cand: DataFrame, levelCounts: Seq[Int],
-      iterations: Int = 20,
-      lambdaInit: Double = 0.1,
-      threshold: Double = 0.5): (DataFrame, Seq[(Seq[Double], Seq[Double])]) = {
-    val nLevels = levelCounts.map(_ + 1) // gamma ranges over 0..L
-    val comparisons = levelCounts.indices
-    val patterns = patternCounts(cand, levelCounts.size)
-
-    val (lambda, m, u) = emFitLevels(patterns, nLevels, iterations, lambdaInit)
-
-    val probability = {
-      val ratio = comparisons.indices.map { i =>
-        perLevel(col(s"g$i"), 1.0, (0 until nLevels(i)).map(g => lit(m(i)(g) / u(i)(g))))
-      }.reduce(_ * _)
-      val lr = lit(lambda / (1 - lambda)) * ratio
-      lr / (lr + 1)
-    }
-    val scored = cand
-      .withColumn("score", probability)
-      .filter(col("score") >= threshold)
-      .select("left_id", "right_id", "score")
-    (scored, comparisons.indices.map(i => (m(i).toSeq, u(i).toSeq)))
+      iterations: Int = 20, lambdaInit: Double = 0.1, threshold: Double = 0.5,
+      tfTotal: Option[Long] = None): (DataFrame, Seq[(Seq[Double], Seq[Double])]) = {
+    val (lambda, m, u) = emFitLevels(patternCounts(cand, levelCounts.size),
+      levelCounts.map(_ + 1), iterations, lambdaInit)
+    val ratios = m.indices.map(i => m(i).indices.map(g =>
+      if (tfTotal.isDefined && i == 0 && g == levelCounts(0)) m(i)(g) else m(i)(g) / u(i)(g)))
+    (scored(cand, named("g", m.length), ratios, sum = false, "score", threshold, tfTotal,
+      Some(lambda)), m.indices.map(i => (m(i).toSeq, u(i).toSeq)))
   }
 
-  /** The distributed half of ordinal-gamma EM training: the (g0..gN) →
-    * count contingency table, collected and sorted so downstream float
-    * accumulation is bit-deterministic. Everything the EM gates check
-    * (fits, null invariants, scored counts) is a pure function of this
-    * table, so gates should collect it once and derive, not re-run
-    * distributed passes per check.
+  /** The distributed half of EM: the (g0..gN) → count table, collected and
+    * sorted so the driver's float accumulation is bit-deterministic. Every EM
+    * gate check is a function of it: collect once and derive.
     */
   private[graft] def patternCounts(
       cand: DataFrame, nComparisons: Int): Seq[(IndexedSeq[Int], Long)] = {
-    val gCols = (0 until nComparisons).map(i => s"g$i")
+    val gCols = named("g", nComparisons)
     cand.groupBy(gCols.map(col): _*).count()
       .collect()
       .map(row => (gCols.map(row.getAs[Int]).toIndexedSeq, row.getAs[Long]("count")))
@@ -505,11 +603,9 @@ object Link {
     lr / (lr + 1)
   }
 
-  /** The ordinal-gamma EM loop shared by [[fellegiSunterEmLevels]] and
-    * [[fellegiSunterEmLevelsTf]]: driver-side over the (sorted, tiny)
-    * pattern contingency table only. Returns (λ, m, u) with m/u indexed
-    * (comparison)(gamma level). Accumulation order is fixed by the sorted
-    * patterns, so results are bit-identical run to run.
+  /** The ordinal-gamma EM fit of [[fellegiSunterEmLevelsOnCandidates]],
+    * driver-side over the sorted pattern table: (λ, m, u) with m/u indexed
+    * (comparison)(gamma level), bit-identical run to run.
     */
   private[graft] def emFitLevels(
       patterns: Seq[(IndexedSeq[Int], Long)],
@@ -558,247 +654,6 @@ object Link {
       }
     }
     (lambda, m, u)
-  }
-
-  /** EM-trained ordinal Fellegi–Sunter WITH term-frequency adjustment
-    * applied at prediction — the composed splink recipe (comparison levels
-    * + `term_frequency_adjustments` + EM training in one settings object;
-    * reference splinklinker.py:56-175): EM learns per-(comparison, level)
-    * m/u vectors on the pattern contingency table exactly as in
-    * [[fellegiSunterEmLevels]]; at scoring the TF comparison's EXACT level
-    * swaps its trained *average* u for the value-specific corpus frequency
-    * tf(v) — exact agreement on a rare value is stronger evidence than the
-    * average exact agreement, on a common value weaker. Non-exact levels
-    * keep their trained m/u (a fuzzy agreement doesn't pin down WHICH value
-    * was shared, so no value-specific u exists for it).
-    *
-    * Scale shape: one blocked equi-join for candidates + one equi-join
-    * against the corpus value-frequency table; only the ≤ Π(Lᵢ+1)-row
-    * pattern table reaches the driver. Returns (scored pairs carrying the
-    * gammas and tf_cnt — so callers can gate the monotone rarer-value ⇒
-    * higher-score contract — and the per-comparison (m, u) level vectors).
-    * A left value absent from the corpus gets the documented floor
-    * tf_cnt = 1 (an unseen value is at most as common as one occurrence),
-    * not a silent drop.
-    */
-  def fellegiSunterEmLevelsTf(
-      left: DataFrame, right: DataFrame,
-      leftId: String, rightId: String,
-      blocking: String,
-      tfComparison: Seq[String], tfLeftValue: String,
-      corpus: DataFrame, corpusCol: String,
-      others: Seq[Seq[String]],
-      iterations: Int = 20,
-      lambdaInit: Double = 0.1,
-      threshold: Double = 0.5): (DataFrame, Seq[(Seq[Double], Seq[Double])]) = {
-    val (cand, total) = emLevelsTfCandidates(left, right, leftId, rightId,
-      blocking, tfComparison, tfLeftValue, corpus, corpusCol, others)
-    fellegiSunterEmLevelsTfOnCandidates(cand, total,
-      tfComparison.size, others.map(_.size), iterations, lambdaInit,
-      threshold)
-  }
-
-  /** Candidate frame for [[fellegiSunterEmLevelsTf]]: the blocked equi-join
-    * with the TF frequency attached (tf_cnt, floored at 1 for uncovered
-    * values) and ordinal gamma columns g0 (TF comparison) .. gK. Returns
-    * (candidates, corpus row count). Exposed so determinism gates can
-    * localCheckpoint the joins once and re-run only training + scoring.
-    */
-  def emLevelsTfCandidates(
-      left: DataFrame, right: DataFrame,
-      leftId: String, rightId: String,
-      blocking: String,
-      tfComparison: Seq[String], tfLeftValue: String,
-      corpus: DataFrame, corpusCol: String,
-      others: Seq[Seq[String]]): (DataFrame, Long) = {
-    validateComparison(blocking)
-    tfComparison.foreach(validateComparison)
-    others.foreach(_.foreach(validateComparison))
-    val comparisons = tfComparison +: others // index 0 = the TF comparison
-    val gammas = comparisons.zipWithIndex.map { case (levels, i) =>
-      LevelComparison(levels, Seq.fill(levels.size + 1)(0.0)).gammaOf.as(s"g$i")
-    }
-    val total = corpus.count()
-    require(total > 0, "TF corpus is empty")
-    val freq = corpus.groupBy(col(corpusCol).as("tf_value"))
-      .agg(count(lit(1)).as("tf_cnt"))
-    val cand = left.alias("l").join(right.alias("r"), expr(blocking))
-      .join(freq, expr(tfLeftValue) === col("tf_value"), "left")
-      .select(
-        (Seq(col(s"l.$leftId").cast("long").as("left_id"),
-             col(s"r.$rightId").cast("long").as("right_id"),
-             coalesce(col("tf_cnt"), lit(1L)).as("tf_cnt")) ++ gammas): _*)
-    (cand, total)
-  }
-
-  /** Training + scoring tail of [[fellegiSunterEmLevelsTf]] over a
-    * prebuilt [[emLevelsTfCandidates]] frame.
-    */
-  def fellegiSunterEmLevelsTfOnCandidates(
-      cand: DataFrame, total: Long,
-      tfLevels: Int, otherLevels: Seq[Int],
-      iterations: Int = 20,
-      lambdaInit: Double = 0.1,
-      threshold: Double = 0.5): (DataFrame, Seq[(Seq[Double], Seq[Double])]) = {
-    val nLevels = (tfLevels + 1) +: otherLevels.map(_ + 1)
-    val comparisons = nLevels.indices
-    val gCols = comparisons.map(i => s"g$i")
-    // sorted for deterministic float accumulation (see fellegiSunterEm)
-    val patterns = cand.groupBy(gCols.map(col): _*).count()
-      .collect()
-      .map(row => (gCols.map(row.getAs[Int]).toIndexedSeq, row.getAs[Long]("count")))
-      .sortBy(_._1.mkString(","))
-      .toSeq
-    val (lambda, m, u) = emFitLevels(patterns, nLevels, iterations, lambdaInit)
-
-    val L = tfLevels
-    val exact = lit(m(0)(L)) / (col("tf_cnt").cast("double") / lit(total.toDouble))
-    val tfRatio =
-      perLevel(col("g0"), 1.0, (0 until L).map(g => lit(m(0)(g) / u(0)(g))) :+ exact)
-    val ratio = otherLevels.indices.map { j =>
-      val i = j + 1
-      perLevel(col(s"g$i"), 1.0, (0 until nLevels(i)).map(g => lit(m(i)(g) / u(i)(g))))
-    }.foldLeft(tfRatio)(_ * _)
-    val lr = lit(lambda / (1 - lambda)) * ratio
-    val scored = cand
-      .withColumn("score", lr / (lr + lit(1.0)))
-      .filter(col("score") >= threshold)
-    (scored, comparisons.map(i => (m(i).toSeq, u(i).toSeq)))
-  }
-
-  /** Multi-level fuzzy comparison WITH term-frequency adjustment on its
-    * exact-match level — the full splink shape (`jaro_winkler_at_thresholds`
-    * + `term_frequency_adjustments` on one comparison): agreeing exactly on
-    * a COMMON value is weaker evidence than on a rare one, while the fuzzy
-    * levels keep their fixed ratios (a fuzzy match doesn't pin down WHICH
-    * value was shared, so no value-specific u exists for it). Scoring is a
-    * likelihood-RATIO product (log-free — see [[fellegiSunterTf]]):
-    * exact level → tfM / tf(value); other levels → caller-supplied literal
-    * ratios indexed by gamma.
-    *
-    * Scale shape: one blocked equi-join for candidates + one equi-join
-    * against the corpus value-frequency table on the left value. Each
-    * gamma's level ladder (including the native `jaro_winkler_similarity`)
-    * is evaluated once in the join condition and once in the output
-    * projection, because the ratio references each gamma once.
-    *
-    * @param tfComparison  levels for the TF-adjusted comparison, strongest
-    *                      (exact equality on the TF column) first
-    * @param tfLeftValue   `l.`-qualified TF column (the agreed value when
-    *                      the exact level fires)
-    * @param tfM           P(exact agree | match)
-    * @param tfLevelRatios ratio literal per gamma 0..L-1 (miss..strongest
-    *                      fuzzy); gamma L (exact) uses tfM / tf(value)
-    * @param others        fixed multi-level comparisons: per comparison,
-    *                      (levels, ratio literal per gamma 0..L)
-    */
-  def fellegiSunterLevelsTf(
-      left: DataFrame, right: DataFrame,
-      leftId: String, rightId: String,
-      blocking: String,
-      tfComparison: Seq[String], tfLeftValue: String,
-      tfM: Double, tfLevelRatios: Seq[Double],
-      corpus: DataFrame, corpusCol: String,
-      others: Seq[(Seq[String], Seq[Double])],
-      threshold: Double): DataFrame = {
-    require(tfLevelRatios.size == tfComparison.size,
-      s"need ${tfComparison.size} non-exact ratios (gamma 0..${tfComparison.size - 1})")
-    others.foreach { case (levels, ratios) =>
-      require(ratios.size == levels.size + 1,
-        s"need ${levels.size + 1} ratios for ${levels.size} levels")
-    }
-    validateComparison(blocking)
-    tfComparison.foreach(validateComparison)
-    others.foreach(_._1.foreach(validateComparison))
-    val total = corpus.count()
-    require(total > 0, "TF corpus is empty")
-    val freq = corpus.groupBy(col(corpusCol).as("tf_value"))
-      .agg(count(lit(1)).as("tf_cnt"))
-    val L = tfComparison.size
-    val tfGamma = LevelComparison(tfComparison, Seq.fill(L + 1)(0.0)).gammaOf
-    // tf_cnt is coalesced to 1 below: a left value absent from the corpus
-    // is at most as common as one occurrence, not a silent drop (the left
-    // join would otherwise NULL the ratio and the threshold filter would
-    // discard the pair)
-    val exact = lit(tfM) / (col("tf_cnt").cast("double") / lit(total.toDouble))
-    val tfRatio = perLevel(col("gamma_tf"), 1.0, tfLevelRatios.map(lit) :+ exact)
-    val otherGammas = others.zipWithIndex.map { case ((levels, _), i) =>
-      LevelComparison(levels, Seq.fill(levels.size + 1)(0.0)).gammaOf.as(s"gamma$i")
-    }
-    val ratio = others.zipWithIndex.map { case ((_, ratios), i) =>
-      perLevel(col(s"gamma$i"), 1.0, ratios.map(lit))
-    }.foldLeft(tfRatio)(_ * _)
-    left.alias("l")
-      .join(right.alias("r"), expr(blocking))
-      .join(freq, expr(s"$tfLeftValue") === col("tf_value"), "left")
-      .select(
-        (Seq(col(s"l.$leftId").cast("long").as("left_id"),
-             col(s"r.$rightId").cast("long").as("right_id"),
-             tfGamma.as("gamma_tf")) ++ otherGammas :+
-             coalesce(col("tf_cnt"), lit(1L)).as("tf_cnt")): _*)
-      .withColumn("match_ratio", ratio)
-      .filter(col("match_ratio") >= threshold)
-      .drop("tf_cnt")
-  }
-
-  /** Fellegi–Sunter with a term-frequency-adjusted comparison (the splink
-    * `term_frequency_adjustments` setting — reference splinklinker.py:56-175
-    * SplinkSettings pass-through): agreeing on a COMMON value (segment
-    * "Smith") is weaker evidence than agreeing on a rare one, so the
-    * agreement likelihood ratio for the TF column is m / tf(v) — the
-    * value-specific u — instead of m / u_avg. Scores are likelihood-RATIO
-    * products (no logs: log2 differs in last ulps across libms; products of
-    * identically-ordered IEEE divisions are bit-exact cross-engine).
-    *
-    * Scale shape: the value-frequency table is one groupBy over the corpus;
-    * candidates reach it by equi-join on the left value (tiny dims
-    * broadcast via AQE, high-cardinality TF tables shuffle-join — never a
-    * driver collect). Everything else is [[fellegiSunter]]'s one blocked
-    * equi-join.
-    *
-    * @param tfAgree        SQL condition for agreement on the TF column
-    * @param tfLeftValue    `l.`-qualified column whose corpus frequency is
-    *                       the value-specific u
-    * @param tfM            P(agree | match) for the TF comparison
-    * @param tfDisagreeRatio precomputed (1-m)/(1-u_avg) literal
-    * @param corpus         the concatenated input the frequencies come from
-    * @param corpusCol      the TF column's name in `corpus`
-    * @param others         (cond, agreeRatio, disagreeRatio) fixed-ratio
-    *                       comparisons, ratios precomputed as literals
-    */
-  def fellegiSunterTf(
-      left: DataFrame, right: DataFrame,
-      leftId: String, rightId: String,
-      blocking: String,
-      tfAgree: String, tfLeftValue: String,
-      tfM: Double, tfDisagreeRatio: Double,
-      corpus: DataFrame, corpusCol: String,
-      others: Seq[(String, Double, Double)],
-      threshold: Double): DataFrame = {
-    validateComparison(blocking)
-    validateComparison(tfAgree)
-    others.foreach(c => validateComparison(c._1))
-    val total = corpus.count()
-    val freq = corpus.groupBy(col(corpusCol).as("tf_value"))
-      .agg(count(lit(1)).as("tf_cnt"))
-    // coalesce: a left value absent from the corpus gets the floor
-    // tf_cnt = 1 (at most as common as one occurrence) instead of a NULL
-    // ratio that the threshold filter would silently drop
-    val tfRatio = when(expr(tfAgree),
-        lit(tfM) / (coalesce(col("tf_cnt"), lit(1L)).cast("double") /
-          lit(total.toDouble)))
-      .otherwise(lit(tfDisagreeRatio))
-    val ratio = others.foldLeft(tfRatio) { case (acc, (cond, a, d)) =>
-      acc * when(expr(cond), lit(a)).otherwise(lit(d))
-    }
-    left.alias("l")
-      .join(right.alias("r"), expr(blocking))
-      .join(freq, expr(s"$tfLeftValue") === col("tf_value"), "left")
-      .select(
-        col(s"l.$leftId").cast("long").as("left_id"),
-        col(s"r.$rightId").cast("long").as("right_id"),
-        ratio.as("match_ratio"))
-      .filter(col("match_ratio") >= threshold)
   }
 
   /** Sorted-neighborhood candidate generation (Hernández & Stolfo 1995 —
@@ -850,6 +705,7 @@ object Link {
       leftId: String, rightId: String,
       deterministicRules: Seq[String], recall: Double): Double = {
     require(recall > 0 && recall <= 1)
+    require(deterministicRules.nonEmpty, "need at least one deterministic rule")
     deterministicRules.foreach(validateComparison)
     val matched = deterministicRules
       .map(c => pairs(left, right, leftId, rightId, c))
@@ -880,6 +736,7 @@ object Link {
       comparisons: Seq[String],
       maxPairs: Long = 1000000L): Seq[Double] = {
     require(maxPairs >= 4, "maxPairs too small to sample")
+    require(comparisons.nonEmpty, "need at least one comparison")
     comparisons.foreach(validateComparison)
     val perSide = math.max(2, math.sqrt(maxPairs.toDouble).toLong.toInt)
     def sample(df: DataFrame, id: String) =
@@ -901,125 +758,6 @@ object Link {
       "cannot estimate u: the sampled pair set is empty (empty input side?)")
     comparisons.indices
       .map(i => math.min(math.max(rates.getDouble(i), 1e-6), 1 - 1e-6))
-  }
-
-  /** Fellegi–Sunter with EM-estimated m/u parameters.
-    *
-    * The E and M steps run as distributed aggregations over the *pattern
-    * contingency table* (one row per distinct agreement vector — at most
-    * 2^k rows for k comparisons), so only that tiny table ever reaches the
-    * driver; the pair set itself stays distributed. Returns (scored pairs,
-    * learned (m, u) per comparison).
-    *
-    * `uInit` seeds u (e.g. from [[estimateU]]'s random-pair sampling, the
-    * splink training recipe); with `trainU = false` those values are held
-    * fixed and EM trains only λ and m on the blocked candidates — blocked
-    * pairs over-represent agreement, so a sampled u is the less biased
-    * estimate and splink pins it.
-    */
-  def fellegiSunterEm(
-      left: DataFrame, right: DataFrame,
-      leftId: String, rightId: String,
-      blocking: String,
-      comparisons: Seq[String],
-      iterations: Int = 20,
-      lambdaInit: Double = 0.1,
-      threshold: Double = 0.5,
-      uInit: Option[Seq[Double]] = None,
-      trainU: Boolean = true): (DataFrame, Seq[(Double, Double)]) = {
-    uInit.foreach(u => require(u.size == comparisons.size,
-      s"uInit has ${u.size} entries for ${comparisons.size} comparisons"))
-    validateComparison(blocking)
-    comparisons.foreach(validateComparison)
-    val cand = emCandidates(left, right, leftId, rightId, blocking, comparisons)
-    fellegiSunterEmOnCandidates(cand, comparisons.size, iterations,
-      lambdaInit, threshold, uInit, trainU)
-  }
-
-  /** Candidate frame for [[fellegiSunterEm]]: the blocked equi-join with
-    * binary gamma columns g0..g(k-1). Exposed so callers that score the
-    * SAME candidates repeatedly (e.g. a run-twice determinism gate) can
-    * localCheckpoint this frame once instead of re-running the join.
-    */
-  def emCandidates(
-      left: DataFrame, right: DataFrame,
-      leftId: String, rightId: String,
-      blocking: String,
-      comparisons: Seq[String]): DataFrame = {
-    validateComparison(blocking)
-    comparisons.foreach(validateComparison)
-    val gammas = comparisons.zipWithIndex.map { case (cond, i) =>
-      when(expr(cond), 1).otherwise(0).as(s"g$i")
-    }
-    left.alias("l").join(right.alias("r"), expr(blocking))
-      .select(
-        (Seq(col(s"l.$leftId").cast("long").as("left_id"),
-             col(s"r.$rightId").cast("long").as("right_id")) ++ gammas): _*)
-  }
-
-  /** The training + scoring tail of [[fellegiSunterEm]] over a prebuilt
-    * [[emCandidates]] frame: pattern contingency aggregation (the only
-    * thing that reaches the driver), EM fit, and the distributed score
-    * projection.
-    */
-  def fellegiSunterEmOnCandidates(
-      cand: DataFrame, nComparisons: Int,
-      iterations: Int = 20,
-      lambdaInit: Double = 0.1,
-      threshold: Double = 0.5,
-      uInit: Option[Seq[Double]] = None,
-      trainU: Boolean = true): (DataFrame, Seq[(Double, Double)]) = {
-    uInit.foreach(u => require(u.size == nComparisons,
-      s"uInit has ${u.size} entries for $nComparisons comparisons"))
-    val comparisons = 0 until nComparisons
-    val gCols = comparisons.map(i => s"g$i")
-    // Pattern contingency table: tiny (<= 2^k rows), collected to the driver.
-    // Sorted by gamma vector: collect() order follows partition order, and
-    // floating-point accumulation below is order-sensitive — an unsorted
-    // table can flip last-ulp bits between runs and break the bit-exact
-    // determinism the mb_link_em_gate asserts.
-    val patterns = cand.groupBy(gCols.map(col): _*).count()
-      .collect()
-      .map(row => (gCols.map(row.getAs[Int]), row.getAs[Long]("count")))
-      .sortBy(_._1.mkString(","))
-
-    var lambda = lambdaInit
-    var m = Array.fill(comparisons.size)(0.9)
-    var u = uInit.map(_.toArray).getOrElse(Array.fill(comparisons.size)(0.1))
-    for (_ <- 1 to iterations) {
-      // E-step on patterns; M-step accumulators
-      var wSum = 0.0; var nSum = 0.0
-      val mNum = Array.fill(comparisons.size)(0.0)
-      val uNum = Array.fill(comparisons.size)(0.0)
-      patterns.foreach { case (g, n) =>
-        val pm = g.zipWithIndex.map { case (gi, i) => if (gi == 1) m(i) else 1 - m(i) }.product
-        val pu = g.zipWithIndex.map { case (gi, i) => if (gi == 1) u(i) else 1 - u(i) }.product
-        val w = lambda * pm / (lambda * pm + (1 - lambda) * pu)
-        wSum += w * n; nSum += n
-        g.zipWithIndex.foreach { case (gi, i) =>
-          if (gi == 1) { mNum(i) += w * n; uNum(i) += (1 - w) * n }
-        }
-      }
-      lambda = math.min(math.max(wSum / nSum, 1e-9), 1 - 1e-9)
-      comparisons.indices.foreach { i =>
-        m(i) = math.min(math.max(mNum(i) / wSum, 1e-6), 1 - 1e-6)
-        if (trainU)
-          u(i) = math.min(math.max(uNum(i) / (nSum - wSum), 1e-6), 1 - 1e-6)
-      }
-    }
-
-    val probability = {
-      val ratio = comparisons.indices.map { i =>
-        when(col(s"g$i") === 1, lit(m(i) / u(i))).otherwise(lit((1 - m(i)) / (1 - u(i))))
-      }.reduce(_ * _)
-      val lr = lit(lambda / (1 - lambda)) * ratio
-      lr / (lr + 1)
-    }
-    val scored = cand
-      .withColumn("score", probability)
-      .filter(col("score") >= threshold)
-      .select("left_id", "right_id", "score")
-    (scored, comparisons.indices.map(i => (m(i), u(i))))
   }
 
   /** One blocking-rule-scoped EM training session plus its composition

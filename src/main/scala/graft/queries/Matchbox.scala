@@ -1647,8 +1647,8 @@ object Matchbox {
           "jaro_winkler_similarity(l.sname, r.sname) >= 0.95",
           "jaro_winkler_similarity(l.sname, r.sname) >= 0.88")))
     val cand = cand0.localCheckpoint(false)
-    def run() = Link.fellegiSunterEmLevelsTfOnCandidates(
-      cand, total, tfLevels = 1, otherLevels = Seq(3), threshold = 0.0)
+    def run() = Link.fellegiSunterEmLevelsOnCandidates(
+      cand, Seq(1, 3), threshold = 0.0, tfTotal = Some(total))
     // Keep the driver-job chain short (it is the whole latency of this
     // gate): run 1 is checkpointed because three checks read it; run 2
     // exists only for the determinism hash, so it stays a single

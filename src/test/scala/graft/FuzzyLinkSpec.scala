@@ -135,8 +135,9 @@ class FuzzyLinkSpec extends SparkSpec {
     val levels = Seq(Seq(
       "l.name = r.name",
       "jaro_winkler_similarity(l.name, r.name) >= 0.85"))
-    def run() = Link.fellegiSunterEmLevels(
-      left, right, "id", "id", "l.blk = r.blk", levels, iterations = 15, threshold = 0.0)
+    def run() = Link.fellegiSunterEmLevelsOnCandidates(
+      Link.emLevelsCandidates(left, right, "id", "id", "l.blk = r.blk", levels),
+      levels.map(_.size), iterations = 15, threshold = 0.0)
     val (s1, p1) = run()
     val (s2, p2) = run()
     assert(p1 == p2)
@@ -309,14 +310,17 @@ class FuzzyLinkSpec extends SparkSpec {
       val nm = if (i % 4 == 0) s"name$i" else if (i % 4 == 1) s"nam$i" else s"other$i"
       (i + 100L, nm, if (i % 5 == 0) "RARE" else "COMMON", i / 10)
     }.toDF("id", "name", "seg", "blk")
-    def run() = Link.fellegiSunterEmLevelsTf(
-      left, right, "id", "id", "l.blk = r.blk",
-      tfComparison = Seq("l.seg = r.seg"), tfLeftValue = "l.seg",
-      corpus = corpus, corpusCol = "seg",
-      others = Seq(Seq(
-        "l.name = r.name",
-        "jaro_winkler_similarity(l.name, r.name) >= 0.85")),
-      iterations = 15, threshold = 0.0)
+    def run() = {
+      val (cand, total) = Link.emLevelsTfCandidates(
+        left, right, "id", "id", "l.blk = r.blk",
+        tfComparison = Seq("l.seg = r.seg"), tfLeftValue = "l.seg",
+        corpus = corpus, corpusCol = "seg",
+        others = Seq(Seq(
+          "l.name = r.name",
+          "jaro_winkler_similarity(l.name, r.name) >= 0.85")))
+      Link.fellegiSunterEmLevelsOnCandidates(cand, Seq(1, 2),
+        iterations = 15, threshold = 0.0, tfTotal = Some(total))
+    }
     val (s1, p1) = run()
     val rows1 = s1.collect().sortBy(r => (r.getLong(0), r.getLong(1))).toSeq
     val (s2, p2) = run()
@@ -367,8 +371,8 @@ class FuzzyLinkSpec extends SparkSpec {
       ("fellegiSunterEmLevelsOnCandidates", Link.fellegiSunterEmLevelsOnCandidates(
         Link.emLevelsCandidates(left, right, "id", "id", "l.blk = r.blk", Seq(name, city)),
         Seq(3, 2), iterations = 2)._1, 3 * written, false),
-      ("fellegiSunterEmLevelsTfOnCandidates", Link.fellegiSunterEmLevelsTfOnCandidates(
-        tfCand, total, 3, Seq(2), iterations = 2)._1, 3 * written, false))
+      ("fellegiSunterEmLevelsOnCandidates with TF", Link.fellegiSunterEmLevelsOnCandidates(
+        tfCand, Seq(3, 2), iterations = 2, tfTotal = Some(total))._1, 3 * written, false))
     cases.foreach { case (op, df, bound, exact) =>
       val calls = df.queryExecution.optimizedPlan.collect {
         case node => node.expressions.map(_.collect { case j: JaroWinklerSimilarity => j }.size).sum
@@ -387,10 +391,79 @@ class FuzzyLinkSpec extends SparkSpec {
       () => Link.fellegiSunterLevelsTf(df, df, "id", "id", "l.blk = r.blk", name, "l.name",
         0.9, Seq(0.1, 2.0), empty, "name", Nil, 1.0),
       () => Link.emLevelsTfCandidates(df, df, "id", "id", "l.blk = r.blk", name, "l.name",
-        empty, "name", Nil)
+        empty, "name", Nil),
+      () => Link.fellegiSunterTf(df, df, "id", "id", "l.blk = r.blk", "l.name = r.name",
+        "l.name", 0.9, 0.125, empty, "name", Nil, 1.0)
     ).foreach { run =>
       val e = intercept[IllegalArgumentException](run())
       assert(e.getMessage.contains("TF corpus is empty"))
     }
+  }
+
+  test("fellegiSunter and fellegiSunterTf equal a driver-side reference bit for bit") {
+    // l.seg is NULL on id 2 (scores as disagreement); "UNSEEN" is absent
+    // from the corpus (floors at tf_cnt = 1)
+    val leftRows = Seq((1L, Option("A"), 5.0, "COMMON"), (2L, None, 7.0, "RARE"),
+      (3L, Option("B"), 500.0, "UNSEEN"))
+    val rightRows = Seq((11L, Option("A"), 5.5, "COMMON"), (12L, Option("B"), 7.5, "RARE"),
+      (13L, Option("B"), 900.0, "UNSEEN"))
+    val Seq(left, right) = Seq(leftRows, rightRows)
+      .map(_.toDF("id", "seg", "bal", "tfv").withColumn("blk", lit(1)))
+    val corpus = (Seq.fill(7)("COMMON") ++ Seq.fill(3)("RARE")).toDF("tfv")
+    val tfCount = Map("COMMON" -> 7L, "RARE" -> 3L)
+    val (segAgree, balNear) = ("l.seg = r.seg", "abs(l.bal - r.bal) < 1")
+    val pairs = for {
+      (li, ls, lb, lv) <- leftRows
+      (ri, rs, rb, rv) <- rightRows
+    } yield ((li, ri), ls.isDefined && ls == rs, math.abs(lb - rb) < 1, lv == rv, lv)
+    def scores(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+
+    val weights = Link.fellegiSunter(left, right, "id", "id", "l.blk = r.blk",
+      Seq((segAgree, 2.5, -1.2), (balNear, 3.1, -0.8)), threshold = 1.5)
+    assert(weights.columns.toSeq == Seq("left_id", "right_id", "match_weight"))
+    // weights summed in declared order
+    val wantWeights = pairs.map { case (k, seg, bal, _, _) =>
+      k -> ((if (seg) 2.5 else -1.2) + (if (bal) 3.1 else -0.8))
+    }.filter(_._2 >= 1.5).toMap
+    assert(wantWeights.contains((2L, 12L)), "the NULL-seg pair must score, as disagreement")
+    assert(scores(weights) == wantWeights)
+
+    val ratios = Link.fellegiSunterTf(left, right, "id", "id", "l.blk = r.blk",
+      tfAgree = "l.tfv = r.tfv", tfLeftValue = "l.tfv",
+      tfM = 0.9, tfDisagreeRatio = 0.125, corpus = corpus, corpusCol = "tfv",
+      others = Seq((segAgree, 4.0, 0.5), (balNear, 9.0, 0.25)), threshold = 1.0)
+    assert(ratios.columns.toSeq == Seq("left_id", "right_id", "match_ratio"))
+    // TF ratio first, then the other ratios in declared order
+    val wantRatios = pairs.map { case (k, seg, bal, tfAgree, v) =>
+      val tf = if (tfAgree) 0.9 / (tfCount.getOrElse(v, 1L).toDouble / 10.0) else 0.125
+      k -> (tf * (if (seg) 4.0 else 0.5) * (if (bal) 9.0 else 0.25))
+    }.filter(_._2 >= 1.0).toMap
+    assert(wantRatios.contains((3L, 13L)), "the unseen value must floor at tf_cnt = 1")
+    assert(scores(ratios) == wantRatios)
+  }
+
+  test("empty comparison lists fail by name") {
+    val df = Seq((1L, "x", 1)).toDF("id", "name", "blk")
+    Seq[() => Any](
+      () => Link.deterministic(df, df, "id", "id", Nil),
+      () => Link.weighted(df, df, "id", "id", Nil, 0.5),
+      () => Link.fellegiSunter(df, df, "id", "id", "l.blk = r.blk", Nil, 0.0),
+      () => Link.fellegiSunterLevels(df, df, "id", "id", "l.blk = r.blk", Nil, 0.0),
+      () => Link.fellegiSunterEm(df, df, "id", "id", "l.blk = r.blk", Nil),
+      () => Link.estimateLambda(df, df, "id", "id", Nil, recall = 0.5),
+      () => Link.estimateU(df, df, "id", "id", Nil)
+    ).foreach { run =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("need at least one"), e.getMessage)
+    }
+  }
+
+  test("Link builds the TF frequency table and collects the pattern table in one place") {
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/operators/Link.scala")), "UTF-8")
+    def uses(pattern: String) = pattern.r.findAllMatchIn(src).size
+    assert(uses("""corpus\.groupBy""") == 1, "one TF table, built by the candidate builder")
+    assert(uses("""\.collect\(\)""") == 1, "one pattern-table collect, in patternCounts")
   }
 }

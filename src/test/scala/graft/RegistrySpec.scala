@@ -186,6 +186,17 @@ class RegistrySpec extends SparkSpec {
         SourceSpec("s", s"$sfDir/nation.parquet"),
         ModelSpec("bad", "no_such_kind", Seq("s"), leftId = "n_nationkey")))).run()
     }
+    // and so does a linker without comparisons, naming the model
+    Seq("link_deterministic", "link_weighted", "link_fellegi_sunter").foreach { kind =>
+      val e = intercept[IllegalArgumentException] {
+        DagConfig.build(spark, DagSpec(Seq(
+          SourceSpec("s", s"$sfDir/nation.parquet"),
+          ModelSpec("bare", kind, Seq("s", "s"), leftId = "n_nationkey",
+            blocking = Some("l.n_regionkey = r.n_regionkey"))))).run()
+      }
+      assert(e.getMessage.contains("bare: linker needs at least one comparison"),
+        s"$kind: ${e.getMessage}")
+    }
   }
 
   test("dag step fingerprints are content hashes: stable, order-invariant") {

@@ -26,7 +26,8 @@ BENCHMARK.json end-to-end metric:
 - the pairs the change won (ties count for neither) out of the pairs run;
 - the parent's IQR/median;
 - `gain`: won at least 9/10 of the pairs and the medians differ by more
-  than the parent's IQR, in the better direction;
+  than the parent's IQR, in the better direction; `n<10` below ten pairs,
+  which are too few to claim a gain;
 - `bound`: whether the change's median is within the metric's bound of
   the parent's (`ok`) or not (`WORSE`).
 
@@ -54,6 +55,7 @@ from collections import defaultdict
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SIDES = ("parent", "change")
+MIN_PAIRS = 10  # fewer pairs than this cannot back a gain claim
 
 
 def seeds_arg(s):
@@ -199,7 +201,7 @@ def report(a, bench):
             wins = sum(1 for p, c in have if (c < p if lower else c > p))
             iqr = pq[2] - pq[0]
             gap = (pq[1] - cq[1]) if lower else (cq[1] - pq[1])
-            gain = wins >= 0.9 * n and gap > iqr
+            gain = "n<10" if n < MIN_PAIRS else "yes" if wins >= 0.9 * n and gap > iqr else "no"
             ratio = cq[1] / pq[1] if pq[1] else float("nan")
             within = cq[1] <= pq[1] * (1 + bound) if lower else cq[1] >= pq[1] * (1 - bound)
             if not within:
@@ -210,7 +212,7 @@ def report(a, bench):
                 v = [f"{x:.0f}" if abs(x) >= 1000 else f"{x:.4g}" for x in q]
                 return f"{v[1]} [{v[0]}, {v[2]}]"
             print(f"{name:<15} {fmt(pq):>26} {fmt(cq):>26} {ratio:>6.3f} {wins:>3}/{n:<2} {rel:>9.3f} "
-                  f"{'yes' if gain else 'no':>5} {('ok' if within else 'WORSE') + f' ±{bound}':>11}")
+                  f"{gain:>5} {('ok' if within else 'WORSE') + f' ±{bound}':>11}")
     for p in problems:
         print(f"benchpairs: {p}", file=sys.stderr)
     for w in worse:

@@ -74,18 +74,19 @@ object Tables {
   }
 }
 
-/** Lineage truncation, and the one loop every iterative operator runs
-  * through ([[iterate]]).
+/** Lineage truncation: the one place that checkpoints a frame, through
+  * [[settle]] for a frame that is reused and [[iterate]] for the frames of
+  * a loop.
   *
-  * Invariant of [[iterate]]: every frame a round hands on — to the next
-  * step, to the convergence test, to the caller — is truncated AND already
+  * Invariant: every frame `Ckpt` hands out is truncated AND already
   * materialized, by one action on the calling thread. A lazy checkpoint
   * that a multi-stage plan materializes first can be materialized from two
   * AQE threads at once (a shuffle-stage submission and a broadcast
   * collect), and that race can deadlock the driver: the DAGScheduler event
   * loop holds the RDD lock and wants the RDDCheckpointData lock while a
-  * broadcast-exchange thread holds the reverse. Outside [[iterate]], a
-  * lazy [[truncate]] must be materialized (count) before it feeds a join.
+  * broadcast-exchange thread holds the reverse. No caller can make a lazy
+  * checkpoint: the truncation itself is private, and `CkptSpec` fails on
+  * any `localCheckpoint(` or `.checkpoint(` in `src/main` outside this file.
   *
   * Two modes, chosen by session conf:
   *   - default: `localCheckpoint` — executor-local blocks, zero extra I/O;
@@ -117,8 +118,8 @@ object Ckpt {
 
   /** Run `init`, then `step(prev, round)` for rounds 1..maxRounds until
     * `done(prevSignal, signal)`. Per frame, in order:
-    *   1. truncate it ([[truncateBulk]] when `bulk`); an `init` that is
-    *      already a materialized checkpoint is used as is;
+    *   1. truncate it (DISK_ONLY blocks when `bulk`, as in [[settleBulk]]);
+    *      an `init` that is already a materialized checkpoint is used as is;
     *   2. run `signal` on it: the convergence action is the frame's one
     *      materialization point, on this thread. It must run its stages
     *      one after another (a count, a global aggregate) — never a join
@@ -141,25 +142,23 @@ object Ckpt {
     val sc = init.sparkSession.sparkContext
     def persisted = sc.getPersistentRDDs.keySet.toSet
     val base = persisted
-    def settle(df: DataFrame, round: Int): (DataFrame, S) = {
-      val reuse = round == 0 && checkpointRdd(df).exists(_.isCheckpointed)
-      val cut = if (reuse) df else truncateImpl(df, bulk)
+    def settleRound(df: DataFrame, round: Int): (DataFrame, S) = {
+      val cut = if (round == 0) truncate(df, bulk) else truncateImpl(df, bulk)
       val s = signal(cut)
-      val rdd = checkpointRdd(cut).get
+      val rdd = rddOf(cut)
       if (!rdd.isCheckpointed) rdd.count()
-      if (!rdd.isCheckpointed)
-        throw new IllegalStateException(s"$op round $round: checkpoint was not materialized")
+      verify(s"$op round $round", cut)
       log.debug(s"$op round $round signal $s")
       (cut, s)
     }
-    var (frame, sig) = settle(init, 0)
+    var (frame, sig) = settleRound(init, 0)
     val signals = IndexedSeq.newBuilder[S] += sig
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
       round += 1
       val dead = persisted -- base
-      val (next, nextSig) = settle(step(frame, round), round)
+      val (next, nextSig) = settleRound(step(frame, round), round)
       release(sc, dead)
       converged = done(sig, nextSig)
       frame = next
@@ -201,14 +200,29 @@ object Ckpt {
       case _ => None
     }
 
-  private def rddOf(df: DataFrame): RDD[InternalRow] =
+  /** The checkpoint RDD of a truncated frame, for a one-job [[iterate]]
+    * signal over its blocks.
+    */
+  private[graft] def rddOf(df: DataFrame): RDD[InternalRow] =
     checkpointRdd(df).getOrElse(throw new IllegalArgumentException(
       s"not a truncated frame: ${df.queryExecution.logical.nodeName}"))
 
-  /** Lazy truncation of a node-sized frame (MEMORY_AND_DISK blocks). */
-  def truncate(df: DataFrame): DataFrame = truncateImpl(df, bulk = false)
+  /** Truncate each frame and materialize all of them in ONE job on the
+    * calling thread: a row count over the union of their checkpoint RDDs.
+    * Returns each truncated frame with its row count from that job, in
+    * argument order. A frame that is already a materialized checkpoint is
+    * not cut again. Throws, naming the frame, if one is still not
+    * checkpointed afterwards.
+    *
+    * Settle a frame only when more than one job or plan branch reads it,
+    * or when it holds a nondeterministic expression (`rand`, `sample`, an
+    * unordered `limit`, `monotonically_increasing_id`) that is read more
+    * than once; a frame read once gains nothing from a checkpoint.
+    */
+  def settle(df: DataFrame, more: DataFrame*): IndexedSeq[(DataFrame, Long)] =
+    settleAll(df +: more, bulk = false)
 
-  /** [[truncate]] for DATA-SIZED frames (edge lists, pair lists): blocks
+  /** [[settle]] for DATA-SIZED frames (edge lists, pair lists): blocks
     * go DISK_ONLY instead of MEMORY_AND_DISK. A multi-GB deserialized
     * cache squeezes the unified region until execution memory starves
     * (the sf10 1.69G-edge k-core/PageRank rounds died with
@@ -216,10 +230,34 @@ object Ckpt {
     * (spark.rdd.compress, set in every entrypoint) and re-read through
     * the OS page cache, so the local-mode cost is near zero while the
     * execution pool keeps the whole region. Node-sized frames (ranks,
-    * labels, survivor sets) stay on [[truncate]] — they're small and
+    * labels, survivor sets) stay on [[settle]] — they're small and
     * re-read hot.
     */
-  def truncateBulk(df: DataFrame): DataFrame = truncateImpl(df, bulk = true)
+  def settleBulk(df: DataFrame, more: DataFrame*): IndexedSeq[(DataFrame, Long)] =
+    settleAll(df +: more, bulk = true)
+
+  private def settleAll(frames: Seq[DataFrame], bulk: Boolean): IndexedSeq[(DataFrame, Long)] = {
+    val cut = frames.map(truncate(_, bulk)).toIndexedSeq
+    val rdds = cut.map(rddOf)
+    val sc = cut.head.sparkSession.sparkContext
+    val perPartition = sc.runJob(new org.apache.spark.rdd.UnionRDD(sc, rdds),
+      (it: Iterator[InternalRow]) => { var n = 0L; while (it.hasNext) { it.next(); n += 1 }; n })
+    val ends = rdds.scanLeft(0)(_ + _.partitions.length)
+    cut.indices.map { i =>
+      verify(s"Ckpt.settle frame ${i + 1} of ${cut.size}", cut(i))
+      (cut(i), perPartition.slice(ends(i), ends(i + 1)).sum)
+    }
+  }
+
+  /** `df` itself when it is already a materialized checkpoint, else a
+    * lazy truncation of it.
+    */
+  private def truncate(df: DataFrame, bulk: Boolean): DataFrame =
+    if (checkpointRdd(df).exists(_.isCheckpointed)) df else truncateImpl(df, bulk)
+
+  private def verify(what: String, df: DataFrame): Unit =
+    if (!rddOf(df).isCheckpointed)
+      throw new IllegalStateException(s"$what: checkpoint was not materialized")
 
   private def truncateImpl(df: DataFrame, bulk: Boolean): DataFrame = {
     val spark = df.sparkSession

@@ -67,7 +67,7 @@ object JobStatsProbe {
       spark.read.parquet(s"$sfDir/lineitem.parquet")
         .groupBy("l_returnflag").count().count()
       graft.Registry.byName("mb_components").fn(spark, "/root/testdata/sf0.001").count()
-    } catch { case _: Throwable => () }
+    } catch { case scala.util.control.NonFatal(e) => graft.BlockCleanup.loud("warm-up", e) }
     def compileMs(): Long =
       org.apache.spark.metrics.source.CodegenMetrics
         .METRIC_COMPILATION_TIME.getSnapshot.getValues.sum

@@ -44,9 +44,9 @@ object BCubed {
         col("component").cast("long").as("component"))
       .join(truth.select(col("id").cast("long").as("id"),
         col("entity_id").cast("long").as("entity_id")), "id")
-    val ct = j.groupBy("component", "entity_id")
-      .agg(count(lit(1)).as("c_ct"))
-      .localCheckpoint(false) // feeds both side aggregates
+    // feeds both side aggregates
+    val (ct, _) = graft.Ckpt.settle(j.groupBy("component", "entity_id")
+      .agg(count(lit(1)).as("c_ct"))).head
     val byCluster = ct.groupBy(col("component").as("group_id"))
       .agg(sum("c_ct").as("n"), sum(col("c_ct") * col("c_ct")).as("sq"))
       .withColumn("side", lit("cluster"))

@@ -54,7 +54,7 @@ object Judgements {
     val endorsedExp = expansion.select(col("root").as("endorsed"), col("leaves").as("endorsed_leaves"))
     // jid pins each judgement row for the two-stage pair fan-out below;
     // the checkpoint computes the id assignment once for all three reads.
-    val expanded = judgements
+    val (expanded, _) = graft.Ckpt.settle(judgements
       .join(shownExp, "shown")
       .join(endorsedExp, Seq("endorsed"), "left")
       .withColumn("endorsed_leaves",
@@ -63,8 +63,7 @@ object Judgements {
       .withColumn("n_endorsed", size(col("endorsed_leaves")))
       .withColumn("jid", monotonically_increasing_id())
       .withColumn("sl", expr("array_sort(shown_leaves)"))
-      .withColumn("el", expr("array_sort(endorsed_leaves)"))
-      .localCheckpoint(false)
+      .withColumn("el", expr("array_sort(endorsed_leaves)"))).head
     val arrays = expanded.select(col("jid"), col("sl"), col("el"))
     // Explicit partition count: the pre-explode rows are tiny, so AQE
     // would coalesce an expression-only repartition back to one partition

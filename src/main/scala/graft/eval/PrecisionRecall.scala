@@ -130,19 +130,18 @@ object PrecisionRecall {
         val isModel = inUniverse && col(s"ca_$i") === col(s"cb_$i")
         Seq(cnt(isModel).as(s"n_model_$i"), cnt(isModel && col("net") > 0).as(s"tp_$i"))
       }
-    // one physical pass: the per-model projections below each read this
-    // single-row aggregate, so materialise it once instead of re-running
-    // the net joins N times
-    val one = annotated.agg(aggs.head, aggs.tail: _*).localCheckpoint(false)
-
+    // one physical pass: the single-row aggregate explodes into one row
+    // per model, so the net joins run once whatever the model count
     val perModel = models.indices.map { i =>
-      one.select(
+      struct(
         lit(i.toLong).as("model"),
         col(s"tp_$i").as("tp"), col(s"n_model_$i").as("n_model"), col("n_validation"),
         ratio(col(s"tp_$i"), col(s"n_model_$i")).as("precision"),
         ratio(col(s"tp_$i"), col("n_validation")).as("recall"))
     }
-    perModel.reduce(_ unionByName _).orderBy("model")
+    annotated.agg(aggs.head, aggs.tail: _*)
+      .select(explode(array(perModel: _*)).as("m"))
+      .select("m.*").orderBy("model")
   }
 
   private def fromNet(assignments: DataFrame, rawNet: DataFrame): DataFrame = {

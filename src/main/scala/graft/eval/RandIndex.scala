@@ -31,9 +31,9 @@ object RandIndex {
         col("component").cast("long").as("component"))
       .join(truth.select(col("id").cast("long").as("id"),
         col("entity_id").cast("long").as("entity_id")), "id")
-    val ct = j.groupBy("component", "entity_id")
-      .agg(count(lit(1)).as("c_ct"))
-      .localCheckpoint(false) // feeds all four aggregates
+    // feeds all four aggregates
+    val (ct, _) = graft.Ckpt.settle(j.groupBy("component", "entity_id")
+      .agg(count(lit(1)).as("c_ct"))).head
     // n(n−1) is even, so a right-shift IS the exact integer halving — all
     // arithmetic stays LongType (Column `/` is Divide, which would route
     // through DOUBLE and lose exactness past 2^53 pair counts).

@@ -201,9 +201,9 @@ object Hashing {
     // under duplicate-key ties the emitted (ordinal, child) multiset is
     // unchanged (spec-pinned in FunctionsSpec).
     val parts = math.max(grouped.sparkSession.sparkContext.defaultParallelism, 1)
-    val ranged = graft.Ckpt.truncate(
+    val (ranged, _) = graft.Ckpt.settle(
       grouped.repartitionByRange(parts, col("child_ids"))
-        .withColumn("pid", spark_partition_id()))
+        .withColumn("pid", spark_partition_id())).head
     val counts = ranged.groupBy("pid").agg(count(lit(1)).as("cnt"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     val offsets: Map[Int, Long] =

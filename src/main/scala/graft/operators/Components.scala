@@ -19,11 +19,12 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
-  /** Adaptive entry point: take up to `smallGraphThreshold + 1` deduplicated
-    * edges in one incremental job; when they all fit, solve on the driver
-    * with a union-find in milliseconds (the reference's DisjointSet,
-    * transform.py — correct and fastest when the graph fits trivially in
-    * memory), otherwise run the distributed large-star/small-star rounds.
+  /** Adaptive entry point: materialize and count the oriented non-loop
+    * edges in one job; when they fit `smallGraphThreshold`, collect them
+    * and solve on the driver with a union-find in milliseconds (the
+    * reference's DisjointSet, transform.py — correct and fastest when the
+    * graph fits trivially in memory), otherwise run the distributed
+    * large-star/small-star rounds.
     * The same adaptive trade AQE applies to join strategies, applied to
     * graph connectivity.
     *
@@ -42,18 +43,15 @@ object Components {
     val threshold =
       if (smallGraphThreshold >= 0) smallGraphThreshold
       else spark.conf.get("spark.graft.components.smallGraphThreshold", "2000000").toLong
-    val oriented = edges
+    // the settle job's row count picks the path: the driver path collects
+    // the materialized edges (a union-find absorbs duplicates), the rounds
+    // start from their distinct set
+    val (oriented, n) = graft.Ckpt.settleBulk(edges
       .filter(col("src") =!= col("dst"))
       .select(
         greatest(col("src"), col("dst")).cast("long").as("u"),
-        least(col("src"), col("dst")).cast("long").as("v"))
-      .distinct()
-      .transform(graft.Ckpt.truncateBulk)
-    // take() doubles as the size probe and the driver-path data fetch — no
-    // separate count() job; it stops reading partitions once over budget.
-    val takeN = (math.min(threshold, Int.MaxValue.toLong - 1) + 1).toInt
-    val head = oriented.take(takeN)
-    if (head.length <= threshold) driverUnionFind(spark, head)
+        least(col("src"), col("dst")).cast("long").as("v"))).head
+    if (n <= threshold) driverUnionFind(spark, oriented.collect())
     else distributed(oriented, maxIter)
   }
 
@@ -82,33 +80,25 @@ object Components {
       assignment: DataFrame,
       newEdges: DataFrame,
       maxIter: Int = 30): DataFrame = {
+    // the persisted resolution is read as is by the contraction and the remap
     val a = assignment.select(
       col("id").cast("long").as("id"), col("component").cast("long").as("component"))
-      .localCheckpoint(false) // feeds contraction, remap and anti-join
-    val e = newEdges
+    val contracted = newEdges
       .filter(col("src") =!= col("dst"))
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .localCheckpoint(false)
-    val contracted = e
       .join(a.select(col("id").as("src"), col("component").as("cs")), Seq("src"), "left")
       .join(a.select(col("id").as("dst"), col("component").as("cd")), Seq("dst"), "left")
       .select(
         coalesce(col("cs"), col("src")).as("src"),
         coalesce(col("cd"), col("dst")).as("dst"))
+    // every new endpoint is a node of the contracted graph (an old
+    // representative is an old id, so a new node never contracts into a
+    // self-loop): the new edges are read once, by the contraction
     val solved = connected(contracted, maxIter)
-      .select(col("id").as("rep"), col("component").as("new_comp"))
-      .localCheckpoint(false) // feeds both remap joins
-    val updatedOld = a
-      .join(solved, a("component") === solved("rep"), "left")
-      .select(a("id"), coalesce(col("new_comp"), a("component")).as("component"))
-    val newNodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst")))
-      .distinct()
-      .join(a.select("id"), Seq("id"), "left_anti")
-    val updatedNew = newNodes
-      .join(solved, newNodes("id") === solved("rep"), "left")
-      .select(newNodes("id"), coalesce(col("new_comp"), newNodes("id")).as("component"))
-    updatedOld.unionByName(updatedNew)
+    a.join(solved.select(col("id").as("rep"), col("component").as("new_comp")),
+        col("component") === col("rep"), "left")
+      .select(col("id"), coalesce(col("new_comp"), col("component")).as("component"))
+      .unionByName(solved.join(a.select("id"), Seq("id"), "left_anti"))
   }
 
   /** Driver-side union-find with path halving; emits (id, component=min id). */
@@ -137,8 +127,8 @@ object Components {
   }
 
   /** Distributed alternating large-star / small-star rounds over edges
-    * `(u, v)` already oriented large -> small by the caller; the invariant
-    * is maintained across rounds.
+    * `(u, v)` already oriented large -> small by the caller, possibly with
+    * duplicates; the invariant is maintained across rounds.
     */
   private def distributed(edges: DataFrame, maxIter: Int): DataFrame = {
     val nodes = edges.select(col("u").as("id"))
@@ -148,12 +138,15 @@ object Components {
     // Edge-set signature for the convergence test: count + XOR of per-edge
     // hashes. XOR is commutative and cannot overflow (unlike a sum under
     // ANSI arithmetic), so it is safe at any scale; edges are distinct so
-    // the set is characterised up to hash collisions.
+    // the set is characterised up to hash collisions. One job over the
+    // round's checkpoint blocks: the hash is Spark's `xxhash64(u, v)`.
     def signature(df: DataFrame): (Long, Long) = {
-      val row = df.agg(
-        count(lit(1)).as("n"),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("h")).head()
-      (row.getLong(0), row.getLong(1))
+      import org.apache.spark.sql.catalyst.expressions.XXH64
+      val (u, v) = (df.schema.fieldIndex("u"), df.schema.fieldIndex("v"))
+      graft.Ckpt.rddOf(df).aggregate((0L, 0L))(
+        (acc, r) =>
+          (acc._1 + 1, acc._2 ^ XXH64.hashLong(r.getLong(v), XXH64.hashLong(r.getLong(u), 42L))),
+        (a, b) => (a._1 + b._1, a._2 ^ b._2))
     }
 
     def largeStar(edges: DataFrame): DataFrame = {
@@ -180,7 +173,7 @@ object Components {
         .distinct()
     }
 
-    val rounds = graft.Ckpt.iterate("cc.round", edges, maxIter, bulk = true)(
+    val rounds = graft.Ckpt.iterate("cc.round", edges.distinct(), maxIter, bulk = true)(
       (e, _) => smallStar(largeStar(e)))(
       signature, (prev: (Long, Long), next: (Long, Long)) => next == prev)
 

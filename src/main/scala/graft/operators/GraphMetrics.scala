@@ -98,26 +98,13 @@ object GraphMetrics {
     * per-row join machinery.
     */
   def triangleStats(edges: DataFrame): DataFrame = {
-    // Feeds degree agg, two rank joins, the adjacency fold and the edge
-    // count — materialise once.
-    val e = graft.Ckpt.truncateBulk(edges)
-    val deg = graft.Ckpt.truncate(degrees(e))
+    // Feeds degree agg, two rank joins and the adjacency fold —
+    // materialise once; the settle job counts the edges.
+    val (e, nEdges) = graft.Ckpt.settleBulk(edges).head
+    val (deg, _) = graft.Ckpt.settle(degrees(e)).head
 
-    // Total order on nodes by (degree, id): ties broken by id so the
-    // orientation is a strict tournament regardless of degree collisions.
-    val rk = deg.select(col("n"), struct(col("deg"), col("n")).as("rk"))
-
-    // Orient each edge low-rank → high-rank.
-    val oriented = e
-      .join(rk.select(col("n").as("a"), col("rk").as("rka")), "a")
-      .join(rk.select(col("n").as("b"), col("rk").as("rkb")), "b")
-      .select(
-        when(col("rka") < col("rkb"),
-          struct(col("a").as("u"), col("b").as("v")))
-          .otherwise(struct(col("b").as("u"), col("a").as("v")))
-          .as("o"))
-      .select(col("o.u").as("u"), col("o.v").as("v"))
-      .transform(graft.Ckpt.truncateBulk)
+    // read by the adjacency fold and the triangle join
+    val (oriented, _) = graft.Ckpt.settleBulk(orient(e, deg)).head
 
     // One sorted out-adjacency array per orientation source. Group size is
     // bounded by the O(√m) oriented out-degree — no unbounded collect.
@@ -139,10 +126,9 @@ object GraphMetrics {
     val nodesWedges = deg.agg(
       count(lit(1)).as("n_nodes"),
       sum(expr("deg * (deg - 1) DIV 2")).as("n_wedges"))
-    val nEdges = e.agg(count(lit(1)).as("n_edges"))
 
-    nodesWedges.crossJoin(nEdges).crossJoin(triangles)
-      .select("n_nodes", "n_edges", "n_triangles", "n_wedges")
+    nodesWedges.crossJoin(triangles)
+      .select(col("n_nodes"), lit(nEdges).as("n_edges"), col("n_triangles"), col("n_wedges"))
   }
 
   /** Per-node triangle counts and local clustering coefficient (Watts &
@@ -157,24 +143,14 @@ object GraphMetrics {
     * deg ≥ 2 domain.
     */
   def localClustering(edges: DataFrame): DataFrame = {
-    val e = graft.Ckpt.truncateBulk(edges)
-    val deg = graft.Ckpt.truncate(degrees(e))
-    val rk = deg.select(col("n"), struct(col("deg"), col("n")).as("rk"))
-    val oriented = e
-      .join(rk.select(col("n").as("a"), col("rk").as("rka")), "a")
-      .join(rk.select(col("n").as("b"), col("rk").as("rkb")), "b")
-      .select(
-        when(col("rka") < col("rkb"),
-          struct(col("a").as("u"), col("b").as("v")))
-          .otherwise(struct(col("b").as("u"), col("a").as("v")))
-          .as("o"))
-      .select(col("o.u").as("u"), col("o.v").as("v"))
-      .transform(graft.Ckpt.truncateBulk)
+    val (e, _) = graft.Ckpt.settleBulk(edges).head
+    val (deg, _) = graft.Ckpt.settle(degrees(e)).head
+    val (oriented, _) = graft.Ckpt.settleBulk(orient(e, deg)).head
     // adj feeds BOTH posting joins — checkpoint or the groupBy+sort runs
     // twice (triangleStats tolerates that for its one-row output; here
     // the whole frame flows on)
-    val adj = graft.Ckpt.truncateBulk(oriented.groupBy("u")
-      .agg(sort_array(collect_list(col("v"))).as("nbrs")))
+    val (adj, _) = graft.Ckpt.settleBulk(oriented.groupBy("u")
+      .agg(sort_array(collect_list(col("v"))).as("nbrs"))).head
     val credits = oriented
       .join(adj.select(col("u"), col("nbrs").as("nu")), Seq("u"))
       .join(adj.select(col("u").as("v"), col("nbrs").as("nv")), Seq("v"))
@@ -290,15 +266,15 @@ object GraphMetrics {
       scale: Long, alphaNum: Long, alphaDen: Long): DataFrame = {
     require(iters >= 1 && scale > 0 && alphaDen > 0 &&
       alphaNum >= 0 && alphaNum <= alphaDen)
-    val e2 = graft.Ckpt.truncateBulk(
+    val (e2, _) = graft.Ckpt.settleBulk(
       edges.select(col("a").as("s"), col("b").as("t"))
-        .unionAll(edges.select(col("b").as("s"), col("a").as("t"))))
+        .unionAll(edges.select(col("b").as("s"), col("a").as("t")))).head
     val deg = e2.groupBy(col("s").as("n")).agg(count(lit(1)).as("d"))
     val base = (alphaDen - alphaNum) * scale / alphaDen
     // sflag ∈ {0,1}: which nodes receive the teleport term. The global
     // variant tags every node, so the plan keeps one shape; the tag join
     // is on the node key the aggregation already shuffles on.
-    val tagged = graft.Ckpt.truncate(seeds match {
+    val (tagged, nodeCount) = graft.Ckpt.settle(seeds match {
       case None => deg.select(col("n"), col("d"), lit(1L).as("sflag"))
       case Some(sd) =>
         deg.join(
@@ -306,8 +282,7 @@ object GraphMetrics {
               .withColumn("sflag", lit(1L)),
             Seq("n"), "left")
           .select(col("n"), col("d"), coalesce(col("sflag"), lit(0L)).as("sflag"))
-    })
-    val nodeCount = tagged.count()
+    }).head
     val bcMax = broadcastNodesMax(edges)
     val pr0 = tagged.select(col("n"), (lit(scale) * col("sflag")).as("r"))
     graft.Ckpt.iterate("pagerank", pr0, iters) { (pr, _) =>
@@ -340,12 +315,12 @@ object GraphMetrics {
     */
   def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1)
-    val e2 = graft.Ckpt.truncateBulk(
+    val (e2, _) = graft.Ckpt.settleBulk(
       edges.select(col("a").as("s"), col("b").as("t"))
-        .unionAll(edges.select(col("b").as("s"), col("a").as("t"))))
-    val lab0 = e2.select(col("s").as("n")).distinct()
-      .withColumn("lab", col("n"))
-    val nodeCount = lab0.count()
+        .unionAll(edges.select(col("b").as("s"), col("a").as("t")))).head
+    // round 0 of the loop: settled here for its count, reused as is there
+    val (lab0, nodeCount) = graft.Ckpt.settle(e2.select(col("s").as("n")).distinct()
+      .withColumn("lab", col("n"))).head
     val bcMax = broadcastNodesMax(edges)
     graft.Ckpt.iterate("labelprop", lab0, iters) { (lab, _) =>
       e2.join(maybeBroadcast(lab.withColumnRenamed("n", "s"), nodeCount, bcMax), "s")
@@ -414,13 +389,29 @@ object GraphMetrics {
     require(k >= 1 && rounds >= 1)
     val bcMax = broadcastNodesMax(edges)
     graft.Ckpt.iterate("kcore.peel", edges, rounds, bulk = true) { (e, _) =>
-      val keep = graft.Ckpt.truncate(
-        degrees(e).filter(col("deg") >= k).select(col("n")))
-      val kb = maybeBroadcast(keep, keep.count(), bcMax)
+      val (keep, nKeep) = graft.Ckpt.settle(
+        degrees(e).filter(col("deg") >= k).select(col("n"))).head
+      val kb = maybeBroadcast(keep, nKeep, bcMax)
       e.join(kb.withColumnRenamed("n", "a"), Seq("a"), "left_semi")
         .join(kb.withColumnRenamed("n", "b"), Seq("b"), "left_semi")
         .select("a", "b")
     }(signal, (prev, next) => nEdges(next) == nEdges(prev) || nEdges(next) == 0L)
+  }
+
+  /** Each edge oriented low-rank → high-rank, as `(u, v)`. The total
+    * order on nodes is (degree, id): ties broken by id so the orientation
+    * is a strict tournament regardless of degree collisions.
+    */
+  private[graft] def orient(e: DataFrame, deg: DataFrame): DataFrame = {
+    val rk = deg.select(col("n"), struct(col("deg"), col("n")).as("rk"))
+    e.join(rk.select(col("n").as("a"), col("rk").as("rka")), "a")
+      .join(rk.select(col("n").as("b"), col("rk").as("rkb")), "b")
+      .select(
+        when(col("rka") < col("rkb"),
+          struct(col("a").as("u"), col("b").as("v")))
+          .otherwise(struct(col("b").as("u"), col("a").as("v")))
+          .as("o"))
+      .select(col("o.u").as("u"), col("o.v").as("v"))
   }
 
   /** Reference-quality O(n³) triangle count for specs. */

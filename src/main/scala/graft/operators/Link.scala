@@ -110,26 +110,26 @@ object Link {
     require(rounds.nonEmpty, "deterministicRounds needs at least one round")
     var remainingL = left
     var remainingR = right
-    var acc: Option[DataFrame] = None
-    for (round <- rounds) {
-      // Each round's matches feed the accumulator union AND both anti-join
-      // sides; the shrunken pools feed the next round. Without truncation the
-      // plan for round r embeds the full join work of rounds 1..r-1 (and
-      // replays this round's join three times) — O(R^2) recompute. A lazy
-      // localCheckpoint materialises each once and cuts lineage per round.
-      val matches = deterministic(remainingL, remainingR, leftId, rightId, round)
-        .localCheckpoint(false)
-      acc = Some(acc.map(_ union matches).getOrElse(matches))
-      val ml = matches.select(col("left_id")).distinct()
-      val mr = matches.select(col("right_id")).distinct()
-      remainingL = remainingL
-        .join(ml, remainingL(leftId) === ml("left_id"), "left_anti")
-        .localCheckpoint(false)
-      remainingR = remainingR
-        .join(mr, remainingR(rightId) === mr("right_id"), "left_anti")
-        .localCheckpoint(false)
-    }
-    acc.get
+    rounds.zipWithIndex.map { case (round, i) =>
+      val found = deterministic(remainingL, remainingR, leftId, rightId, round)
+      if (i == rounds.size - 1) found
+      else {
+        // This round's matches feed the result union AND both anti-join
+        // sides; the shrunken pools feed the next round. Without truncation
+        // the plan for round r embeds the full join work of rounds 1..r-1
+        // (and replays this round's join three times) — O(R^2) recompute.
+        // Settling materializes each once and cuts lineage per round.
+        val (matches, _) = graft.Ckpt.settle(found).head
+        val ml = matches.select(col("left_id")).distinct()
+        val mr = matches.select(col("right_id")).distinct()
+        val Seq((l, _), (r, _)) = graft.Ckpt.settle(
+          remainingL.join(ml, remainingL(leftId) === ml("left_id"), "left_anti"),
+          remainingR.join(mr, remainingR(rightId) === mr("right_id"), "left_anti"))
+        remainingL = l
+        remainingR = r
+        matches
+      }
+    }.reduce(_ union _)
   }
 
   /** Splits a comparison on top-level AND nodes of its *parsed* expression.
@@ -528,7 +528,7 @@ object Link {
 
   /** The blocked candidates with gammas g0..g(k-1), one per level list
     * (`nullConditions`: none, or one null level per comparison). Exposed so
-    * gates can localCheckpoint the join once and re-run training + scoring.
+    * gates can settle the join once and re-run training + scoring.
     */
   def emLevelsCandidates(
       left: DataFrame, right: DataFrame, leftId: String, rightId: String, blocking: String,

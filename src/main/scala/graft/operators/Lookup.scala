@@ -22,12 +22,12 @@ object Lookup {
     // Tag each resolution before the union: cluster ids are arbitrary and an
     // id reused by unrelated clusters in a and b must NOT collapse them into
     // one star — only co-membership within a single resolution is an edge.
-    // Materialised once (lazy localCheckpoint): the star-edge derivation AND
-    // the singleton restore both read it, and the inputs are typically whole
-    // resolution pipelines that must not run twice.
-    val tagged = a.select(col("cluster_id"), col("leaf_id")).withColumn("side", lit(0))
-      .unionByName(b.select(col("cluster_id"), col("leaf_id")).withColumn("side", lit(1)))
-      .localCheckpoint(false)
+    // Materialised once, before either reader runs: the star-edge
+    // derivation AND the singleton restore both read it, and the inputs are
+    // typically whole resolution pipelines that must not run twice.
+    val (tagged, _) = graft.Ckpt.settle(
+      a.select(col("cluster_id"), col("leaf_id")).withColumn("side", lit(0))
+        .unionByName(b.select(col("cluster_id"), col("leaf_id")).withColumn("side", lit(1)))).head
     val edges = tagged
       .withColumn("rep", min("leaf_id").over(
         org.apache.spark.sql.expressions.Window.partitionBy("side", "cluster_id")))

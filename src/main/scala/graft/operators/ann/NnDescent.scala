@@ -82,10 +82,9 @@ object NnDescent {
     val kBuild = if (kBuild0 > 0) kBuild0 else 2 * k
     val cap = if (cap0 > 0) cap0 else 2 * kBuild
     require(k >= 1 && iters >= 1 && cap > kBuild && kBuild >= k)
-    val vecs = targets
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .localCheckpoint(false) // scanned 2× per round
-    val n = vecs.count()
+    // scanned 2× per round; the settle job's row count is the corpus size
+    val (vecs, n) = graft.Ckpt.settle(targets
+      .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))).head
     val init = initEdges(vecs, n, kBuild)
     // `fresh` marks edges added in the latest merge — only wedges touching
     // a fresh edge are scored next round (the paper's incremental rule)
@@ -291,11 +290,12 @@ object NnDescent {
     require(k >= 1 && iters >= 1 && cap > kBuild && kBuild >= k)
     val baseVecs = base
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-    val deltaVecs = delta
+    val newVecs = delta
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .localCheckpoint(false)
-    val vecs = baseVecs.unionByName(deltaVecs).localCheckpoint(false)
-    val nDelta = deltaVecs.count()
+    // both feed the seeding and every descent round: one job materializes
+    // them and counts the delta
+    val Seq((deltaVecs, nDelta), (vecs, _)) =
+      graft.Ckpt.settle(newVecs, baseVecs.unionByName(newVecs))
     if (nDelta == 0) return graph
     // seed: each new vector's kBuild best reachable old neighbors via the
     // existing graph (scored — these carry true sims)
@@ -353,18 +353,18 @@ object NnDescent {
     val kBuild = if (kBuild0 > 0) kBuild0 else 2 * k
     val cap = if (cap0 > 0) cap0 else 2 * kBuild
     require(k >= 1 && iters >= 1 && cap > kBuild && kBuild >= k)
-    val rm = removeIds.select(col(removeIds.columns.head).cast("long").as("id"))
-      .distinct().localCheckpoint(false)
-    if (rm.isEmpty) return graph
-    val vecs = corpus
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .join(rm, Seq("id"), "left_anti")
-      .localCheckpoint(false)
-    // materialized once: `g` feeds the survivor prune, the lost-edge set
-    // AND the removed nodes' adjacency — lazily it re-evaluated the
-    // caller's whole graph plan three times
-    val g = graph.select(col("id"), col("nbr"), col("sim"))
-      .localCheckpoint(false)
+    val (rm, nRm) = graft.Ckpt.settle(
+      removeIds.select(col(removeIds.columns.head).cast("long").as("id")).distinct()).head
+    if (nRm == 0) return graph
+    // materialized once: `vecs` feeds the scoring, every descent round and
+    // the orphan guard; `g` feeds the survivor prune, the lost-edge set AND
+    // the removed nodes' adjacency (an already materialized graph is not
+    // copied)
+    val Seq((vecs, _), (g0, _)) = graft.Ckpt.settle(
+      corpus.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
+        .join(rm, Seq("id"), "left_anti"),
+      graph)
+    val g = g0.select(col("id"), col("nbr"), col("sim"))
     val rmAsNbr = rm.select(col("id").as("nbr"))
     // tombstone: drop removed sources, then removed targets
     val fromSurvivors = g.join(rm, Seq("id"), "left_anti")
@@ -375,27 +375,28 @@ object NnDescent {
     val rmOut = g.join(rm, Seq("id"), "left_semi")
       .join(rmAsNbr, Seq("nbr"), "left_anti")
       .select(col("id").as("r"), col("nbr").as("w"))
-    // materialized once: scored (below) and the δ-termination base both
-    // read it — lazily the bridge joins ran twice
-    val cand = lost.join(rmOut, "r")
+    // each touched node's distinct bridge targets, materialized once:
+    // scored (below) and the δ-termination base (its row count) both read
+    // it — unmaterialized, the bridge joins ran twice
+    val (bridges, nTouched) = graft.Ckpt.settle(lost.join(rmOut, "r")
       .filter(col("u") =!= col("w"))
-      .select(col("u").as("id"), col("w").as("nbr"))
-      .distinct()
-      .localCheckpoint(false)
+      .groupBy(col("u").as("id"))
+      .agg(array_distinct(collect_list(col("w"))).as("nbrs"))).head
+    val cand = bridges.select(col("id"), explode(col("nbrs")).as("nbr"))
     // one explode, not a self-union (the union re-scored the bridge
     // candidates once per branch)
     val freshE = bothDirections(score(cand, vecs))
-    val nTouched = math.max(1L, cand.select("id").distinct().count())
     val done = descend(mergeTopK(pruned, freshE, kBuild), vecs, k, kBuild,
-      iters, cap, deltaTerm, termN = nTouched)
+      iters, cap, deltaTerm, termN = math.max(1L, nTouched))
+    // a per-key top-k over the loop's last frame: the orphan guard and the
+    // caller each read it, and recomputing it costs less than a job
     val out = graft.plans.TopK.perKey(done, Seq("id"), "sim", k,
       tieCols = Seq("nbr")).drop("rank")
-      .localCheckpoint(false)
     // orphan guard: surviving vectors with no out-edges re-enter via the
     // insert path (beam-seeded against the repaired graph)
-    val orphans = vecs.join(out.select("id").distinct(), Seq("id"), "left_anti")
-      .localCheckpoint(false)
-    if (orphans.isEmpty) out
+    val (orphans, nOrphans) = graft.Ckpt.settle(
+      vecs.join(out.select("id").distinct(), Seq("id"), "left_anti")).head
+    if (nOrphans == 0) out
     else addVectors(out, vecs.join(orphans.select("id"), Seq("id"), "left_anti"),
       orphans, "id", "v", k, iters, cap0, kBuild0, deltaTerm)
   }
@@ -435,13 +436,14 @@ object NnDescent {
       beam: Int = 20, hops: Int = 3, seeds: Int = 4,
       excludeSelf: Boolean = true, hubRate: Int = 16): DataFrame = {
     require(k >= 1 && beam >= k && hops >= 1 && seeds >= 1 && hubRate >= 1)
+    // the corpus and the graph are the persisted index, read as is; the
+    // query batch, read by the coarse stage, the floor and every hop (often
+    // a live micro-batch), is settled once
     val vecs = targets
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .localCheckpoint(false)
-    val q = queries
-      .select(col(idCol).cast("long").as("qid"), col(vecCol).as("qv"))
-      .localCheckpoint(false)
-    val g = graph.select(col("id"), col("nbr")).localCheckpoint(false)
+    val (q, _) = graft.Ckpt.settle(queries
+      .select(col(idCol).cast("long").as("qid"), col(vecCol).as("qv"))).head
+    val g = graph.select(col("id"), col("nbr"))
     // coarse stage: brute-score the hub sample against the broadcast query
     // set (the bounded-query-set BNLJ shape dx_knn_brute justifies), keep
     // each query's top `seeds` hubs via the bounded heap
@@ -472,12 +474,19 @@ object NnDescent {
       val frontier = graft.plans.TopK.perKey(visited, Seq("qid"), "sim",
         beam, tieCols = Seq("node")).select("qid", "node")
       // score only pairs not already visited — each (query, node) cosine
-      // is paid at most once across the whole search
+      // is paid at most once across the whole search. The new pairs are
+      // the expansion minus the visited set, found by one aggregate over
+      // their union: as an anti join, the planner picked a sort-merge join
+      // that AQE turned into a broadcast at run time, and whether the
+      // expansion side's shuffle had started by then decided whether the
+      // hop cost one more job
       val fresh = frontier
         .join(g.select(col("id").as("node"), col("nbr")), "node")
-        .select(col("qid"), col("nbr").as("node"))
-        .distinct()
-        .join(visited.select("qid", "node"), Seq("qid", "node"), "left_anti")
+        .select(col("qid"), col("nbr").as("node"), lit(false).as("seen"))
+        .unionByName(visited.select(col("qid"), col("node"), lit(true).as("seen")))
+        .groupBy("qid", "node").agg(max("seen").as("seen"))
+        .filter(!col("seen"))
+        .select("qid", "node")
       visited.unionByName(scoreQ(fresh, q, vecs))
     }(graft.Ckpt.rows).frame
     val top = if (excludeSelf) visited.filter(col("qid") =!= col("node"))

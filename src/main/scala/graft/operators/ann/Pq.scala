@@ -106,11 +106,7 @@ object Pq {
     val cb = fitCodebooks(targets, idCol, vecCol, m, ksub)
 
     val t = targets.select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("te"))
-    // the compressed table: id + m codes (what a 100 TB deployment stores hot)
-    val compressed = t
-      .select(col("neighbor_id") +: codeCols("te", cb): _*)
-      .select(col("neighbor_id"), codesCol(cb).as("codes"))
-
+    // the compressed table: id + m codes (what a 100 TB deployment stores hot).
     // Materialise the code table: it IS the index (built once, searched
     // many times — the FAISS lifecycle; at warehouse scale it would be a
     // persisted m-bytes-per-row table). Also load-bearing for the plan:
@@ -119,7 +115,9 @@ object Pq {
     // barrier the 8x nearest_centroids encode re-runs PER PAIR (measured
     // 4x slower; the pre-ADC formulation was saved only by its `transform`
     // HOF accidentally breaking codegen fusion).
-    .localCheckpoint(false)
+    val (compressed, _) = graft.Ckpt.settle(t
+      .select(col("neighbor_id") +: codeCols("te", cb): _*)
+      .select(col("neighbor_id"), codesCol(cb).as("codes"))).head
 
     // ADC scan: codes never decode, nothing per-pair allocates
     val q = queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qe"))
@@ -157,8 +155,7 @@ object Pq {
     val model = fitIvf(targets, idCol, vecCol, nlist, m, ksub)
     // materialised index — see Pq.search for why this barrier is
     // load-bearing (codegen defers stream-side encode into join loops)
-    val compressed = encodeIvf(targets, idCol, vecCol, model)
-      .localCheckpoint(false)
+    val (compressed, _) = graft.Ckpt.settle(encodeIvf(targets, idCol, vecCol, model)).head
     scanIvf(queries, compressed, targets, idCol, vecCol, model, k,
       nprobe, rerankFactor, excludeSelf)
   }

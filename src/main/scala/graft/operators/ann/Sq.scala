@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * aggregate (partial aggregation makes the shuffle `partitions × dim`
   * rows, never `n × dim`; a production deployment would fit on a sample
   * shard), the compressed table is built once and persisted (here
-  * localCheckpointed — it IS the index, and the barrier keeps the encode
+  * settled — it IS the index, and the barrier keeps the encode
   * out of the join's per-pair loop), and the scan is a broadcast of the
   * tiny query set against the partitioned code table: the corpus never
   * shuffles. Codes ride as `array<long>` for plan transparency; a
@@ -85,9 +85,8 @@ object Sq {
     // The compressed table IS the index — built once, searched many times;
     // the checkpoint barrier also keeps the encode out of the broadcast
     // join's per-pair loop (same codegen-deferral hazard Pq documents).
-    val compressed = t
-      .select(col("neighbor_id"), quantize(col("te"), lo, span).as("tc"))
-      .localCheckpoint(false)
+    val (compressed, _) = graft.Ckpt.settle(t
+      .select(col("neighbor_id"), quantize(col("te"), lo, span).as("tc"))).head
 
     val q = queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qe"))
     // Queries are the tiny broadcast side — dequantize them once up front
@@ -134,8 +133,7 @@ object Sq {
     val model = fitIvfSq(targets, idCol, vecCol, nlist)
     // inverted lists of byte codes — the persisted index (the barrier is
     // load-bearing: see Pq.search on codegen deferral into join loops)
-    val compressed = encodeIvfSq(targets, idCol, vecCol, model)
-      .localCheckpoint(false)
+    val (compressed, _) = graft.Ckpt.settle(encodeIvfSq(targets, idCol, vecCol, model)).head
     scanIvfSq(queries, compressed, targets, idCol, vecCol, model, k,
       nprobe, rerankFactor, excludeSelf)
   }

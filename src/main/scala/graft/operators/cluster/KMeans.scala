@@ -54,13 +54,12 @@ object KMeans {
 
     // Normalize once; all-zero vectors stay zero (NearestCentroids assigns
     // them to the minimum-norm cell deterministically).
-    val pts = points
+    val (pts, _) = graft.Ckpt.settle(points
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
       .withColumn("n2", expr("aggregate(v, 0D, (a, x) -> a + double(x) * double(x))"))
       .withColumn("nv",
         expr("transform(v, x -> float(double(x) / sqrt(greatest(n2, 1e-300))))"))
-      .select("id", "nv")
-      .localCheckpoint(false)
+      .select("id", "nv")).head
 
     val init = pts
       .orderBy(xxhash64(col("id")), col("id"))

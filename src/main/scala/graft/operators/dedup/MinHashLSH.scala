@@ -66,7 +66,7 @@ object MinHashLSH {
     // candidates only. Jaccard over the 64-bit shingle hashes equals
     // jaccard over the shingles (collisions negligible), and longs
     // compare ~10x cheaper than strings in array_intersect.
-    val sets = setsOf(docs, idCol, textCol, shingleSize).localCheckpoint(false)
+    val (sets, _) = graft.Ckpt.settle(setsOf(docs, idCol, textCol, shingleSize)).head
 
     // Native codegen'd signature: one fused pass over the shingle hashes
     // computes all k permutation minima (graft.functions.MinHashSignature).

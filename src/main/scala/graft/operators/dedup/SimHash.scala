@@ -59,11 +59,10 @@ object SimHash {
     val chunkExprs = (0 until bands).map { b =>
       expr(s"named_struct('band', $b, 'chunk', shiftrightunsigned(h, ${b * width}) & ${(1L << width) - 1})")
     }
-    val exploded = sh.select(col("id"), col("k"), col("h"),
+    val (exploded, _) = graft.Ckpt.settle(sh.select(col("id"), col("k"), col("h"),
         explode(array(chunkExprs: _*)).as("c"))
       .select(col("id"), col("k"), col("h"),
-        col("c.band").as("band"), col("c.chunk").as("chunk"))
-      .localCheckpoint(false)
+        col("c.band").as("band"), col("c.chunk").as("chunk"))).head
     val l = exploded.select(col("k"), col("band"), col("chunk"),
       col("id").as("left_id"), col("h").as("lh"))
     val r = exploded.select(col("k"), col("band"), col("chunk"),
@@ -105,7 +104,7 @@ object SimHash {
         .select(col("id"), col("h"), col("c.band").as("band"),
           col("c.chunk").as("chunk"))
     }
-    val d = prep(delta).localCheckpoint(false)
+    val (d, _) = graft.Ckpt.settle(prep(delta)).head
     val all = prep(state).unionByName(d)
     d.select(col("band"), col("chunk"), col("id").as("d_id"), col("h").as("dh"))
       .join(all.select(col("band"), col("chunk"), col("id").as("o_id"),
@@ -130,11 +129,11 @@ object SimHash {
     val chunkExprs = (0 until bands).map { b =>
       expr(s"named_struct('band', $b, 'chunk', shiftrightunsigned(h, ${b * width}) & ${(1L << width) - 1})")
     }
-    // Materialised once (lazy localCheckpoint): both sides of the
-    // self-join read the fingerprints instead of recomputing them.
-    val exploded = sh.select(col("id"), col("h"), explode(array(chunkExprs: _*)).as("c"))
-      .select(col("id"), col("h"), col("c.band").as("band"), col("c.chunk").as("chunk"))
-      .localCheckpoint(false)
+    // Materialised once: both sides of the self-join read the
+    // fingerprints instead of recomputing them.
+    val (exploded, _) = graft.Ckpt.settle(
+      sh.select(col("id"), col("h"), explode(array(chunkExprs: _*)).as("c"))
+        .select(col("id"), col("h"), col("c.band").as("band"), col("c.chunk").as("chunk"))).head
 
     val l = exploded.select(col("band"), col("chunk"), col("id").as("left_id"), col("h").as("lh"))
     val r = exploded.select(col("band"), col("chunk"), col("id").as("right_id"), col("h").as("rh"))

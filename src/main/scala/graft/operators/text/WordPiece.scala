@@ -36,7 +36,7 @@ object WordPiece {
     * multiplicity exactly as [[Unigram.substringFreqs]] counts it.
     */
   def vocab(wf: DataFrame): Seq[String] = {
-    val sub = Unigram.substringFreqs(wf).localCheckpoint(false)
+    val (sub, _) = graft.Ckpt.settle(Unigram.substringFreqs(wf)).head
     val chars = sub.filter(length(col("piece")) === 1)
       .collect().map(_.getString(0))
     val multi = sub.filter(length(col("piece")) > 1)

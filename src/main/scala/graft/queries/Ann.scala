@@ -176,7 +176,7 @@ object Ann {
       minRecallClustered: Double = 0.9)(
       s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val bruteTop = knnBrute(s, dir).localCheckpoint(false)
+    val (bruteTop, _) = graft.Ckpt.settle(knnBrute(s, dir)).head
     val brute = bruteTop.select("query_id", "neighbor_id")
     val top1 = bruteTop.filter(col("rank") === 1)
       .agg(avg("sim_r")).head().getDouble(0)
@@ -355,9 +355,8 @@ object Ann {
     import s.implicits._
     val emb = Tables(s, dir, "embeddings")
     val kept = emb.filter(col("vec_id") % 5 =!= 2)
-    val bruteTop = Knn.bruteForce(kept.filter(col("vec_id") < 10), kept,
-        "vec_id", "embedding", k = 5)
-      .localCheckpoint(false)
+    val (bruteTop, _) = graft.Ckpt.settle(Knn.bruteForce(kept.filter(col("vec_id") < 10), kept,
+        "vec_id", "embedding", k = 5)).head
     val brute = bruteTop.select("query_id", "neighbor_id")
     val top1 = bruteTop.filter(col("rank") === 1)
       .agg(avg(round(col("sim"), 6))).head().getDouble(0)
@@ -487,11 +486,10 @@ object Ann {
           qs, path, emb, "vec_id", "embedding", k = 5)
         .select(col("query_id"), col("neighbor_id"), col("rank"),
           round(col("sim"), 9).as("s"))
-    val full = serve(queries).localCheckpoint(false)
-    val micro = (0 until 3)
-      .map(i => serve(queries.filter(col("vec_id") % 3 === i)))
-      .reduce(_ unionByName _)
-      .localCheckpoint(false)
+    val Seq((full, _), (micro, _)) = graft.Ckpt.settle(serve(queries),
+      (0 until 3)
+        .map(i => serve(queries.filter(col("vec_id") % 3 === i)))
+        .reduce(_ unionByName _))
     val equal = micro.exceptAll(full).count() == 0 &&
       full.exceptAll(micro).count() == 0
     Seq((queries.count(), equal)).toDF("n_queries", "batch_equal_ok")
@@ -533,9 +531,8 @@ object Ann {
     * loudly here instead).
     */
   private def ragEmbeddings(s: SparkSession, dir: String): DataFrame = {
-    val emb = graft.operators.embed.HashEmbed
-      .embed(ragChunks(s, dir), "cid", "ctext", dim = 64)
-      .localCheckpoint(false)
+    val (emb, _) = graft.Ckpt.settle(graft.operators.embed.HashEmbed
+      .embed(ragChunks(s, dir), "cid", "ctext", dim = 64)).head
     val qc = emb.select(
         expr("CAST(size(embedding) AS BIGINT)").as("dim"),
         expr("exists(embedding, x -> isnan(x))").as("has_nan"),
@@ -633,8 +630,8 @@ object Ann {
     import s.implicits._
     val emb = ragEmbeddings(s, dir)
     val queries = emb.filter(col("id") < 5 * 1024L)
-    val bruteTop = Knn.bruteForce(queries, emb, "id", "embedding", k = 5)
-      .localCheckpoint(false)
+    val (bruteTop, _) =
+      graft.Ckpt.settle(Knn.bruteForce(queries, emb, "id", "embedding", k = 5)).head
     val brute = bruteTop.select("query_id", "neighbor_id")
     val top1 = bruteTop.filter(col("rank") === 1)
       .agg(avg(round(col("sim"), 6))).head().getDouble(0)
@@ -687,11 +684,10 @@ object Ann {
           seeds = 8)
         .select(col("query_id"), col("neighbor_id"), col("rank"),
           round(col("sim"), 9).as("s"))
-    val full = serve(queries).localCheckpoint(false)
-    val micro = (0 until 3)
-      .map(i => serve(queries.filter(col("vec_id") % 3 === i)))
-      .reduce(_ unionByName _)
-      .localCheckpoint(false)
+    val Seq((full, _), (micro, _)) = graft.Ckpt.settle(serve(queries),
+      (0 until 3)
+        .map(i => serve(queries.filter(col("vec_id") % 3 === i)))
+        .reduce(_ unionByName _))
     val equal = micro.exceptAll(full).count() == 0 &&
       full.exceptAll(micro).count() == 0
     Seq((queries.count(), equal)).toDF("n_queries", "batch_equal_ok")
@@ -723,21 +719,22 @@ object Ann {
     val deltas = Seq(
       emb.filter(col("vec_id") % 5 === 3 && col("vec_id") % 2 === 0),
       emb.filter(col("vec_id") % 5 === 3 && col("vec_id") % 2 === 1))
-    var g = NnDescent.knnGraph(base, "vec_id", "embedding", k = 10,
-      iters = 4, cap0 = 40).localCheckpoint(false)
-    var known = base.select(col("vec_id"), col("embedding"))
-      .localCheckpoint(false)
-    deltas.foreach { d =>
-      g = NnDescent.addVectors(g, known, d, "vec_id", "embedding",
-        k = 10, iters = 2, cap0 = 40).localCheckpoint(false)
-      known = known.unionByName(d.select(col("vec_id"), col("embedding")))
-        .localCheckpoint(false)
+    // each round's graph and corpus feed the next round's seeding,
+    // scoring and descent: one settle job per round materializes both
+    val Seq((g0, _), (known0, _)) = graft.Ckpt.settle(
+      NnDescent.knnGraph(base, "vec_id", "embedding", k = 10, iters = 4, cap0 = 40),
+      base.select(col("vec_id"), col("embedding")))
+    val (g, _) = deltas.foldLeft((g0, known0)) { case ((g, known), d) =>
+      val Seq((next, _), (grown, _)) = graft.Ckpt.settle(
+        NnDescent.addVectors(g, known, d, "vec_id", "embedding",
+          k = 10, iters = 2, cap0 = 40),
+        known.unionByName(d.select(col("vec_id"), col("embedding"))))
+      (next, grown)
     }
     val n = emb.count()
     val covered = g.select("id").distinct().count()
-    val bruteTop = Knn.bruteForce(emb.filter(col("vec_id") < 10), emb,
-        "vec_id", "embedding", k = 5)
-      .localCheckpoint(false)
+    val (bruteTop, _) = graft.Ckpt.settle(Knn.bruteForce(emb.filter(col("vec_id") < 10), emb,
+        "vec_id", "embedding", k = 5)).head
     val top1 = bruteTop.filter(col("rank") === 1)
       .agg(avg(round(col("sim"), 6))).head().getDouble(0)
     val clustered = top1 >= 0.8

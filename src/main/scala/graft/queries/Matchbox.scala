@@ -384,21 +384,22 @@ object Matchbox {
     // aggregation, the EM fit, and the score projection from that frame —
     // the parts whose run-to-run stability the gate actually asserts
     // (float accumulation order, collect() ordering, driver arithmetic).
-    val cand = Link.emCandidates(
+    val (cand, _) = graft.Ckpt.settle(Link.emCandidates(
       evenCustomers(s, dir), oddCustomers(s, dir),
-      "c_custkey", "c_custkey", emBlocking, emComparisons)
-      .localCheckpoint(false)
+      "c_custkey", "c_custkey", emBlocking, emComparisons)).head
     def run() = {
       val (scored, params) = Link.fellegiSunterEmOnCandidates(
         cand, emComparisons.size, threshold = 0.0,
         uInit = Some(u), trainU = false)
-      (scored.localCheckpoint(false), params)
+      (scored, params)
     }
     def scoreHash(df: DataFrame): Long = df
       .agg(expr(
         "bit_xor(xxhash64(left_id, right_id, CAST(round(score, 9) AS STRING)))"))
       .head().getLong(0)
-    val (scored1, p1) = run()
+    // run 1 feeds two checks, run 2 only the determinism hash
+    val (s1, p1) = run()
+    val (scored1, _) = graft.Ckpt.settle(s1).head
     val (scored2, p2) = run()
     val stats = scored1.agg(
       min("score"), max("score"), count(lit(1))).head()
@@ -622,14 +623,13 @@ object Matchbox {
       broadcast(keys.groupBy("bk").agg(count(lit(1)).as("sz"))
         .filter(col("sz").between(2, 256)).select("bk")),
       "bk")
-    kept.as("a").join(kept.as("b"),
+    // every consumer reads the pair table at least twice (WEP: pairs +
+    // their global mean; CNP: both union orientations) — materialise
+    // the block self-join once instead of replaying it per branch
+    graft.Ckpt.settle(kept.as("a").join(kept.as("b"),
         col("a.bk") === col("b.bk") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("left_id"), col("b.id").as("right_id"))
-      .agg(count(lit(1)).as("cbs"))
-      // every consumer reads the pair table at least twice (WEP: pairs +
-      // their global mean; CNP: both union orientations) — materialise
-      // the block self-join once instead of replaying it per branch
-      .localCheckpoint(false)
+      .agg(count(lit(1)).as("cbs"))).head._1
   }
 
   private def metaBlocking(s: SparkSession, dir: String): DataFrame = {
@@ -831,9 +831,9 @@ object Matchbox {
       .withColumn("w",
         when(col("lseg") === col("rseg"), lit(2.5)).otherwise(lit(-1.2)) +
         when(abs(col("lbal") - col("rbal")) < 100, lit(3.1)).otherwise(lit(-0.8)))
-    val edges = scored.filter(col("w") >= 1.5)
-      .select(col("left_id").as("src"), col("right_id").as("dst"))
-      .localCheckpoint(false) // feeds components AND the census count
+    // feeds components AND the census count
+    val (edges, _) = graft.Ckpt.settle(scored.filter(col("w") >= 1.5)
+      .select(col("left_id").as("src"), col("right_id").as("dst"))).head
     val comp = Components.connected(edges)
     val sizes = comp.groupBy("component").agg(count(lit(1)).as("sz"))
     sizes.agg(
@@ -1355,11 +1355,10 @@ object Matchbox {
         "jaro_winkler_similarity(l.sname, r.sname) >= 0.95",
         "jaro_winkler_similarity(l.sname, r.sname) >= 0.88"),
       Seq("l.seg_n = r.seg_n"))
-    val cand = Link.emLevelsCandidates(
+    val (cand, _) = graft.Ckpt.settle(Link.emLevelsCandidates(
       nulledSeg(fuzzyLeft(s, dir), 0), nulledSeg(fuzzyRight(s, dir), 5),
       "c_custkey", "c_custkey", "l.blk = r.blk", levels,
-      nullConditions = Seq(None, Some("l.seg_n IS NULL OR r.seg_n IS NULL")))
-      .localCheckpoint(false)
+      nullConditions = Seq(None, Some("l.seg_n IS NULL OR r.seg_n IS NULL")))).head
     // Everything this gate asserts is a pure function of the gamma-pattern
     // contingency table, so collect it twice (the determinism contract
     // needs two independent distributed aggregations) and derive all four
@@ -1485,20 +1484,21 @@ object Matchbox {
     // blocked join + gamma CASE materialise once (deterministic plan);
     // each run re-executes pattern aggregation, EM fit and scoring — the
     // parts whose run-to-run stability the gate asserts
-    val cand = Link.emLevelsCandidates(
+    val (cand, _) = graft.Ckpt.settle(Link.emLevelsCandidates(
       fuzzyLeft(s, dir), fuzzyRight(s, dir),
-      "c_custkey", "c_custkey", "l.blk = r.blk", levels)
-      .localCheckpoint(false)
+      "c_custkey", "c_custkey", "l.blk = r.blk", levels)).head
     def run() = {
       val (scored, params) = Link.fellegiSunterEmLevelsOnCandidates(
         cand, levels.map(_.size), threshold = 0.5)
-      (scored.localCheckpoint(false), params)
+      (scored, params)
     }
     def scoreHash(df: DataFrame): Long = df
       .agg(expr(
         "bit_xor(xxhash64(left_id, right_id, CAST(round(score, 9) AS STRING)))"))
       .head().getLong(0)
-    val (scored1, p1) = run()
+    // run 1 feeds two checks, run 2 only the determinism hash
+    val (s1, p1) = run()
+    val (scored1, _) = graft.Ckpt.settle(s1).head
     val (scored2, p2) = run()
     val (mName, uName) = p1.head
     val stats = scored1.agg(min("score"), max("score"), count(lit(1))).head()
@@ -1646,7 +1646,7 @@ object Matchbox {
         Seq("l.sname = r.sname",
           "jaro_winkler_similarity(l.sname, r.sname) >= 0.95",
           "jaro_winkler_similarity(l.sname, r.sname) >= 0.88")))
-    val cand = cand0.localCheckpoint(false)
+    val (cand, _) = graft.Ckpt.settle(cand0).head
     def run() = Link.fellegiSunterEmLevelsOnCandidates(
       cand, Seq(1, 3), threshold = 0.0, tfTotal = Some(total))
     // Keep the driver-job chain short (it is the whole latency of this
@@ -1654,7 +1654,7 @@ object Matchbox {
     // exists only for the determinism hash, so it stays a single
     // un-checkpointed action.
     val (s1, p1) = run()
-    val scored1 = s1.localCheckpoint(false)
+    val (scored1, _) = graft.Ckpt.settle(s1).head
     val (scored2, p2) = run()
     def scoreHash(df: DataFrame): Long = df
       .agg(expr(
@@ -1762,10 +1762,9 @@ object Matchbox {
     }
     def run(): Boolean = {
       val all = sources()
-      val keyed = all
+      val (keyed, _) = graft.Ckpt.settle(all
         .withColumn("kid", xxhash64(col("key")))
-        .withColumn("blk", substring(col("company"), 1, 4))
-        .localCheckpoint(false)
+        .withColumn("blk", substring(col("company"), 1, 4))).head
       val scored = Link.fellegiSunterLevelsMulti(
         keyed, keyed, "kid", "kid",
         blockingRules = Seq("l.postcode = r.postcode", "l.blk = r.blk"),
@@ -1895,15 +1894,12 @@ object Matchbox {
       .withColumn("dst", lead("c_custkey", 1).over(w))
       .filter(col("dst").isNotNull)
       .select(col("c_custkey").cast("long").as("src"), col("dst").cast("long").as("dst"))
-    val edges = chainEdges(customer).unionByName(bridges)
-      .localCheckpoint(false)
-    var state = Seq.empty[(Long, Long)].toDF("id", "component")
-    (0 until 3).foreach { i =>
-      state = Components
-        .addEdges(state, edges.filter(col("src") % 3 === i))
-        .localCheckpoint(false)
-    }
-    state.orderBy("id")
+    val (edges, _) = graft.Ckpt.settle(chainEdges(customer).unionByName(bridges)).head
+    def part(i: Int) = edges.filter(col("src") % 3 === i)
+    graft.Ckpt.iterate("cc.apply",
+      Components.addEdges(Seq.empty[(Long, Long)].toDF("id", "component"), part(0)), 2)(
+      (state, i) => Components.addEdges(state, part(i)))(graft.Ckpt.rows)
+      .frame.orderBy("id")
   }
 
   private lazy val componentsApplyGateSql = componentsIncrementalSql
@@ -2016,15 +2012,10 @@ object Matchbox {
     * shape at 100 TB.
     */
   private def goldenApplyGate(s: SparkSession, dir: String): DataFrame = {
-    val m = goldenMembers(s, dir).localCheckpoint(false)
-    var running: DataFrame = null
-    (0 until 3).foreach { i =>
-      val slice = goldenStats(m.filter(col("id") % 3 === i))
-      running =
-        (if (running == null) slice
-         else goldenMerge(running.unionByName(slice)))
-          .localCheckpoint(false)
-    }
+    val (m, _) = graft.Ckpt.settle(goldenMembers(s, dir)).head
+    def slice(i: Int) = goldenStats(m.filter(col("id") % 3 === i))
+    val running = graft.Ckpt.iterate("golden.apply", slice(0), 2)(
+      (acc, i) => goldenMerge(acc.unionByName(slice(i))))(graft.Ckpt.rows).frame
     goldenFromStats(running)
       .select(col("component").as("cluster_id"), col("n_members"),
         col("name_pick"), col("seg_pick"), col("bal_cents_max"))
@@ -2104,9 +2095,9 @@ object Matchbox {
         Components.connected(e1).withColumnRenamed("component", "c"),
         Seq("id"), "left")
       .select(col("id"), coalesce(col("c"), col("id")).as("c1"))
-    val cont = r1.join(r2, "id")
-      .groupBy("c1", "c2").agg(count(lit(1)).as("nij"))
-      .localCheckpoint(false) // feeds four reductions
+    // feeds four reductions
+    val (cont, _) = graft.Ckpt.settle(r1.join(r2, "id")
+      .groupBy("c1", "c2").agg(count(lit(1)).as("nij"))).head
     val s1 = cont.groupBy("c1").agg(sum("nij").as("a"))
     val s2 = cont.groupBy("c2").agg(sum("nij").as("b"))
     val t1 = s1.agg(count(lit(1)).as("n_clusters_v1"),
@@ -2565,11 +2556,11 @@ object Matchbox {
     // 2k+1): the per-side namespacing is strictly monotone, so each side's
     // min-id representative maps back to exactly the representative a
     // standalone run would pick — halving the O(log n) iterative rounds.
-    val comp = Components.connected(
+    // feeds both per-side splits
+    val (comp, _) = graft.Ckpt.settle(Components.connected(
       edgesA.select((col("src") * 2).as("src"), (col("dst") * 2).as("dst"))
         .unionByName(
-          edgesB.select((col("src") * 2 + 1).as("src"), (col("dst") * 2 + 1).as("dst"))))
-      .localCheckpoint(false) // feeds both per-side splits
+          edgesB.select((col("src") * 2 + 1).as("src"), (col("dst") * 2 + 1).as("dst"))))).head
     def resolution(tag: Int): DataFrame =
       Lookup.asLookup(
         comp.where(col("id") % 2 === tag)
@@ -2609,7 +2600,7 @@ object Matchbox {
   private def resolverSweep(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Resolver
     val cust = Tables(s, dir, "customer").filter(col("c_custkey") < 300)
-    val edges = Link.fellegiSunter(
+    val (edges, _) = graft.Ckpt.settle(Link.fellegiSunter(
       cust.filter(col("c_custkey") % 2 === 0),
       cust.filter(col("c_custkey") % 2 === 1),
       "c_custkey", "c_custkey",
@@ -2619,12 +2610,10 @@ object Matchbox {
         ("abs(l.c_acctbal - r.c_acctbal) < 100", 3.1, -0.8)),
       threshold = -100.0)
       .select(col("left_id"), col("right_id"),
-        col("match_weight").as("score"))
-      .localCheckpoint(false)
+        col("match_weight").as("score"))).head
     resolverSweepThresholds.map { t =>
-      val assignment = Resolver
-        .computeClusters(Map("fs" -> edges), Map("fs" -> t))
-        .localCheckpoint(false)
+      val (assignment, _) = graft.Ckpt.settle(Resolver
+        .computeClusters(Map("fs" -> edges), Map("fs" -> t))).head
       val sizes = assignment.groupBy("component").count()
       assignment.agg(count(lit(1)).as("n_nodes"))
         .crossJoin(sizes.agg(
@@ -2959,7 +2948,7 @@ object Matchbox {
     */
   private def cdcApplyGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val ev = Tables(s, dir, "events").localCheckpoint(false)
+    val (ev, _) = graft.Ckpt.settle(Tables(s, dir, "events")).head
     // The LWW version key's totality precondition (see cdcLatest): a feed
     // with duplicate event ids must abort, not tie-break differently in
     // each engine and read as a mysterious hash mismatch.
@@ -2969,19 +2958,14 @@ object Matchbox {
       s"cdc version key not total: ${idCounts.getLong(0)} events but only " +
         s"${idCounts.getLong(1)} distinct event_ids — LWW tie-breaks would " +
         "be engine-dependent")
-    val full = cdcStateFromLatest(cdcLatest(ev)).localCheckpoint(false)
-    var running: DataFrame = null
-    (0 until 3).foreach { i =>
-      val slice = cdcLatest(ev.filter(col("event_id") % 3 === i))
-      running =
-        (if (running == null) slice
-         else cdcMergeLatest(running.unionByName(slice)))
-          .localCheckpoint(false)
-    }
+    val (full, nFull) = graft.Ckpt.settle(cdcStateFromLatest(cdcLatest(ev))).head
+    def slice(i: Int) = cdcLatest(ev.filter(col("event_id") % 3 === i))
+    val running = graft.Ckpt.iterate("cdc.apply", slice(0), 2)(
+      (acc, i) => cdcMergeLatest(acc.unionByName(slice(i))))(graft.Ckpt.rows).frame
     val folded = cdcStateFromLatest(running)
     val equal = folded.exceptAll(full).count() == 0 &&
       full.exceptAll(folded).count() == 0
-    Seq((full.count(), equal)).toDF("n_state", "batch_equal_ok")
+    Seq((nFull, equal)).toDF("n_state", "batch_equal_ok")
   }
 
   private[graft] def cdcMergeLatest(latest: DataFrame): DataFrame =
@@ -3196,11 +3180,10 @@ object Matchbox {
     val raw = chainEdges(customer).unionByName(bridges)
     // canonical undirected edge set feeds components, degrees AND the
     // per-cluster edge count — checkpoint once, scan three times
-    val edges = raw.filter(col("src") =!= col("dst"))
+    val (edges, _) = graft.Ckpt.settle(raw.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .localCheckpoint(false)
+      .distinct()).head
     val comp = Components.connected(
       edges.select(col("a").as("src"), col("b").as("dst")))
     val deg = edges.select(col("a").as("id"))

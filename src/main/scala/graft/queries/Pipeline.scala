@@ -134,7 +134,7 @@ object Pipeline {
     * join of the kilobyte weight table — the corpus never self-joins.
     */
   private def langIdTrained(s: SparkSession, dir: String): DataFrame = {
-    val buckets = plantedBuckets(plantedWords(s, dir)).localCheckpoint(false)
+    val (buckets, _) = graft.Ckpt.settle(plantedBuckets(plantedWords(s, dir))).head
     val train = buckets.filter(col("doc_id") % 2 === 0)
     val w = Selection.nbWeightsFromCounts(
       train.groupBy(col("true_lang").as("lang"), col("bucket"))
@@ -604,9 +604,9 @@ object Pipeline {
     */
   private def minhashEstGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sets = MinHashLSH.setsOf(withDupes(s, dir, exact = false), "doc_id", "text", 3)
-      .withColumn("sig", graft.functions.Sketches.minhashSignature(col("hs"), 128))
-      .localCheckpoint(false)
+    val (sets, _) = graft.Ckpt.settle(
+      MinHashLSH.setsOf(withDupes(s, dir, exact = false), "doc_id", "text", 3)
+        .withColumn("sig", graft.functions.Sketches.minhashSignature(col("hs"), 128))).head
     val pairs = sets.select(col("id").as("lid"), col("hs").as("lhs"), col("sig").as("lsig"))
       .join(sets.select(col("id").as("rid"), col("hs").as("rhs"), col("sig").as("rsig")),
         col("lid") + 1000000L === col("rid"))
@@ -638,14 +638,14 @@ object Pipeline {
     */
   private def minhashBbitGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sets = MinHashLSH.setsOf(withDupes(s, dir, exact = false), "doc_id", "text", 3)
-      .withColumn("sig", graft.functions.Sketches.minhashSignature(col("hs"), 128))
-      // the b=1 signature: only the low bit of each minhash survives.
-      // pmod, not %: Spark's signed remainder maps negative odd XXH64
-      // values to -1, which would 3-value the "bit" and bias Ĵ = 2A−1
-      // low by ~0.25·(1−J).
-      .withColumn("bits", expr("transform(sig, x -> CAST(pmod(x, 2) AS INT))"))
-      .localCheckpoint(false)
+    val (sets, _) = graft.Ckpt.settle(
+      MinHashLSH.setsOf(withDupes(s, dir, exact = false), "doc_id", "text", 3)
+        .withColumn("sig", graft.functions.Sketches.minhashSignature(col("hs"), 128))
+        // the b=1 signature: only the low bit of each minhash survives.
+        // pmod, not %: Spark's signed remainder maps negative odd XXH64
+        // values to -1, which would 3-value the "bit" and bias Ĵ = 2A−1
+        // low by ~0.25·(1−J).
+        .withColumn("bits", expr("transform(sig, x -> CAST(pmod(x, 2) AS INT))"))).head
     val pairs = sets.select(col("id").as("lid"), col("hs").as("lhs"), col("bits").as("lb"))
       .join(sets.select(col("id").as("rid"), col("hs").as("rhs"), col("bits").as("rb")),
         col("lid") + 1000000L === col("rid"))
@@ -689,10 +689,10 @@ object Pipeline {
     // graft/functions/WinnowFingerprints.scala) — replacing the
     // interpreted per-position md5 + slice/array_min lambda pipeline that
     // dominated this query's CPU (the r11 plan-audit note).
-    val fps = withDupes(s, dir, exact = false)
+    // extraction feeds df-filter, sizes AND both join sides
+    val (fps, _) = graft.Ckpt.settle(withDupes(s, dir, exact = false)
       .select(col("doc_id"),
-        explode(graft.functions.WinnowFingerprints(col("text"), 8, 4)).as("fp"))
-      .localCheckpoint(false) // extraction feeds df-filter, sizes AND both join sides
+        explode(graft.functions.WinnowFingerprints(col("text"), 8, 4)).as("fp"))).head
     val rare = fps.groupBy("fp").agg(count(lit(1)).as("df"))
       .filter(col("df") <= 64).select("fp")
     val kept = fps.join(rare, "fp")
@@ -776,11 +776,10 @@ object Pipeline {
     // from the string shingles the oracle intersects, but distinct-set
     // cardinalities — and therefore every jaccard value — are identical
     // (collisions negligible; parity spec'd in PipelineSpec).
-    val docs = withDupes(s, dir, exact = false)
+    val (docs, _) = graft.Ckpt.settle(withDupes(s, dir, exact = false)
       .select(col("doc_id"), col("lang"),
         expr("length(text) DIV 100").as("bucket"),
-        array_distinct(graft.functions.Sketches.shingleHashes(col("text"), 3)).as("sh"))
-      .localCheckpoint(false)
+        array_distinct(graft.functions.Sketches.shingleHashes(col("text"), 3)).as("sh"))).head
     val sizes = docs.select(col("doc_id"), size(col("sh")).cast("long").as("sz"))
     val inv = docs.select(col("lang"), col("bucket"), col("doc_id"), explode(col("sh")).as("shingle"))
     // Postings group → in-group pair expansion: one groupBy materialises
@@ -850,19 +849,17 @@ object Pipeline {
     * property spec can drive it against a naive all-pairs reference.
     */
   private[graft] def jaccardPrefixPairs(input: DataFrame): DataFrame = {
-    val docs = input
+    val (docs, _) = graft.Ckpt.settle(input
       .select(col("doc_id"),
         array_distinct(graft.functions.Sketches.shingleHashes(col("text"), 3)).as("sh"))
-      .filter(size(col("sh")) >= 1)
-      .localCheckpoint(false)
+      .filter(size(col("sh")) >= 1)).head
     val post = docs.select(col("doc_id"), explode(col("sh")).as("g"))
     val dfreq = post.groupBy("g").agg(count(lit(1)).as("df"))
-    val ordered = post.join(dfreq, "g")
+    val (ordered, _) = graft.Ckpt.settle(post.join(dfreq, "g")
       .groupBy("doc_id")
       .agg(expr("transform(array_sort(collect_list(struct(df, g))), x -> x.g)").as("osh"))
       .withColumn("sz", size(col("osh")).cast("long"))
-      .withColumn("plen", expr("CAST(sz - ((6 * sz + 9) DIV 10) + 1 AS INT)"))
-      .localCheckpoint(false)
+      .withColumn("plen", expr("CAST(sz - ((6 * sz + 9) DIV 10) + 1 AS INT)"))).head
     // Prefix postings → postings-group pair expansion (same idiom as
     // dx_dedup_ngram, but over the rare prefix only) + length-ratio filter
     // + PPJoin's POSITIONAL filter: at a shared prefix token sitting at
@@ -940,14 +937,12 @@ object Pipeline {
     */
   private def dedupMinhashGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val planted = Tables(s, dir, "documents")
+    val (planted, nPlanted) = graft.Ckpt.settle(Tables(s, dir, "documents")
       .filter(col("doc_id") % 7 === 0)
-      .select(col("doc_id").as("left_id"), (col("doc_id") + 1000000).as("right_id"))
-      .localCheckpoint(false)
+      .select(col("doc_id").as("left_id"), (col("doc_id") + 1000000).as("right_id"))).head
     val found = MinHashLSH.candidatePairs(withDupes(s, dir, exact = false),
       "doc_id", "text", threshold = 0.5)
       .select("left_id", "right_id")
-    val nPlanted = planted.count()
     val hits = planted.join(found, Seq("left_id", "right_id"), "left_semi").count()
     Seq((nPlanted, hits.toDouble / nPlanted >= 0.95)).toDF("n_planted", "recall_ok")
   }
@@ -1047,7 +1042,8 @@ object Pipeline {
     */
   private def hllMergeGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val docs = Tables(s, dir, "documents").localCheckpoint(false) // 4 aggs
+    // 4 aggs
+    val (docs, _) = graft.Ckpt.settle(Tables(s, dir, "documents")).head
     def unionEst(shardExpr: String): Long = docs
       .withColumn("shard", expr(shardExpr))
       .groupBy("shard").agg(expr("hll_sketch_agg(text, 12)").as("sk"))
@@ -1228,9 +1224,10 @@ object Pipeline {
   private def dedupSimhashGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val corpus = withDupes(s, dir, exact = false)
-    val banded = SimHash.candidatePairs(corpus, "doc_id", "text", maxHamming = 3)
-      .select("left_id", "right_id").localCheckpoint(false)
-    val sh = SimHash.simhash(corpus, "doc_id", "text").localCheckpoint(false)
+    val Seq((banded, _), (sh, _)) = graft.Ckpt.settle(
+      SimHash.candidatePairs(corpus, "doc_id", "text", maxHamming = 3)
+        .select("left_id", "right_id"),
+      SimHash.simhash(corpus, "doc_id", "text"))
     val numBlocks = 8
     val blk = sh.withColumn("blk", pmod(xxhash64(col("id")), lit(numBlocks.toLong)).cast("int"))
     val blockPairs = s.range(numBlocks.toLong * numBlocks)
@@ -1456,10 +1453,8 @@ object Pipeline {
       .lshPairs(corpus, "vec_id", "embedding", threshold = 0.3,
         bands = 8, planesPerBand = 8)
       .select("left_id", "right_id")
-    val truth = planted
-      .select(col("vec_id").as("left_id"), (col("vec_id") + 1000000).as("right_id"))
-      .localCheckpoint(false)
-    val nPlanted = truth.count()
+    val (truth, nPlanted) = graft.Ckpt.settle(planted
+      .select(col("vec_id").as("left_id"), (col("vec_id") + 1000000).as("right_id"))).head
     val nHit = truth.join(pairs, Seq("left_id", "right_id"), "left_semi").count()
     Seq((nPlanted, nHit == nPlanted)).toDF("n_planted", "recall_ok")
   }
@@ -1547,7 +1542,7 @@ object Pipeline {
       Media.synthesizePng(docs, "doc_id", "text", 16, 16), 8, 8)
     def payloadHash(df: DataFrame): Long =
       df.agg(expr("bit_xor(xxhash64(payload))")).head().getLong(0)
-    val out = run().localCheckpoint(false)
+    val (out, _) = graft.Ckpt.settle(run()).head
     val stats = out
       .select(col("media_id"), col("payload"), col("width"), col("height"))
       .as[(Long, Array[Byte], Long, Long)]
@@ -1588,7 +1583,7 @@ object Pipeline {
     import s.implicits._
     val docs = Tables(s, dir, "documents").orderBy("doc_id").limit(256)
     def wavs() = Media.synthesizeWav(docs, "doc_id", "text", 8000, 50)
-    val w = wavs().localCheckpoint(false)
+    val (w, _) = graft.Ckpt.settle(wavs()).head
     val n = docs.count()
     val src = Media.audioFeatures(w)
     val srcOk = src.agg(
@@ -1597,7 +1592,7 @@ object Pipeline {
         col("rms") <= col("peak") && col("peak") <= 1.0, 1L)
         .otherwise(0L)).as("ok"),
       count(lit(1)).as("cnt")).head()
-    val res = Media.resampleAudio(w, 4000).localCheckpoint(false)
+    val (res, _) = graft.Ckpt.settle(Media.resampleAudio(w, 4000)).head
     val resFeat = Media.audioFeatures(res)
     val resOk = resFeat.agg(
       sum(when(col("sample_rate") === 4000L && col("n_samples") === 200L, 1L)
@@ -1630,10 +1625,9 @@ object Pipeline {
   private def multimodalFramesGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables(s, dir, "documents").orderBy("doc_id").limit(128)
-    val gifs = Media.synthesizeGif(docs, "doc_id", "text", 16, 16, 6)
-      .localCheckpoint(false)
+    val (gifs, _) = graft.Ckpt.settle(Media.synthesizeGif(docs, "doc_id", "text", 16, 16, 6)).head
     def frames() = Media.sampleFramesReal(gifs, everyN = 2)
-    val f = frames().localCheckpoint(false)
+    val (f, _) = graft.Ckpt.settle(frames()).head
     val n = docs.count()
     val perClip = f.groupBy("media_id").agg(
       count(lit(1)).as("n_frames"),
@@ -1686,7 +1680,7 @@ object Pipeline {
     val docs = Tables(s, dir, "documents").orderBy("doc_id").limit(96)
     val n = docs.count()
     def dibs() = Media.synthesizeAvi(docs, "doc_id", "text", 16, 16, 5, 10, "DIB ")
-    val dib = dibs().localCheckpoint(false)
+    val (dib, _) = graft.Ckpt.settle(dibs()).head
     def metaOk(df: DataFrame, codec: String): Boolean = {
       val r = Media.aviMeta(df).agg(
         sum(when(col("width") === 16L && col("height") === 16L &&
@@ -1719,8 +1713,8 @@ object Pipeline {
         "media_id")
       .filter(col("payload2").isNotNull && col("payload2") === col("payload"))
       .count()
-    val mjpg = Media.synthesizeAvi(docs, "doc_id", "text", 16, 16, 5, 10, "MJPG")
-      .localCheckpoint(false)
+    val (mjpg, _) = graft.Ckpt.settle(
+      Media.synthesizeAvi(docs, "doc_id", "text", 16, 16, 5, 10, "MJPG")).head
     val mjpgToDib = Media.transcodeAvi(mjpg, "DIB ")
     val ok = n > 0 && metaOk(dib, "DIB ") && framesOk(dib) &&
       losslessCnt == n &&
@@ -1748,8 +1742,7 @@ object Pipeline {
 
   private def phashCorpus(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents").orderBy("doc_id").limit(160)
-    val base = Media.synthesizePng(docs, "doc_id", "text", 16, 16)
-      .localCheckpoint(false)
+    val (base, _) = graft.Ckpt.settle(Media.synthesizePng(docs, "doc_id", "text", 16, 16)).head
     def shifted(df: DataFrame, k: Long) = df.select(
       (col("media_id") + lit(k * phashVariantOffset)).as("media_id"),
       col("payload"))
@@ -1788,13 +1781,12 @@ object Pipeline {
     */
   private def dedupPhashGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val corpus = phashCorpus(s, dir).localCheckpoint(false)
-    val hashes = Media.dHash64(corpus).localCheckpoint(false)
-    val nImages = corpus.count()
+    val (corpus, nImages) = graft.Ckpt.settle(phashCorpus(s, dir)).head
+    val (hashes, _) = graft.Ckpt.settle(Media.dHash64(corpus)).head
     val nDecoded = hashes.filter(col("decode_ok")).count()
     val nBase = nImages / 3
-    val found = dedupPhash(s, dir)
-      .select("left_id", "right_id").localCheckpoint(false)
+    val (found, _) = graft.Ckpt.settle(dedupPhash(s, dir)
+      .select("left_id", "right_id")).head
     // planted truth: for each base id b, pairs (b, b+OFF), (b, b+2·OFF),
     // (b+OFF, b+2·OFF) — left < right holds since OFF > max doc_id
     val ids = corpus.filter(col("media_id") < phashVariantOffset)
@@ -1846,9 +1838,8 @@ object Pipeline {
     */
   private def vhashCorpus(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents").orderBy("doc_id").limit(120)
-    val base = Media.synthesizeAvi(docs, "doc_id", "text", 16, 16,
-        nFrames = 5, fps = 10)
-      .localCheckpoint(false)
+    val (base, _) = graft.Ckpt.settle(Media.synthesizeAvi(docs, "doc_id", "text", 16, 16,
+        nFrames = 5, fps = 10)).head
     def shifted(df: DataFrame, k: Long) = df.select(
       (col("media_id") + lit(k * phashVariantOffset)).as("media_id"),
       col("payload"))
@@ -1870,8 +1861,8 @@ object Pipeline {
     * planted recall, banding ≡ brute and hash determinism.
     */
   private def dedupVhash(s: SparkSession, dir: String): DataFrame = {
-    val frames = Media.frameDHash64(vhashCorpus(s, dir))
-      .filter(col("decode_ok")).localCheckpoint(false)
+    val (frames, _) = graft.Ckpt.settle(Media.frameDHash64(vhashCorpus(s, dir))
+      .filter(col("decode_ok"))).head
     val nf = frames.groupBy("media_id")
       .agg(first("n_frames").as("nf"))
     val matched = SimHash.bandedHammingPairsKeyed(
@@ -1908,13 +1899,12 @@ object Pipeline {
     */
   private def dedupVhashGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val corpus = vhashCorpus(s, dir).localCheckpoint(false)
-    val frames = Media.frameDHash64(corpus).localCheckpoint(false)
-    val nVideos = corpus.count()
+    val (corpus, nVideos) = graft.Ckpt.settle(vhashCorpus(s, dir)).head
+    val (frames, _) = graft.Ckpt.settle(Media.frameDHash64(corpus)).head
     val decoded = frames.filter(col("decode_ok"))
     val nUndecoded = frames.filter(!col("decode_ok")).count()
-    val found = dedupVhash(s, dir)
-      .select("left_id", "right_id", "sim_permille").localCheckpoint(false)
+    val (found, _) = graft.Ckpt.settle(dedupVhash(s, dir)
+      .select("left_id", "right_id", "sim_permille")).head
     val nBase = nVideos / 3
     val ids = corpus.filter(col("media_id") < phashVariantOffset)
       .select(col("media_id").as("b"))
@@ -1973,9 +1963,8 @@ object Pipeline {
     */
   private def ahashCorpus(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents").orderBy("doc_id").limit(200)
-    val base = Media.synthesizeWav(docs, "doc_id", "text",
-        sampleRate = 8000, durationMs = 50)
-      .localCheckpoint(false)
+    val (base, _) = graft.Ckpt.settle(Media.synthesizeWav(docs, "doc_id", "text",
+        sampleRate = 8000, durationMs = 50)).head
     def shifted(df: DataFrame, k: Long) = df.select(
       (col("media_id") + lit(k * phashVariantOffset)).as("media_id"),
       col("payload"))
@@ -2008,13 +1997,12 @@ object Pipeline {
     */
   private def dedupAhashGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val corpus = ahashCorpus(s, dir).localCheckpoint(false)
-    val hashes = Media.aHash64(corpus).localCheckpoint(false)
-    val nClips = corpus.count()
+    val (corpus, nClips) = graft.Ckpt.settle(ahashCorpus(s, dir)).head
+    val (hashes, _) = graft.Ckpt.settle(Media.aHash64(corpus)).head
     val nDecoded = hashes.filter(col("decode_ok")).count()
     val nBase = nClips / 3
-    val found = dedupAhash(s, dir)
-      .select("left_id", "right_id").localCheckpoint(false)
+    val (found, _) = graft.Ckpt.settle(dedupAhash(s, dir)
+      .select("left_id", "right_id")).head
     val ids = corpus.filter(col("media_id") < phashVariantOffset)
       .select(col("media_id").as("b"))
     val planted = Seq((0L, 1L), (0L, 2L), (1L, 2L)).map { case (i, j) =>
@@ -2060,9 +2048,8 @@ object Pipeline {
     */
   private def vhashOffsetCorpus(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents").orderBy("doc_id").limit(120)
-    val base = Media.synthesizeAvi(docs, "doc_id", "text", 16, 16,
-        nFrames = 5, fps = 10)
-      .localCheckpoint(false)
+    val (base, _) = graft.Ckpt.settle(Media.synthesizeAvi(docs, "doc_id", "text", 16, 16,
+        nFrames = 5, fps = 10)).head
     def shifted(df: DataFrame, k: Long) = df.select(
       (col("media_id") + lit(k * phashVariantOffset)).as("media_id"),
       col("payload"))
@@ -2090,8 +2077,8 @@ object Pipeline {
     * and determinism.
     */
   private def dedupVhashOffset(s: SparkSession, dir: String): DataFrame = {
-    val frames = Media.frameDHash64(vhashOffsetCorpus(s, dir))
-      .filter(col("decode_ok")).localCheckpoint(false)
+    val (frames, _) = graft.Ckpt.settle(Media.frameDHash64(vhashOffsetCorpus(s, dir))
+      .filter(col("decode_ok"))).head
     vhashOffsetPairs(frames)
   }
 
@@ -2152,12 +2139,11 @@ object Pipeline {
     */
   private def dedupVhashOffsetGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val corpus = vhashOffsetCorpus(s, dir).localCheckpoint(false)
-    val frames = Media.frameDHash64(corpus).localCheckpoint(false)
-    val decoded = frames.filter(col("decode_ok")).localCheckpoint(false)
-    val nVideos = corpus.count()
+    val (corpus, nVideos) = graft.Ckpt.settle(vhashOffsetCorpus(s, dir)).head
+    val (frames, _) = graft.Ckpt.settle(Media.frameDHash64(corpus)).head
+    val decoded = frames.filter(col("decode_ok"))
     val nUndecoded = frames.filter(!col("decode_ok")).count()
-    val found = vhashOffsetPairs(decoded).localCheckpoint(false)
+    val (found, _) = graft.Ckpt.settle(vhashOffsetPairs(decoded)).head
     val nBase = nVideos / 3
     val ids = corpus.filter(col("media_id") < phashVariantOffset)
       .select(col("media_id").as("b"))
@@ -2216,25 +2202,26 @@ object Pipeline {
     */
   private def stPhashGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val hashes = Media.dHash64(phashCorpus(s, dir))
-      .filter(col("decode_ok")).select("media_id", "dhash")
-      .localCheckpoint(false)
-    val batch = SimHash.bandedHammingPairs(
-        hashes, "media_id", "dhash", bands = 4, maxHamming = 3)
-      .localCheckpoint(false)
+    val (hashes, nImages) = graft.Ckpt.settle(Media.dHash64(phashCorpus(s, dir))
+      .filter(col("decode_ok")).select("media_id", "dhash")).head
     val nTriggers = 3
-    var state = hashes.limit(0)
-    var folded = batch.limit(0)
-    for (i <- 0 until nTriggers) {
-      val delta = hashes.filter(pmod(xxhash64(col("media_id")), lit(nTriggers)) === i)
-      folded = folded.unionByName(SimHash.incrementalBandedPairs(
-        state, delta, "media_id", "dhash", bands = 4, maxHamming = 3))
-      state = state.unionByName(delta).localCheckpoint(false)
+    val deltas = (0 until nTriggers).map(i =>
+      hashes.filter(pmod(xxhash64(col("media_id")), lit(nTriggers)) === i))
+    // the state each trigger's increment reads: one settle per trigger
+    // that another follows, so the next one reads it materialized
+    val states = deltas.init.scanLeft(hashes.limit(0)) { (state, delta) =>
+      graft.Ckpt.settle(state.unionByName(delta)).head._1
     }
-    folded = folded.localCheckpoint(false)
+    val batch0 = SimHash.bandedHammingPairs(
+      hashes, "media_id", "dhash", bands = 4, maxHamming = 3)
+    val Seq((batch, _), (folded, _)) = graft.Ckpt.settle(batch0,
+      states.zip(deltas).map { case (state, delta) =>
+        SimHash.incrementalBandedPairs(
+          state, delta, "media_id", "dhash", bands = 4, maxHamming = 3)
+      }.foldLeft(batch0.limit(0))(_ unionByName _))
     val foldEqBatch = folded.exceptAll(batch).count() == 0 &&
       batch.exceptAll(folded).count() == 0
-    Seq((hashes.count(), nTriggers.toLong, foldEqBatch))
+    Seq((nImages, nTriggers.toLong, foldEqBatch))
       .toDF("n_images", "n_triggers", "fold_equal_ok")
   }
 
@@ -2474,7 +2461,8 @@ object Pipeline {
     */
   private def decontaminateBloomGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val shingled = shingledDocs(s, dir).localCheckpoint(false) // feeds 3 plans
+    // feeds 3 plans
+    val (shingled, _) = graft.Ckpt.settle(shingledDocs(s, dir)).head
     val evalVocab = shingled.filter(col("doc_id") % 50 === 0)
       .select("sh").distinct()
     val train = shingled.filter(col("doc_id") % 50 =!= 0)
@@ -2541,10 +2529,8 @@ object Pipeline {
     */
   private def heavyHittersGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val toks = Tables(s, dir, "documents")
-      .select(explode(expr("split(trim(text), '\\\\s+')")).as("token"))
-      .localCheckpoint(false)
-    val n = toks.count()
+    val (toks, n) = graft.Ckpt.settle(Tables(s, dir, "documents")
+      .select(explode(expr("split(trim(text), '\\\\s+')")).as("token"))).head
     val heavy = toks.groupBy("token").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") * 8 > n)
     val cand = graft.operators.HeavyHitters.candidates(toks, "token", 8)
@@ -2628,16 +2614,14 @@ object Pipeline {
     val planted = emb.filter(col("vec_id") % 7 === 0)
     val corpus = emb.unionByName(
       planted.select((col("vec_id") + 1000000).as("vec_id"), col("embedding")))
-    val sem = graft.operators.dedup.SemDedup
-      .pairs(corpus, "vec_id", "embedding", threshold = 0.3, k = 8, iters = 4)
-      .select("left_id", "right_id").localCheckpoint(false)
+    val Seq((sem, _), (truth, nPlanted)) = graft.Ckpt.settle(
+      graft.operators.dedup.SemDedup
+        .pairs(corpus, "vec_id", "embedding", threshold = 0.3, k = 8, iters = 4)
+        .select("left_id", "right_id"),
+      planted.select(col("vec_id").as("left_id"), (col("vec_id") + 1000000).as("right_id")))
     val exact = graft.operators.dedup.EmbedDedup
       .allPairs(corpus, "vec_id", "embedding", threshold = 0.3)
       .select("left_id", "right_id")
-    val truth = planted
-      .select(col("vec_id").as("left_id"), (col("vec_id") + 1000000).as("right_id"))
-      .localCheckpoint(false)
-    val nPlanted = truth.count()
     val nHit = truth.join(sem, Seq("left_id", "right_id"), "left_semi").count()
     val escaped = sem.join(exact, Seq("left_id", "right_id"), "left_anti").count()
     Seq((nPlanted, escaped == 0L, nHit == nPlanted))
@@ -3117,14 +3101,14 @@ object Pipeline {
     // per-doc tf comes from `regexp_count` with token-boundary lookarounds
     // and dl from counting whitespace runs — no token array materialises,
     // nothing explodes, no (doc, term) shuffle, no pivot. One projection
-    // over the corpus (localCheckpointed so the one-row stats aggregate
-    // and the scoring scan share it), one broadcast stats row, one top-k.
+    // over the corpus (settled so the one-row stats aggregate and the
+    // scoring scan share it), one broadcast stats row, one top-k.
     // The earlier split→filter→explode→pivot formulation spent its whole
     // budget (20 CPU-s at sf0.1) materialising every token as an object;
     // this plan computes identical integers, so the double expression
     // trees — kept in the oracle's exact shape and summed in fixed term
     // order — still match DuckDB bit-for-bit after 6dp rounding.
-    val counts = Tables(s, dir, "documents")
+    val (counts, _) = graft.Ckpt.settle(Tables(s, dir, "documents")
       .select(
         (col("doc_id") +:
           (regexp_count(trim(col("text")), lit("\\s+")) + 1)
@@ -3132,8 +3116,7 @@ object Pipeline {
           bm25Terms.zipWithIndex.map { case (t, i) =>
             regexp_count(col("text"), lit("(?<=^|\\s)" + t + "(?=\\s|$)"))
               .cast("long").as(s"tf$i")
-          }): _*)
-      .localCheckpoint(false)
+          }): _*)).head
     val statAggs = sum("dl").as("sum_dl") +:
       bm25Terms.indices.map(i =>
         sum(when(col(s"tf$i") > 0, 1L).otherwise(0L)).as(s"df$i"))
@@ -3537,16 +3520,15 @@ object Pipeline {
   private def substrGuardGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables(s, dir, "documents")
-    val evalW = substrEvalWindows(docs).localCheckpoint(false)
-    val train = docs.filter(col("doc_id") % 10 =!= 8)
-      .select("doc_id", "text").localCheckpoint(false)
-    val full = substrFlag(train, evalW).localCheckpoint(false)
-    val micro = (0 until 3)
-      .map(i => substrFlag(train.filter(col("doc_id") % 3 === i), evalW))
-      .reduce(_ unionByName _).localCheckpoint(false)
+    val Seq((evalW, _), (train, _)) = graft.Ckpt.settle(substrEvalWindows(docs),
+      docs.filter(col("doc_id") % 10 =!= 8).select("doc_id", "text"))
+    val Seq((full, nFull), (micro, _)) = graft.Ckpt.settle(substrFlag(train, evalW),
+      (0 until 3)
+        .map(i => substrFlag(train.filter(col("doc_id") % 3 === i), evalW))
+        .reduce(_ unionByName _))
     val equal = micro.exceptAll(full).count() == 0 &&
       full.exceptAll(micro).count() == 0
-    Seq((full.count(), equal)).toDF("n_flagged", "batch_equal_ok")
+    Seq((nFull, equal)).toDF("n_flagged", "batch_equal_ok")
   }
 
   private val substrGuardGateSql =
@@ -4001,16 +3983,16 @@ object Pipeline {
     * bigram LM — shared by [[perplexity]] and [[perplexityBuckets]].
     */
   private def perplexityStats(s: SparkSession, dir: String): DataFrame = {
-    val stream = Tables(s, dir, "documents")
+    // feeds LM training AND scoring
+    val (stream, _) = graft.Ckpt.settle(Tables(s, dir, "documents")
       .select(col("doc_id"), expr("split(trim(text), '\\\\s+')").as("toks"))
       .select(col("doc_id"), explode(expr(
         """transform(sequence(1, size(toks)),
           |  i -> struct(IF(i = 1, NULL, element_at(toks, i - 1)) AS prev,
           |              element_at(toks, i) AS tok))""".stripMargin)).as("bg"))
-      .select(col("doc_id"), col("bg.prev").as("prev"), col("bg.tok").as("tok"))
-      .localCheckpoint(false) // feeds LM training AND scoring
-    val uni = stream.groupBy("tok").agg(count(lit(1)).as("c_uni"))
-      .localCheckpoint(false) // joined twice (token + context)
+      .select(col("doc_id"), col("bg.prev").as("prev"), col("bg.tok").as("tok"))).head
+    // joined twice (token + context)
+    val (uni, _) = graft.Ckpt.settle(stream.groupBy("tok").agg(count(lit(1)).as("c_uni"))).head
     val total = uni.agg(sum("c_uni").as("n_corpus"))
     val bi = stream.filter(col("prev").isNotNull)
       .groupBy("prev", "tok").agg(count(lit(1)).as("c_bi"))
@@ -4045,8 +4027,8 @@ object Pipeline {
     * the per-bucket census a mixing pipeline consumes.
     */
   private def perplexityBuckets(s: SparkSession, dir: String): DataFrame = {
-    val stats = perplexityStats(s, dir)
-      .localCheckpoint(false) // feeds the threshold sketch AND the tagging
+    // feeds the threshold sketch AND the tagging
+    val (stats, _) = graft.Ckpt.settle(perplexityStats(s, dir)).head
     val n = Tables(s, dir, "documents").count()
     val acc = math.min(math.max(100000L, 2L * n), Int.MaxValue.toLong)
     val thr = stats.agg(
@@ -4259,9 +4241,8 @@ object Pipeline {
     */
   private def percentileGroupGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val ev = Tables(s, dir, "events")
-      .select(col("event_type"), graft.Num.cents(col("value")).as("cents"))
-      .localCheckpoint(false)
+    val (ev, _) = graft.Ckpt.settle(Tables(s, dir, "events")
+      .select(col("event_type"), graft.Num.cents(col("value")).as("cents"))).head
     val approx = ev.groupBy("event_type")
       .agg(count(lit(1)).as("n"), expr("approx_percentile(cents, 0.5, 1000)").as("p50"))
     val checked = ev.join(approx, "event_type")
@@ -4337,16 +4318,15 @@ object Pipeline {
   private def funnelReport(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val en = langProfiles.toMap.apply("en")
-    val scrubbed = withDupes(s, dir, exact = true)
+    // three aggregates off one frame
+    val (scrubbed, nRaw) = graft.Ckpt.settle(withDupes(s, dir, exact = true)
       .withColumn("seeded",
         when(col("doc_id") % 5 === 0,
           concat(col("text"), lit(" contact: user"),
             col("doc_id").cast("string"), lit("@example.com")))
           .otherwise(col("text")))
       .select(col("doc_id"), col("lang"),
-        regexp_replace(col("seeded"), emailRe, "<EMAIL>").as("text"))
-      .localCheckpoint(false) // three aggregates off one frame
-    val nRaw = scrubbed.count()
+        regexp_replace(col("seeded"), emailRe, "<EMAIL>").as("text"))).head
     val keep = scrubbed.groupBy(md5(col("text")).as("h"))
       .agg(min("doc_id").as("doc_id")).select("doc_id")
     val passPerLang = scrubbed.join(keep, Seq("doc_id"), "left_semi")

@@ -483,11 +483,11 @@ object Relational {
     // each stage frame is |users-at-stage| rows; checkpointing stops the
     // later stages (and the final count union) from replaying the event
     // scans of every earlier stage
-    val v = ev.filter(col("event_type") === "view")
-      .groupBy("user_id").agg(min("us").as("v_us")).localCheckpoint(false)
-    val c = ev.filter(col("event_type") === "click").join(v, "user_id")
+    val (v, _) = graft.Ckpt.settle(ev.filter(col("event_type") === "view")
+      .groupBy("user_id").agg(min("us").as("v_us"))).head
+    val (c, _) = graft.Ckpt.settle(ev.filter(col("event_type") === "click").join(v, "user_id")
       .filter(col("us") > col("v_us"))
-      .groupBy("user_id").agg(min("us").as("c_us")).localCheckpoint(false)
+      .groupBy("user_id").agg(min("us").as("c_us"))).head
     val p = ev.filter(col("event_type") === "purchase").join(c, "user_id")
       .filter(col("us") > col("c_us"))
       .groupBy("user_id").agg(min("us").as("p_us"))
@@ -1085,7 +1085,7 @@ object Relational {
     * integer, deterministic tiebreak.
     */
   private def qGraphLinkpred(s: SparkSession, dir: String): DataFrame = {
-    val e = graphEdges(s, dir).localCheckpoint(false)
+    val (e, _) = graft.Ckpt.settle(graphEdges(s, dir)).head
     val e2 = e.select(col("a").as("s"), col("b").as("t"))
       .unionAll(e.select(col("b").as("s"), col("a").as("t")))
     val adj = graft.plans.TopK.perKey(e2, Seq("s"), "t", k = 32,
@@ -1211,15 +1211,14 @@ object Relational {
     * All integer, so the percentile_disc oracle matches bit-exact.
     */
   private def qRfmSegments(s: SparkSession, dir: String): DataFrame = {
-    val users = Tables(s, dir, "events")
+    // feeds the threshold fit AND the scoring
+    val (users, n) = graft.Ckpt.settle(Tables(s, dir, "events")
       .filter(col("event_type") === "purchase")
       .groupBy("user_id")
       .agg(
         max(expr("unix_micros(ts) DIV 86400000000")).as("last_day"),
         count(lit(1)).as("freq"),
-        Num.bigSum(Num.cents(col("value"))).cast("long").as("cents"))
-      .localCheckpoint(false) // feeds the threshold fit AND the scoring
-    val n = users.count()
+        Num.bigSum(Num.cents(col("value"))).cast("long").as("cents"))).head
     val acc = math.min(math.max(100000L, 2L * n), Int.MaxValue.toLong)
     def qs(c: String) = Seq(0.25, 0.5, 0.75).map(p =>
       expr(s"approx_percentile($c, $p, $acc)").as(s"${c.head}q${(p * 4).toInt}"))
@@ -1961,13 +1960,12 @@ object Relational {
   private def q20(s: SparkSession, dir: String): DataFrame = {
     val red = Tables(s, dir, "part")
       .filter(col("p_name").startsWith("red")).select("p_partkey")
-    val shipped = Tables(s, dir, "lineitem")
+    val (shipped, _) = graft.Ckpt.settle(Tables(s, dir, "lineitem")
       .filter(col("l_shipdate") >= lit("1997-01-01 00:00:00").cast("timestamp") &&
         col("l_shipdate") < lit("1998-01-01 00:00:00").cast("timestamp"))
       .join(broadcast(red), col("l_partkey") === col("p_partkey"))
       .groupBy(col("l_partkey"), col("l_suppkey"))
-      .agg(sum(col("l_quantity").cast("long")).as("qty"))
-      .localCheckpoint(false)
+      .agg(sum(col("l_quantity").cast("long")).as("qty"))).head
     val totals = shipped.groupBy(col("l_partkey"))
       .agg(sum(col("qty")).as("total_qty"))
     val dominating = shipped.join(totals, "l_partkey")
@@ -2089,18 +2087,9 @@ object Relational {
     // seconds. Each triangle is FOUND once on its lowest-rank edge via
     // the bounded O(√m) oriented out-adjacencies, then credited to all
     // three of its edges; weak = edges never credited (one anti-join).
-    val e = graft.Ckpt.truncateBulk(rawEdges)
-    val deg = e.select(col("a").as("n")).unionByName(e.select(col("b").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("deg"))
-    val rk = deg.select(col("n"), struct(col("deg"), col("n")).as("rk"))
-    val oriented = e
-      .join(rk.select(col("n").as("a"), col("rk").as("rka")), "a")
-      .join(rk.select(col("n").as("b"), col("rk").as("rkb")), "b")
-      .select(when(col("rka") < col("rkb"),
-          struct(col("a").as("u"), col("b").as("v")))
-        .otherwise(struct(col("b").as("u"), col("a").as("v"))).as("o"))
-      .select(col("o.u").as("u"), col("o.v").as("v"))
-      .transform(graft.Ckpt.truncateBulk)
+    val (e, _) = graft.Ckpt.settleBulk(rawEdges).head
+    val (oriented, _) = graft.Ckpt.settleBulk(
+      GraphMetrics.orient(e, GraphMetrics.degrees(e))).head
     val adj = oriented.groupBy("u")
       .agg(sort_array(collect_list(col("v"))).as("nbrs"))
     val tri = oriented

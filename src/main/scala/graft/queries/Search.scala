@@ -206,24 +206,22 @@ object Search {
     // the full index's Σdf² — and survivors verify EXACTLY on the
     // rare-shingle arrays. Same pair set, same values, ~5× less posting
     // work; at 100 TB the prefix is what keeps the join linear in docs.
-    val docs = withExcerpts(s, dir)
+    val (docs, _) = graft.Ckpt.settle(withExcerpts(s, dir)
       .select(col("doc_id"),
         array_distinct(
-          graft.functions.Sketches.shingleHashes(col("text"), 3)).as("sh"))
-      .localCheckpoint(false)
+          graft.functions.Sketches.shingleHashes(col("text"), 3)).as("sh"))).head
     val posts = docs.select(col("doc_id"), explode(col("sh")).as("fp"))
     val rare = posts.groupBy("fp").agg(count(lit(1)).as("df"))
       .filter(col("df") <= 64)
-    val k = posts.join(rare, "fp").localCheckpoint(false)
+    val (k, _) = graft.Ckpt.settle(posts.join(rare, "fp")).head
     // rare shingles per doc, rarest first ((df, fp) — a consistent total
     // order shared by prefix selection and nothing else; verification is
     // order-blind)
-    val arrs = k
+    val (arrs, _) = graft.Ckpt.settle(k
       .groupBy("doc_id")
       .agg(sort_array(collect_list(struct(col("df"), col("fp")))).as("sf"))
       .select(col("doc_id"), expr("transform(sf, x -> x.fp)").as("rsh"),
-        expr("CAST(size(sf) AS BIGINT)").as("n_src"))
-      .localCheckpoint(false)
+        expr("CAST(size(sf) AS BIGINT)").as("n_src"))).head
     val prefix = arrs.select(col("doc_id").as("src_id"),
       explode(expr("slice(rsh, 1, CAST(n_src div 5 AS INT) + 1)")).as("fp"))
     val cand = prefix

@@ -42,10 +42,10 @@ object Selection {
     */
   private def dsir(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
-    val toks = docs
+    // feeds the fit AND the scoring pass
+    val (toks, _) = graft.Ckpt.settle(docs
       .select(col("doc_id"), explode(expr("split(trim(text), '\\\\s+')")).as("tok"))
-      .withColumn("bucket", expr("CAST(conv(substring(md5(tok), 1, 2), 16, 10) AS BIGINT)"))
-      .localCheckpoint(false) // feeds the fit AND the scoring pass
+      .withColumn("bucket", expr("CAST(conv(substring(md5(tok), 1, 2), 16, 10) AS BIGINT)"))).head
     val bucketCounts = toks
       .groupBy("bucket")
       .agg(
@@ -145,13 +145,13 @@ object Selection {
     */
   private[graft] def bpeLearnFrom(wf0: DataFrame, nMerges: Int)
       : (Seq[(Long, String, String, String, Long)], DataFrame) = {
-    val wf1 = wf0
+    // the corpus never rescans across iterations
+    val (wf1, _) = graft.Ckpt.settle(wf0
       .withColumn("sym", expr(
         """concat(' ', concat_ws('  ',
           |  concat(transform(sequence(1, length(w)), i -> substring(w, i, 1)),
           |         array('</w>'))), ' ')""".stripMargin))
-      .select("w", "sym", "cnt")
-      .localCheckpoint(false) // the corpus never rescans across iterations
+      .select("w", "sym", "cnt")).head
     // Size-derived partitioning (the lrTrain device): the merge loop runs
     // nMerges pair-count aggregates over this VOCABULARY-sized table —
     // at bench vocabularies CoalesceExec(1) claims SinglePartition, so
@@ -297,7 +297,7 @@ object Selection {
     * doc×doc anything.
     */
   private def contaminationReport(s: SparkSession, dir: String): DataFrame = {
-    val sh = Pipeline.shingledDocs(s, dir).localCheckpoint(false)
+    val (sh, _) = graft.Ckpt.settle(Pipeline.shingledDocs(s, dir)).head
     val trainVocab = sh.filter(col("doc_id") % 50 =!= 0)
       .select("sh").distinct().withColumn("hit", lit(1L))
     sh.filter(col("doc_id") % 50 === 0)
@@ -383,11 +383,10 @@ object Selection {
     * (the oracle unrolls the DP to that length).
     */
   private def unigramWf(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "documents")
+    graft.Ckpt.settle(Tables(s, dir, "documents")
       .select(explode(expr("split(trim(text), '\\\\s+')")).as("w"))
       .filter(length(col("w")) <= Unigram.maxWord)
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false)
+      .groupBy("w").agg(count(lit(1)).as("cnt"))).head._1
 
   /** Unigram-LM tokenizer training (operators/text/Unigram — Kudo 2018,
     * SentencePiece's other model family next to dx_bpe_train): integer
@@ -781,22 +780,21 @@ object Selection {
     * training at 100 TB is count maintenance, not refitting.
     */
   private def nbApplyGate(s: SparkSession, dir: String): DataFrame = {
-    val train = nbTokens(Tables(s, dir, "documents"))
-      .filter(col("doc_id") % 2 === 0).localCheckpoint(false)
-    var counts: DataFrame = null
-    var totals: DataFrame = null
-    (0 until 3).foreach { i =>
+    val (train, _) = graft.Ckpt.settle(nbTokens(Tables(s, dir, "documents"))
+      .filter(col("doc_id") % 2 === 0)).head
+    val slices = (0 until 3).map { i =>
       val slice = train.filter(col("doc_id") % 3 === i)
-      val sc = slice.groupBy("lang", "bucket").agg(count(lit(1)).as("c"))
-      val st = slice.groupBy("lang").agg(count(lit(1)).as("n"))
-      counts =
-        (if (counts == null) sc
-         else counts.unionByName(sc).groupBy("lang", "bucket")
-           .agg(sum("c").as("c"))).localCheckpoint(false)
-      totals =
-        (if (totals == null) st
-         else totals.unionByName(st).groupBy("lang")
-           .agg(sum("n").as("n"))).localCheckpoint(false)
+      (slice.groupBy("lang", "bucket").agg(count(lit(1)).as("c")),
+        slice.groupBy("lang").agg(count(lit(1)).as("n")))
+    }
+    // each round's running counts and totals feed the next round's merge:
+    // one settle job per round materializes both
+    val (counts, totals) = slices.tail.foldLeft(slices.head) {
+      case ((counts, totals), (sc, st)) =>
+        val Seq((c, _), (t, _)) = graft.Ckpt.settle(
+          counts.unionByName(sc).groupBy("lang", "bucket").agg(sum("c").as("c")),
+          totals.unionByName(st).groupBy("lang").agg(sum("n").as("n")))
+        (c, t)
     }
     nbWeightsFromCounts(counts, totals).orderBy("lang", "bucket")
   }
@@ -848,7 +846,8 @@ object Selection {
   private def nbClassify(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables(s, dir, "documents")
-    val toks = nbTokens(docs).localCheckpoint(false) // feeds fit AND scoring
+    // feeds fit AND scoring
+    val (toks, _) = graft.Ckpt.settle(nbTokens(docs)).head
     val w = nbWeights(s, toks)
     val trainDocs = docs.filter(col("doc_id") % 2 === 0)
     val priors = trainDocs.groupBy("lang").agg(count(lit(1)).as("nd"))
@@ -965,12 +964,10 @@ object Selection {
     // out of n / df(-1) / the bias gradient. Current callers derive labels
     // from the same toks frame, so the branch is inert there — this makes
     // the invariant structural rather than a comment.
-    val docs0 = labels
+    val (docs0, n) = graft.Ckpt.settle(labels
       .join(feats.groupBy("doc_id").agg(collect_list(col("bucket")).as("bks")),
         Seq("doc_id"), "left")
-      .select(coalesce(col("bks"), lit(Array.empty[Long])).as("bks"), col("y"))
-      .localCheckpoint(false)
-    val n = docs0.count()
+      .select(coalesce(col("bks"), lit(Array.empty[Long])).as("bks"), col("y"))).head
     require(n > 0, "cannot fit a classifier on an empty training set")
     // Size-derived partitioning (guide §2: adapt to input, don't pin to
     // core count): at proxy-fit sizes the whole table coalesces to one
@@ -1082,7 +1079,7 @@ object Selection {
     scala.collection.concurrent.TrieMap.empty[String, (LrModel, Long)]
 
   private[graft] def lrFitCached(s: SparkSession, dir: String,
-      toksAll: DataFrame): LrModel =
+      toksAll: => DataFrame): LrModel =
     lrModels.get(dir) match {
       case Some((m, 1L)) => m
       case _ =>
@@ -1136,17 +1133,16 @@ object Selection {
   private def lrScoreGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables(s, dir, "documents")
-    val m = lrFitCached(s, dir, nbTokens(docs).localCheckpoint(false))
-    val held = docs.filter(col("doc_id") % 2 === 1).select("doc_id", "text")
-      .localCheckpoint(false)
-    val full = lrScore(held, m).localCheckpoint(false)
-    val micro = (0 until 3)
-      .map(i => lrScore(held.filter(col("doc_id") % 3 === i), m))
-      .reduce(_ unionByName _)
-      .localCheckpoint(false)
+    val m = lrFitCached(s, dir, graft.Ckpt.settle(nbTokens(docs)).head._1)
+    val (held, nHeld) = graft.Ckpt.settle(
+      docs.filter(col("doc_id") % 2 === 1).select("doc_id", "text")).head
+    val Seq((full, _), (micro, _)) = graft.Ckpt.settle(lrScore(held, m),
+      (0 until 3)
+        .map(i => lrScore(held.filter(col("doc_id") % 3 === i), m))
+        .reduce(_ unionByName _))
     val equal = micro.exceptAll(full).count() == 0 &&
       full.exceptAll(micro).count() == 0
-    Seq((held.count(), equal)).toDF("n_docs", "batch_equal_ok")
+    Seq((nHeld, equal)).toDF("n_docs", "batch_equal_ok")
   }
 
   private val lrScoreGateSql =
@@ -1185,7 +1181,7 @@ object Selection {
     // run. A den>1 run's main fit IS the sampled form and gets the same
     // require directly.
     val den = s.conf.get("spark.graft.lr.sampleDen", "1").toLong
-    val toksAll = nbTokens(Tables(s, dir, "documents")).localCheckpoint(false)
+    val (toksAll, _) = graft.Ckpt.settle(nbTokens(Tables(s, dir, "documents"))).head
     val m = lrFit(s, toksAll, den)
     lrModels.put(dir, (m, den))
     val held = toksAll.filter(col("doc_id") % 2 === 1)
@@ -1200,7 +1196,7 @@ object Selection {
   }
 
   private def lrClassify(s: SparkSession, dir: String): DataFrame = {
-    val toksAll = nbTokens(Tables(s, dir, "documents")).localCheckpoint(false)
+    val (toksAll, _) = graft.Ckpt.settle(nbTokens(Tables(s, dir, "documents"))).head
     lrConfusion(lrFitCached(s, dir, toksAll),
       toksAll.filter(col("doc_id") % 2 === 1))
   }
@@ -1220,13 +1216,13 @@ object Selection {
     */
   private def lrGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val toksAll = nbTokens(Tables(s, dir, "documents")).localCheckpoint(false)
+    val (toksAll, _) = graft.Ckpt.settle(nbTokens(Tables(s, dir, "documents"))).head
     // determinism evidence: one (possibly session-cached) fit vs one
     // ALWAYS-fresh fit — still a genuine run-twice comparison of the full
     // training program every time the gate runs
     val m1 = lrFitCached(s, dir, toksAll)
     val m2 = lrFit(s, toksAll)
-    val held = toksAll.filter(col("doc_id") % 2 === 1).localCheckpoint(false)
+    val (held, _) = graft.Ckpt.settle(toksAll.filter(col("doc_id") % 2 === 1)).head
     val (correct, total, majority) = lrAccuracy(m1, held)
     val ok = m1.wMicro.sameElements(m2.wMicro) &&
       m1.biasMicro == m2.biasMicro &&
@@ -1304,8 +1300,9 @@ object Selection {
   private[graft] def mixtureFromStats(perSource: DataFrame): DataFrame = {
     val totals = perSource.agg(
       sum("n_docs").as("c_docs"),
-      sum("hinge_sum").as("c_hinge")).localCheckpoint(false)
-    val stepped = perSource.crossJoin(broadcast(totals))
+      sum("hinge_sum").as("c_hinge"))
+    // n_sources rows; feeds its own normalizer
+    val (stepped, _) = graft.Ckpt.settle(perSource.crossJoin(broadcast(totals))
       .withColumn("avg_loss_micro",
         expr("CAST(hinge_sum DIV n_docs AS BIGINT)"))
       .withColumn("c_avg_micro",
@@ -1315,8 +1312,7 @@ object Selection {
           |  CAST((CAST(avg_loss_micro - c_avg_micro AS DECIMAL(38,0)) * 1000000)
           |       DIV greatest(c_avg_micro, 1) AS BIGINT))""".stripMargin))
       .withColumn("raw", expr(
-        "CAST(tokens AS DECIMAL(38,0)) * (1000000 + excess_ppm)"))
-      .localCheckpoint(false) // n_sources rows; feeds its own normalizer
+        "CAST(tokens AS DECIMAL(38,0)) * (1000000 + excess_ppm)"))).head
     val norm = stepped.agg(sum("raw").as("raw_sum"))
     stepped.crossJoin(broadcast(norm))
       .withColumn("weight_ppm",
@@ -1332,8 +1328,7 @@ object Selection {
 
   private def mixtureLearned(s: SparkSession, dir: String): DataFrame =
     mixtureLearnedFrom(s, dir,
-      lrFitCached(s, dir, nbTokens(Tables(s, dir, "documents"))
-        .localCheckpoint(false)))
+      lrFitCached(s, dir, graft.Ckpt.settle(nbTokens(Tables(s, dir, "documents"))).head._1))
 
   /** Gate for the learned mixture (rows-only family contract: every
     * non-oracled member is shadowed by an oracle-green gate): run the
@@ -1346,9 +1341,8 @@ object Selection {
     */
   private def mixtureLearnedGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val m = lrFitCached(s, dir, nbTokens(Tables(s, dir, "documents"))
-      .localCheckpoint(false))
-    val t1 = mixtureLearnedFrom(s, dir, m).localCheckpoint(false)
+    val m = lrFitCached(s, dir, graft.Ckpt.settle(nbTokens(Tables(s, dir, "documents"))).head._1)
+    val (t1, _) = graft.Ckpt.settle(mixtureLearnedFrom(s, dir, m)).head
     val t2 = mixtureLearnedFrom(s, dir, m)
     val identical = t1.exceptAll(t2).count() == 0 && t2.exceptAll(t1).count() == 0
     val rows = t1.collect()

@@ -443,11 +443,9 @@ object Sources {
     new org.apache.hadoop.fs.Path(docsDir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
       .mkdirs(new org.apache.hadoop.fs.Path(docsDir))
-    val slice = Tables(s, dir, "documents")
+    val (slice, nSlice) = graft.Ckpt.settle(Tables(s, dir, "documents")
       .filter(col("doc_id") % 20 === 0)
-      .select(col("doc_id"), col("text"))
-      .localCheckpoint(false)
-    val nSlice = slice.count()
+      .select(col("doc_id"), col("text"))).head
     slice.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
       if (it.nonEmpty) {
         val base = new org.apache.hadoop.fs.Path(docsDir)
@@ -462,20 +460,19 @@ object Sources {
         }
       }
     }
-    val back = s.read.format("binaryFile").option("pathGlobFilter", "*.txt")
-      .load(docsDir)
-      .select(
-        regexp_extract(col("path"), "([0-9]+)\\.txt$", 1)
-          .cast("long").as("doc_id"),
-        col("length").as("n_bytes"),
-        sha2(col("content"), 256).as("sha"))
-      .orderBy("doc_id")
-      // the count below and the returned frame share one materialization
-      // (one file listing + hash pass, not two)
-      .localCheckpoint(false)
+    // the count below and the returned frame share one materialization
+    // (one file listing + hash pass, not two)
+    val (back, nBack) = graft.Ckpt.settle(
+      s.read.format("binaryFile").option("pathGlobFilter", "*.txt")
+        .load(docsDir)
+        .select(
+          regexp_extract(col("path"), "([0-9]+)\\.txt$", 1)
+            .cast("long").as("doc_id"),
+          col("length").as("n_bytes"),
+          sha2(col("content"), 256).as("sha"))
+        .orderBy("doc_id")).head
     // loud divergence guard: a mis-rooted filesystem (files on executor
     // disks, listing on the driver) must fail the gate, never read empty
-    val nBack = back.count()
     require(nBack == nSlice,
       s"binaryGate round-trip lost files: wrote $nSlice, read back $nBack")
     back

@@ -167,21 +167,18 @@ object Streaming {
     // executor-side (the sf1 pair sets made the old collect().toSet
     // compare a 66 s driver gate); checkpointed because each side feeds
     // two set differences (and the stream side the recall probe).
-    val streamPairs = graft.streaming.Streams
-      .incrementalDedup(stream, docs, "doc_id", "text")
-      .select(col("stream_id"), col("ref_id"), round(col("jaccard"), 9).as("j"))
-      .localCheckpoint(false)
-    val batchCross = MinHashLSH.candidatePairs(docs.unionByName(stream), "doc_id", "text")
-      .filter(col("right_id") >= 1000000L && col("left_id") < 1000000L)
-      .select(col("right_id").as("stream_id"), col("left_id").as("ref_id"),
-        round(col("jaccard"), 9).as("j"))
-      .localCheckpoint(false)
+    val Seq((streamPairs, _), (batchCross, _)) = graft.Ckpt.settle(
+      graft.streaming.Streams
+        .incrementalDedup(stream, docs, "doc_id", "text")
+        .select(col("stream_id"), col("ref_id"), round(col("jaccard"), 9).as("j")),
+      MinHashLSH.candidatePairs(docs.unionByName(stream), "doc_id", "text")
+        .filter(col("right_id") >= 1000000L && col("left_id") < 1000000L)
+        .select(col("right_id").as("stream_id"), col("left_id").as("ref_id"),
+          round(col("jaccard"), 9).as("j")))
     val batchEqual = streamPairs.exceptAll(batchCross).count() == 0 &&
       batchCross.exceptAll(streamPairs).count() == 0
-    val planted = docs.filter(col("doc_id") % 7 === 0)
-      .select((col("doc_id") + 1000000).as("stream_id"), col("doc_id").as("ref_id"))
-      .localCheckpoint(false)
-    val nPlanted = planted.count()
+    val (planted, nPlanted) = graft.Ckpt.settle(docs.filter(col("doc_id") % 7 === 0)
+      .select((col("doc_id") + 1000000).as("stream_id"), col("doc_id").as("ref_id"))).head
     val hits = planted
       .join(streamPairs.select("stream_id", "ref_id"),
         Seq("stream_id", "ref_id"), "left_semi")
@@ -214,27 +211,25 @@ object Streaming {
     val stream = planted.select((col("vec_id") + 1000000).as("vec_id"), col("embedding"))
     // Distributed compare, same shape as the minhash gate above: exceptAll
     // both ways for multiset equality, anti-join for full planted recall.
-    val streamPairs = graft.streaming.Streams
-      .incrementalEmbedDedup(stream, emb, "vec_id", "embedding",
-        threshold = 0.3, bands = 8, planesPerBand = 8)
-      .select(col("stream_id"), col("ref_id"), round(col("sim"), 9).as("s"))
-      .localCheckpoint(false)
-    val batchCross = EmbedDedup.lshPairs(emb.unionByName(stream), "vec_id", "embedding",
-        threshold = 0.3, bands = 8, planesPerBand = 8)
-      .filter(col("right_id") >= 1000000L && col("left_id") < 1000000L)
-      .select(col("right_id").as("stream_id"), col("left_id").as("ref_id"),
-        round(col("sim"), 9).as("s"))
-      .localCheckpoint(false)
+    val Seq((streamPairs, _), (batchCross, _)) = graft.Ckpt.settle(
+      graft.streaming.Streams
+        .incrementalEmbedDedup(stream, emb, "vec_id", "embedding",
+          threshold = 0.3, bands = 8, planesPerBand = 8)
+        .select(col("stream_id"), col("ref_id"), round(col("sim"), 9).as("s")),
+      EmbedDedup.lshPairs(emb.unionByName(stream), "vec_id", "embedding",
+          threshold = 0.3, bands = 8, planesPerBand = 8)
+        .filter(col("right_id") >= 1000000L && col("left_id") < 1000000L)
+        .select(col("right_id").as("stream_id"), col("left_id").as("ref_id"),
+          round(col("sim"), 9).as("s")))
     val batchEqual = streamPairs.exceptAll(batchCross).count() == 0 &&
       batchCross.exceptAll(streamPairs).count() == 0
-    val truth = planted
-      .select((col("vec_id") + 1000000L).as("stream_id"), col("vec_id").as("ref_id"))
-      .localCheckpoint(false)
+    val (truth, nTruth) = graft.Ckpt.settle(planted
+      .select((col("vec_id") + 1000000L).as("stream_id"), col("vec_id").as("ref_id"))).head
     val allPlantedBack = truth
       .join(streamPairs.select("stream_id", "ref_id"),
         Seq("stream_id", "ref_id"), "left_anti")
       .count() == 0
-    Seq((truth.count(), batchEqual, allPlantedBack))
+    Seq((nTruth, batchEqual, allPlantedBack))
       .toDF("n_planted", "batch_equal_ok", "recall_ok")
   }
 

@@ -139,8 +139,8 @@ object Streams {
       numHashes: Int = 64, bands: Int = 16, shingleSize: Int = 3,
       threshold: Double = 0.5): DataFrame = {
     import graft.operators.dedup.MinHashLSH
-    val refSets = MinHashLSH.setsOf(reference, idCol, textCol, shingleSize)
-      .localCheckpoint(false)
+    val (refSets, _) =
+      graft.Ckpt.settle(MinHashLSH.setsOf(reference, idCol, textCol, shingleSize)).head
     val refBands = MinHashLSH.bandsOf(refSets, numHashes, bands)
       .select(col("id").as("ref_id"), col("band"), col("bucket"))
     // stream side carries its shingle set through the band explode so the
@@ -183,7 +183,7 @@ object Streams {
     import graft.operators.dedup.EmbedDedup.bandedSignatures
     def banded(df: DataFrame, idAs: String, vecAs: String) =
       bandedSignatures(df, idCol, vecCol, idAs, vecAs, bands, planesPerBand, dim)
-    val refBands = banded(reference, "ref_id", "rvec").localCheckpoint(false)
+    val (refBands, _) = graft.Ckpt.settle(banded(reference, "ref_id", "rvec")).head
     // the stream side carries its vector through the band explode so the
     // verify step needs no second stream join
     banded(stream, "stream_id", "svec")
@@ -227,8 +227,8 @@ object Streams {
     queryStream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // foreachBatch can deliver empty micro-batches (batch 0, trigger
-        // with no new data); skip the full 3-hop search program — which
-        // localCheckpoints graph/corpus — and the sink for those.
+        // with no new data); skip the full 3-hop search program and the
+        // sink for those.
         if (!batch.isEmpty)
           sink(graft.operators.ann.NnDescent.searchGraph(
             batch, graph, corpus, idCol, vecCol, k, beam, hops, seeds))
@@ -254,7 +254,7 @@ object Streams {
       sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     val s = targets.sparkSession
     val (model, compressed) = graft.operators.ann.VectorIndex.loadSq(s, indexPath)
-    val codes = compressed.localCheckpoint(false)
+    val (codes, _) = graft.Ckpt.settle(compressed).head
     queryStream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty)

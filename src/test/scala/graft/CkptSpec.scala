@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -11,10 +13,12 @@ import scala.concurrent.duration._
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.jdk.CollectionConverters._
 
-/** `Ckpt.iterate` owns the round protocol of every iterative operator: each
-  * frame a round hands on is truncated and already materialized, dead
-  * rounds hold no blocks, and the returned frame is safe to read from two
-  * threads at once.
+/** `Ckpt` is the one place that checkpoints a frame. `Ckpt.settle`
+  * truncates reused frames and materializes them in one job on the calling
+  * thread; `Ckpt.iterate` owns the round protocol of every iterative
+  * operator: each frame a round hands on is truncated and already
+  * materialized, dead rounds hold no blocks, and the returned frame is safe
+  * to read from two threads at once.
   */
 class CkptSpec extends SparkSpec {
   import spark.implicits._
@@ -49,8 +53,7 @@ class CkptSpec extends SparkSpec {
 
   test("after four rounds only the base inputs and the final frame hold blocks") {
     val sc = spark.sparkContext
-    val input = Ckpt.truncate(init)
-    Ckpt.rows(input)
+    val (input, _) = Ckpt.settle(init).head
     val before = sc.getPersistentRDDs.keySet.toSet
     assert(before.contains(checkpointRdd(input).id))
     val stepInputs = ArrayBuffer.empty[Int]
@@ -89,20 +92,94 @@ class CkptSpec extends SparkSpec {
     } finally pool.shutdownNow()
   }
 
+  private lazy val mainSources = {
+    val s = Files.walk(Paths.get("src/main"))
+    try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally s.close()
+  }
+
+  private def hits(re: scala.util.matching.Regex, skip: String => Boolean = _ => false) = {
+    assert(mainSources.nonEmpty, "no sources found: wrong working directory?")
+    for {
+      p <- mainSources if !skip(p.toString)
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if re.findFirstIn(line).isDefined
+    } yield s"$p:${i + 1}: ${line.trim}"
+  }
+
   test("no loop in src/main carries a lazily truncated frame by hand") {
     val handRolled = """^\s*(var\s+)?[a-z]\w*\s*=\s*(graft\.)?Ckpt\.truncate""".r
     assert(handRolled.findFirstIn("      nn = graft.Ckpt.truncate(nn)").isDefined)
-    val files = {
-      val s = Files.walk(Paths.get("src/main"))
-      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally s.close()
+    val found = hits(handRolled)
+    assert(found.isEmpty, "use Ckpt.iterate:\n" + found.mkString("\n"))
+  }
+
+  test("nothing in src/main outside Ckpt checkpoints a frame") {
+    // split so this file does not match its own search
+    val checkpointCall = Seq("localCheckpoint\\(", "\\.checkpoint\\(", "Ckpt\\.truncate")
+      .mkString("|").r
+    for (line <- Seq("x.localCheckpoint(false)", "df.checkpoint(eager = false)",
+        "graft.Ckpt.truncateBulk(e)", "Ckpt.truncate(df)"))
+      assert(checkpointCall.findFirstIn(line).isDefined, line)
+    val found = hits(checkpointCall, _.endsWith("/graft/core.scala"))
+    assert(found.isEmpty, s"${found.size} checkpoints outside Ckpt; use Ckpt.settle or " +
+      "Ckpt.iterate:\n" + found.mkString("\n"))
+  }
+
+  /** Jobs submitted while `body` runs, counted by a listener. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
-    assert(files.nonEmpty, "no sources found: wrong working directory?")
-    val hits = for {
-      p <- files
-      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
-      if handRolled.findFirstIn(line).isDefined
-    } yield s"$p:${i + 1}: ${line.trim}"
-    assert(hits.isEmpty, "use Ckpt.iterate:\n" + hits.mkString("\n"))
+    ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try { body; ListenerDrain(sc); jobs.get }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("settle materializes three frames in one job and returns their row counts") {
+    // narrow plans: their truncation runs no stage, so every job counted is settle's
+    val frames = Seq(init, spark.range(0, 37).select((col("id") * 2).as("x")),
+      init.filter(col("g") === 3))
+    var settled: IndexedSeq[(DataFrame, Long)] = null
+    assert(jobsOf { settled = Ckpt.settle(frames.head, frames.tail: _*) } == 1)
+    assert(settled.size == 3)
+    assert(settled.forall { case (df, _) => checkpointRdd(df).isCheckpointed })
+    assert(settled.map(_._2) == frames.map(_.count()))
+    assert(settled.map(_._2) == settled.map(_._1.count()))
+    // an already materialized frame is not cut again
+    val again = Ckpt.settle(settled.head._1).head
+    assert(checkpointRdd(again._1).id == checkpointRdd(settled.head._1).id && again._2 == 200L)
+  }
+
+  test("a frame that a partial read touched first still comes back fully checkpointed") {
+    val touched = init.localCheckpoint(false) // the lazy shape only Ckpt may make
+    assert(touched.take(1).length == 1)
+    val (df, n) = Ckpt.settle(touched).head
+    assert(checkpointRdd(df).isCheckpointed && n == 200L && df.count() == 200L)
+    val (bulk, nBulk) = Ckpt.settleBulk(init.localCheckpoint(false)).head
+    assert(checkpointRdd(bulk).isCheckpointed && nBulk == 200L)
+  }
+
+  test("in durable mode settle writes its frames under the configured directory") {
+    val dir = Files.createTempDirectory("graft_settle")
+    spark.conf.set("spark.graft.checkpoint.dir", dir.toString)
+    try {
+      val settled = Ckpt.settle(init, init.filter(col("g") === 3))
+      assert(settled.map(_._2) == Seq(200L, init.filter(col("g") === 3).count()))
+      for ((df, _) <- settled) {
+        val rdd = checkpointRdd(df)
+        assert(rdd.isCheckpointed)
+        val file = rdd.getCheckpointFile
+        assert(file.exists(_.contains(dir.getFileName.toString)), s"checkpoint file $file")
+      }
+      val written = {
+        val s = Files.walk(dir)
+        try s.iterator.asScala.count(p => Files.isRegularFile(p)) finally s.close()
+      }
+      assert(written > 0, s"no checkpoint files under $dir")
+    } finally spark.conf.unset("spark.graft.checkpoint.dir")
   }
 }

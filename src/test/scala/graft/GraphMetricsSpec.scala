@@ -124,15 +124,48 @@ class GraphMetricsSpec extends SparkSpec {
           vecs, "vec_id", "embedding", k = 3, beam = 6, hops = 2)
           .orderBy("query_id", "rank").collect().toSeq)
     }
+    // the operators whose reused frames were once checkpointed outside
+    // Ckpt: each must write its checkpoints to the durable directory and
+    // leave no executor-local checkpoint blocks behind in that mode
+    val (base, _) = Ckpt.settle(
+      graft.operators.Components.connected(pairs.filter(col("src") % 3 =!= 0))).head
+    val people = Seq.tabulate(40)(i => (i.toLong, s"n${i % 13}", s"c${i % 4}"))
+      .toDF("id", "name", "city")
+    val ops: Seq[(String, () => Seq[org.apache.spark.sql.Row])] = Seq(
+      "Components.addEdges" -> (() => graft.operators.Components
+        .addEdges(base, pairs.filter(col("src") % 3 === 0)).orderBy("id").collect().toSeq),
+      "NnDescent.removeVectors" -> { () =>
+        val g = graft.operators.ann.NnDescent.knnGraph(vecs, "vec_id", "embedding",
+          k = 4, iters = 3)
+        graft.operators.ann.NnDescent.removeVectors(g, vecs,
+          vecs.filter(col("vec_id") % 7 === 0).select("vec_id"), "vec_id", "embedding", k = 4)
+          .orderBy("id", "nbr").collect().toSeq
+      },
+      "Link.deterministicRounds" -> (() => graft.operators.Link
+        .deterministicRounds(people, people.filter(col("id") % 2 === 0), "id", "id",
+          Seq(Seq("l.name = r.name AND l.city = r.city"), Seq("l.name = r.name"),
+            Seq("l.city = r.city")))
+        .orderBy("left_id", "right_id").collect().toSeq))
     val local = run()
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    spark.conf.set("spark.graft.checkpoint.dir", dir)
+    val localOps = ops.map(_._2())
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    def files(): Long = {
+      val s = java.nio.file.Files.walk(dir)
+      try s.filter(java.nio.file.Files.isRegularFile(_)).count() finally s.close()
+    }
+    spark.conf.set("spark.graft.checkpoint.dir", dir.toString)
     try {
       val durable = run()
       assert(durable == local)
       // the durable mode really did write reliable checkpoints
-      assert(java.nio.file.Files.list(java.nio.file.Paths.get(dir)).count() > 0,
-        "no checkpoint files written under spark.graft.checkpoint.dir")
+      assert(files() > 0, "no checkpoint files written under spark.graft.checkpoint.dir")
+      for (((name, op), want) <- ops.zip(localOps)) {
+        val (filesBefore, blocksBefore) = (files(), spark.sparkContext.getPersistentRDDs.keySet)
+        assert(op() == want, s"$name differs between the two modes")
+        assert(files() > filesBefore, s"$name wrote no checkpoint files")
+        val leftover = spark.sparkContext.getPersistentRDDs.keySet -- blocksBefore
+        assert(leftover.isEmpty, s"$name left executor-local checkpoint blocks: $leftover")
+      }
     } finally spark.conf.unset("spark.graft.checkpoint.dir")
   }
 

@@ -11,7 +11,7 @@
     python3 dev/benchpairs.py report pairs/
 
     # one traced run per side for one seed: every per_layer metric and
-    # every span's self/task seconds, parent -> change
+    # every span's calls, jobs and self/task seconds, parent -> change
     python3 dev/benchpairs.py layers --parent ../parent --change . \\
         --workload corpus_index --seed 1 --out pairs/
 
@@ -39,8 +39,8 @@ else 0. BENCHMARK.json is read from the repository root, never written.
 `layers` runs `--trace 1` once in the parent, then once in the change,
 logging to <out>/<workload>.<seed>.<side>.trace.log (which `report`
 skips) and copying each run's span file next to it. It prints every
-BENCHMARK.json per_layer metric, then each span name's second-cycle self
-and task seconds, as parent -> change. Exit status 1 if a run exits
+BENCHMARK.json per_layer metric, then each span name's second-cycle
+calls, jobs, self seconds and task seconds, as parent -> change. Exit status 1 if a run exits
 non-zero, fails an op or gate, prints no metrics, or reports
 `trace.count_mismatches` > 0; else 0.
 """
@@ -110,11 +110,13 @@ def layers(a, bench):
         kept = log[:-len(".log")] + ".json"
         shutil.copyfile(src, kept)
         with open(kept) as fh:
-            per = spans[side] = defaultdict(lambda: [0.0, 0.0])
+            per = spans[side] = defaultdict(lambda: [0, 0, 0.0, 0.0])
             for sp in json.load(fh):
                 if sp["cycle"] == 2:
-                    per[sp["name"]][0] += sp["self_s"]
-                    per[sp["name"]][1] += sp["task_s"]
+                    per[sp["name"]][0] += 1
+                    per[sp["name"]][1] += sp["jobs"]
+                    per[sp["name"]][2] += sp["self_s"]
+                    per[sp["name"]][3] += sp["task_s"]
 
     def row(name, unit, p, c):
         ratio = f"{c / p:.3f}" if p else "-"
@@ -132,8 +134,8 @@ def layers(a, bench):
         print(f"\n{'cycle-2 span':<36} {'':<6} {'parent':>14} {'change':>14} {'ratio':>7}")
         for name in sorted(set(spans["parent"]) | set(spans["change"])):
             p, c = spans["parent"][name], spans["change"][name]
-            row(name, "self s", p[0], c[0])
-            row(name, "task s", p[1], c[1])
+            for i, unit in enumerate(("calls", "jobs", "self s", "task s")):
+                row(name, unit, p[i], c[i])
     for p in problems:
         print(f"benchpairs: {p}", file=sys.stderr)
     return 1 if problems else 0

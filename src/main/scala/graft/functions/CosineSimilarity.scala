@@ -1,11 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression for cosine similarity over `array<float>`
   * columns, with whole-stage codegen.
@@ -23,10 +24,22 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override def nullIntolerant: Boolean = true
 
-  // Inputs must be array<float>; enforced by usage (ExpectsInputTypes /
-  // AbstractDataType are private[sql] in Spark 4).
   override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine_sim"
+
+  // The kernel reads elements via getFloat — array<double> bytes would be
+  // read as pairs of floats and score garbage, not fail — so any other
+  // input type is rejected at analysis time (ExpectsInputTypes is
+  // private[sql] in Spark 4).
+  override def checkInputDataTypes(): TypeCheckResult =
+    Seq(left, right).map(_.dataType).find {
+      case ArrayType(FloatType, _) => false
+      case _ => true
+    } match {
+      case None => TypeCheckResult.TypeCheckSuccess
+      case Some(other) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires array<float> inputs, got ${other.catalogString}")
+    }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]

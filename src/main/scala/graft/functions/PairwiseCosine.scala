@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -35,6 +36,18 @@ case class PairwiseCosine(child: Expression)
 
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "pairwise_cosine"
+
+  // members are read via getLong/getBoolean/getFloat: any other layout
+  // would be misread (array<double> vectors score garbage), so it is
+  // rejected at analysis time, as CosineSimilarity does
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StructType(Array(
+        StructField(_, LongType, _, _), StructField(_, BooleanType, _, _),
+        StructField(_, ArrayType(FloatType, _), _, _))), _) =>
+      TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(s"$prettyName requires " +
+      s"array<struct<nbr:bigint, fresh:boolean, v:array<float>>> input, got ${other.catalogString}")
+  }
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("x", LongType, nullable = false),

@@ -20,16 +20,15 @@ import org.apache.spark.sql.functions._
   * enters at a hub can cross to another region in ONE hop instead of
   * diameter-many base-edge hops, which is what lets serving run at
   * hops=2 for the recall that flat-graph routing needed hops=4 to reach
-  * (hops is the shuffle knob: three shuffles per hop, independent of
-  * query count). Long edges are flagged in a `long` column so consumers
-  * can tell routing edges from true top-k neighbors; the base edges alone
-  * are the k-NN graph.
+  * (hops is a per-query work knob: the search broadcasts the index and
+  * runs every hop in core, so it adds cosines, not jobs). Long edges are
+  * flagged in a `long` column so consumers can tell routing edges from
+  * true top-k neighbors; the base edges alone are the k-NN graph.
   *
-  * Storage layout: parquet repartitioned by node id, so the per-node
-  * edge lists are co-located for the frontier⋈graph equi-join (on a
-  * warehouse deployment the same frame would be written `bucketBy(id)`
-  * into a table for shuffle-free joins — the bucketed-join evidence in
-  * SkewSpec; plain parquet keeps the driver gates filesystem-only).
+  * Storage layout: parquet repartitioned by node id, so each node's edge
+  * list sits in one file (on a warehouse deployment the same frame would
+  * be written `bucketBy(id)` into a table; plain parquet keeps the driver
+  * gates filesystem-only).
   */
 object GraphIndex {
 
@@ -46,10 +45,9 @@ object GraphIndex {
     val base = NnDescent
       .knnGraph(targets, idCol, vecCol, k, iters, cap0 = cap0)
       .withColumn("long", lit(false))
-    // the hub sample must match searchGraph's coarse stage bit-for-bit
-    // (same hash, same salt) so every scored entry point is long-linked
-    val hubs = targets.filter(
-      pmod(xxhash64(col(idCol).cast("long"), lit(7L)), lit(hubRate)) === 0)
+    // searchGraph's coarse stage scores the same sample, so every scored
+    // entry point is long-linked
+    val hubs = targets.filter(NnDescent.hubSample(col(idCol), hubRate))
     val nHubs = hubs.count()
     // a hub layer needs enough hubs for its own k-NN structure to mean
     // anything; below that the base graph alone is beam-coverable anyway

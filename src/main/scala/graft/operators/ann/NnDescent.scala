@@ -1,6 +1,6 @@
 package graft.operators.ann
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -401,34 +401,44 @@ object NnDescent {
       orphans, "id", "v", k, iters, cap0, kBuild0, deltaTerm)
   }
 
+  /** The hub sample: the deterministic 1/`hubRate` hash sample of node ids
+    * that [[searchGraph]]'s coarse stage scores and [[GraphIndex.build]]
+    * long-links. Both must pick the same nodes, so both call this.
+    */
+  def hubSample(id: Column, hubRate: Int): Column =
+    pmod(xxhash64(id.cast("long"), lit(7L)), lit(hubRate)) === 0
+
   /** Batch beam search over a prebuilt k-NN graph — the serving half of
-    * graph ANN, restated as set-at-a-time joins (the pointer-chasing
-    * best-first loop of HNSW/NSG is inherently sequential per query; for
-    * a BATCH of queries the equivalent exploration is: expand every
-    * query's current beam through the graph in one equi-join, score the
-    * frontier against the query vectors in one scan, keep each query's
-    * top-`beam` survivors in one bounded-heap pass — per hop, three
-    * shuffles regardless of query count).
+    * graph ANN. The pointer-chasing best-first loop of HNSW/NSG is
+    * sequential per query, and so is this one: the graph and the corpus
+    * are broadcast as one primitive index, and each task runs its queries'
+    * whole hop loop in core ([[graft.plans.GraphSearchPlan]]). A call costs
+    * the broadcast job plus the query-side stage, whatever `hops` is; the
+    * join formulation it replaced paid three to four shuffles per hop.
     *
     * Entry points are SCORED COARSE SEEDS: every query is scored against a
-    * deterministic 1/`hubRate` hash sample of the corpus and its top
-    * `seeds` hubs start the beams (the SPANN/DiskANN two-stage shape:
-    * coarse candidate then graph refinement). Geometry-blind random seeds
-    * — the first formulation here — fail hard at scale on clustered data:
-    * a 100×-replica corpus is ~2 000 mutually-unrelated tight clusters, so
-    * its TRUE k-NN graph is near-disconnected cliques; a random entry
-    * lands in the query's cluster with probability ~clusterSize/n and
-    * greedy routing has no similarity gradient to cross clusters (measured
-    * top-5 recall 0.0 at 200 k nodes, vs 0.90 at 2 k where the beam simply
-    * covered 40% of the graph). The coarse stage puts ≥1 seed in any
-    * cluster of ≥ hubRate·ln(…) members w.h.p. and costs |Q|·n/hubRate
-    * broadcast-scan cosines — the IVF bill, 1/hubRate of brute force; a
-    * hash-chosen floor set of `seeds` target nodes is unioned in so every
-    * query always seeds, even on tiny corpora (n < hubRate) and when query
-    * ids are disjoint from target ids. `hops` rounds of expansion then top-k from
-    * everything visited. Work per hop: |Q|·beam·k candidate edges — at
-    * serving scale the graph side is the big frame and the frontier the
-    * small one, exactly the broadcast-join shape AQE picks.
+    * deterministic 1/`hubRate` hash sample of the corpus ([[hubSample]])
+    * and its top `seeds` hubs start the beam (the SPANN/DiskANN two-stage
+    * shape: coarse candidate then graph refinement). Geometry-blind random
+    * seeds — the first formulation here — fail hard at scale on clustered
+    * data: a 100×-replica corpus is ~2 000 mutually-unrelated tight
+    * clusters, so its TRUE k-NN graph is near-disconnected cliques; a
+    * random entry lands in the query's cluster with probability
+    * ~clusterSize/n and greedy routing has no similarity gradient to cross
+    * clusters (measured top-5 recall 0.0 at 200 k nodes, vs 0.90 at 2 k
+    * where the beam simply covered 40% of the graph). The coarse stage puts
+    * ≥1 seed in any cluster of ≥ hubRate·ln(…) members w.h.p. and costs
+    * n/hubRate cosines per query — the IVF bill, 1/hubRate of brute force.
+    * A floor set of `seeds` target nodes, the smallest by
+    * (xxhash64(id, 11), id), is added to every query's seeds, so every
+    * query seeds even on tiny corpora (n < hubRate) and when query ids are
+    * disjoint from target ids. `hops` rounds of expansion then return the
+    * top `k` of everything visited. Work per query: n/hubRate + hops·beam·k
+    * cosines.
+    *
+    * The index must fit a broadcast (an index past Spark's broadcast
+    * limits fails with Spark's own error) and target ids must be unique.
+    * Vectors must be `array<float>`.
     */
   def searchGraph(
       queries: DataFrame, graph: DataFrame, targets: DataFrame,
@@ -436,64 +446,19 @@ object NnDescent {
       beam: Int = 20, hops: Int = 3, seeds: Int = 4,
       excludeSelf: Boolean = true, hubRate: Int = 16): DataFrame = {
     require(k >= 1 && beam >= k && hops >= 1 && seeds >= 1 && hubRate >= 1)
-    // the corpus and the graph are the persisted index, read as is; the
-    // query batch, read by the coarse stage, the floor and every hop (often
-    // a live micro-batch), is settled once
-    val vecs = targets
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-    val (q, _) = graft.Ckpt.settle(queries
-      .select(col(idCol).cast("long").as("qid"), col(vecCol).as("qv"))).head
-    val g = graph.select(col("id"), col("nbr"))
-    // coarse stage: brute-score the hub sample against the broadcast query
-    // set (the bounded-query-set BNLJ shape dx_knn_brute justifies), keep
-    // each query's top `seeds` hubs via the bounded heap
-    val hubs = vecs.filter(pmod(xxhash64(col("id"), lit(7L)), lit(hubRate)) === 0)
-    val coarse = graft.plans.TopK.perKey(
-      hubs.crossJoin(broadcast(q))
-        .select(col("qid"), col("id").as("node"),
-          graft.functions.CosineSimilarity(col("qv"), col("v")).as("sim")),
-      Seq("qid"), "sim", seeds, tieCols = Seq("node"))
-      .select("qid", "node", "sim")
-    // floor: `seeds` hash-chosen TARGET nodes shared by every query
-    // (geometry-blind — the guarantee that EVERY query gets entry points
-    // even when the hub sample is empty, n < hubRate). The first
-    // formulation keyed a hash-successor window by target id and aliased
-    // it as qid, which only seeded queries whose ids happened to exist in
-    // the target set — cross-dataset queries silently got zero rows (r15
-    // ADVICE, medium). A bounded global TakeOrdered picks the floor set
-    // (never empty for a nonempty corpus); seeds×|Q| is the broadcast
-    // cross of two small frames.
-    val floorNodes = vecs.select(col("id").as("node"))
-      .orderBy(xxhash64(col("node"), lit(11L)), col("node"))
-      .limit(seeds)
-    val seeded = scoreQ(
-      q.select(col("qid")).crossJoin(broadcast(floorNodes)), q, vecs)
-      .unionByName(coarse)
-      .groupBy("qid", "node").agg(max("sim").as("sim"))
-    val visited = graft.Ckpt.iterate("search.hop", seeded, hops) { (visited, _) =>
-      val frontier = graft.plans.TopK.perKey(visited, Seq("qid"), "sim",
-        beam, tieCols = Seq("node")).select("qid", "node")
-      // score only pairs not already visited — each (query, node) cosine
-      // is paid at most once across the whole search. The new pairs are
-      // the expansion minus the visited set, found by one aggregate over
-      // their union: as an anti join, the planner picked a sort-merge join
-      // that AQE turned into a broadcast at run time, and whether the
-      // expansion side's shuffle had started by then decided whether the
-      // hop cost one more job
-      val fresh = frontier
-        .join(g.select(col("id").as("node"), col("nbr")), "node")
-        .select(col("qid"), col("nbr").as("node"), lit(false).as("seen"))
-        .unionByName(visited.select(col("qid"), col("node"), lit(true).as("seen")))
-        .groupBy("qid", "node").agg(max("seen").as("seen"))
-        .filter(!col("seen"))
-        .select("qid", "node")
-      visited.unionByName(scoreQ(fresh, q, vecs))
-    }(graft.Ckpt.rows).frame
-    val top = if (excludeSelf) visited.filter(col("qid") =!= col("node"))
-              else visited
-    graft.plans.TopK.perKey(top, Seq("qid"), "sim", k, tieCols = Seq("node"))
-      .select(col("qid").as("query_id"), col("node").as("neighbor_id"),
-        col("rank"), col("sim"))
+    val id = col(idCol).cast("long")
+    val nodes = targets.select(id.as("id"), col(vecCol).as("v"),
+      lit(null).cast("long").as("nbr"), hubSample(id, hubRate).as("hub"),
+      xxhash64(id, lit(11L)).as("floor_key"))
+    val edges = graph
+      .select(col("id").cast("long").as("id"),
+        lit(null).cast(nodes.schema("v").dataType).as("v"),
+        col("nbr").cast("long").as("nbr"), lit(null).cast("boolean").as("hub"),
+        lit(null).cast("long").as("floor_key"))
+      .filter(col("id").isNotNull && col("nbr").isNotNull)
+    graft.plans.GraphSearch(
+      queries.select(id.as("qid"), col(vecCol).as("qv")),
+      nodes.unionByName(edges), k, beam, hops, seeds, excludeSelf)
   }
 
   /** (id, nbr, sim) → both directed edges, in ONE pass over the input.
@@ -510,14 +475,6 @@ object NnDescent {
         .as("e"))
       .select(col("e.id").as("id"), col("e.nbr").as("nbr"),
         col("e.sim").as("sim"))
-
-  private def scoreQ(pairs: DataFrame, q: DataFrame, vecs: DataFrame)
-      : DataFrame =
-    pairs
-      .join(q, "qid")
-      .join(vecs.select(col("id").as("node"), col("v")), "node")
-      .select(col("qid"), col("node"),
-        graft.functions.CosineSimilarity(col("qv"), col("v")).as("sim"))
 
   private def score(pairs: DataFrame, vecs: DataFrame): DataFrame =
     pairs

@@ -283,8 +283,8 @@ object Ann {
     * index (no inline graph construction — the cost a production
     * retrieval batch actually pays). Long-linked hubs cut the hop count:
     * hops=3/beam=32 here measures 1.0 recall at sf0.1 where the flat
-    * inline graph needs hops=4 for 0.98 (each hop is three shuffles;
-    * hops=2 bottoms at 0.64-0.70 on the uniform regime — noise maxima
+    * inline graph needs hops=4 for 0.98 (each hop is beam·k more cosines
+    * per query, run in core against the broadcast index; hops=2 bottoms at 0.64-0.70 on the uniform regime — noise maxima
     * leave routing no gradient, so the last hop can't be bought with
     * links). Rows-only; the recall gate is the pin.
     */
@@ -666,9 +666,9 @@ object Ann {
     * once over the full query set and once as three disjoint micro-batches
     * — the union of micro-batch outputs must be BIT-IDENTICAL to the batch
     * answer (multiset equality via exceptAll both ways, executor-side).
-    * This is the property that makes foreachBatch serving correct: every
-    * stage of searchGraph is keyed by query id, so micro-batching is
-    * value-neutral. The recall of the serve path itself is pinned
+    * This is the property that makes foreachBatch serving correct:
+    * searchGraph searches each query row on its own against the broadcast
+    * index, so micro-batching is value-neutral. The recall of the serve path itself is pinned
     * separately by `dx_knn_graph_serve_recall`; this gate pins the
     * STREAMING contract. StreamingSpec drives the same equality through a
     * real MemoryStream + foreachBatch.

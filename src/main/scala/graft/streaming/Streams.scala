@@ -198,22 +198,21 @@ object Streams {
   /** Online ANN retrieval over a persisted serving index
     * ([[graft.operators.ann.GraphIndex]]): each micro-batch of query
     * vectors runs the batch beam search against the STATIC graph + corpus.
-    * The multi-hop search is an iterative join program no single streaming
-    * plan expresses, so the streaming form is the `foreachBatch` shape —
-    * the same split a production retrieval service runs (index built once
-    * by a cluster job, query batches served as they arrive).
+    * The search broadcasts the graph and corpus as one index, which a
+    * streaming plan cannot, so the streaming form is the `foreachBatch`
+    * shape — the same split a production retrieval service runs (index
+    * built once by a cluster job, query batches served as they arrive).
     *
-    * Correctness contract: every stage of
-    * [[graft.operators.ann.NnDescent.searchGraph]] is keyed by query id
-    * (floor seeds, coarse hub scoring, per-hop beam state, the visited
-    * set), so the union of micro-batch outputs is BIT-IDENTICAL to one
-    * batch call over the union of queries — micro-batching is
-    * value-neutral. `st_ann_serve_gate` pins that equality per round and
+    * Correctness contract:
+    * [[graft.operators.ann.NnDescent.searchGraph]] searches each query row
+    * on its own (its seeds, beam and visited set never meet another
+    * query's), so the union of micro-batch outputs is BIT-IDENTICAL to one
+    * batch call over the union of queries by construction. `st_ann_serve_gate` pins that equality per round and
     * StreamingSpec drives it end-to-end through a real MemoryStream.
     *
     * State: none. The graph and corpus are static and each batch is
-    * independent, so serving cost is the three-shuffles-per-hop search
-    * bill per trigger, flat in stream history — the property that lets
+    * independent, so serving cost per trigger is one index broadcast plus
+    * the batch's in-core searches, flat in stream history — the property that lets
     * this run indefinitely at scale.
     *
     * @param sink consumes each micro-batch's finished search result

@@ -131,11 +131,11 @@ class AnnSpec extends SparkSpec {
     val rng = new scala.util.Random(5)
     val dim = 8
     def jitter(base: Array[Double]) =
-      base.zipWithIndex.map { case (x, i) => x + rng.nextDouble() * 0.01 }.toSeq
+      base.zipWithIndex.map { case (x, i) => (x + rng.nextDouble() * 0.01).toFloat }.toSeq
     val cliqueBase = Array.fill(dim)(1.0)
     val clique = (0L until 6L).map(i => (200L + i, jitter(cliqueBase)))
     val cloud = (0L until 30L).map(i =>
-      (i, Seq.fill(dim)(rng.nextDouble() * 2 - 1)))
+      (i, Seq.fill(dim)((rng.nextDouble() * 2 - 1).toFloat)))
     val lone = Seq((100L, jitter(cliqueBase)))
     val corpus = (clique ++ cloud ++ lone).toDF("vec_id", "embedding")
     val g0 = NnDescent.knnGraph(corpus, "vec_id", "embedding", k = 4,
@@ -160,8 +160,7 @@ class AnnSpec extends SparkSpec {
     assert(g.filter(!col("long")).select("id").distinct().count() == emb.count())
     // long links connect hub-sample nodes only (both endpoints)
     val nonHubLong = g.filter(col("long") &&
-      (pmod(xxhash64(col("id"), lit(7L)), lit(16)) =!= 0 ||
-       pmod(xxhash64(col("nbr"), lit(7L)), lit(16)) =!= 0))
+      !(NnDescent.hubSample(col("id"), 16) && NnDescent.hubSample(col("nbr"), 16)))
     assert(nonHubLong.count() == 0, "long links must join hubs to hubs")
     // serving over the stored index clears the gate floor
     val res = NnDescent.searchGraph(
@@ -275,5 +274,25 @@ class AnnSpec extends SparkSpec {
     assert(block.forall(r => !r.getDouble(2).isNaN))
     assert(block.filter(r => r.getLong(0) == 1L)
       .forall(_.getDouble(2) == 0.0))
+  }
+
+  test("array<double> vectors fail by name in both cosine kernels and the search") {
+    import spark.implicits._
+    // read as floats, the doubles 0.5 and -0.25 would score as the halves
+    // of their bit patterns — garbage, not an error — so each entry point
+    // refuses them
+    val dbl = Seq((1L, Seq(0.5, -0.25)), (2L, Seq(0.75, 0.1))).toDF("id", "v")
+    val scalar = intercept[org.apache.spark.sql.AnalysisException](
+      dbl.select(graft.functions.CosineSimilarity(col("v"), col("v"))))
+    assert(scalar.getMessage.contains("cosine_sim requires array<float> inputs, got array<double>"),
+      scalar.getMessage)
+    val block = intercept[org.apache.spark.sql.AnalysisException](
+      dbl.select(graft.functions.PairwiseCosine(
+        array(struct(col("id").as("nbr"), lit(true).as("fresh"), col("v"))))))
+    assert(block.getMessage.contains("pairwise_cosine requires"), block.getMessage)
+    val search = intercept[IllegalArgumentException](NnDescent.searchGraph(dbl,
+      Seq((1L, 2L)).toDF("id", "nbr"), dbl, "id", "v", k = 1, beam = 1, hops = 1, seeds = 1))
+    assert(search.getMessage.contains("searchGraph requires array<float> query vectors, got array<double>"),
+      search.getMessage)
   }
 }

@@ -322,6 +322,11 @@ class FunctionsSpec extends SparkSpec {
     val merged = graft.plans.NnMerge.combine(edges, 1)
     assert(plans(merged).exists(_.isInstanceOf[graft.plans.NnMergeExec]),
       merged.queryExecution.executedPlan.toString)
+    val vecs = Seq((1L, Array(1f, 0f)), (2L, Array(0f, 1f))).toDF("id", "v")
+    val searched = graft.operators.ann.NnDescent.searchGraph(vecs, edges, vecs, "id", "v", 1,
+      beam = 1, hops = 1, seeds = 1)
+    assert(plans(searched).exists(_.isInstanceOf[graft.plans.GraphSearchExec]),
+      searched.queryExecution.executedPlan.toString)
     assert(spark.experimental.extraStrategies.isEmpty)
     GraftExtensions.all.foreach { case (id, _, _) =>
       assert(spark.catalog.functionExists(id.funcName), id.funcName)

@@ -105,7 +105,7 @@ class GraphMetricsSpec extends SparkSpec {
     val docs = Seq.tabulate(20)(i =>
       (i.toLong, Seq.fill(5 + rng.nextInt(15))(s"w${rng.nextInt(6)}").mkString(" ")))
       .toDF("doc_id", "text")
-    val vecs = Seq.tabulate(60)(i => (i.toLong, Seq.fill(8)(rng.nextDouble() * 2 - 1)))
+    val vecs = Seq.tabulate(60)(i => (i.toLong, Seq.fill(8)((rng.nextDouble() * 2 - 1).toFloat)))
       .toDF("vec_id", "embedding")
     def run() = {
       val knn = graft.operators.ann.NnDescent.knnGraph(vecs, "vec_id", "embedding",

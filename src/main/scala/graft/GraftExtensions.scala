@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The one extension point: graft's native SQL functions and its planner
-  * strategies (`TopKStrategy`, `NnMergeStrategy`, `GraphSearchStrategy`),
+  * strategies (`TopKStrategy`, `NnMergeStrategy`, `GraphSearchStrategy`,
+  * `DescentRoundStrategy`),
   * injected into every session built with `spark.sql.extensions=graft.GraftExtensions`.
   * [[GraftSession]] sets that key; a pure-SQL user or `spark-submit` job
   * sets it the same way.
@@ -18,6 +19,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => plans.TopKStrategy)
     ext.injectPlannerStrategy(_ => plans.NnMergeStrategy)
     ext.injectPlannerStrategy(_ => plans.GraphSearchStrategy)
+    ext.injectPlannerStrategy(_ => plans.DescentRoundStrategy)
   }
 }
 

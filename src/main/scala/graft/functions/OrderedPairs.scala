@@ -25,7 +25,7 @@ import org.apache.spark.sql.types._
   * struct elements are copied once per GROUP element, not per pair.
   *
   * Eval-only (CodegenFallback): per-ROW work is the O(n²) loop itself; a
-  * codegen wrapper would add nothing (the PairwiseCosine precedent).
+  * codegen wrapper would add nothing.
   */
 case class OrderedPairs(child: Expression)
     extends UnaryExpression with CodegenFallback {

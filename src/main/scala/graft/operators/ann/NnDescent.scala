@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * operator does).
   *
   * The algorithm's local rule — "a neighbor of a neighbor is likely a
-  * neighbor" — is join-shaped, which is why it distributes where graph
-  * descent does not:
+  * neighbor" — needs only each node's own neighbourhood, which is why it
+  * parallelizes where graph descent does not:
   *
   *  1. init: each vector gets up to k pseudo-random neighbors — its
   *     successor in each of k independently-salted hash orders
@@ -28,27 +28,32 @@ import org.apache.spark.sql.functions._
   *     paper's uniform random init actually buys. Buckets are sized
   *     from the corpus count so window partitions stay O(k) rows
   *     regardless of scale;
-  *  2. each round: candidates = wedges through the CAPPED forward ∪
-  *     reverse neighborhood (the paper's ρ·k sampling — per-node work is
-  *     bounded at cap², hubs can't go quadratic), restricted to wedges
-  *     touching at least one edge added in the LAST round (the paper's
-  *     incremental rule: an old×old pair was already proposed in the
-  *     round that made both edges old — §2.3's "local join on new
-  *     items"); each unordered pair is scored ONCE with the native
-  *     cosine kernel and emitted in both directions, merged with the
-  *     current graph, top-k kept per node via the bounded-heap TopK
-  *     operator (no per-group sort);
+  *  2. each round is the paper's LOCAL JOIN (§2.3) over the CAPPED
+  *     forward ∪ reverse neighborhood (the paper's ρ·k sampling — per-node
+  *     work is bounded at cap², hubs can't go quadratic): every member
+  *     pair touching at least one edge added in the LAST round is scored
+  *     (the paper's incremental rule: an old×old pair was already proposed
+  *     in the round that made both edges old), proposed in both
+  *     directions, merged with the current lists and truncated to the top
+  *     kBuild per node;
   *  3. rounds are O(1) (the paper observes ~4-5 to convergence) and
   *     run through [[graft.Ckpt.iterate]] like every iterative operator
   *     here.
   *
-  * Per-round cost: |V|·cap² candidate wedges through two equi-joins in
-  * round 1, decaying with the new-edge fraction in later rounds (the
-  * incremental rule is what makes round 4 cost a fraction of round 1 —
-  * measured 3-10× total-work reduction at convergence) — linear in
-  * corpus for fixed k/cap, every shuffle on node id. No similarity
-  * structure is assumed (the paper's "generic measures"), so this also
-  * serves metric spaces the bucketing families (LSH/IVF) cannot hash.
+  * Per-round cost: one Spark stage. The round's graph and the vectors are
+  * broadcast as one primitive index ([[graft.plans.DescentRoundPlan]]),
+  * each task merges the lists of its slice of nodes in core, and the
+  * loop's settle job materializes the result — two jobs a round, no
+  * shuffle; the join formulation it replaced paid ~6 jobs and four
+  * exchanges. Work is |V|·cap² cosines in round 1, decaying with the
+  * fresh-edge fraction in later rounds (the incremental rule is what makes
+  * round 4 cost a fraction of round 1 — measured 3-10× total-work
+  * reduction at convergence). The graph plus the vectors must fit a
+  * broadcast, the same bound as [[searchGraph]] (sf1: 20 k × 64-d vectors
+  * and 400 k edges, ~15 MB packed); past Spark's broadcast limits a build fails
+  * with Spark's own error. No similarity structure is assumed (the
+  * paper's "generic measures"), so this also serves metric spaces the
+  * bucketing families (LSH/IVF) cannot hash.
   */
 object NnDescent {
 
@@ -79,12 +84,12 @@ object NnDescent {
       targets: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int = 4, cap0: Int = 0, kBuild0: Int = 0,
       delta: Double = 0.001): DataFrame = {
-    val kBuild = if (kBuild0 > 0) kBuild0 else 2 * k
-    val cap = if (cap0 > 0) cap0 else 2 * kBuild
-    require(k >= 1 && iters >= 1 && cap > kBuild && kBuild >= k)
-    // scanned 2× per round; the settle job's row count is the corpus size
+    val (kBuild, cap) = sizes(k, iters, cap0, kBuild0)
+    // read by the init and every round; the settle job's row count is the
+    // corpus size
     val (vecs, n) = graft.Ckpt.settle(targets
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))).head
+    if (n == 0) return vecs.select(col("id"), col("id").as("nbr"), lit(0.0).as("sim"))
     val init = initEdges(vecs, n, kBuild)
     // `fresh` marks edges added in the latest merge — only wedges touching
     // a fresh edge are scored next round (the paper's incremental rule)
@@ -95,6 +100,19 @@ object NnDescent {
     if (kBuild == k) done
     else graft.plans.TopK.perKey(done, Seq("id"), "sim", k,
       tieCols = Seq("nbr")).drop("rank")
+  }
+
+  /** (kBuild, cap) from the public parameters (0 derives the default);
+    * each bad value fails naming its parameter.
+    */
+  private def sizes(k: Int, iters: Int, cap0: Int, kBuild0: Int): (Int, Int) = {
+    require(k >= 1, s"NN-Descent: k must be >= 1, got $k")
+    require(iters >= 1, s"NN-Descent: iters must be >= 1, got $iters")
+    val kBuild = if (kBuild0 > 0) kBuild0 else 2 * k
+    require(kBuild >= k, s"NN-Descent: kBuild must be >= k ($k), got $kBuild")
+    val cap = if (cap0 > 0) cap0 else 2 * kBuild
+    require(cap > kBuild, s"NN-Descent: cap must exceed kBuild ($kBuild), got $cap")
+    (kBuild, cap)
   }
 
   /** Init edges (id, nbr): each node's successor in each of kBuild
@@ -149,88 +167,31 @@ object NnDescent {
 
   /** The descent loop (the paper's §2.1 main iteration): takes the current
     * graph `nn0` — (id, nbr, sim, fresh), per-node lists already capped at
-    * kBuild, still a lazy plan — and runs up to `iters` rounds of capped
-    * local joins, merging proposals and re-truncating per node each round.
-    * `nn0` is round 0 of [[graft.Ckpt.iterate]], so it is materialized on
-    * this thread before the first round's multi-stage plan reads it (that
-    * method's scaladoc names the deadlock a lazy frame here caused). Each
-    * round's signal is its fresh-edge count; the loop stops when it falls
-    * under δ·k·`termN` (the paper's δ-termination). `termN` is the corpus
-    * size for a full build and the DELTA size for an incremental update,
-    * where fresh counts are small from the start. Returns the converged
-    * kBuild-lists graph (id, nbr, sim).
+    * kBuild, still a lazy plan — and runs up to `iters` rounds of the local
+    * join, each one [[graft.plans.DescentRound]] exec over a broadcast of
+    * the round's graph and `vecs`. `nn0` is round 0 of
+    * [[graft.Ckpt.iterate]], and each round's frame is materialized by its
+    * settle job on this thread, so every broadcast reads a materialized
+    * frame (that method's scaladoc names the deadlock a lazy frame under a
+    * broadcast caused). A round is the broadcast job plus that settle job,
+    * whose fresh-edge count is the round's signal; the loop stops when it
+    * falls under δ·k·`termN` (the paper's δ-termination). `termN` is the
+    * corpus size for a full build and the DELTA size for an incremental
+    * update, where fresh counts are small from the start. Returns the
+    * converged kBuild-lists graph (id, nbr, sim).
     */
   private def descend(
       nn0: DataFrame, vecs: DataFrame, k: Int, kBuild: Int, iters: Int,
       cap: Int, delta: Double, termN: Long): DataFrame = {
     val minFresh = (delta * k * termN).toLong.max(1L)
     graft.Ckpt.iterate("nnd.round", nn0, iters) { (nn, r) =>
-      val fwd = nn.select("id", "nbr", "fresh")
-      val rev = fwd.select(col("nbr").as("id"), col("id").as("nbr"),
-        col("fresh"))
-      // neighborhood = ALL k forward neighbors (the current best — the
-      // descent direction, never sampled away) ∪ a capped reverse sample
-      // (deterministic per-round: smallest round-salted hashes — the ρ·k
-      // device; rev is the unbounded side, hubs are what the cap bounds)
-      // the round number rides as a ScalarRef (a true codegen reference
-      // object, same int value hashed): inlining `lit(r)` — or the earlier
-      // `element_at(lit(Array(r)), 1)`, which Catalyst constant-folds right
-      // back to `lit(r)` — changed the generated source every round,
-      // forcing a fresh Janino compile of this stage per round per build
-      val revCapped = graft.plans.TopK.perKey(
-        rev.withColumn("hs",
-          xxhash64(col("nbr"), graft.functions.ScalarRef.int(r))),
-        Seq("id"), "hs", math.max(cap - kBuild, 1),
-        descending = false, tieCols = Seq("nbr"))
-        .select("id", "nbr", "fresh")
-      // same neighbor can arrive via fwd and rev with different flags —
-      // treat it as fresh if either route is. This dedup exchange was
-      // MEASURED as a candidate for removal (the kernel can dedup members
-      // in-core, r19): killing it saved 4 scheduler jobs but the fwd∩rev
-      // overlap then shipped its VECTOR twice through the members
-      // exchange — +27 MB/build at sf0.1 (~4 KB/node/round at any scale)
-      // against ~1.5 KB/node of small rows saved. Worse at 100 TB, so the
-      // dedup stays ahead of the vector attach.
-      val capped = fwd.unionByName(revCapped)
-        .groupBy("id", "nbr").agg(max("fresh").as("fresh"))
-      // local join (the paper's §2.3): assemble each node's neighborhood
-      // WITH vectors (one vector ship per member — cap rows/node), then
-      // score every within-block pair in core via the native block kernel.
-      // The alternative — materialize a wedge frame and equi-join vector
-      // payloads onto it — ships two ~256 B vectors per cap²/2 pair row
-      // (~40 GB/round at 200 k nodes, the measured sf10m wall); blocks cut
-      // that shuffle by a factor of cap/2. A pair surfacing from several
-      // nodes is re-scored (exact, identical sim) instead of pre-deduped:
-      // a 64-dim dot is cheaper than the distinct shuffle it would avoid,
-      // and the merge aggregation dedups anyway.
-      val blocks = capped
-        .join(vecs.select(col("id").as("nbr"), col("v")), "nbr")
-        .groupBy("id")
-        .agg(collect_list(struct(col("nbr"), col("fresh"), col("v")))
-          .as("members"))
-      // emits only pairs touching a fresh edge (old×old pairs were
-      // proposed in the round that made them old — the incremental rule).
-      // Both directions come out of ONE explode over the scored pair: the
-      // earlier two-select union re-evaluated everything above the block
-      // exchange — the collect_list final agg and the pairwise kernel —
-      // once per branch (exchange reuse dedups only the shuffle itself),
-      // doubling the round's dominant compute (measured: dx_knn_graph
-      // 64 task-CPU-s, ~half of it the duplicate branch).
-      val proposals = bothDirections(blocks
-        .select(explode(graft.functions.PairwiseCosine(col("members")))
-          .as("p"))
-        .select(col("p.x").as("id"), col("p.y").as("nbr"),
-          col("p.sim").as("sim")))
-      // age the current graph (its fresh edges were just explored), then
-      // merge: a proposal duplicating an existing edge stays old (min),
-      // a genuinely new edge enters fresh
-      mergeTopK(nn, proposals, kBuild)
+      graft.plans.DescentRound(nn, vecs, r, kBuild, cap)
     }(graft.Ckpt.rowsWhere("fresh"), (_: Long, fresh: Long) => fresh < minFresh)
       .frame.drop("fresh")
   }
 
-  /** The merge shared by the descent round, the incremental-insert seeding
-    * and the delete-repair bridge: existing edges (fresh=false) ∪ newly
+  /** The merge shared by the incremental-insert seeding and the
+    * delete-repair bridge: existing edges (fresh=false) ∪ newly
     * scored edges (fresh=true) → per-(id,nbr) dedup (max sim, min fresh) →
     * per-id top-kBuild. Three shuffle-shape devices, results unchanged:
     * the map-side [[graft.plans.NnMerge]] combiner dedups and bounds each
@@ -285,9 +246,7 @@ object NnDescent {
       idCol: String, vecCol: String, k: Int,
       iters: Int = 2, cap0: Int = 0, kBuild0: Int = 0,
       deltaTerm: Double = 0.001): DataFrame = {
-    val kBuild = if (kBuild0 > 0) kBuild0 else 2 * k
-    val cap = if (cap0 > 0) cap0 else 2 * kBuild
-    require(k >= 1 && iters >= 1 && cap > kBuild && kBuild >= k)
+    val (kBuild, cap) = sizes(k, iters, cap0, kBuild0)
     val baseVecs = base
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
     val newVecs = delta
@@ -312,7 +271,6 @@ object NnDescent {
     // merge with the existing graph: an edge already known stays old
     // (its old×old wedges were explored at build time); genuinely new
     // edges enter fresh and drive the next rounds' local joins
-    // (same combined one-exchange merge as the descent rounds)
     val merged = mergeTopK(
       graph.select(col("id"), col("nbr"), col("sim")), seedEdges, kBuild)
     val done = descend(merged, vecs, k, kBuild, iters, cap, deltaTerm,
@@ -350,9 +308,7 @@ object NnDescent {
       idCol: String, vecCol: String, k: Int,
       iters: Int = 2, cap0: Int = 0, kBuild0: Int = 0,
       deltaTerm: Double = 0.001): DataFrame = {
-    val kBuild = if (kBuild0 > 0) kBuild0 else 2 * k
-    val cap = if (cap0 > 0) cap0 else 2 * kBuild
-    require(k >= 1 && iters >= 1 && cap > kBuild && kBuild >= k)
+    val (kBuild, cap) = sizes(k, iters, cap0, kBuild0)
     val (rm, nRm) = graft.Ckpt.settle(
       removeIds.select(col(removeIds.columns.head).cast("long").as("id")).distinct()).head
     if (nRm == 0) return graph

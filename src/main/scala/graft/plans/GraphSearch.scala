@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.nio.{ByteBuffer, ByteOrder}
-
 import scala.collection.mutable.ArrayBuilder
 
 import org.apache.spark.rdd.RDD
@@ -12,7 +10,6 @@ import org.apache.spark.sql.catalyst.expressions.{
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{
   BroadcastDistribution, BroadcastMode, Distribution, UnspecifiedDistribution}
-import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.graftbridge.DatasetBridge
@@ -134,9 +131,7 @@ case class GraphSearchExec(
 }
 
 /** Builds a [[BeamIndex]] from the collected index rows on the driver and
-  * ships it packed as binary chunks: the exchange accepts only rows or a
-  * hashed relation, and chunking keeps any index under Spark's broadcast
-  * limits packable (one byte array would stop at 2 GB). Fields are the
+  * ships it as [[Packed]] binary chunks. Fields are the
   * ordinals of (id, v, nbr, hub, floor_key) in the index child's output;
   * a row with a null `nbr` is a target, any other row an edge.
   */
@@ -162,77 +157,14 @@ private[plans] final class BeamIndex(
     val hubs: Array[Int], val floor: Array[Int]) {
   def n: Int = ids.length
 
-  def pack(): Array[InternalRow] = {
-    val chunks = new java.util.ArrayList[Array[Byte]]()
-    def put(len: Int, width: Int)(fill: (ByteBuffer, Int, Int) => Unit): Unit = {
-      var at = 0
-      while (at < len) {
-        val m = math.min(len - at, BeamIndex.ChunkBytes / width)
-        val b = ByteBuffer.allocate(m * width).order(ByteOrder.LITTLE_ENDIAN)
-        fill(b, at, m)
-        chunks.add(b.array())
-        at += m
-      }
-    }
-    put(5, 4)((b, _, _) =>
-      Seq(n, vecs.length, adj.length, hubs.length, floor.length).foreach(b.putInt))
-    put(n, 8)((b, at, m) => b.asLongBuffer().put(ids, at, m))
-    put(n + 1, 4)((b, at, m) => b.asIntBuffer().put(vOff, at, m))
-    put(n, 1)((b, at, m) => (at until at + m).foreach(i => b.put((if (vNull(i)) 1 else 0).toByte)))
-    put(vecs.length, 4)((b, at, m) => b.asFloatBuffer().put(vecs, at, m))
-    put(n + 1, 4)((b, at, m) => b.asIntBuffer().put(adjOff, at, m))
-    put(adj.length, 4)((b, at, m) => b.asIntBuffer().put(adj, at, m))
-    put(hubs.length, 4)((b, at, m) => b.asIntBuffer().put(hubs, at, m))
-    put(floor.length, 4)((b, at, m) => b.asIntBuffer().put(floor, at, m))
-    val proj = UnsafeProjection.create(Array[DataType](BinaryType))
-    val out = new Array[InternalRow](chunks.size)
-    var i = 0
-    while (i < out.length) {
-      out(i) = proj(new GenericInternalRow(Array[Any](chunks.get(i)))).copy()
-      i += 1
-    }
-    out
-  }
+  def pack(): Array[InternalRow] = Packed.pack(ids, vOff, vNull, vecs, adjOff, adj, hubs, floor)
 }
 
 private[plans] object BeamIndex {
-  private val ChunkBytes = 8 << 20
-
-  def unpack(rows: Array[InternalRow]): BeamIndex = {
-    var r = 0
-    def next(): ByteBuffer = {
-      val b = ByteBuffer.wrap(rows(r).getBinary(0)).order(ByteOrder.LITTLE_ENDIAN)
-      r += 1
-      b
-    }
-    def get(len: Int, width: Int)(read: (ByteBuffer, Int, Int) => Unit): Unit = {
-      var at = 0
-      while (at < len) {
-        val b = next()
-        val m = b.remaining() / width
-        read(b, at, m)
-        at += m
-      }
-    }
-    val head = next().asIntBuffer()
-    val Seq(n, nVecs, nAdj, nHubs, nFloor) = (0 until 5).map(head.get)
-    val ids = new Array[Long](n)
-    val vOff = new Array[Int](n + 1)
-    val vNull = new Array[Boolean](n)
-    val vecs = new Array[Float](nVecs)
-    val adjOff = new Array[Int](n + 1)
-    val adj = new Array[Int](nAdj)
-    val hubs = new Array[Int](nHubs)
-    val floor = new Array[Int](nFloor)
-    get(n, 8)((b, at, m) => b.asLongBuffer().get(ids, at, m))
-    get(n + 1, 4)((b, at, m) => b.asIntBuffer().get(vOff, at, m))
-    get(n, 1)((b, at, m) => (at until at + m).foreach(i => vNull(i) = b.get() != 0))
-    get(nVecs, 4)((b, at, m) => b.asFloatBuffer().get(vecs, at, m))
-    get(n + 1, 4)((b, at, m) => b.asIntBuffer().get(adjOff, at, m))
-    get(nAdj, 4)((b, at, m) => b.asIntBuffer().get(adj, at, m))
-    get(nHubs, 4)((b, at, m) => b.asIntBuffer().get(hubs, at, m))
-    get(nFloor, 4)((b, at, m) => b.asIntBuffer().get(floor, at, m))
-    new BeamIndex(ids, vOff, vNull, vecs, adjOff, adj, hubs, floor)
+  def unpack(rows: Array[InternalRow]): BeamIndex = Packed.unpack(rows) match {
+    case Seq(ids: Array[Long], vOff: Array[Int], vNull: Array[Boolean], vecs: Array[Float],
+        adjOff: Array[Int], adj: Array[Int], hubs: Array[Int], floor: Array[Int]) =>
+      new BeamIndex(ids, vOff, vNull, vecs, adjOff, adj, hubs, floor)
   }
 
   def build(rows: Iterator[InternalRow], mode: BeamIndexMode): BeamIndex = {
@@ -353,9 +285,7 @@ private[plans] final class BeamSearch(
   // the coarse stage's scores, one per hub
   private val hSim = new Array[Double](ix.hubs.length)
   private val hNull = new Array[Boolean](ix.hubs.length)
-  // selection heap and its ordered output (positions into a list)
-  private var heap = new Array[Int](math.max(beam, k) + 1)
-  private var sel = new Array[Int](math.max(beam, k) + 1)
+  private val best = new BestOf
   private val outId = new Array[Long](k)
   private val outSim = new Array[Any](k)
 
@@ -381,10 +311,10 @@ private[plans] final class BeamSearch(
       i += 1
     }
     scored += hubs.length
-    val nh = select(hubs, hSim, hNull, hubs.length, seeds)
+    val nh = best.select(hubs, hSim, hNull, hubs.length, seeds)
     i = 0
     while (i < nh) {
-      val p = sel(i)
+      val p = best(i)
       seen(hubs(p)) = stamp
       add(hubs(p), hSim(p), hNull(p))
       i += 1
@@ -396,10 +326,10 @@ private[plans] final class BeamSearch(
     var grew = true
     while (h < hops && grew) {
       val before = nv
-      val m = select(vNode, vSim, vNull, nv, beam)
+      val m = best.select(vNode, vSim, vNull, nv, beam)
       var j = 0
       while (j < m) {
-        val f = vNode(sel(j))
+        val f = vNode(best(j))
         if (done(f) != stamp) {
           done(f) = stamp
           var e = ix.adjOff(f)
@@ -414,10 +344,12 @@ private[plans] final class BeamSearch(
       h += 1
     }
     peak = math.max(peak, nv)
-    val m = select(vNode, vSim, vNull, nv, k, excludeSelf, qid)
+    // the query's own ordinal (negative when it is not a target)
+    val self = if (excludeSelf) java.util.Arrays.binarySearch(ix.ids, qid) else -1
+    val m = best.select(vNode, vSim, vNull, nv, k, self)
     i = 0
     while (i < m) {
-      val p = sel(i)
+      val p = best(i)
       outId(i) = ix.ids(vNode(p))
       outSim(i) = if (vNull(p)) null else vSim(p)
       i += 1
@@ -443,91 +375,8 @@ private[plans] final class BeamSearch(
     nv += 1
   }
 
-  /** [[graft.functions.CosineSimilarity]]'s arithmetic: ascending-index
-    * double accumulation over the shorter length, 0.0 against a zero norm.
-    */
-  private def cosine(q: Array[Float], t: Int): Double = {
-    val off = ix.vOff(t)
-    val n = math.min(q.length, ix.vOff(t + 1) - off)
-    val v = ix.vecs
-    var dot = 0.0; var nx = 0.0; var ny = 0.0
-    var i = 0
-    while (i < n) {
-      val xv = q(i).toDouble
-      val yv = v(off + i).toDouble
-      dot += xv * yv; nx += xv * xv; ny += yv * yv
-      i += 1
-    }
-    if (nx == 0.0 || ny == 0.0) 0.0 else dot / (math.sqrt(nx) * math.sqrt(ny))
-  }
-
-  /** Fills `sel(0 until m)` with the positions of the best `m` of the
-    * first `count` entries of (node, sim, null), best first, under
-    * (sim DESC nulls last, node ASC); with `self`, entries whose node id is
-    * `selfId` are skipped. Returns m. A bounded heap keeps the worst kept
-    * entry at its root.
-    */
-  private def select(
-      node: Array[Int], sim: Array[Double], nul: Array[Boolean], count: Int,
-      limit: Int, self: Boolean = false, selfId: Long = 0L): Int = {
-    if (heap.length < limit) { heap = new Array[Int](limit); sel = new Array[Int](limit) }
-    // a before b: non-null first, then sim descending, then node ascending
-    def before(a: Int, b: Int): Boolean = {
-      if (nul(a) != nul(b)) return nul(b)
-      if (!nul(a)) {
-        val c = SQLOrderingUtil.compareDoubles(sim(a), sim(b))
-        if (c != 0) return c > 0
-      }
-      node(a) < node(b)
-    }
-    def down(from: Int, size: Int): Unit = {
-      var p = from
-      var go = true
-      while (go) {
-        val l = 2 * p + 1
-        if (l >= size) go = false
-        else {
-          val r = l + 1
-          // the worse child
-          val c = if (r < size && before(heap(l), heap(r))) r else l
-          if (before(heap(p), heap(c))) {
-            val t = heap(p); heap(p) = heap(c); heap(c) = t; p = c
-          } else go = false
-        }
-      }
-    }
-    var size = 0
-    var i = 0
-    while (i < count) {
-      if (!(self && ix.ids(node(i)) == selfId)) {
-        if (size < limit) {
-          heap(size) = i
-          var c = size
-          size += 1
-          var up = true
-          while (up && c > 0) {
-            val p = (c - 1) / 2
-            if (before(heap(p), heap(c))) {
-              val t = heap(p); heap(p) = heap(c); heap(c) = t; c = p
-            } else up = false
-          }
-        } else if (limit > 0 && before(i, heap(0))) {
-          heap(0) = i
-          down(0, size)
-        }
-      }
-      i += 1
-    }
-    // pop worst-first into the back of `sel`
-    var j = size - 1
-    while (j >= 0) {
-      sel(j) = heap(0)
-      heap(0) = heap(j)
-      down(0, j)
-      j -= 1
-    }
-    size
-  }
+  private def cosine(q: Array[Float], t: Int): Double =
+    IndexKit.cosine(q, 0, q.length, ix.vecs, ix.vOff(t), ix.vOff(t + 1) - ix.vOff(t))
 }
 
 object GraphSearchStrategy extends SparkStrategy {

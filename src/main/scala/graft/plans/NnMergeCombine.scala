@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.metric.SQLMetric
 import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType}
 
@@ -33,9 +34,10 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType}
   *
   * Memory is bounded by rows, not keys (the TopKPerKeyExec lesson: a
   * partition upstream of the exchange can see the whole key domain) —
-  * at `spark.graft.topk.flushRows` buffered entries every per-id map is
-  * emitted and the state reset; dedup/top-k quality degrades gracefully
-  * toward pass-through, output stays a correct superset per epoch.
+  * at `spark.graft.topk.flushRows` ([[FlushRows]]) buffered entries the
+  * epoch is emitted and the state reset; dedup/top-k quality degrades
+  * gracefully toward pass-through, output stays a correct superset per
+  * epoch. The `flushes` metric counts the epochs.
   */
 case class NnMergePlan(k: Int, cols: Seq[Attribute], child: LogicalPlan)
     extends UnaryNode {
@@ -51,6 +53,8 @@ case class NnMergePlan(k: Int, cols: Seq[Attribute], child: LogicalPlan)
 
 case class NnMergeExec(k: Int, child: SparkPlan) extends UnaryExecNode {
   override def output: Seq[Attribute] = child.output
+
+  override lazy val metrics: Map[String, SQLMetric] = FlushRows.metrics(sparkContext)
 
   // partition-local row dropper: partitioning passes through
   override def outputPartitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning =
@@ -73,7 +77,8 @@ case class NnMergeExec(k: Int, child: SparkPlan) extends UnaryExecNode {
     val limit = k
     val types = child.output.map(_.dataType).toArray
     val nCols = types.length
-    val flushRows = conf.getConfString("spark.graft.topk.flushRows", "262144").toInt
+    val flushRows = FlushRows(conf)
+    val Seq(mIn, mOut, mFlushes) = Seq("numRowsIn", "numOutputRows", "numFlushes").map(metrics)
     child.execute().mapPartitions { iter =>
       val proj = UnsafeProjection.create(types)
       // Primitive column buffers + an index sort — the first cut of this
@@ -86,13 +91,13 @@ case class NnMergeExec(k: Int, child: SparkPlan) extends UnaryExecNode {
       // deterministic cosine invariant this combiner documents and its
       // spec pins) — so one linear scan dedups (AND-ing fresh) and keeps
       // the first `k` distinct neighbors per id, allocation-free until
-      // the bounded emit.
-      val ids = new Array[Long](flushRows)
-      val nbrs = new Array[Long](flushRows)
-      val sims = new Array[Double](flushRows)
-      val frs = new Array[Boolean](flushRows)
-      val perm = new Array[Int](flushRows)
+      // the bounded emit. The buffers grow on demand up to `flushRows`.
       new Iterator[InternalRow] {
+        private var ids = new Array[Long](math.min(flushRows, 1024))
+        private var nbrs = new Array[Long](ids.length)
+        private var sims = new Array[Double](ids.length)
+        private var frs = new Array[Boolean](ids.length)
+        private var perm = new Array[Int](ids.length)
         private var nBuf = 0
         private var out: java.util.Iterator[InternalRow] =
           java.util.Collections.emptyIterator()
@@ -171,11 +176,21 @@ case class NnMergeExec(k: Int, child: SparkPlan) extends UnaryExecNode {
             }
             i = j
           }
+          mIn += n; mOut += all.size; mFlushes += 1
           nBuf = 0
           out = all.iterator()
         }
+        private def grow(): Unit = {
+          val len = math.min(flushRows.toLong, 2L * ids.length).toInt
+          ids = java.util.Arrays.copyOf(ids, len)
+          nbrs = java.util.Arrays.copyOf(nbrs, len)
+          sims = java.util.Arrays.copyOf(sims, len)
+          frs = java.util.Arrays.copyOf(frs, len)
+          perm = new Array[Int](len)
+        }
         private def pump(): Unit = {
           while (iter.hasNext && nBuf < flushRows) {
+            if (nBuf == ids.length) grow()
             val row = iter.next()
             ids(nBuf) = row.getLong(idOrd)
             nbrs(nBuf) = row.getLong(nbrOrd)

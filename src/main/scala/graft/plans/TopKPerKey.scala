@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
@@ -10,6 +11,8 @@ import org.apache.spark.sql.catalyst.expressions.{
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.types.LongType
 
@@ -76,14 +79,16 @@ case class TopKPerKeyExec(
   override def outputPartitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning =
     child.outputPartitioning
 
+  override lazy val metrics: Map[String, SQLMetric] = FlushRows.metrics(sparkContext)
+
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output
     val keyExprs = keys
     val sortOrder = order
     val limit = k
     val isPartial = partial
-    val flushRows = conf.getConfString("spark.graft.topk.flushRows", "262144").toInt
-    require(flushRows >= 1, "spark.graft.topk.flushRows must be >= 1")
+    val flushRows = FlushRows(conf)
+    val Seq(mIn, mOut, mFlushes) = Seq("numRowsIn", "numOutputRows", "numFlushes").map(metrics)
     child.execute().mapPartitions { iter =>
       val keyProj = UnsafeProjection.create(keyExprs, childOutput)
       val ordering = GenerateOrdering.generate(sortOrder, childOutput)
@@ -120,12 +125,15 @@ case class TopKPerKeyExec(
           private var out: java.util.Iterator[InternalRow] =
             java.util.Collections.emptyIterator()
           private def pump(): Unit = {
+            var read = 0L
             while (iter.hasNext && nBuf < flushRows) {
               if (insert(iter.next())) nBuf += 1
+              read += 1
             }
             val all = new java.util.ArrayList[InternalRow](nBuf)
             heaps.values().forEach(h => all.addAll(h))
             heaps.clear(); nBuf = 0
+            mIn += read; mOut += all.size; mFlushes += 1
             out = all.iterator()
           }
           override def hasNext: Boolean = {
@@ -138,7 +146,11 @@ case class TopKPerKeyExec(
           }
         }
       } else {
-        iter.foreach(insert)
+        var read = 0L
+        iter.foreach { r => insert(r); read += 1 }
+        mIn += read
+        if (read > 0) mFlushes += 1
+        heaps.values().forEach(h => mOut += h.size)
         val resultProj = UnsafeProjection.create(
           childOutput :+ rankAttr, childOutput :+ rankAttr)
         val joined = new JoinedRow
@@ -157,6 +169,28 @@ case class TopKPerKeyExec(
 
   override protected def withNewChildInternal(newChild: SparkPlan): TopKPerKeyExec =
     copy(child = newChild)
+}
+
+/** `spark.graft.topk.flushRows`: how many rows a map-side combiner
+  * ([[TopKPerKeyExec]]'s partial stage, [[NnMergeExec]]) buffers before it
+  * emits its state and starts afresh — the bound on its memory. Below 1
+  * nothing could be buffered and a partition's rows would be dropped, so
+  * such a value fails by name. Both execs publish the same metrics: rows
+  * in, rows out and flushes (emits of buffered state that had input).
+  */
+private[plans] object FlushRows {
+  val Key = "spark.graft.topk.flushRows"
+
+  def apply(conf: SQLConf): Int = {
+    val v = conf.getConfString(Key, "262144").toInt
+    require(v >= 1, s"$Key must be >= 1, got $v")
+    v
+  }
+
+  def metrics(sc: SparkContext): Map[String, SQLMetric] = Map(
+    "numRowsIn" -> SQLMetrics.createMetric(sc, "rows in"),
+    "numOutputRows" -> SQLMetrics.createMetric(sc, "number of output rows"),
+    "numFlushes" -> SQLMetrics.createMetric(sc, "flushes"))
 }
 
 /** Plans [[TopKPerKeyPlan]] as partial-then-final [[TopKPerKeyExec]].

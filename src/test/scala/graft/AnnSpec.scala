@@ -190,6 +190,34 @@ class AnnSpec extends SparkSpec {
     assert(g.count() > 0)
   }
 
+  test("NN-Descent parameters fail by name in all three entry points") {
+    val tiny = emb.filter(col("vec_id") < 20)
+    def named(what: String)(run: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](run)
+      assert(e.getMessage.contains(what), e.getMessage)
+    }
+    named("k must be >= 1, got 0")(NnDescent.knnGraph(tiny, "vec_id", "embedding", k = 0))
+    named("iters must be >= 1, got 0")(
+      NnDescent.knnGraph(tiny, "vec_id", "embedding", k = 2, iters = 0))
+    named("kBuild must be >= k (3), got 2")(
+      NnDescent.knnGraph(tiny, "vec_id", "embedding", k = 3, kBuild0 = 2))
+    named("cap must exceed kBuild (4), got 4")(
+      NnDescent.knnGraph(tiny, "vec_id", "embedding", k = 2, cap0 = 4))
+    val g = spark.createDataFrame(Seq((1L, 2L, 0.5))).toDF("id", "nbr", "sim")
+    named("cap must exceed kBuild (4), got 3")(
+      NnDescent.addVectors(g, tiny, tiny, "vec_id", "embedding", k = 2, cap0 = 3))
+    named("iters must be >= 1, got 0")(
+      NnDescent.removeVectors(g, tiny, tiny.select("vec_id"), "vec_id", "embedding", k = 2,
+        iters = 0))
+  }
+
+  test("knnGraph over an empty corpus returns an empty graph") {
+    val g = NnDescent.knnGraph(emb.filter(lit(false)), "vec_id", "embedding", k = 3)
+    assert(g.columns.toSeq == Seq("id", "nbr", "sim"))
+    assert(g.schema.map(_.dataType.typeName) == Seq("long", "long", "double"))
+    assert(g.count() == 0)
+  }
+
   test("VectorIndex: persisted IVF-PQ round-trips and serves the inline results") {
     import graft.operators.ann.{Pq, VectorIndex}
     val corpus = emb.select(col("vec_id"), col("embedding"))
@@ -263,16 +291,18 @@ class AnnSpec extends SparkSpec {
     assert(sims.forall(r => !r.getDouble(2).isNaN))
     assert(sims.filter(r => r.getLong(0) == 1L || r.getLong(1) == 1L)
       .forall(_.getDouble(2) == 0.0))
-    // block kernel: a zero-norm member must not emit NaN pairs
-    val block = df
-      .select(struct(col("id").as("nbr"), lit(true).as("fresh"),
-        col("v")).as("m"))
-      .agg(collect_list(col("m")).as("members"))
-      .select(explode(graft.functions.PairwiseCosine(col("members"))).as("p"))
-      .select(col("p.x"), col("p.y"), col("p.sim")).collect()
-    assert(block.length == 3)
+    // descent round: a zero-norm member must not propose NaN edges. Node 0
+    // (no vector) holds all three in one fresh neighbourhood, so each
+    // unordered pair is proposed in both directions
+    val hood = Seq((0L, 1L, 0.5, true), (0L, 2L, 0.5, true), (0L, 3L, 0.5, true))
+      .toDF("id", "nbr", "sim", "fresh")
+    val block = graft.plans.DescentRound(hood, df, 1, kBuild = 3, cap = 4)
+      .filter(col("id") =!= 0L).collect()
+    assert(block.length == 6)
+    assert(block.map(r => (r.getLong(0) min r.getLong(1), r.getLong(0) max r.getLong(1)))
+      .distinct.length == 3)
     assert(block.forall(r => !r.getDouble(2).isNaN))
-    assert(block.filter(r => r.getLong(0) == 1L)
+    assert(block.filter(r => r.getLong(0) == 1L || r.getLong(1) == 1L)
       .forall(_.getDouble(2) == 0.0))
   }
 
@@ -286,10 +316,10 @@ class AnnSpec extends SparkSpec {
       dbl.select(graft.functions.CosineSimilarity(col("v"), col("v"))))
     assert(scalar.getMessage.contains("cosine_sim requires array<float> inputs, got array<double>"),
       scalar.getMessage)
-    val block = intercept[org.apache.spark.sql.AnalysisException](
-      dbl.select(graft.functions.PairwiseCosine(
-        array(struct(col("id").as("nbr"), lit(true).as("fresh"), col("v"))))))
-    assert(block.getMessage.contains("pairwise_cosine requires"), block.getMessage)
+    val block = intercept[IllegalArgumentException](graft.plans.DescentRound(
+      Seq((1L, 2L, 0.5, true)).toDF("id", "nbr", "sim", "fresh"), dbl, 1, kBuild = 1, cap = 2))
+    assert(block.getMessage.contains("NN-Descent requires array<float> vectors, got array<double>"),
+      block.getMessage)
     val search = intercept[IllegalArgumentException](NnDescent.searchGraph(dbl,
       Seq((1L, 2L)).toDF("id", "nbr"), dbl, "id", "v", k = 1, beam = 1, hops = 1, seeds = 1))
     assert(search.getMessage.contains("searchGraph requires array<float> query vectors, got array<double>"),

@@ -327,6 +327,24 @@ class FunctionsSpec extends SparkSpec {
       beam = 1, hops = 1, seeds = 1)
     assert(plans(searched).exists(_.isInstanceOf[graft.plans.GraphSearchExec]),
       searched.queryExecution.executedPlan.toString)
+    // a descent round runs inside knnGraph's loop, whose frames are
+    // checkpoints: find the exec in the plans the build executed
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = executed.add(qe.executedPlan)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val corpus = (1L to 8L).map(i => (i, Array(i.toFloat, 1f / i))).toDF("id", "v")
+      graft.operators.ann.NnDescent.knnGraph(corpus, "id", "v", 1, iters = 1).collect()
+      org.apache.spark.graft.ListenerDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    assert(executed.asScala.exists(p => flatten(p).exists(_.isInstanceOf[graft.plans.DescentRoundExec])),
+      executed.asScala.mkString("\n"))
     assert(spark.experimental.extraStrategies.isEmpty)
     GraftExtensions.all.foreach { case (id, _, _) =>
       assert(spark.catalog.functionExists(id.funcName), id.funcName)
@@ -571,26 +589,28 @@ class FunctionsSpec extends SparkSpec {
       .filter(col("y").isNull).count() == 1)
   }
 
-  test("pairwise_cosine block kernel: exact sims, fresh-rule pair set") {
-    // The NN-Descent local-join kernel must emit exactly the unordered
-    // pairs touching a fresh member, with sims bit-identical to the scalar
-    // CosineSimilarity expression on the same vectors.
-    import graft.functions.PairwiseCosine
+  test("descent round exec: exact sims, fresh-rule pair set") {
+    // NN-Descent's local join must propose exactly the member pairs that
+    // touch a fresh member, with sims bit-identical to the scalar
+    // CosineSimilarity expression on the same vectors. Node -1 (no vector)
+    // holds the 12 members in one neighbourhood; kBuild = 12 keeps every
+    // proposal a member receives.
     val emb = Tables(spark, sfDir, "embeddings").limit(12)
       .select(col("vec_id").cast("long").as("id"), col("embedding").as("v"))
       .withColumn("fresh", pmod(col("id"), lit(3)) === 0)
       .localCheckpoint(true)
-    val block = emb
-      .groupBy(lit(1).as("grp"))
-      .agg(collect_list(struct(col("id").as("nbr"), col("fresh"), col("v"))).as("members"))
-    val pairs = block
-      .select(explode(PairwiseCosine(col("members"))).as("p"))
-      .select(col("p.x"), col("p.y"), col("p.sim"))
-    // pair set: x < y, at least one endpoint fresh
+    val hood = emb.select(lit(-1L).as("id"), col("id").as("nbr"), lit(0.0).as("sim"),
+      col("fresh"))
+    val pairs = graft.plans.DescentRound(hood, emb.select("id", "v"), 1, kBuild = 12, cap = 13)
+      .filter(col("id") =!= -1L)
+      .select(col("id").as("x"), col("nbr").as("y"), col("sim"), col("fresh"))
+      .localCheckpoint(true)
+    assert(pairs.filter(!col("fresh")).count() == 0, "a proposal entered stale")
+    // pair set: both directions of every unordered pair with a fresh endpoint
     val ids = emb.select("id", "fresh").collect().map(r => (r.getLong(0), r.getBoolean(1)))
     val expected = (for {
       (a, fa) <- ids; (b, fb) <- ids
-      if a < b && (fa || fb)
+      if a != b && (fa || fb)
     } yield (a, b)).toSet
     val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == expected, s"pair set mismatch: ${got.size} vs ${expected.size}")
@@ -599,6 +619,6 @@ class FunctionsSpec extends SparkSpec {
       .join(emb.select(col("id").as("x"), col("v").as("vx")), "x")
       .join(emb.select(col("id").as("y"), col("v").as("vy")), "y")
       .filter(col("sim") =!= CosineSimilarity(col("vx"), col("vy")))
-    assert(recomputed.count() == 0, "block kernel sims differ from scalar cosine")
+    assert(recomputed.count() == 0, "descent round sims differ from scalar cosine")
   }
 }

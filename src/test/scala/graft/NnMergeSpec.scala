@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.{NnMerge, TopK}
+import graft.plans.{NnMerge, NnMergeExec, TopK, TopKPerKeyExec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.util.Random
@@ -69,14 +69,55 @@ class NnMergeSpec extends SparkSpec {
       val df = randomEdges(11, nIds = 9, nRows = 500).repartition(4)
         .localCheckpoint(true)
       val ref = mergeReference(df, 3)
-      val got = viaCombine(df, 3)
+      val got = viaCombine(df, 3).localCheckpoint(false)
       assert(got.exceptAll(ref).isEmpty && ref.exceptAll(got).isEmpty)
+      // the memory bound, tested: no epoch buffered more than 7 rows
+      val m = combineMetrics(viaCombine(df, 3))
+      assert(m("numRowsIn") == 500)
+      assert(m("numFlushes") > 1 && m("numRowsIn") <= 7 * m("numFlushes"), m)
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.graft.topk.flushRows", v)
         case None => spark.conf.unset("spark.graft.topk.flushRows")
       }
     }
+  }
+
+  /** The combiner's metrics after `df` has run. */
+  private def combineMetrics(df: DataFrame): Map[String, Long] = {
+    df.collect()
+    executedNodes(df).collectFirst { case e: NnMergeExec => e }.get
+      .metrics.map { case (n, m) => n -> m.value }
+  }
+
+  test("rows in, rows out and flushes are published by both combiners") {
+    val df = randomEdges(21, nIds = 4, nRows = 800).coalesce(1).localCheckpoint(true)
+    val combined = NnMerge.combine(df, 5)
+    val m = combineMetrics(combined)
+    assert(m("numRowsIn") == 800 && m("numFlushes") == 1, m)
+    assert(m("numOutputRows") == combined.count(), m)
+    val top = TopK.perKey(df, Seq("id"), "sim", 2, tieCols = Seq("nbr"))
+    top.collect()
+    val Seq(partial, last) = executedNodes(top).collect { case e: TopKPerKeyExec => e }
+      .sortBy(!_.partial).map(_.metrics.map { case (n, m) => n -> m.value })
+    assert(partial("numRowsIn") == 800 && partial("numFlushes") == 1, partial)
+    assert(partial("numOutputRows") <= 4 * 2 * 10, partial)
+    assert(last("numRowsIn") == partial("numOutputRows"), last)
+    assert(last("numOutputRows") == top.count(), last)
+  }
+
+  test("flushRows below 1 fails by name in both combiners") {
+    val df = randomEdges(3, nIds = 4, nRows = 50)
+    spark.conf.set("spark.graft.topk.flushRows", "0")
+    try {
+      for (run <- Seq(() => NnMerge.combine(df, 2).collect(),
+          () => TopK.perKey(df, Seq("id"), "sim", 2).collect())) {
+        val e = intercept[Exception](run())
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+        assert(msgs.exists(m => m != null && m.contains("spark.graft.topk.flushRows must be >= 1, got 0")),
+          e.toString)
+      }
+    } finally spark.conf.unset("spark.graft.topk.flushRows")
   }
 
   test("combiner bounds per-partition output to ids·k deduplicated rows") {

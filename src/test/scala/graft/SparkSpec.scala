@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,6 +10,16 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Every node of `df`'s executed plan, through adaptive query stages. */
+  def executedNodes(df: DataFrame): Seq[SparkPlan] = {
+    def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
+      case q: QueryStageExec => flatten(q.plan)
+      case other => other.children.flatMap(flatten)
+    })
+    flatten(df.queryExecution.executedPlan)
+  }
 }
 
 object SparkSpec {

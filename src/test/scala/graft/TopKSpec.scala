@@ -96,9 +96,16 @@ class TopKSpec extends SparkSpec {
     val unflushed = run().collect().toSet
     spark.conf.set("spark.graft.topk.flushRows", "16")
     try {
-      val flushed = run().collect().toSet
+      val res = run()
+      val flushed = res.collect().toSet
       assert(flushed == unflushed,
         s"flush path changed results: ${flushed.size} vs ${unflushed.size}")
+      // the memory bound, tested: each epoch emits the ≤ 16 rows it buffered
+      val partial = executedNodes(res).collectFirst {
+        case e: graft.plans.TopKPerKeyExec if e.partial => e.metrics.map { case (n, m) => n -> m.value }
+      }.get
+      assert(partial("numFlushes") > 1 &&
+        partial("numOutputRows") <= 16 * partial("numFlushes"), partial)
     } finally spark.conf.unset("spark.graft.topk.flushRows")
   }
 }

@@ -27,6 +27,13 @@ sbt -batch "runMain graft.Verify $SF $OUT" > /tmp/roundclose_verify.log 2>&1 \
 [ "$(cat "$OUT/errors.json" 2>/dev/null)" = "{}" ] \
   || { cat "$OUT/errors.json" 2>/dev/null; fail "graft.Verify recorded query errors"; }
 
+# A gate whose check fails names it on stderr (graft.Gate.all):
+#   graft: gate <query> check <check> failed
+# Fail on those here, by name, before the oracle compare reports the same
+# failure as a pinned-true row that reads false.
+grep -E "^graft: gate [a-z0-9_]+ check .+ failed$" /tmp/roundclose_verify.log \
+  && fail "gate checks failed (listed above)"
+
 echo "== roundclose: dev/check.py (DuckDB oracle) =="
 python3 dev/check.py "$SF" "$OUT" > /tmp/roundclose_check.log 2>&1 \
   || { tail -40 /tmp/roundclose_check.log; fail "oracle check failed"; }

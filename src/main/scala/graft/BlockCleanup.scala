@@ -136,5 +136,8 @@ object BlockCleanup {
   }
 
   private[graft] def loud(what: String, e: Throwable): Unit =
-    System.err.println(s"graft: $what failed: ${e.getClass.getName}: ${e.getMessage}")
+    loud(s"$what failed: ${e.getClass.getName}: ${e.getMessage}")
+
+  /** One stderr line, `graft: <line>`: failures that must not pass silently. */
+  private[graft] def loud(line: String): Unit = System.err.println(s"graft: $line")
 }

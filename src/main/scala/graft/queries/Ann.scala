@@ -1,8 +1,8 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{Gate, QueryDef, Tables}
 import graft.operators.ann.Knn
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Similarity search / approximate-nearest-neighbor family over the
@@ -171,23 +171,30 @@ object Ann {
     * grading every family against an adversarial lower bound (the exact
     * failure mode dev/NOTES.md r14 documents).
     */
-  private def knnRecallGate(
-      approx: (SparkSession, String) => DataFrame, minRecall: Double,
-      minRecallClustered: Double = 0.9)(
-      s: SparkSession, dir: String): DataFrame = {
+  private def recallDef(name: String, approx: (SparkSession, String) => DataFrame,
+      minRecall: Double, warm: Boolean = false) = QueryDef(name, (s, dir) => {
     import s.implicits._
     val (bruteTop, _) = graft.Ckpt.settle(knnBrute(s, dir)).head
-    val brute = bruteTop.select("query_id", "neighbor_id")
-    val top1 = bruteTop.filter(col("rank") === 1)
-      .agg(avg("sim_r")).head().getDouble(0)
-    val clustered = top1 >= 0.8
-    val regime = if (clustered) "clustered" else "uniform"
-    val floor = if (clustered) minRecallClustered else minRecall
-    val found = approx(s, dir).select("query_id", "neighbor_id")
-    val nBrute = brute.count()
-    val nHit = brute.join(found, Seq("query_id", "neighbor_id"), "left_semi").count()
-    Seq((nBrute, regime, nHit.toDouble / nBrute >= floor))
+    Seq(recallCheck(name, bruteTop, col("sim_r"), approx(s, dir), minRecall))
       .toDF("n_brute", "regime", "recall_ok")
+  }, Some(knnRecallGateSql), warm = warm)
+
+  /** The recall check of every ANN gate. The regime is read off the
+    * brute-force truth `bruteTop` (query_id, neighbor_id, rank): a mean
+    * top-1 `top1Sim` ≥ 0.8 is "clustered" with floor 0.9, else "uniform"
+    * with `uniformFloor`. Returns (truth pairs, regime, whether `found`
+    * recovers the floor's share of them).
+    */
+  private def recallCheck(gate: String, bruteTop: DataFrame, top1Sim: Column,
+      found: DataFrame, uniformFloor: Double): (Long, String, Boolean) = {
+    val top1 = bruteTop.filter(col("rank") === 1).agg(avg(top1Sim)).head().getDouble(0)
+    val (regime, floor) = if (top1 >= 0.8) ("clustered", 0.9) else ("uniform", uniformFloor)
+    val brute = bruteTop.select("query_id", "neighbor_id")
+    val nBrute = brute.count()
+    val nHit = brute.join(found.select("query_id", "neighbor_id"),
+      Seq("query_id", "neighbor_id"), "left_semi").count()
+    (nBrute, regime,
+      Gate.all(gate)(s"${regime}_recall_$floor" -> (nHit.toDouble / nBrute >= floor)))
   }
 
   /** Oracle twin: brute-force truth size is 5 per query (any corpus bigger
@@ -271,7 +278,8 @@ object Ann {
     val g = graft.operators.ann.GraphIndex.load(s, rebuildGraphIndex(s, dir))
     val nIds = g.filter(!col("long")).select("id").distinct().count()
     val n = Tables(s, dir, "embeddings").count()
-    Seq((nIds, nIds == n)).toDF("n_nodes", "covered")
+    Seq((nIds, Gate.all("dx_knn_graph_index")("every_node_indexed" -> (nIds == n))))
+      .toDF("n_nodes", "covered")
   }
 
   private val knnGraphIndexSql =
@@ -347,26 +355,16 @@ object Ann {
   /** Reduced-corpus recall gate for the deletion path: brute-force truth
     * recomputed over corpus ∖ removed (the post-delete contract — a
     * deleted vector must neither be returned nor considered truth), same
-    * regime derivation and per-regime floors as [[knnRecallGate]].
+    * regime derivation and per-regime floors as [[recallDef]].
     */
-  private def knnGraphDelGate(minRecall: Double,
-      minRecallClustered: Double = 0.9)(
-      s: SparkSession, dir: String): DataFrame = {
+  private def knnGraphDelGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables(s, dir, "embeddings")
     val kept = emb.filter(col("vec_id") % 5 =!= 2)
     val (bruteTop, _) = graft.Ckpt.settle(Knn.bruteForce(kept.filter(col("vec_id") < 10), kept,
         "vec_id", "embedding", k = 5)).head
-    val brute = bruteTop.select("query_id", "neighbor_id")
-    val top1 = bruteTop.filter(col("rank") === 1)
-      .agg(avg(round(col("sim"), 6))).head().getDouble(0)
-    val clustered = top1 >= 0.8
-    val regime = if (clustered) "clustered" else "uniform"
-    val floor = if (clustered) minRecallClustered else minRecall
-    val found = knnGraphDel(s, dir).select("query_id", "neighbor_id")
-    val nBrute = brute.count()
-    val nHit = brute.join(found, Seq("query_id", "neighbor_id"), "left_semi").count()
-    Seq((nBrute, regime, nHit.toDouble / nBrute >= floor))
+    Seq(recallCheck("dx_knn_graph_del_recall", bruteTop, round(col("sim"), 6),
+        knnGraphDel(s, dir), uniformFloor = 0.7))
       .toDF("n_brute", "regime", "recall_ok")
   }
 
@@ -392,7 +390,8 @@ object Ann {
     val nCodes = codes.filter(size(col("codes")) === model.cb.length)
       .select("neighbor_id").distinct().count()
     val n = Tables(s, dir, "embeddings").count()
-    Seq((nCodes, nCodes == n)).toDF("n_codes", "covered")
+    Seq((nCodes, Gate.all("dx_knn_ivfpq_index")("every_vector_coded" -> (nCodes == n))))
+      .toDF("n_codes", "covered")
   }
 
   private val knnIvfPqIndexSql =
@@ -447,7 +446,8 @@ object Ann {
     val nCodes = codes.filter(size(col("tc")) === model.lo.length)
       .select("neighbor_id").distinct().count()
     val n = Tables(s, dir, "embeddings").count()
-    Seq((nCodes, nCodes == n)).toDF("n_codes", "covered")
+    Seq((nCodes, Gate.all("dx_knn_ivfsq_index")("every_vector_coded" -> (nCodes == n))))
+      .toDF("n_codes", "covered")
   }
 
   private val knnIvfSqIndexSql =
@@ -477,21 +477,26 @@ object Ann {
     * the same equality through a real MemoryStream + foreachBatch.
     */
   private def vecServeGate(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val emb = Tables(s, dir, "embeddings")
     val path = ensureSqIndex(s, dir)
+    microEqualsBatch(s, "st_vec_serve_gate", emb)(qs =>
+      graft.operators.ann.VectorIndex.searchSq(qs, path, emb, "vec_id", "embedding", k = 5))
+  }
+
+  /** A serving gate's one check: `search` over the queries `vec_id < 12`
+    * of `emb`, run once whole and once as three disjoint micro-batches,
+    * gives the same (query, neighbor, rank, sim to 9 decimals) rows.
+    */
+  private def microEqualsBatch(s: SparkSession, gate: String, emb: DataFrame)(
+      search: DataFrame => DataFrame): DataFrame = {
+    import s.implicits._
     val queries = emb.filter(col("vec_id") < 12)
-    def serve(qs: DataFrame): DataFrame =
-      graft.operators.ann.VectorIndex.searchSq(
-          qs, path, emb, "vec_id", "embedding", k = 5)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 9).as("s"))
-    val Seq((full, _), (micro, _)) = graft.Ckpt.settle(serve(queries),
-      (0 until 3)
-        .map(i => serve(queries.filter(col("vec_id") % 3 === i)))
-        .reduce(_ unionByName _))
-    val equal = micro.exceptAll(full).count() == 0 &&
-      full.exceptAll(micro).count() == 0
+    def serve(qs: DataFrame): DataFrame = search(qs)
+      .select(col("query_id"), col("neighbor_id"), col("rank"), round(col("sim"), 9).as("s"))
+    val micro = (0 until 3)
+      .map(i => serve(queries.filter(col("vec_id") % 3 === i)))
+      .reduce(_ unionByName _)
+    val equal = Gate.all(gate)("micro_equals_batch" -> Gate.sameRows(micro, serve(queries)))
     Seq((queries.count(), equal)).toDF("n_queries", "batch_equal_ok")
   }
 
@@ -632,19 +637,11 @@ object Ann {
     val queries = emb.filter(col("id") < 5 * 1024L)
     val (bruteTop, _) =
       graft.Ckpt.settle(Knn.bruteForce(queries, emb, "id", "embedding", k = 5)).head
-    val brute = bruteTop.select("query_id", "neighbor_id")
-    val top1 = bruteTop.filter(col("rank") === 1)
-      .agg(avg(round(col("sim"), 6))).head().getDouble(0)
-    val clustered = top1 >= 0.8
-    val regime = if (clustered) "clustered" else "uniform"
-    val floor = if (clustered) 0.9 else 0.7
-    val served = ragServe(emb, ensureRagIndex(s, dir))
-      .select("query_id", "neighbor_id")
+    val (_, regime, recallOk) = recallCheck("dx_rag_e2e_gate", bruteTop, round(col("sim"), 6),
+      ragServe(emb, ensureRagIndex(s, dir)), uniformFloor = 0.7)
     val nChunks = emb.count()
     val nQueries = queries.select("id").distinct().count()
-    val nBrute = brute.count()
-    val nHit = brute.join(served, Seq("query_id", "neighbor_id"), "left_semi").count()
-    Seq((nChunks, nQueries, regime, nHit.toDouble / nBrute >= floor))
+    Seq((nChunks, nQueries, regime, recallOk))
       .toDF("n_chunks", "n_queries", "regime", "recall_ok")
   }
 
@@ -665,7 +662,7 @@ object Ann {
     * batch twin): the same beam search over the same persisted index, run
     * once over the full query set and once as three disjoint micro-batches
     * — the union of micro-batch outputs must be BIT-IDENTICAL to the batch
-    * answer (multiset equality via exceptAll both ways, executor-side).
+    * answer (multiset equality through `Gate.sameRows`, executor-side).
     * This is the property that makes foreachBatch serving correct:
     * searchGraph searches each query row on its own against the broadcast
     * index, so micro-batching is value-neutral. The recall of the serve path itself is pinned
@@ -674,23 +671,11 @@ object Ann {
     * real MemoryStream + foreachBatch.
     */
   private def annServeGate(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val emb = Tables(s, dir, "embeddings")
     val g = graft.operators.ann.GraphIndex.load(s, ensureGraphIndex(s, dir))
-    val queries = emb.filter(col("vec_id") < 12)
-    def serve(qs: DataFrame): DataFrame =
+    microEqualsBatch(s, "st_ann_serve_gate", emb)(qs =>
       graft.operators.ann.NnDescent.searchGraph(
-          qs, g, emb, "vec_id", "embedding", k = 5, beam = 32, hops = 3,
-          seeds = 8)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 9).as("s"))
-    val Seq((full, _), (micro, _)) = graft.Ckpt.settle(serve(queries),
-      (0 until 3)
-        .map(i => serve(queries.filter(col("vec_id") % 3 === i)))
-        .reduce(_ unionByName _))
-    val equal = micro.exceptAll(full).count() == 0 &&
-      full.exceptAll(micro).count() == 0
-    Seq((queries.count(), equal)).toDF("n_queries", "batch_equal_ok")
+        qs, g, emb, "vec_id", "embedding", k = 5, beam = 32, hops = 3, seeds = 8))
   }
 
   private val annServeGateSql =
@@ -735,18 +720,13 @@ object Ann {
     val covered = g.select("id").distinct().count()
     val (bruteTop, _) = graft.Ckpt.settle(Knn.bruteForce(emb.filter(col("vec_id") < 10), emb,
         "vec_id", "embedding", k = 5)).head
-    val top1 = bruteTop.filter(col("rank") === 1)
-      .agg(avg(round(col("sim"), 6))).head().getDouble(0)
-    val clustered = top1 >= 0.8
-    val regime = if (clustered) "clustered" else "uniform"
-    val floor = if (clustered) 0.9 else 0.7
-    val brute = bruteTop.select("query_id", "neighbor_id")
     val got = graft.plans.TopK.perKey(g.filter(col("id") < 10), Seq("id"),
         "sim", 5, tieCols = Seq("nbr"))
       .select(col("id").as("query_id"), col("nbr").as("neighbor_id"))
-    val nBrute = brute.count()
-    val nHit = brute.join(got, Seq("query_id", "neighbor_id"), "left_semi").count()
-    Seq((n, covered == n, regime, nHit.toDouble / nBrute >= floor))
+    val (_, regime, recallOk) = recallCheck("st_ann_maintain_gate", bruteTop,
+      round(col("sim"), 6), got, uniformFloor = 0.7)
+    Seq((n, Gate.all("st_ann_maintain_gate")("every_vector_has_edges" -> (covered == n)),
+      regime, recallOk))
       .toDF("n_vectors", "covered", "regime", "recall_ok")
   }
 
@@ -760,38 +740,38 @@ object Ann {
     QueryDef("dx_knn_brute", knnBrute, Some(knnBruteSql)),
     QueryDef("dx_knn_lsh", knnLsh, None),
     QueryDef("dx_knn_ivf", knnIvf, None),
-    QueryDef("dx_knn_lsh_recall", knnRecallGate(knnLsh, 0.3), Some(knnRecallGateSql)),
-    QueryDef("dx_knn_ivf_recall", knnRecallGate(knnIvf, 0.6), Some(knnRecallGateSql)),
+    recallDef("dx_knn_lsh_recall", knnLsh, 0.3),
+    recallDef("dx_knn_ivf_recall", knnIvf, 0.6),
     QueryDef("dx_knn_pq", knnPq, None),
-    QueryDef("dx_knn_pq_recall", knnRecallGate(knnPq, 0.6), Some(knnRecallGateSql)),
+    recallDef("dx_knn_pq_recall", knnPq, 0.6),
     QueryDef("dx_knn_opq", knnOpq, None),
-    QueryDef("dx_knn_opq_recall", knnRecallGate(knnOpq, 0.6), Some(knnRecallGateSql)),
+    recallDef("dx_knn_opq_recall", knnOpq, 0.6),
     QueryDef("dx_knn_graph", knnGraphNnd, None),
-    QueryDef("dx_knn_graph_recall", knnRecallGate(knnGraphNnd, 0.7), Some(knnRecallGateSql)),
+    recallDef("dx_knn_graph_recall", knnGraphNnd, 0.7),
     QueryDef("dx_knn_graph_search", knnGraphSearch, None),
-    QueryDef("dx_knn_graph_search_recall", knnRecallGate(knnGraphSearch, 0.7), Some(knnRecallGateSql)),
+    recallDef("dx_knn_graph_search_recall", knnGraphSearch, 0.7),
     QueryDef("dx_knn_graph_index", knnGraphIndex, Some(knnGraphIndexSql)),
     QueryDef("dx_knn_graph_serve", knnGraphServe, None, warm = true),
-    QueryDef("dx_knn_graph_serve_recall", knnRecallGate(knnGraphServe, 0.7), Some(knnRecallGateSql), warm = true),
+    recallDef("dx_knn_graph_serve_recall", knnGraphServe, 0.7, warm = true),
     QueryDef("dx_knn_graph_incr", knnGraphIncr, None),
     QueryDef("dx_knn_graph_del", knnGraphDel, None),
-    QueryDef("dx_knn_graph_del_recall", knnGraphDelGate(0.7), Some(knnGraphDelGateSql)),
+    QueryDef("dx_knn_graph_del_recall", knnGraphDelGate, Some(knnGraphDelGateSql)),
     QueryDef("st_ann_serve_gate", annServeGate, Some(annServeGateSql), warm = true),
     QueryDef("st_ann_maintain_gate", annMaintainGate, Some(annMaintainGateSql)),
-    QueryDef("dx_knn_graph_incr_recall", knnRecallGate(knnGraphIncr, 0.7), Some(knnRecallGateSql)),
+    recallDef("dx_knn_graph_incr_recall", knnGraphIncr, 0.7),
     QueryDef("dx_knn_sq", knnSq, None),
-    QueryDef("dx_knn_sq_recall", knnRecallGate(knnSq, 0.9), Some(knnRecallGateSql)),
+    recallDef("dx_knn_sq_recall", knnSq, 0.9),
     QueryDef("dx_knn_ivfsq", knnIvfSq, None),
-    QueryDef("dx_knn_ivfsq_recall", knnRecallGate(knnIvfSq, 0.6), Some(knnRecallGateSql)),
+    recallDef("dx_knn_ivfsq_recall", knnIvfSq, 0.6),
     QueryDef("dx_knn_ivfpq", knnIvfPq, None),
-    QueryDef("dx_knn_ivfpq_recall", knnRecallGate(knnIvfPq, 0.5), Some(knnRecallGateSql)),
+    recallDef("dx_knn_ivfpq_recall", knnIvfPq, 0.5),
     QueryDef("dx_knn_ivfpq_index", knnIvfPqIndex, Some(knnIvfPqIndexSql)),
     QueryDef("dx_knn_ivfpq_serve", knnIvfPqServe, None, warm = true),
-    QueryDef("dx_knn_ivfpq_serve_recall", knnRecallGate(knnIvfPqServe, 0.5), Some(knnRecallGateSql), warm = true),
+    recallDef("dx_knn_ivfpq_serve_recall", knnIvfPqServe, 0.5, warm = true),
     QueryDef("dx_knn_ivfsq_index", knnIvfSqIndex, Some(knnIvfSqIndexSql)),
     QueryDef("st_vec_serve_gate", vecServeGate, Some(vecServeGateSql), warm = true),
     QueryDef("dx_knn_ivfsq_serve", knnIvfSqServe, None, warm = true),
-    QueryDef("dx_knn_ivfsq_serve_recall", knnRecallGate(knnIvfSqServe, 0.6), Some(knnRecallGateSql), warm = true),
+    recallDef("dx_knn_ivfsq_serve_recall", knnIvfSqServe, 0.6, warm = true),
     QueryDef("dx_rag_e2e", ragE2e, None),
     QueryDef("dx_rag_e2e_gate", ragGate, Some(ragGateSql), warm = true))
 }

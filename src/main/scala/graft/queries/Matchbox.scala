@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Num, QueryDef, Tables}
+import graft.{Gate, Num, QueryDef, Tables}
 import graft.functions.Hashing
 import graft.operators.{Combine, Components, Dedupe, Link, Lookup, Scores}
 import graft.eval.PrecisionRecall
@@ -370,7 +370,8 @@ object Matchbox {
     * no SQL oracle): mb_link_em's claim is that it is *deterministic given
     * fixed iterations* — so run the whole pipeline twice from scratch
     * (candidate generation, pattern collection, EM loop) and require
-    * bit-identical learned parameters AND a bit-identical score-set hash,
+    * bit-identical learned parameters AND the same scored rows (score to
+    * 9 decimals, duplicates counted),
     * plus discriminative parameters (m > u on the segment comparison) and
     * scores inside [0,1]. Emitted as a one-row boolean whose oracle is
     * pinned `true`, converting the spec-only evidence into a per-round gate.
@@ -387,33 +388,38 @@ object Matchbox {
     val (cand, _) = graft.Ckpt.settle(Link.emCandidates(
       evenCustomers(s, dir), oddCustomers(s, dir),
       "c_custkey", "c_custkey", emBlocking, emComparisons)).head
-    def run() = {
-      val (scored, params) = Link.fellegiSunterEmOnCandidates(
-        cand, emComparisons.size, threshold = 0.0,
-        uInit = Some(u), trainU = false)
-      (scored, params)
-    }
-    def scoreHash(df: DataFrame): Long = df
-      .agg(expr(
-        "bit_xor(xxhash64(left_id, right_id, CAST(round(score, 9) AS STRING)))"))
-      .head().getLong(0)
-    // run 1 feeds two checks, run 2 only the determinism hash
-    val (s1, p1) = run()
-    val (scored1, _) = graft.Ckpt.settle(s1).head
-    val (scored2, p2) = run()
-    val stats = scored1.agg(
-      min("score"), max("score"), count(lit(1))).head()
-    val ok = p1 == p2 && scoreHash(scored1) == scoreHash(scored2) &&
-      // at least one comparison learned discriminative params (which one
-      // carries the signal varies with the data: segment at sf0.001,
-      // acctbal proximity at sf0.01)
-      p1.exists { case (m, uu) => m > uu } &&
-      stats.getDouble(0) >= 0.0 && stats.getDouble(1) <= 1.0 &&
-      stats.getLong(2) > 0
+    val (_, p1, runTwice) = emRunTwice(() => Link.fellegiSunterEmOnCandidates(
+      cand, emComparisons.size, threshold = 0.0, uInit = Some(u), trainU = false))
+    // at least one comparison learned discriminative params (which one
+    // carries the signal varies with the data: segment at sf0.001,
+    // acctbal proximity at sf0.01)
+    val ok = Gate.all("mb_link_em_gate")(
+      runTwice :+ ("m_above_u" -> p1.exists { case (m, uu) => m > uu }): _*)
     Seq(ok).toDF("em_ok")
   }
 
   private val linkEmGateSql = "SELECT CAST(1 AS BOOLEAN) AS em_ok"
+
+  /** What every EM determinism gate checks: `run` twice, bit-identical
+    * parameters, the same scored pairs (score to 9 decimals, the one
+    * tolerance), scores inside [0,1] and at least one scored pair. Run 1
+    * is settled (the caller's own checks read it) and returned with its
+    * parameters and these named checks.
+    */
+  private def emRunTwice[P](run: () => (DataFrame, P))
+      : (DataFrame, P, Seq[(String, Boolean)]) = {
+    def at9(scored: DataFrame) =
+      scored.select(col("left_id"), col("right_id"), round(col("score"), 9))
+    val (s1, p1) = run()
+    val (scored1, _) = graft.Ckpt.settle(s1).head
+    val (scored2, p2) = run()
+    val stats = scored1.agg(min("score"), max("score"), count(lit(1))).head()
+    (scored1, p1, Seq(
+      "params_equal" -> (p1 == p2),
+      "scores_equal" -> Gate.sameRows(at9(scored1), at9(scored2)),
+      "scores_in_unit" -> (stats.getDouble(0) >= 0.0 && stats.getDouble(1) <= 1.0),
+      "rows_scored" -> (stats.getLong(2) > 0)))
+  }
 
   /** Blocking-rule-scoped EM training sessions (splink's
     * `estimate_parameters_using_expectation_maximisation` per rule;
@@ -464,10 +470,11 @@ object Matchbox {
       s1(1)(0).isEmpty && s1(1)(2).isDefined && s1(1)(1).isDefined &&
       // acctbal trained twice -> composed as the mean of both sessions
       m1(1) == (s1(0)(1).get + s1(1)(1).get) / 2
-    val ok = l1 == l2 && u1 == u2 && m1 == m2 && s1 == s2 &&
-      separation &&
-      m1.zip(u1).exists { case (m, u) => m > u } &&
-      m1.forall(v => v > 0.0 && v < 1.0) && l1 > 0.0 && l1 < 1.0
+    val ok = Gate.all("mb_link_em_rules_gate")(
+      "params_equal" -> (l1 == l2 && u1 == u2 && m1 == m2 && s1 == s2),
+      "sessions_separated" -> separation,
+      "m_above_u" -> m1.zip(u1).exists { case (m, u) => m > u },
+      "params_in_unit" -> (m1.forall(v => v > 0.0 && v < 1.0) && l1 > 0.0 && l1 < 1.0))
     Seq(ok).toDF("em_rules_ok")
   }
 
@@ -1385,7 +1392,10 @@ object Matchbox {
     val (p1, n1) = fullFit(pat1)
     val (p2, n2) = fullFit(pat2)
     val nullPairs = pat1.collect { case (g, n) if g(1) == -1 => n }.sum
-    val ok = oneIterInvariant && p1 == p2 && n1 == n2 && nullPairs > 0L
+    val ok = Gate.all("mb_link_fuzzy_nulls_gate")(
+      "null_pairs_move_nothing" -> oneIterInvariant,
+      "params_equal" -> (p1 == p2 && n1 == n2),
+      "null_pairs_seeded" -> (nullPairs > 0L))
     Seq(ok).toDF("nulls_ok")
   }
 
@@ -1469,7 +1479,7 @@ object Matchbox {
     * mb_link_fuzzy — iterative, so no SQL oracle): the blocked candidate
     * join materialises once (deterministic plan — the em_gate treatment);
     * pattern aggregation, EM fit and scoring run twice and must produce
-    * bit-identical per-level (m, u) vectors and score-set hash; the
+    * bit-identical per-level (m, u) vectors and the same scored rows; the
     * learned parameters must be discriminative — the exact-match level's
     * likelihood ratio m/u must exceed the miss level's (fuzzy agreement
     * is evidence FOR a match).
@@ -1487,25 +1497,11 @@ object Matchbox {
     val (cand, _) = graft.Ckpt.settle(Link.emLevelsCandidates(
       fuzzyLeft(s, dir), fuzzyRight(s, dir),
       "c_custkey", "c_custkey", "l.blk = r.blk", levels)).head
-    def run() = {
-      val (scored, params) = Link.fellegiSunterEmLevelsOnCandidates(
-        cand, levels.map(_.size), threshold = 0.5)
-      (scored, params)
-    }
-    def scoreHash(df: DataFrame): Long = df
-      .agg(expr(
-        "bit_xor(xxhash64(left_id, right_id, CAST(round(score, 9) AS STRING)))"))
-      .head().getLong(0)
-    // run 1 feeds two checks, run 2 only the determinism hash
-    val (s1, p1) = run()
-    val (scored1, _) = graft.Ckpt.settle(s1).head
-    val (scored2, p2) = run()
+    val (_, p1, runTwice) = emRunTwice(() =>
+      Link.fellegiSunterEmLevelsOnCandidates(cand, levels.map(_.size), threshold = 0.5))
     val (mName, uName) = p1.head
-    val stats = scored1.agg(min("score"), max("score"), count(lit(1))).head()
-    val ok = p1 == p2 && scoreHash(scored1) == scoreHash(scored2) &&
-      mName.last / uName.last > mName.head / uName.head &&
-      stats.getDouble(0) >= 0.0 && stats.getDouble(1) <= 1.0 &&
-      stats.getLong(2) > 0
+    val ok = Gate.all("mb_link_fuzzy_em_gate")(runTwice :+
+      ("exact_ratio_above_miss" -> (mName.last / uName.last > mName.head / uName.head)): _*)
     Seq(ok).toDF("em_ok")
   }
 
@@ -1625,7 +1621,7 @@ object Matchbox {
     * join and TF table materialise once (deterministic plans — the
     * em_gate treatment); the pattern aggregation, EM fit and scoring run
     * twice and must produce bit-identical per-level (m, u) vectors and
-    * score-set hash; the learned name comparison must be discriminative
+    * the same scored rows; the learned name comparison must be discriminative
     * (exact level's likelihood ratio above the miss level's); and the TF
     * contract must hold — among pairs agreeing exactly on the segment with
     * the same name gamma, the score is strictly decreasing in the corpus
@@ -1647,19 +1643,8 @@ object Matchbox {
           "jaro_winkler_similarity(l.sname, r.sname) >= 0.95",
           "jaro_winkler_similarity(l.sname, r.sname) >= 0.88")))
     val (cand, _) = graft.Ckpt.settle(cand0).head
-    def run() = Link.fellegiSunterEmLevelsOnCandidates(
-      cand, Seq(1, 3), threshold = 0.0, tfTotal = Some(total))
-    // Keep the driver-job chain short (it is the whole latency of this
-    // gate): run 1 is checkpointed because three checks read it; run 2
-    // exists only for the determinism hash, so it stays a single
-    // un-checkpointed action.
-    val (s1, p1) = run()
-    val (scored1, _) = graft.Ckpt.settle(s1).head
-    val (scored2, p2) = run()
-    def scoreHash(df: DataFrame): Long = df
-      .agg(expr(
-        "bit_xor(xxhash64(left_id, right_id, CAST(round(score, 9) AS STRING)))"))
-      .head().getLong(0)
+    val (scored1, p1, runTwice) = emRunTwice(() => Link.fellegiSunterEmLevelsOnCandidates(
+      cand, Seq(1, 3), threshold = 0.0, tfTotal = Some(total)))
     val (mName, uName) = p1(1)
     // TF contract: score is a function of (gammas, tf_cnt) only, so within
     // each (name gamma, tf_cnt) cell min == max, and across tf_cnt at fixed
@@ -1678,15 +1663,9 @@ object Matchbox {
           w.size < 2 || (w(0)._2 < w(1)._2 && w(1)._4 < w(0)._3)
         }
     }
-    // One pass for determinism hash + range/count stats of run 1.
-    val h1row = scored1.agg(
-      expr("bit_xor(xxhash64(left_id, right_id, CAST(round(score, 9) AS STRING)))"),
-      min("score"), max("score"), count(lit(1))).head()
-    val ok = p1 == p2 && h1row.getLong(0) == scoreHash(scored2) &&
-      mName.last / uName.last > mName.head / uName.head &&
-      tfMonotone &&
-      h1row.getDouble(1) >= 0.0 && h1row.getDouble(2) <= 1.0 &&
-      h1row.getLong(3) > 0
+    val ok = Gate.all("mb_link_fuzzy_tf_em_gate")(runTwice ++ Seq(
+      "exact_ratio_above_miss" -> (mName.last / uName.last > mName.head / uName.head),
+      "tf_monotone" -> tfMonotone): _*)
     Seq(ok).toDF("em_ok")
   }
 
@@ -1784,17 +1763,12 @@ object Matchbox {
         .select(col("key"), col("component"))
       Scenario.matchesTruth(assignment, all.select(col("key"), col("entity_id")))
     }
-    // generation determinism: the scenario is gate-sized (180 rows) by
-    // construction, so a sorted driver-side compare beats two except jobs.
     // The pipeline itself runs ONCE: linker/components determinism is
-    // already driver-hash-asserted by the mb_link_* oracle rows every
-    // round; this gate's own claim is exact truth recovery.
-    val deterministic = {
-      def rows(df: DataFrame) =
-        df.collect().map(_.toString).sorted.toSeq
-      rows(sources()) == rows(sources())
-    }
-    val ok = deterministic && run()
+    // already asserted by the mb_link_* gates every round; this gate's
+    // own claim is exact truth recovery.
+    val ok = Gate.all("mb_scenario_gate")(
+      "sources_equal" -> Gate.sameRows(sources(), sources()),
+      "truth_recovered" -> run())
     Seq(ok).toDF("scenario_ok")
   }
 
@@ -2962,9 +2936,8 @@ object Matchbox {
     def slice(i: Int) = cdcLatest(ev.filter(col("event_id") % 3 === i))
     val running = graft.Ckpt.iterate("cdc.apply", slice(0), 2)(
       (acc, i) => cdcMergeLatest(acc.unionByName(slice(i))))(graft.Ckpt.rows).frame
-    val folded = cdcStateFromLatest(running)
-    val equal = folded.exceptAll(full).count() == 0 &&
-      full.exceptAll(folded).count() == 0
+    val equal = Gate.all("st_cdc_apply_gate")(
+      "fold_equals_batch" -> Gate.sameRows(cdcStateFromLatest(running), full))
     Seq((nFull, equal)).toDF("n_state", "batch_equal_ok")
   }
 

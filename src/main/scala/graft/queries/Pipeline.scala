@@ -1,10 +1,10 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{Gate, QueryDef, Tables}
 import graft.operators.ann.Knn
 import graft.operators.dedup.{MinHashLSH, SimHash}
 import graft.operators.multimodal.Media
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -261,7 +261,8 @@ object Pipeline {
     val nHeld = trained.count()
     val tCorrect = trained.filter(col("is_correct")).count()
     val hCorrect = heur.filter(col("pred_lang") === col("true_lang")).count()
-    Seq((nHeld, tCorrect, hCorrect, tCorrect > hCorrect))
+    Seq((nHeld, tCorrect, hCorrect, Gate.all("dx_lang_id_trained_gate")(
+        "trained_beats_heuristic" -> (tCorrect > hCorrect))))
       .toDF("n_held", "trained_correct", "heuristic_correct",
         "trained_beats_heuristic")
   }
@@ -616,7 +617,8 @@ object Pipeline {
         expr("CAST(size(filter(zip_with(lsig, rsig, (a, b) -> a = b), x -> x)) AS DOUBLE) / 128"))
     val row = pairs.agg(
       count(lit(1)).as("n"), avg(abs(col("est_j") - col("true_j"))).as("mae")).head()
-    Seq((row.getLong(0), row.getDouble(1) <= 0.1)).toDF("n_pairs", "est_ok")
+    Seq((row.getLong(0), Gate.all("dx_minhash_est_gate")("mae_within_0.1" -> (row.getDouble(1) <= 0.1))))
+      .toDF("n_pairs", "est_ok")
   }
 
   private val minhashEstGateSql =
@@ -656,7 +658,8 @@ object Pipeline {
       .withColumn("est_j", expr("greatest(0D, 2 * agree - 1)"))
     val row = pairs.agg(
       count(lit(1)).as("n"), avg(abs(col("est_j") - col("true_j"))).as("mae")).head()
-    Seq((row.getLong(0), row.getDouble(1) <= 0.15)).toDF("n_pairs", "est_ok")
+    Seq((row.getLong(0), Gate.all("dx_minhash_bbit_gate")("mae_within_0.15" -> (row.getDouble(1) <= 0.15))))
+      .toDF("n_pairs", "est_ok")
   }
 
   private val minhashBbitGateSql =
@@ -944,7 +947,9 @@ object Pipeline {
       "doc_id", "text", threshold = 0.5)
       .select("left_id", "right_id")
     val hits = planted.join(found, Seq("left_id", "right_id"), "left_semi").count()
-    Seq((nPlanted, hits.toDouble / nPlanted >= 0.95)).toDF("n_planted", "recall_ok")
+    Seq((nPlanted, Gate.all("dx_dedup_minhash_gate")(
+        "planted_recall_0.95" -> (hits.toDouble / nPlanted >= 0.95))))
+      .toDF("n_planted", "recall_ok")
   }
 
   private val dedupMinhashGateSql =
@@ -1010,7 +1015,8 @@ object Pipeline {
       countDistinct(col("text")).as("exact"),
       approx_count_distinct(col("text"), 0.02).as("approx")).head()
     val exact = row.getLong(0); val approx = row.getLong(1)
-    Seq((exact, math.abs(approx - exact).toDouble / exact <= 0.05))
+    Seq((exact, Gate.all("dx_cardinality_gate")(
+        "approx_within_5pct" -> (math.abs(approx - exact).toDouble / exact <= 0.05))))
       .toDF("n_exact", "approx_ok")
   }
 
@@ -1056,8 +1062,11 @@ object Pipeline {
       .head().getLong(0)
     val exact = docs.agg(countDistinct(col("text"))).head().getLong(0)
     def close(v: Long): Boolean = math.abs(v - exact).toDouble / exact <= 0.05
-    val spreadOk = math.abs(est16 - est4).toDouble / exact <= 0.05
-    Seq((exact, close(est16) && close(est4), spreadOk, close(single)))
+    val gate = "dx_hll_merge_gate"
+    Seq((exact,
+      Gate.all(gate)("union16_close" -> close(est16), "union4_close" -> close(est4)),
+      Gate.all(gate)("unions_agree" -> (math.abs(est16 - est4).toDouble / exact <= 0.05)),
+      Gate.all(gate)("single_close" -> close(single))))
       .toDF("n_exact", "merge_ok", "spread_ok", "single_ok")
   }
 
@@ -1104,7 +1113,7 @@ object Pipeline {
     val est = h.join(broadcast(counters), Seq("j", "cell"))
       .groupBy("term", "cnt").agg(min("c").as("est"))
     val tot = tf.agg(sum("cnt").as("n"))
-    est.crossJoin(broadcast(tot))
+    val out = est.crossJoin(broadcast(tot))
       .agg(
         count(lit(1)).as("v"), max("n").as("n"),
         min(col("est") - col("cnt")).as("min_over"),
@@ -1115,6 +1124,11 @@ object Pipeline {
         (col("min_over") >= 0).as("no_undercount"),
         col("max_over"), col("n_over_bound"),
         (col("n_over_bound") === 0).as("bound_ok"))
+    // the one-row result, its two flags named through the gate kit
+    val r = out.head()
+    s.createDataFrame(java.util.List.of(Row(r(0), r(1),
+      Gate.all("dx_cms_gate")("no_undercount" -> r.getBoolean(2)), r(3), r(4),
+      Gate.all("dx_cms_gate")("within_markov_bound" -> r.getBoolean(5)))), out.schema)
   }
 
   private val cmsGateSql =
@@ -1224,10 +1238,7 @@ object Pipeline {
   private def dedupSimhashGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val corpus = withDupes(s, dir, exact = false)
-    val Seq((banded, _), (sh, _)) = graft.Ckpt.settle(
-      SimHash.candidatePairs(corpus, "doc_id", "text", maxHamming = 3)
-        .select("left_id", "right_id"),
-      SimHash.simhash(corpus, "doc_id", "text"))
+    val (sh, _) = graft.Ckpt.settle(SimHash.simhash(corpus, "doc_id", "text")).head
     val numBlocks = 8
     val blk = sh.withColumn("blk", pmod(xxhash64(col("id")), lit(numBlocks.toLong)).cast("int"))
     val blockPairs = s.range(numBlocks.toLong * numBlocks)
@@ -1244,11 +1255,10 @@ object Pipeline {
       .filter(expr("bit_count(lh ^ rh) <= 3"))
       .select(least(col("la"), col("rb")).as("left_id"),
         greatest(col("la"), col("rb")).as("right_id"))
-    val nBrute = brute.count()
-    val nBanded = banded.count()
-    val nHit = brute.join(banded, Seq("left_id", "right_id"), "left_semi").count()
-    val nDocs = corpus.count()
-    Seq((nDocs, nBrute == nBanded && nHit == nBrute))
+    val banded = SimHash.candidatePairs(corpus, "doc_id", "text", maxHamming = 3)
+      .select("left_id", "right_id")
+    Seq((corpus.count(), Gate.all("dx_dedup_simhash_gate")(
+        "banded_equals_brute" -> Gate.sameRows(banded, brute))))
       .toDF("n_docs", "banding_lossless")
   }
 
@@ -1456,7 +1466,8 @@ object Pipeline {
     val (truth, nPlanted) = graft.Ckpt.settle(planted
       .select(col("vec_id").as("left_id"), (col("vec_id") + 1000000).as("right_id"))).head
     val nHit = truth.join(pairs, Seq("left_id", "right_id"), "left_semi").count()
-    Seq((nPlanted, nHit == nPlanted)).toDF("n_planted", "recall_ok")
+    Seq((nPlanted, Gate.all("dx_dedup_embed_lsh_gate")("planted_all_found" -> (nHit == nPlanted))))
+      .toDF("n_planted", "recall_ok")
   }
 
   private val dedupEmbedLshGateSql =
@@ -1531,7 +1542,7 @@ object Pipeline {
     * through the real decode → bilinear scale → re-encode path
     * ([[Media.resizeImages]]), then re-decode every output and assert one
     * output per input, all valid 8×8 PNGs (magic bytes + ImageIO
-    * round-trip), zero decode failures, and a bit-identical payload hash
+    * round-trip), zero decode failures, and bit-identical payloads
     * across two runs (Java's PNG writer emits no timestamp chunk). Capped
     * at 256 documents — the gate proves the codec, not throughput.
     */
@@ -1540,8 +1551,6 @@ object Pipeline {
     val docs = Tables(s, dir, "documents").orderBy("doc_id").limit(256)
     def run() = Media.resizeImages(
       Media.synthesizePng(docs, "doc_id", "text", 16, 16), 8, 8)
-    def payloadHash(df: DataFrame): Long =
-      df.agg(expr("bit_xor(xxhash64(payload))")).head().getLong(0)
     val (out, _) = graft.Ckpt.settle(run()).head
     val stats = out
       .select(col("media_id"), col("payload"), col("width"), col("height"))
@@ -1558,9 +1567,10 @@ object Pipeline {
       }
       .toDF("ok")
       .agg(sum("ok").as("n_ok"), count(lit(1)).as("n")).head()
-    val ok = stats.getLong(0) == stats.getLong(1) &&
-      stats.getLong(1) == docs.count() && stats.getLong(1) > 0 &&
-      payloadHash(out) == payloadHash(run())
+    val ok = Gate.all("dx_multimodal_resize_gate")(
+      "all_valid_8x8_png" -> (stats.getLong(0) == stats.getLong(1)),
+      "one_output_per_input" -> (stats.getLong(1) == docs.count() && stats.getLong(1) > 0),
+      "payloads_equal" -> Gate.sameRows(out.select("payload"), run().select("payload")))
     Seq(ok).toDF("resize_ok")
   }
 
@@ -1576,7 +1586,7 @@ object Pipeline {
     * every source clip is 400 samples / 50 ms at 8 kHz with sane
     * amplitudes (0 < rms ≤ peak ≤ 1); every resampled clip is 200 samples
     * at 4 kHz; RMS drift under resampling ≤ 5% (a tone's energy survives
-    * 2:1 decimation); and a bit-identical payload hash across two runs.
+    * 2:1 decimation); and bit-identical payloads across two runs.
     * Capped at 256 documents — the gate proves the codec, not throughput.
     */
   private def multimodalAudioGate(s: SparkSession, dir: String): DataFrame = {
@@ -1602,12 +1612,11 @@ object Pipeline {
     val drift = src.select(col("media_id"), col("rms").as("rms0"))
       .join(resFeat.select(col("media_id"), col("rms").as("rms1")), "media_id")
       .agg(max(abs(col("rms1") - col("rms0")) / col("rms0"))).head().getDouble(0)
-    def payloadHash(df: DataFrame): Long =
-      df.agg(expr("bit_xor(xxhash64(payload))")).head().getLong(0)
-    val ok = srcOk.getLong(0) == n && srcOk.getLong(1) == n && n > 0 &&
-      resOk.getLong(0) == n && resOk.getLong(1) == n &&
-      drift <= 0.05 &&
-      payloadHash(w) == payloadHash(wavs())
+    val ok = Gate.all("dx_multimodal_audio_gate")(
+      "source_clips_valid" -> (srcOk.getLong(0) == n && srcOk.getLong(1) == n && n > 0),
+      "resampled_clips_valid" -> (resOk.getLong(0) == n && resOk.getLong(1) == n),
+      "rms_drift_within_5pct" -> (drift <= 0.05),
+      "payloads_equal" -> Gate.sameRows(w.select("payload"), wavs().select("payload")))
     Seq(ok).toDF("audio_ok")
   }
 
@@ -1629,16 +1638,6 @@ object Pipeline {
     def frames() = Media.sampleFramesReal(gifs, everyN = 2)
     val (f, _) = graft.Ckpt.settle(frames()).head
     val n = docs.count()
-    val perClip = f.groupBy("media_id").agg(
-      count(lit(1)).as("n_frames"),
-      sort_array(collect_list("frame_idx")).as("idxs"),
-      sum(when(col("width") === 16L && col("height") === 16L &&
-        col("frame").isNotNull, 1L).otherwise(0L)).as("n_ok"))
-    val clipOk = perClip.agg(
-      sum(when(col("n_frames") === 3L && col("n_ok") === 3L &&
-        col("idxs") === array(lit(0L), lit(2L), lit(4L)), 1L)
-        .otherwise(0L)).as("ok"),
-      count(lit(1)).as("cnt")).head()
     // every emitted frame is a decodable PNG at the declared size
     val decodable = f.select(col("frame"))
       .as[Array[Byte]]
@@ -1649,13 +1648,29 @@ object Pipeline {
         if (img != null && img.getWidth == 16 && img.getHeight == 16) 1L else 0L
       }
       .toDF("ok").agg(sum("ok"), count(lit(1))).head()
-    def frameHash(df: DataFrame): Long =
-      df.agg(expr("bit_xor(xxhash64(media_id, frame_idx, frame))"))
-        .head().getLong(0)
-    val ok = clipOk.getLong(0) == n && clipOk.getLong(1) == n && n > 0 &&
-      decodable.getLong(0) == 3 * n && decodable.getLong(1) == 3 * n &&
-      frameHash(f) == frameHash(frames())
+    def frameRows(df: DataFrame) = df.select("media_id", "frame_idx", "frame")
+    val ok = Gate.all("dx_multimodal_frames_gate")(
+      "three_frames_per_clip" -> (n > 0 && threeFramesPerClip(f, n)),
+      "frames_decodable" -> (decodable.getLong(0) == 3 * n && decodable.getLong(1) == 3 * n),
+      "frames_equal" -> Gate.sameRows(frameRows(f), frameRows(frames())))
     Seq(ok).toDF("frames_ok")
+  }
+
+  /** Do `frames` (every 2nd frame sampled) hold exactly `n` clips of
+    * three 16×16 non-NULL frames at indices {0, 2, 4}?
+    */
+  private def threeFramesPerClip(frames: DataFrame, n: Long): Boolean = {
+    val r = frames.groupBy("media_id").agg(
+        count(lit(1)).as("n_frames"),
+        sort_array(collect_list("frame_idx")).as("idxs"),
+        sum(when(col("width") === 16L && col("height") === 16L &&
+          col("frame").isNotNull, 1L).otherwise(0L)).as("n_ok"))
+      .agg(
+        sum(when(col("n_frames") === 3L && col("n_ok") === 3L &&
+          col("idxs") === array(lit(0L), lit(2L), lit(4L)), 1L)
+          .otherwise(0L)).as("ok"),
+        count(lit(1)).as("cnt")).head()
+    r.getLong(0) == n && r.getLong(1) == n
   }
 
   private val multimodalFramesGateSql =
@@ -1689,22 +1704,7 @@ object Pipeline {
         count(lit(1)).as("cnt")).head()
       r.getLong(0) == n && r.getLong(1) == n
     }
-    def framesOk(df: DataFrame): Boolean = {
-      val r = Media.sampleFramesReal(df, everyN = 2)
-        .groupBy("media_id").agg(
-          count(lit(1)).as("n_frames"),
-          sort_array(collect_list("frame_idx")).as("idxs"),
-          sum(when(col("width") === 16L && col("height") === 16L &&
-            col("frame").isNotNull, 1L).otherwise(0L)).as("n_ok"))
-        .agg(
-          sum(when(col("n_frames") === 3L && col("n_ok") === 3L &&
-            col("idxs") === array(lit(0L), lit(2L), lit(4L)), 1L)
-            .otherwise(0L)).as("ok"),
-          count(lit(1)).as("cnt")).head()
-      r.getLong(0) == n && r.getLong(1) == n
-    }
-    def payloadHash(df: DataFrame): Long =
-      df.agg(expr("bit_xor(xxhash64(media_id, payload))")).head().getLong(0)
+    def framesOk(df: DataFrame) = threeFramesPerClip(Media.sampleFramesReal(df, everyN = 2), n)
     // DIB is lossless: per-clip decode → re-encode must be bit-identical
     val losslessCnt = dib.select(col("media_id"), col("payload"))
       .join(
@@ -1716,11 +1716,16 @@ object Pipeline {
     val (mjpg, _) = graft.Ckpt.settle(
       Media.synthesizeAvi(docs, "doc_id", "text", 16, 16, 5, 10, "MJPG")).head
     val mjpgToDib = Media.transcodeAvi(mjpg, "DIB ")
-    val ok = n > 0 && metaOk(dib, "DIB ") && framesOk(dib) &&
-      losslessCnt == n &&
-      metaOk(mjpg, "MJPG") && framesOk(mjpg) &&
-      metaOk(mjpgToDib, "DIB ") &&
-      payloadHash(dib) == payloadHash(dibs())
+    def payloads(df: DataFrame) = df.select("media_id", "payload")
+    val ok = Gate.all("dx_multimodal_video_gate")(
+      "clips_present" -> (n > 0),
+      "dib_meta" -> metaOk(dib, "DIB "),
+      "dib_frames" -> framesOk(dib),
+      "dib_lossless" -> (losslessCnt == n),
+      "mjpg_meta" -> metaOk(mjpg, "MJPG"),
+      "mjpg_frames" -> framesOk(mjpg),
+      "mjpg_to_dib_meta" -> metaOk(mjpgToDib, "DIB "),
+      "payloads_equal" -> Gate.sameRows(payloads(dib), payloads(dibs())))
     Seq(ok).toDF("video_ok")
   }
 
@@ -1739,6 +1744,26 @@ object Pipeline {
     * container bytes). Variant ids offset far above any doc_id.
     */
   private val phashVariantOffset = 10000000L
+
+  /** Does `found` hold every planted near-dup pair of a three-variant
+    * media corpus of `n` items? For each base id b the pairs are
+    * (b, b+OFF), (b, b+2·OFF) and (b+OFF, b+2·OFF) — left < right holds
+    * since OFF > max doc_id — each with its `offsets` entry as `offset`
+    * when given.
+    */
+  private def plantedFound(corpus: DataFrame, n: Long, found: DataFrame,
+      offsets: Seq[Long] = Nil): Boolean = {
+    val ids = corpus.filter(col("media_id") < phashVariantOffset)
+      .select(col("media_id").as("b"))
+    val planted = Seq((0L, 1L), (0L, 2L), (1L, 2L)).zipWithIndex.map { case ((i, j), k) =>
+      ids.select(Seq((col("b") + lit(i * phashVariantOffset)).as("left_id"),
+        (col("b") + lit(j * phashVariantOffset)).as("right_id")) ++
+        offsets.lift(k).map(lit(_).as("offset")): _*)
+    }.reduce(_ unionByName _)
+    val nPlanted = planted.count()
+    nPlanted == 3 * (n / 3) &&
+      planted.join(found, planted.columns.toSeq, "left_semi").count() == nPlanted
+  }
 
   private def phashCorpus(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents").orderBy("doc_id").limit(160)
@@ -1781,47 +1806,36 @@ object Pipeline {
     */
   private def dedupPhashGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val (corpus, nImages) = graft.Ckpt.settle(phashCorpus(s, dir)).head
-    val (hashes, _) = graft.Ckpt.settle(Media.dHash64(corpus)).head
-    val nDecoded = hashes.filter(col("decode_ok")).count()
-    val nBase = nImages / 3
-    val (found, _) = graft.Ckpt.settle(dedupPhash(s, dir)
-      .select("left_id", "right_id")).head
-    // planted truth: for each base id b, pairs (b, b+OFF), (b, b+2·OFF),
-    // (b+OFF, b+2·OFF) — left < right holds since OFF > max doc_id
-    val ids = corpus.filter(col("media_id") < phashVariantOffset)
-      .select(col("media_id").as("b"))
-    val planted = Seq((0L, 1L), (0L, 2L), (1L, 2L)).map { case (i, j) =>
-      ids.select((col("b") + lit(i * phashVariantOffset)).as("left_id"),
-        (col("b") + lit(j * phashVariantOffset)).as("right_id"))
-    }.reduce(_ unionByName _)
-    val nPlanted = planted.count()
-    val nRecovered = planted
-      .join(found, Seq("left_id", "right_id"), "left_semi").count()
-    // brute-force hamming join over the (bounded) fingerprint table —
-    // the losslessness reference, O(n²) on ≤480 hashes by design
-    val hs = hashes.filter(col("decode_ok")).select(
-      col("media_id"), col("dhash"))
-    val brute = hs.select(col("media_id").as("left_id"), col("dhash").as("lh"))
-      .join(hs.select(col("media_id").as("right_id"), col("dhash").as("rh")),
-        col("left_id") < col("right_id"))
-      .withColumn("hamming", expr("bit_count(lh ^ rh)"))
-      .filter(col("hamming") <= 3)
-      .select("left_id", "right_id")
-    val bandEqBrute =
-      found.exceptAll(brute).count() == 0 &&
-        brute.exceptAll(found).count() == 0
-    def hashXor(df: DataFrame): Long =
-      df.agg(expr("bit_xor(xxhash64(media_id, dhash))")).head().getLong(0)
-    val deterministic =
-      hashXor(hs) == hashXor(
-        Media.dHash64(phashCorpus(s, dir)).filter(col("decode_ok"))
-          .select("media_id", "dhash"))
-    val ok = nBase > 0 && nDecoded == nImages &&
-      nRecovered == nPlanted && nPlanted == 3 * nBase &&
-      bandEqBrute && deterministic
-    Seq((nImages, ok)).toDF("n_images", "phash_ok")
+    Seq(hashDedupChecks("dx_dedup_phash_gate", () => phashCorpus(s, dir), Media.dHash64,
+      "dhash", dedupPhash(s, dir))).toDF("n_images", "phash_ok")
   }
+
+  /** The checks of an image or audio hash dedup gate over a three-variant
+    * corpus: every item decodes, every planted pair is found, the banded
+    * pairs equal a brute-force hamming ≤ 3 join over the (bounded) hash
+    * table — O(n²) on ≤480 hashes by design — and hashing a rebuilt
+    * corpus gives the same hashes. Returns the corpus size and the AND.
+    */
+  private def hashDedupChecks(gate: String, build: () => DataFrame,
+      hash: DataFrame => DataFrame, hashCol: String, dedup: => DataFrame): (Long, Boolean) = {
+    val (corpus, n) = graft.Ckpt.settle(build()).head
+    val (hashes, _) = graft.Ckpt.settle(hash(corpus)).head
+    val nDecoded = hashes.filter(col("decode_ok")).count()
+    val (found, _) = graft.Ckpt.settle(dedup.select("left_id", "right_id")).head
+    def decoded(h: DataFrame) = h.filter(col("decode_ok")).select("media_id", hashCol)
+    val hs = decoded(hashes)
+    val brute = hs.select(col("media_id").as("left_id"), col(hashCol).as("lh"))
+      .join(hs.select(col("media_id").as("right_id"), col(hashCol).as("rh")),
+        col("left_id") < col("right_id"))
+      .filter(expr("bit_count(lh ^ rh)") <= 3)
+      .select("left_id", "right_id")
+    (n, Gate.all(gate)(
+      "all_decoded" -> (n >= 3 && nDecoded == n),
+      "planted_recovered" -> plantedFound(corpus, n, found),
+      "banded_equals_brute" -> Gate.sameRows(found, brute),
+      "hashes_equal" -> Gate.sameRows(hs, decoded(hash(build())))))
+  }
+
 
   private val dedupPhashGateSql =
     """SELECT CAST(3 * least(count(*), 160) AS BIGINT) AS n_images,
@@ -1905,17 +1919,6 @@ object Pipeline {
     val nUndecoded = frames.filter(!col("decode_ok")).count()
     val (found, _) = graft.Ckpt.settle(dedupVhash(s, dir)
       .select("left_id", "right_id", "sim_permille")).head
-    val nBase = nVideos / 3
-    val ids = corpus.filter(col("media_id") < phashVariantOffset)
-      .select(col("media_id").as("b"))
-    val planted = Seq((0L, 1L), (0L, 2L), (1L, 2L)).map { case (i, j) =>
-      ids.select((col("b") + lit(i * phashVariantOffset)).as("left_id"),
-        (col("b") + lit(j * phashVariantOffset)).as("right_id"))
-    }.reduce(_ unionByName _)
-    val nPlanted = planted.count()
-    val nRecovered = planted
-      .join(found.filter(col("sim_permille") === 1000),
-        Seq("left_id", "right_id"), "left_semi").count()
     // brute-force reference: position-aligned all-pairs hamming join over
     // the (bounded) frame table, same similarity floor — O(n²) per
     // position on ≤360 clips by design
@@ -1931,21 +1934,19 @@ object Pipeline {
         first("nf_r").as("nf_r"))
       .filter((lit(1000L) * col("m")) / least(col("nf_l"), col("nf_r")) >= 600)
       .select("left_id", "right_id")
-    val foundPairs = found.select("left_id", "right_id")
-    val bandEqBrute =
-      foundPairs.exceptAll(brute).count() == 0 &&
-        brute.exceptAll(foundPairs).count() == 0
-    def hashXor(df: DataFrame): Long =
-      df.agg(expr("bit_xor(xxhash64(media_id, frame_idx, dhash))"))
-        .head().getLong(0)
-    val deterministic =
-      hashXor(decoded) == hashXor(
-        Media.frameDHash64(vhashCorpus(s, dir)).filter(col("decode_ok")))
-    val ok = nBase > 0 && nUndecoded == 0 &&
-      nRecovered == nPlanted && nPlanted == 3 * nBase &&
-      bandEqBrute && deterministic
+    val ok = Gate.all("dx_dedup_vhash_gate")(
+      "all_decoded" -> (nVideos >= 3 && nUndecoded == 0),
+      "planted_recovered" ->
+        plantedFound(corpus, nVideos, found.filter(col("sim_permille") === 1000)),
+      "banded_equals_brute" -> Gate.sameRows(found.select("left_id", "right_id"), brute),
+      "hashes_equal" -> Gate.sameRows(frameHashes(decoded),
+        frameHashes(Media.frameDHash64(vhashCorpus(s, dir)).filter(col("decode_ok")))))
     Seq((nVideos, ok)).toDF("n_videos", "vhash_ok")
   }
+
+  /** The frame fingerprints a video dedup gate re-derives and compares. */
+  private def frameHashes(frames: DataFrame): DataFrame =
+    frames.select("media_id", "frame_idx", "dhash")
 
   private val dedupVhashGateSql =
     """SELECT CAST(3 * least(count(*), 120) AS BIGINT) AS n_videos,
@@ -1997,42 +1998,10 @@ object Pipeline {
     */
   private def dedupAhashGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val (corpus, nClips) = graft.Ckpt.settle(ahashCorpus(s, dir)).head
-    val (hashes, _) = graft.Ckpt.settle(Media.aHash64(corpus)).head
-    val nDecoded = hashes.filter(col("decode_ok")).count()
-    val nBase = nClips / 3
-    val (found, _) = graft.Ckpt.settle(dedupAhash(s, dir)
-      .select("left_id", "right_id")).head
-    val ids = corpus.filter(col("media_id") < phashVariantOffset)
-      .select(col("media_id").as("b"))
-    val planted = Seq((0L, 1L), (0L, 2L), (1L, 2L)).map { case (i, j) =>
-      ids.select((col("b") + lit(i * phashVariantOffset)).as("left_id"),
-        (col("b") + lit(j * phashVariantOffset)).as("right_id"))
-    }.reduce(_ unionByName _)
-    val nPlanted = planted.count()
-    val nRecovered = planted
-      .join(found, Seq("left_id", "right_id"), "left_semi").count()
-    val hs = hashes.filter(col("decode_ok")).select(
-      col("media_id"), col("ahash"))
-    val brute = hs.select(col("media_id").as("left_id"), col("ahash").as("lh"))
-      .join(hs.select(col("media_id").as("right_id"), col("ahash").as("rh")),
-        col("left_id") < col("right_id"))
-      .filter(expr("bit_count(lh ^ rh)") <= 3)
-      .select("left_id", "right_id")
-    val bandEqBrute =
-      found.exceptAll(brute).count() == 0 &&
-        brute.exceptAll(found).count() == 0
-    def hashXor(df: DataFrame): Long =
-      df.agg(expr("bit_xor(xxhash64(media_id, ahash))")).head().getLong(0)
-    val deterministic =
-      hashXor(hs) == hashXor(
-        Media.aHash64(ahashCorpus(s, dir)).filter(col("decode_ok"))
-          .select("media_id", "ahash"))
-    val ok = nBase > 0 && nDecoded == nClips &&
-      nRecovered == nPlanted && nPlanted == 3 * nBase &&
-      bandEqBrute && deterministic
-    Seq((nClips, ok)).toDF("n_clips", "ahash_ok")
+    Seq(hashDedupChecks("dx_dedup_ahash_gate", () => ahashCorpus(s, dir), Media.aHash64,
+      "ahash", dedupAhash(s, dir))).toDF("n_clips", "ahash_ok")
   }
+
 
   private val dedupAhashGateSql =
     """SELECT CAST(3 * least(count(*), 200) AS BIGINT) AS n_clips,
@@ -2144,20 +2113,6 @@ object Pipeline {
     val decoded = frames.filter(col("decode_ok"))
     val nUndecoded = frames.filter(!col("decode_ok")).count()
     val (found, _) = graft.Ckpt.settle(vhashOffsetPairs(decoded)).head
-    val nBase = nVideos / 3
-    val ids = corpus.filter(col("media_id") < phashVariantOffset)
-      .select(col("media_id").as("b"))
-    // (variant i, variant j, expected offset at the vote's tie-break)
-    val planted = Seq((0L, 1L, 2L), (0L, 2L, 0L), (1L, 2L, -2L))
-      .map { case (i, j, off) =>
-        ids.select((col("b") + lit(i * phashVariantOffset)).as("left_id"),
-          (col("b") + lit(j * phashVariantOffset)).as("right_id"),
-          lit(off).as("offset"))
-      }.reduce(_ unionByName _)
-    val nPlanted = planted.count()
-    val nRecovered = planted
-      .join(found.filter(col("sim_permille") === 1000),
-        Seq("left_id", "right_id", "offset"), "left_semi").count()
     // brute reference: ALL clip pairs as candidates, same vote program
     val allIds = decoded.select("media_id").distinct()
     val bruteCands = allIds.select(col("media_id").as("left_id"))
@@ -2165,18 +2120,14 @@ object Pipeline {
         col("left_id") < col("right_id"))
     val nfTab = decoded.groupBy("media_id").agg(first("n_frames").as("nf"))
     val brute = vhashOffsetVote(bruteCands, decoded, nfTab)
-    val bandEqBrute =
-      found.exceptAll(brute).count() == 0 &&
-        brute.exceptAll(found).count() == 0
-    def hashXor(df: DataFrame): Long =
-      df.agg(expr("bit_xor(xxhash64(media_id, frame_idx, dhash))"))
-        .head().getLong(0)
-    val deterministic =
-      hashXor(decoded) == hashXor(
-        Media.frameDHash64(vhashOffsetCorpus(s, dir)).filter(col("decode_ok")))
-    val ok = nBase > 0 && nUndecoded == 0 &&
-      nRecovered == nPlanted && nPlanted == 3 * nBase &&
-      bandEqBrute && deterministic
+    val ok = Gate.all("dx_dedup_vhash_offset_gate")(
+      "all_decoded" -> (nVideos >= 3 && nUndecoded == 0),
+      // each planted pair at the offset the vote's tie-break picks
+      "planted_recovered" -> plantedFound(corpus, nVideos,
+        found.filter(col("sim_permille") === 1000), offsets = Seq(2L, 0L, -2L)),
+      "banded_equals_brute" -> Gate.sameRows(found, brute),
+      "hashes_equal" -> Gate.sameRows(frameHashes(decoded),
+        frameHashes(Media.frameDHash64(vhashOffsetCorpus(s, dir)).filter(col("decode_ok")))))
     Seq((nVideos, ok)).toDF("n_videos", "vhash_offset_ok")
   }
 
@@ -2212,15 +2163,13 @@ object Pipeline {
     val states = deltas.init.scanLeft(hashes.limit(0)) { (state, delta) =>
       graft.Ckpt.settle(state.unionByName(delta)).head._1
     }
-    val batch0 = SimHash.bandedHammingPairs(
+    val batch = SimHash.bandedHammingPairs(
       hashes, "media_id", "dhash", bands = 4, maxHamming = 3)
-    val Seq((batch, _), (folded, _)) = graft.Ckpt.settle(batch0,
-      states.zip(deltas).map { case (state, delta) =>
-        SimHash.incrementalBandedPairs(
-          state, delta, "media_id", "dhash", bands = 4, maxHamming = 3)
-      }.foldLeft(batch0.limit(0))(_ unionByName _))
-    val foldEqBatch = folded.exceptAll(batch).count() == 0 &&
-      batch.exceptAll(folded).count() == 0
+    val folded = states.zip(deltas).map { case (state, delta) =>
+      SimHash.incrementalBandedPairs(
+        state, delta, "media_id", "dhash", bands = 4, maxHamming = 3)
+    }.reduce(_ unionByName _)
+    val foldEqBatch = Gate.all("st_phash_gate")("fold_equals_batch" -> Gate.sameRows(folded, batch))
     Seq((nImages, nTriggers.toLong, foldEqBatch))
       .toDF("n_images", "n_triggers", "fold_equal_ok")
   }
@@ -2485,7 +2434,9 @@ object Pipeline {
     val flagged = cmp.getDecimal(3).longValueExact()
     val cleanPostings = math.max(totalTrainPostings - shared, 1L)
     val fpOk = (flagged - shared).toDouble / cleanPostings <= 5 * fpp
-    Seq((nContaminated, noFalseNegatives, fpOk))
+    Seq((nContaminated,
+      Gate.all("dx_decontaminate_bloom_gate")("no_false_negatives" -> noFalseNegatives),
+      Gate.all("dx_decontaminate_bloom_gate")("fp_rate_within_5x" -> fpOk)))
       .toDF("n_contaminated", "no_false_negatives", "fp_rate_ok")
   }
 
@@ -2537,7 +2488,8 @@ object Pipeline {
       .select(col("key").as("token"))
     val nHeavy = heavy.count()
     val missed = heavy.join(cand, Seq("token"), "left_anti").count()
-    Seq((nHeavy, missed == 0L)).toDF("n_heavy", "covered_ok")
+    Seq((nHeavy, Gate.all("dx_heavy_hitters_gate")("heavy_all_candidates" -> (missed == 0L))))
+      .toDF("n_heavy", "covered_ok")
   }
 
   private val heavyHittersGateSql =
@@ -2581,7 +2533,9 @@ object Pipeline {
       case Seq(a, b) => b <= a * (1 + 1e-9) + 1e-9
       case _ => true
     }
-    Seq((nPoints, cellsOk, inertiaOk)).toDF("n_points", "cells_ok", "inertia_ok")
+    Seq((nPoints, Gate.all("dx_embed_kmeans_gate")("cells_in_range" -> cellsOk),
+      Gate.all("dx_embed_kmeans_gate")("inertia_non_increasing" -> inertiaOk)))
+      .toDF("n_points", "cells_ok", "inertia_ok")
   }
 
   private val embedKmeansGateSql =
@@ -2624,7 +2578,9 @@ object Pipeline {
       .select("left_id", "right_id")
     val nHit = truth.join(sem, Seq("left_id", "right_id"), "left_semi").count()
     val escaped = sem.join(exact, Seq("left_id", "right_id"), "left_anti").count()
-    Seq((nPlanted, escaped == 0L, nHit == nPlanted))
+    Seq((nPlanted,
+      Gate.all("dx_dedup_semantic_gate")("pairs_within_exact" -> (escaped == 0L)),
+      Gate.all("dx_dedup_semantic_gate")("planted_all_found" -> (nHit == nPlanted))))
       .toDF("n_planted", "subset_ok", "recall_ok")
   }
 
@@ -2706,8 +2662,9 @@ object Pipeline {
       count(lit(1)).as("n_pairs"),
       avg(when(abs(col("r") - 1) <= 0.75, 1.0).otherwise(0.0)).as("frac_in"),
       avg(col("r")).as("mean_r")).head()
-    Seq((row.getLong(0), row.getDouble(1) >= 0.9,
-      math.abs(row.getDouble(2) - 1.0) <= 0.1))
+    Seq((row.getLong(0),
+      Gate.all("dx_embed_rp_gate")("ratio_band_0.9" -> (row.getDouble(1) >= 0.9)),
+      Gate.all("dx_embed_rp_gate")("mean_ratio_near_1" -> (math.abs(row.getDouble(2) - 1.0) <= 0.1))))
       .toDF("n_pairs", "band_ok", "mean_ok")
   }
 
@@ -2736,7 +2693,7 @@ object Pipeline {
       quad1.zip(quad2).forall { case (a, b) => a.sameElements(b) }
     val f = graft.operators.embed.Pca.fitFromSums(n1, lin1, quad1, pcaK)
     val f2 = graft.operators.embed.Pca.fitFromSums(n2, lin2, quad2, pcaK)
-    val deterministic = sumsDeterministic && f.n == f2.n &&
+    val fitsEqual = f.n == f2.n &&
       f.values.sameElements(f2.values) &&
       f.vectors.zip(f2.vectors).forall { case (a, b) => a.sameElements(b) }
     val orthoErr = (for (a <- f.vectors; b <- f.vectors) yield {
@@ -2756,7 +2713,12 @@ object Pipeline {
       val lhs = ss(c) / 1e12 / f.n.toDouble
       math.abs(lhs - f.values(c)) <= math.max(2e-3 * f.values(c), 1e-6)
     }
-    Seq((f.n, orthoErr <= 1e-9, orderOk, traceOk, rayleighOk, deterministic))
+    val gate = "dx_embed_pca_gate"
+    Seq((f.n, Gate.all(gate)("orthonormal" -> (orthoErr <= 1e-9)),
+      Gate.all(gate)("eigenvalues_descending" -> orderOk),
+      Gate.all(gate)("trace_preserved" -> traceOk),
+      Gate.all(gate)("rayleigh_identity" -> rayleighOk),
+      Gate.all(gate)("sums_equal" -> sumsDeterministic, "fit_equal" -> fitsEqual)))
       .toDF("n_points", "ortho_ok", "order_ok", "trace_ok", "rayleigh_ok",
         "deterministic_ok")
   }
@@ -3522,12 +3484,11 @@ object Pipeline {
     val docs = Tables(s, dir, "documents")
     val Seq((evalW, _), (train, _)) = graft.Ckpt.settle(substrEvalWindows(docs),
       docs.filter(col("doc_id") % 10 =!= 8).select("doc_id", "text"))
-    val Seq((full, nFull), (micro, _)) = graft.Ckpt.settle(substrFlag(train, evalW),
-      (0 until 3)
-        .map(i => substrFlag(train.filter(col("doc_id") % 3 === i), evalW))
-        .reduce(_ unionByName _))
-    val equal = micro.exceptAll(full).count() == 0 &&
-      full.exceptAll(micro).count() == 0
+    val (full, nFull) = graft.Ckpt.settle(substrFlag(train, evalW)).head
+    val micro = (0 until 3)
+      .map(i => substrFlag(train.filter(col("doc_id") % 3 === i), evalW))
+      .reduce(_ unionByName _)
+    val equal = Gate.all("st_substr_guard_gate")("micro_equals_batch" -> Gate.sameRows(micro, full))
     Seq((nFull, equal)).toDF("n_flagged", "batch_equal_ok")
   }
 
@@ -4224,8 +4185,9 @@ object Pipeline {
     val ranks = ev.agg(
       sum(when(col("cents") <= approx.getLong(1), 1L).otherwise(0L)).as("r50"),
       sum(when(col("cents") <= approx.getLong(2), 1L).otherwise(0L)).as("r90")).head()
-    val ok = math.abs(ranks.getLong(0).toDouble / n - 0.5) <= 0.05 &&
-      math.abs(ranks.getLong(1).toDouble / n - 0.9) <= 0.05
+    val ok = Gate.all("dx_percentile_gate")(
+      "p50_rank_within_0.05" -> (math.abs(ranks.getLong(0).toDouble / n - 0.5) <= 0.05),
+      "p90_rank_within_0.05" -> (math.abs(ranks.getLong(1).toDouble / n - 0.9) <= 0.05))
     Seq((n, ok)).toDF("n_rows", "rank_ok")
   }
 
@@ -4253,7 +4215,8 @@ object Pipeline {
       .withColumn("off", abs(col("r50").cast("double") / col("n") - 0.5))
       .agg(count(lit(1)).as("n_groups"), max("off").as("worst"))
       .head()
-    Seq((checked.getLong(0), checked.getDouble(1) <= 0.05))
+    Seq((checked.getLong(0), Gate.all("dx_percentile_group_gate")(
+        "every_group_p50_within_0.05" -> (checked.getDouble(1) <= 0.05))))
       .toDF("n_groups", "rank_ok")
   }
 

@@ -1136,12 +1136,11 @@ object Selection {
     val m = lrFitCached(s, dir, graft.Ckpt.settle(nbTokens(docs)).head._1)
     val (held, nHeld) = graft.Ckpt.settle(
       docs.filter(col("doc_id") % 2 === 1).select("doc_id", "text")).head
-    val Seq((full, _), (micro, _)) = graft.Ckpt.settle(lrScore(held, m),
-      (0 until 3)
-        .map(i => lrScore(held.filter(col("doc_id") % 3 === i), m))
-        .reduce(_ unionByName _))
-    val equal = micro.exceptAll(full).count() == 0 &&
-      full.exceptAll(micro).count() == 0
+    val micro = (0 until 3)
+      .map(i => lrScore(held.filter(col("doc_id") % 3 === i), m))
+      .reduce(_ unionByName _)
+    val equal = graft.Gate.all("st_lr_score_gate")(
+      "micro_equals_batch" -> graft.Gate.sameRows(micro, lrScore(held, m)))
     Seq((nHeld, equal)).toDF("n_docs", "batch_equal_ok")
   }
 
@@ -1224,11 +1223,12 @@ object Selection {
     val m2 = lrFit(s, toksAll)
     val (held, _) = graft.Ckpt.settle(toksAll.filter(col("doc_id") % 2 === 1)).head
     val (correct, total, majority) = lrAccuracy(m1, held)
-    val ok = m1.wMicro.sameElements(m2.wMicro) &&
-      m1.biasMicro == m2.biasMicro &&
-      m1.lossMicroByIter == m2.lossMicroByIter &&
-      m1.lossMicroByIter.last < m1.lossMicroByIter.head &&
-      correct * 1000 >= total * 850 && correct > majority
+    val ok = graft.Gate.all("dx_lr_gate")(
+      "fits_equal" -> (m1.wMicro.sameElements(m2.wMicro) &&
+        m1.biasMicro == m2.biasMicro && m1.lossMicroByIter == m2.lossMicroByIter),
+      "loss_decreased" -> (m1.lossMicroByIter.last < m1.lossMicroByIter.head),
+      "accuracy_0.85" -> (correct * 1000 >= total * 850),
+      "beats_majority" -> (correct > majority))
     Seq(ok).toDF("lr_ok")
   }
 
@@ -1344,7 +1344,6 @@ object Selection {
     val m = lrFitCached(s, dir, graft.Ckpt.settle(nbTokens(Tables(s, dir, "documents"))).head._1)
     val (t1, _) = graft.Ckpt.settle(mixtureLearnedFrom(s, dir, m)).head
     val t2 = mixtureLearnedFrom(s, dir, m)
-    val identical = t1.exceptAll(t2).count() == 0 && t2.exceptAll(t1).count() == 0
     val rows = t1.collect()
     val n = rows.length.toLong
     val wSum = rows.map(_.getLong(5)).sum
@@ -1361,8 +1360,11 @@ object Selection {
       if hi.getLong(4) >= lo.getLong(4) + 1000L
     } yield BigInt(hi.getLong(5)) * BigInt(lo.getLong(2)) >
       BigInt(lo.getLong(5)) * BigInt(hi.getLong(2))).forall(identity)
-    val ok = identical && allPos && monotone &&
-      wSum <= 1000000L && wSum >= 1000000L - n
+    val ok = graft.Gate.all("dx_mixture_learned_gate")(
+      "runs_equal" -> graft.Gate.sameRows(t1, t2),
+      "weights_positive" -> allPos,
+      "monotone_in_excess" -> monotone,
+      "weights_sum_1e6" -> (wSum <= 1000000L && wSum >= 1000000L - n))
     Seq((n, ok)).toDF("n_sources", "mixture_ok")
   }
 

@@ -163,27 +163,27 @@ object Streaming {
       .select((col("doc_id") + 1000000).as("doc_id"),
         expr("concat(substring(text, 1, length(text) - 10), ' spark dup tail')")
           .as("text"))
-    // Distributed multiset equality: exceptAll in both directions stays
-    // executor-side (the sf1 pair sets made the old collect().toSet
-    // compare a 66 s driver gate); checkpointed because each side feeds
-    // two set differences (and the stream side the recall probe).
-    val Seq((streamPairs, _), (batchCross, _)) = graft.Ckpt.settle(
+    // Distributed multiset equality stays executor-side (the sf1 pair sets
+    // made the old collect().toSet compare a 66 s driver gate); the stream
+    // side is settled because the recall probe reads it too.
+    val Seq((streamPairs, _), (planted, nPlanted)) = graft.Ckpt.settle(
       graft.streaming.Streams
         .incrementalDedup(stream, docs, "doc_id", "text")
         .select(col("stream_id"), col("ref_id"), round(col("jaccard"), 9).as("j")),
-      MinHashLSH.candidatePairs(docs.unionByName(stream), "doc_id", "text")
-        .filter(col("right_id") >= 1000000L && col("left_id") < 1000000L)
-        .select(col("right_id").as("stream_id"), col("left_id").as("ref_id"),
-          round(col("jaccard"), 9).as("j")))
-    val batchEqual = streamPairs.exceptAll(batchCross).count() == 0 &&
-      batchCross.exceptAll(streamPairs).count() == 0
-    val (planted, nPlanted) = graft.Ckpt.settle(docs.filter(col("doc_id") % 7 === 0)
-      .select((col("doc_id") + 1000000).as("stream_id"), col("doc_id").as("ref_id"))).head
+      docs.filter(col("doc_id") % 7 === 0)
+        .select((col("doc_id") + 1000000).as("stream_id"), col("doc_id").as("ref_id")))
+    val batchCross = MinHashLSH.candidatePairs(docs.unionByName(stream), "doc_id", "text")
+      .filter(col("right_id") >= 1000000L && col("left_id") < 1000000L)
+      .select(col("right_id").as("stream_id"), col("left_id").as("ref_id"),
+        round(col("jaccard"), 9).as("j"))
     val hits = planted
       .join(streamPairs.select("stream_id", "ref_id"),
         Seq("stream_id", "ref_id"), "left_semi")
       .count()
-    Seq((nPlanted, batchEqual, hits.toDouble / nPlanted >= 0.95))
+    val gate = "st_dedup_incremental_gate"
+    Seq((nPlanted,
+      graft.Gate.all(gate)("stream_equals_batch" -> graft.Gate.sameRows(streamPairs, batchCross)),
+      graft.Gate.all(gate)("planted_recall_0.95" -> (hits.toDouble / nPlanted >= 0.95))))
       .toDF("n_planted", "batch_equal_ok", "recall_ok")
   }
 
@@ -209,27 +209,27 @@ object Streaming {
     val emb = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val planted = emb.filter(col("vec_id") % 7 === 0)
     val stream = planted.select((col("vec_id") + 1000000).as("vec_id"), col("embedding"))
-    // Distributed compare, same shape as the minhash gate above: exceptAll
-    // both ways for multiset equality, anti-join for full planted recall.
-    val Seq((streamPairs, _), (batchCross, _)) = graft.Ckpt.settle(
+    // Distributed compare, same shape as the minhash gate above: multiset
+    // equality through the gate kit, anti-join for full planted recall.
+    val Seq((streamPairs, _), (truth, nTruth)) = graft.Ckpt.settle(
       graft.streaming.Streams
         .incrementalEmbedDedup(stream, emb, "vec_id", "embedding",
           threshold = 0.3, bands = 8, planesPerBand = 8)
         .select(col("stream_id"), col("ref_id"), round(col("sim"), 9).as("s")),
-      EmbedDedup.lshPairs(emb.unionByName(stream), "vec_id", "embedding",
-          threshold = 0.3, bands = 8, planesPerBand = 8)
-        .filter(col("right_id") >= 1000000L && col("left_id") < 1000000L)
-        .select(col("right_id").as("stream_id"), col("left_id").as("ref_id"),
-          round(col("sim"), 9).as("s")))
-    val batchEqual = streamPairs.exceptAll(batchCross).count() == 0 &&
-      batchCross.exceptAll(streamPairs).count() == 0
-    val (truth, nTruth) = graft.Ckpt.settle(planted
-      .select((col("vec_id") + 1000000L).as("stream_id"), col("vec_id").as("ref_id"))).head
-    val allPlantedBack = truth
+      planted.select((col("vec_id") + 1000000L).as("stream_id"), col("vec_id").as("ref_id")))
+    val batchCross = EmbedDedup.lshPairs(emb.unionByName(stream), "vec_id", "embedding",
+        threshold = 0.3, bands = 8, planesPerBand = 8)
+      .filter(col("right_id") >= 1000000L && col("left_id") < 1000000L)
+      .select(col("right_id").as("stream_id"), col("left_id").as("ref_id"),
+        round(col("sim"), 9).as("s"))
+    val missed = truth
       .join(streamPairs.select("stream_id", "ref_id"),
         Seq("stream_id", "ref_id"), "left_anti")
-      .count() == 0
-    Seq((nTruth, batchEqual, allPlantedBack))
+      .count()
+    val gate = "st_embed_incremental_gate"
+    Seq((nTruth,
+      graft.Gate.all(gate)("stream_equals_batch" -> graft.Gate.sameRows(streamPairs, batchCross)),
+      graft.Gate.all(gate)("planted_all_found" -> (missed == 0L))))
       .toDF("n_planted", "batch_equal_ok", "recall_ok")
   }
 

@@ -12,4 +12,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `e` normalised as grouping normalises a key (−0.0 to 0.0, one NaN),
+    * through nested arrays and structs; `private[sql]` in Spark 4.
+    */
+  def groupingKey(e: Expression): Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
 }

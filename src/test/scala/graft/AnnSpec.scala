@@ -118,7 +118,7 @@ class AnnSpec extends SparkSpec {
     val same = NnDescent.removeVectors(g0, emb,
       emb.filter(col("vec_id") < 0).select("vec_id"),
       "vec_id", "embedding", k = 10)
-    assert(same.exceptAll(g0).isEmpty && g0.exceptAll(same).isEmpty,
+    assert(Gate.sameRows(same, g0),
       "empty removal set must return the graph unchanged")
   }
 
@@ -178,7 +178,7 @@ class AnnSpec extends SparkSpec {
     GraphIndex.build(emb, "vec_id", "embedding", k = 10, path = s"$tmp/g2",
       iters = 4, numFiles = 2)
     val g2 = GraphIndex.load(spark, s"$tmp/g2")
-    assert(g.exceptAll(g2).count() == 0 && g2.exceptAll(g).count() == 0)
+    assert(Gate.sameRows(g, g2))
   }
 
   test("knnGraph degenerate params: kBuild=1 builds instead of analyze-failing") {
@@ -232,7 +232,7 @@ class AnnSpec extends SparkSpec {
       // inline fit+encode+scan — sims included, no rounding
       val inline = Pq.searchIvf(queries, corpus, "vec_id", "embedding", k = 5)
       assert(served.count() == 25)
-      assert(served.exceptAll(inline).isEmpty && inline.exceptAll(served).isEmpty,
+      assert(Gate.sameRows(served, inline),
         "persisted-index serving diverged from the inline IVF-PQ search")
     } finally {
       import scala.jdk.CollectionConverters._
@@ -256,7 +256,7 @@ class AnnSpec extends SparkSpec {
       // BIT-identical to the inline fit+encode+scan, sims un-rounded
       val inline = Sq.searchIvf(queries, corpus, "vec_id", "embedding", k = 5)
       assert(served.count() == 25)
-      assert(served.exceptAll(inline).isEmpty && inline.exceptAll(served).isEmpty,
+      assert(Gate.sameRows(served, inline),
         "persisted-index serving diverged from the inline IVF-SQ search")
     } finally {
       import scala.jdk.CollectionConverters._

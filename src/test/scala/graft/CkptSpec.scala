@@ -1,12 +1,10 @@
 package graft
 
-import org.apache.spark.graft.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, Executors}
 import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.duration._
@@ -92,25 +90,10 @@ class CkptSpec extends SparkSpec {
     } finally pool.shutdownNow()
   }
 
-  private lazy val mainSources = {
-    val s = Files.walk(Paths.get("src/main"))
-    try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-    finally s.close()
-  }
-
-  private def hits(re: scala.util.matching.Regex, skip: String => Boolean = _ => false) = {
-    assert(mainSources.nonEmpty, "no sources found: wrong working directory?")
-    for {
-      p <- mainSources if !skip(p.toString)
-      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
-      if re.findFirstIn(line).isDefined
-    } yield s"$p:${i + 1}: ${line.trim}"
-  }
-
   test("no loop in src/main carries a lazily truncated frame by hand") {
     val handRolled = """^\s*(var\s+)?[a-z]\w*\s*=\s*(graft\.)?Ckpt\.truncate""".r
     assert(handRolled.findFirstIn("      nn = graft.Ckpt.truncate(nn)").isDefined)
-    val found = hits(handRolled)
+    val found = sourceHits("src/main", handRolled)
     assert(found.isEmpty, "use Ckpt.iterate:\n" + found.mkString("\n"))
   }
 
@@ -121,22 +104,9 @@ class CkptSpec extends SparkSpec {
     for (line <- Seq("x.localCheckpoint(false)", "df.checkpoint(eager = false)",
         "graft.Ckpt.truncateBulk(e)", "Ckpt.truncate(df)"))
       assert(checkpointCall.findFirstIn(line).isDefined, line)
-    val found = hits(checkpointCall, _.endsWith("/graft/core.scala"))
+    val found = sourceHits("src/main", checkpointCall, _.endsWith("/graft/core.scala"))
     assert(found.isEmpty, s"${found.size} checkpoints outside Ckpt; use Ckpt.settle or " +
       "Ckpt.iterate:\n" + found.mkString("\n"))
-  }
-
-  /** Jobs submitted while `body` runs, counted by a listener. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerDrain(sc)
-    sc.addSparkListener(listener)
-    try { body; ListenerDrain(sc); jobs.get }
-    finally sc.removeSparkListener(listener)
   }
 
   test("settle materializes three frames in one job and returns their row counts") {

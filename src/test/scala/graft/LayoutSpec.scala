@@ -112,6 +112,6 @@ class LayoutSpec extends SparkSpec {
       .toDF("x", "y", "payload")
     val out = Layout.zorder(data, "x", "y", 2)
     assert(out.columns.toSeq == Seq("x", "y", "payload"))
-    assert(out.exceptAll(data).isEmpty && data.exceptAll(out).isEmpty)
+    assert(Gate.sameRows(out, data))
   }
 }

@@ -365,7 +365,7 @@ class PipelineSpec extends SparkSpec {
       .filter(col("n_shared") >= 1)
       .select("left_id", "right_id", "n_shared")
     val got = Registry.byName("dx_dedup_substring").fn(spark, sfDir)
-    assert(got.exceptAll(brute).isEmpty && brute.exceptAll(got).isEmpty,
+    assert(Gate.sameRows(got, brute),
       "inverted-index substring pairs diverge from brute force")
   }
 
@@ -572,8 +572,7 @@ class PipelineSpec extends SparkSpec {
     // deterministic: run twice, identical edge sets
     val g2 = NnDescent.knnGraph(emb, "vec_id", "embedding", k = 10,
       iters = 4, cap0 = 40)
-    assert(g.select("id", "nbr").exceptAll(g2.select("id", "nbr")).count() == 0)
-    assert(g2.select("id", "nbr").exceptAll(g.select("id", "nbr")).count() == 0)
+    assert(Gate.sameRows(g.select("id", "nbr"), g2.select("id", "nbr")))
     // top-5 recall vs brute force for the query slice (the gate's floor)
     val brute = Knn.bruteForce(
       emb.filter(col("vec_id") < 10), emb, "vec_id", "embedding", k = 5)
@@ -657,7 +656,7 @@ class PipelineSpec extends SparkSpec {
     assert(recall >= 0.6, s"PQ recall $recall under floor")
     // codebook fit is deterministic: a second search returns identical rows
     val again = Pq.search(q, emb, "vec_id", "embedding", 5)
-    assert(pq.exceptAll(again).isEmpty && again.exceptAll(pq).isEmpty)
+    assert(Gate.sameRows(pq, again))
     // IVF-PQ: cell-restricted compressed scan still reranks exactly
     val ivfpq = Pq.searchIvf(q, emb, "vec_id", "embedding", 5)
     val j2 = ivfpq.join(brute, Seq("query_id", "neighbor_id"))

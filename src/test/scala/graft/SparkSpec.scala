@@ -1,10 +1,16 @@
 package graft
 
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 /** Shared local SparkSession for specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -19,6 +25,36 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case other => other.children.flatMap(flatten)
     })
     flatten(df.queryExecution.executedPlan)
+  }
+
+  /** Jobs submitted while `body` runs, counted by a listener. */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try { body; ListenerDrain(sc); jobs.get }
+    finally sc.removeSparkListener(listener)
+  }
+
+  /** `file:line: text` for every line of a `.scala` file under `dir`
+    * (relative to the repo root) that `re` matches, unless `skip(file)`.
+    */
+  def sourceHits(dir: String, re: Regex, skip: String => Boolean = _ => false): Seq[String] = {
+    val files = {
+      val s = Files.walk(Paths.get(dir))
+      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    assert(files.nonEmpty, s"no sources under $dir: wrong working directory?")
+    for {
+      p <- files if !skip(p.toString)
+      (line, i) <- Files.readAllLines(p).asScala.toSeq.zipWithIndex
+      if re.findFirstIn(line).isDefined
+    } yield s"$p:${i + 1}: ${line.trim}"
   }
 }
 

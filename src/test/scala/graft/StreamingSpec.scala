@@ -436,7 +436,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
 
     // exactly-once pair discovery: fold union ≡ batch pairs, multiset
-    assert(folded.exceptAll(batch).isEmpty && batch.exceptAll(folded).isEmpty,
+    assert(Gate.sameRows(folded, batch),
       "streamed pair union must equal the batch banded-hamming pairs")
     // and the planted upscale twins are all present
     val planted = base.select(col("media_id").as("left_id"),
@@ -490,7 +490,7 @@ class StreamingSpec extends SparkSpec {
       Selection.nbTokens(train).groupBy("lang", "bucket").agg(count(lit(1)).as("c")),
       Selection.nbTokens(train).groupBy("lang").agg(count(lit(1)).as("n")))
     assert(streamed.count() > 0)
-    assert(streamed.exceptAll(batchW).isEmpty && batchW.exceptAll(streamed).isEmpty,
+    assert(Gate.sameRows(streamed, batchW),
       "incrementally-trained NB weights diverged from the batch fit")
   }
 
@@ -579,7 +579,7 @@ class StreamingSpec extends SparkSpec {
       .localCheckpoint(true)
     val folded = queries.Matchbox.cdcStateFromLatest(running)
     assert(batch.count() > 0)
-    assert(folded.exceptAll(batch).isEmpty && batch.exceptAll(folded).isEmpty,
+    assert(Gate.sameRows(folded, batch),
       "folded CDC state diverged from the batch apply")
     // tombstone semantics: users whose LAST event is 'error' are absent
     val deleted = ev.withColumn("rn", row_number().over(
@@ -617,7 +617,7 @@ class StreamingSpec extends SparkSpec {
     val batch = queries.Matchbox.goldenFromStats(
       queries.Matchbox.goldenStats(toDF(members)))
     assert(streamed.count() == 10)
-    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
+    assert(Gate.sameRows(streamed, batch),
       "incrementally-folded golden records diverged from the batch fusion")
   }
 
@@ -657,7 +657,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
     val batchAll = graft.operators.Components.connected(edges)
     assert(state.count() == batchAll.count())
-    assert(state.exceptAll(batchAll).isEmpty && batchAll.exceptAll(state).isEmpty,
+    assert(Gate.sameRows(state, batchAll),
       "streamed-fold resolution diverged from the batch recompute")
   }
 
@@ -702,8 +702,7 @@ class StreamingSpec extends SparkSpec {
     val streamed = Selection.mixtureFromStats(stats)
     val batchTable = Selection.mixtureLearnedFrom(spark, sfDir, m)
     assert(streamed.count() > 0)
-    assert(streamed.exceptAll(batchTable).isEmpty &&
-      batchTable.exceptAll(streamed).isEmpty,
+    assert(Gate.sameRows(streamed, batchTable),
       "incrementally-folded mixture weights diverged from the batch table")
   }
 

@@ -44,7 +44,7 @@ class SuffixDedupSpec extends SparkSpec {
       val got = SuffixDedup.duplicateWindowStarts(docs, "doc_id", "text", minLen)
         .select(col("doc_id"), col("pos").cast("int").as("pos"))
       val want = naiveStarts(docs, minLen)
-      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+      assert(Gate.sameRows(got, want),
         s"rank-derived duplicate window starts diverge from brute force at minLen=$minLen")
     }
   }
@@ -103,7 +103,7 @@ class SuffixDedupSpec extends SparkSpec {
     val got = SuffixDedup.duplicateWindowStarts(docs, "doc_id", "text", 50)
       .select(col("doc_id"), col("pos").cast("int").as("pos"))
     val want = naiveStarts(docs, 50)
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    assert(Gate.sameRows(got, want))
   }
 
   test("scrub removes exactly the span token mass and keeps byte-identical text") {
@@ -167,7 +167,7 @@ class SuffixDedupSpec extends SparkSpec {
       val got = SuffixDedup.duplicateWindowStartsKeepOne(docs, "doc_id", "text", minLen)
         .select(col("doc_id"), col("pos").cast("int").as("pos"))
       val want = naiveKeepOneStarts(docs, minLen)
-      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+      assert(Gate.sameRows(got, want),
         s"keep-one starts diverge from brute force at minLen=$minLen")
       // keep-one ⊂ cut-all, short by exactly one (the canonical) per class
       val cutAll = SuffixDedup.duplicateWindowStarts(docs, "doc_id", "text", minLen)
